@@ -824,15 +824,15 @@ class SearchEngine:
             len(uniq),
         )
 
-    def fetch_results(self, rows: list[tuple[int, int]]) -> list:
+    def fetch_results(self, rows: list[tuple[int, int]]):
         """Q15 (ShowLink, searchservernew.dpr:1166-1204): join the engine's
-        (doc_id, score) rows back to display fields as rerank.ResultRow
-        objects, preserving engine order. rows is a top-k list (<= 1000) —
-        the collect is bounded."""
-        from .rerank import rows_to_results
+        (doc_id, score) rows back to display fields as a rerank.Candidates,
+        preserving engine order. rows is a top-k list (<= 1000) — the
+        collect is bounded."""
+        from .rerank import Candidates
 
         if not rows:
-            return []
+            return Candidates.from_rows([])
         ids = [int(d) for d, _ in rows]
         fetched = {
             r["doc_id"]: r.asDict()
@@ -843,7 +843,7 @@ class SearchEngine:
             )
             .collect()
         }
-        return rows_to_results(rows, fetched)
+        return Candidates.from_docmeta(rows, fetched)
 
     def search_page(
         self,
@@ -2211,18 +2211,13 @@ class FederatedSearchEngine:
             merged[qi].sort(key=lambda r: (-r[1], r[0]))
         return merged, counts
 
-    def fetch_results(self, rows: list[tuple[int, int]]) -> list:
+    def fetch_results(self, rows: list[tuple[int, int]]):
         """Q15 display fetch: resolve each global doc id to its owning
-        part's docmeta (bisect on the offset table), preserving order."""
-        import bisect
+        part's docmeta (bisect on the offset table, one fetch per part),
+        preserving order."""
+        from .rerank import fetch_partitioned
 
-        out = []
-        for doc, score in rows:
-            i = bisect.bisect_right(self.offsets, doc) - 1
-            r = self.parts[i].fetch_results([(doc - self.offsets[i], score)])[0]
-            r.doc_id = doc  # back onto the federated id space
-            out.append(r)
-        return out
+        return fetch_partitioned(self.parts, self.offsets, rows, rebase=True)
 
     def query_info(self, query: str) -> dict:
         terms = self.compile(query)

@@ -7,11 +7,21 @@ vectors into RAM and streams postings from the keys/fancy files): docmeta
 sidecars live in driver arrays, posting segments are read lazily through
 pyarrow with bucket/term predicate pushdown. Use it for interactive /
 high-QPS serving; use query.SearchEngine for distributed batch scoring.
-Both are rank-identical to the oracle (tested)."""
+Both are rank-identical to the oracle (tested).
+
+The DocMeta display columns (url, host, title, description, rank,
+backlinks) are resident too, in doc-id order, so the ShowLink display
+fetch (``fetch_results``) is a numpy take that hands R1-R4 a columnar
+``rerank.Candidates``. Beside them sits the per-doc R1 feature memo
+(``rerank.doc_features``: the normalized URL, domain, title and snippet
+and the URL shape), filled the first time a doc is a re-rank candidate.
+On the synthetic transcript corpus the display strings cost about
+0.4 KB per doc and a filled memo entry about 0.6 KB. ShardedSearcher and
+FederatedSearcher route each fetched id to the shard or part that owns
+it, one fetch per owner."""
 
 from __future__ import annotations
 
-import bisect
 import json
 import math
 import os
@@ -68,7 +78,10 @@ class LocalSearcher:
                 pads.field("doc_id") < self.doc_hi
             )
         dm = dm_ds.to_table(
-            columns=["doc_id", "host", "fd", "he", "rank", "backlinks", "dl"],
+            columns=[
+                "doc_id", "host", "fd", "he", "rank", "backlinks", "dl",
+                "url", "title", "description",
+            ],
             filter=dm_filter,
         )
         order = np.argsort(dm["doc_id"].to_numpy())
@@ -78,6 +91,15 @@ class LocalSearcher:
         self.backlinks = dm["backlinks"].to_numpy()[order].astype(np.int64)
         self.dl = dm["dl"].to_numpy()[order].astype(np.int64)
         hosts = np.asarray(dm["host"].to_pandas())[order]
+        # display columns, resident like the sidecars (the ShowLink fetch
+        # is a take), and the per-doc R1 feature memo (rerank.doc_features),
+        # filled the first time a doc is a re-rank candidate
+        self._host = hosts
+        self._url, self._title, self._desc = (
+            dm[c].to_numpy(zero_copy_only=False)[order]
+            for c in ("url", "title", "description")
+        )
+        self._features: list = [None] * len(order)
         self._host_docs: dict[str, np.ndarray] = {}
         host_order = np.argsort(hosts, kind="stable")
         sorted_hosts = hosts[host_order]
@@ -549,28 +571,32 @@ class LocalSearcher:
         docs, vals = self._run_pass(terms, w, use_fancy=False)
         return self._topk(docs, vals, fetch)
 
-    def fetch_results(self, rows: list[tuple[int, int]]) -> list:
+    def fetch_results(self, rows: list[tuple[int, int]]):
         """Q15 (ShowLink, searchservernew.dpr:1166-1204): join the engine's
-        (doc_id, score) rows back to their display fields and build
-        rerank.ResultRow objects in engine order — the input to the R1-R4
-        post-processing layer. Reads only the shown rows' docmeta (pyarrow
-        predicate pushdown on the doc_id-ordered files)."""
-        from .rerank import rows_to_results
+        (doc_id, score) rows back to their display fields, in engine order,
+        as a rerank.Candidates — the input to the R1-R4 post-processing
+        layer. A take on the resident display columns; ids outside this
+        searcher's doc range are dropped."""
+        from .rerank import Candidates
 
-        if not rows:
-            return []
-        ids = [int(d) for d, _ in rows]
-        dm = pads.dataset(
-            os.path.join(self.vdir, "docmeta"), partitioning="hive"
-        ).to_table(
-            filter=pads.field("doc_id").isin(ids),
-            columns=[
-                "doc_id", "url", "host", "title", "description",
-                "rank", "backlinks",
-            ],
+        ids = np.array([int(d) for d, _ in rows], dtype=np.int64)
+        scores = np.array([int(s) for _, s in rows], dtype=np.int64)
+        loc = ids - self.doc_lo
+        ok = (loc >= 0) & (loc < len(self._url))
+        if not ok.all():
+            ids, scores, loc = ids[ok], scores[ok], loc[ok]
+        return Candidates(
+            doc_id=ids,
+            value=scores,
+            backlinks=self.backlinks[loc],
+            domain_rank=self.rank[loc],
+            url=self._url[loc],
+            title=self._title[loc],
+            snippet=self._desc[loc],
+            host=self._host[loc],
+            memo=self._features,
+            slot=loc,
         )
-        by_id = {int(r["doc_id"]): r for r in dm.to_pylist()}
-        return rows_to_results(rows, by_id)
 
     def search_page(
         self, query: str, startwith: int = 1, showcount: int = 10, **kw
@@ -951,9 +977,14 @@ class ShardedSearcher:
             len(uniq),
         )
 
-    def fetch_results(self, rows: list[tuple[int, int]]) -> list:
-        # doc ids are global; any shard's docmeta dataset read resolves them
-        return self.shards[0].fetch_results(rows)
+    def fetch_results(self, rows: list[tuple[int, int]]):
+        """Q15 display fetch: each global doc id from the shard whose doc
+        range holds it (one fetch per shard), in input order."""
+        from .rerank import fetch_partitioned
+
+        return fetch_partitioned(
+            self.shards, [s.doc_lo for s in self.shards], rows, rebase=False
+        )
 
 
 class FederatedSearcher:
@@ -1144,17 +1175,14 @@ class FederatedSearcher:
         )
         return [c for _, c in scored[:k]]
 
-    def fetch_results(self, rows: list[tuple[int, int]]) -> list:
+    def fetch_results(self, rows: list[tuple[int, int]]):
         """Resolve global doc ids back to their owning part's docmeta
-        (bisect on the offset table), preserving the input order — the
-        Q15 display-fetch contract of the other searchers."""
-        out = []
-        for doc, score in rows:
-            i = bisect.bisect_right(self.offsets, doc) - 1
-            r = self.parts[i].fetch_results([(doc - self.offsets[i], score)])[0]
-            r.doc_id = doc  # back onto the federated id space
-            out.append(r)
-        return out
+        (bisect on the offset table, one fetch per part), preserving the
+        input order — the Q15 display-fetch contract of the other
+        searchers."""
+        from .rerank import fetch_partitioned
+
+        return fetch_partitioned(self.parts, self.offsets, rows, rebase=True)
 
 
 def _deletions(t: str) -> set[str]:

@@ -12,6 +12,13 @@ Works over either engine (query.SearchEngine for distributed batch,
 query_local.LocalSearcher for serving) — both expose the same
 search()/fetch_results() surface, so the composition is engine-agnostic
 exactly like the CGI is server-agnostic.
+
+The rows between the fetch and R4 stay columnar (rerank.Candidates): on
+LocalSearcher the fetch is a take on the resident DocMeta display columns
+and R1 reads each doc's memoized query-independent features, so a request
+pays only for the query-dependent part of R1-R3. R4 stops at the end of
+the 10-row page holding the requested slice, and only the rows it keeps
+become ResultRow objects.
 """
 
 from __future__ import annotations
@@ -40,6 +47,7 @@ def search_render(
     (searchservernew.dpr:1328-1363 + NewSearch.pas:181-291)."""
     startwith = min(max(startwith, 1), 991)
     showcount = min(max(showcount, 10), 1000)
+    end = startwith - 1 + showcount
     rows = searcher.search(query, k=MAX_RESULTS, weights=weights)
     results = searcher.fetch_results(rows)
     results = adjust_ranking(
@@ -49,8 +57,7 @@ def search_render(
         ranking_dir=ranking_dir,
         language=language,
     )
-    results = post_process(results, query)
-    page = results[startwith - 1 : startwith - 1 + showcount]
+    page = post_process(results, query, upto=end)[startwith - 1 : end]
     if highlight:
         # R6 (query.dpr:98,226-243): highlight only the rendered page
         from .highlight import highlight_results

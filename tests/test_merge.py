@@ -417,6 +417,37 @@ def test_federated_fetch_results(tiny_index_dir, merge_env):
     ]
 
 
+@pytest.mark.parametrize("kind", ["serving", "distributed"])
+def test_federated_render_fetches_once_per_part(spark, merge_env, kind):
+    """A 1,000-row render resolves its display fields with ONE fetch per
+    part (rows grouped by owning part), and renders the merged index's
+    page."""
+    from deusu_spark import serving
+    from deusu_spark.query import FederatedSearchEngine
+    from deusu_spark.query_local import FederatedSearcher, LocalSearcher
+
+    _root, dirs, out, _m = merge_env
+    if kind == "serving":
+        fed = FederatedSearcher(dirs)
+    else:
+        fed = FederatedSearchEngine(spark, dirs)
+    calls = []
+    for i, part in enumerate(fed.parts):
+        def counted(rows, _fetch=part.fetch_results, _i=i):
+            calls.append((_i, len(rows)))
+            return _fetch(rows)
+
+        part.fetch_results = counted
+    assert len(fed.search("w0001", k=1000)) == 1000
+    page = serving.search_render(fed, "w0001", startwith=11)
+    assert sorted(i for i, _ in calls) == list(range(len(dirs)))
+    assert sum(n for _, n in calls) == 1000
+    want = serving.search_render(LocalSearcher(out), "w0001", startwith=11)
+    assert [
+        (r.doc_id, r.value, r.url, r.snippet, r.host, r.indent) for r in page
+    ] == [(r.doc_id, r.value, r.url, r.snippet, r.host, r.indent) for r in want]
+
+
 def test_federated_suggest_equals_merged(merge_env):
     """Did-you-mean through the federation == the merged index's
     suggester: un-truncated per-part candidates, global-df ranking."""

@@ -52,10 +52,22 @@ def test_sharded_custom_weights(sharded, local):
 
 
 def test_sharded_fetch_results(sharded, local):
-    rows = sharded.search("linux", k=5)
+    """Each id is fetched from the shard whose doc range holds it: the
+    rows span every shard, and every display field matches the
+    single-server fetch in input order."""
+    rows = sharded.search("w0001", k=1000)
+    assert all(
+        any(sh.doc_lo <= d < sh.doc_hi for d, _ in rows) for sh in sharded.shards
+    )
     got = sharded.fetch_results(rows)
     want = local.fetch_results(rows)
-    assert [(r.doc_id, r.url) for r in got] == [(r.doc_id, r.url) for r in want]
+
+    def fields(r):
+        return (r.doc_id, r.value, r.url, r.title, r.snippet, r.host,
+                r.backlinks, r.domain_rank)
+
+    assert len(got) == len(rows)
+    assert [fields(r) for r in got] == [fields(r) for r in want]
 
 
 def test_parallel_and_sequential_fanout_identical(tiny_index_dir):
