@@ -40,7 +40,6 @@ whichever layout the interrupted build used.
 from __future__ import annotations
 
 import json
-import math
 import os
 import shutil
 import time
@@ -54,20 +53,15 @@ from pyspark.sql import types as T
 
 from . import codec, textproc
 from .constants import (
-    DEFAULT_WEIGHTS,
     FANCY_DF_THRESHOLD,
     FANCY_RANK_HI,
     FANCY_RANK_LO,
     INFO_DF_THRESHOLD,
     INFO_TERM_LIST_CAP,
-    LANG_BONUS,
     N_TERM_BUCKETS,
-    PREFER_DE,
-    PREFER_EN,
-    RANK_FACTOR,
     SEGMENT_SIZE,
-    UNRANKED_RANK_VALUE,
 )
+from .scoring import static_score_col
 
 # fused-mode encode tasks hold one whole sorted shuffle partition in Arrow;
 # this bounds the per-task posting count (~4M rows ≈ 150-200 MB) so worker
@@ -120,93 +114,6 @@ SEGMENTS_SCHEMA = T.StructType(
         T.StructField("blob", T.BinaryType()),
     ]
 )
-
-
-def static_scores(
-    flags: np.ndarray,
-    fd: np.ndarray,
-    he: np.ndarray,
-    rank: np.ndarray,
-    backlinks: np.ndarray,
-    max_bl: int,
-    include_backlink: bool = True,
-    weights: dict[str, int] | None = None,
-) -> np.ndarray:
-    """Vectorized pre-IDF static score of postings — the term-independent part
-    of searchservernew.dpr:874-897. A posting's final score is
-    Round(static * idf) clamped to 65535; with include_backlink=True this is
-    the acSet variant, an upper bound for all paths (the fast-AND path just
-    omits the non-negative backlink add, :491)."""
-    w = weights or DEFAULT_WEIGHTS
-    flags = flags.astype(np.int64)
-    fd = fd.astype(np.int64)
-    v = np.full(len(flags), w["b1"], dtype=np.float64)
-    v += np.where(flags & 1, w["b2"], 0)
-    v += np.where(flags & 2, w["b3"], 0)
-    v += np.where(flags & 4, w["b4"], 0)
-    v += np.where(fd & 128, w["b5"], 0)
-    v += np.where(fd & 64, w["b6"], 0)
-    if PREFER_DE:
-        v += np.where(fd & 32, LANG_BONUS, 0)
-    if PREFER_EN:
-        v += np.where(fd & 32, 0, LANG_BONUS)
-    v += (31 - (fd & 31)) * w["b7"]
-    if include_backlink:
-        ln_mbl = math.log(max_bl) if max_bl > 0 else 0.0
-        bl = np.asarray(backlinks, dtype=np.float64)
-        with np.errstate(divide="ignore"):
-            blv = np.where(
-                bl == 0, 1.0, (2500.0 * np.log(np.maximum(bl, 1)) / ln_mbl) if ln_mbl > 0 else 0.0
-            )
-        v += np.round(blv)  # np.round = round-half-to-even = Pascal Round
-    rank_v = np.asarray(rank, dtype=np.int64) + 1
-    rank_v = np.where(rank_v == 0, UNRANKED_RANK_VALUE, rank_v)
-    return (1.0 - rank_v * RANK_FACTOR) * v / np.asarray(he, dtype=np.float64)
-
-
-def static_score_col(max_bl: int, w: dict[str, int] | None = None):
-    """JVM column-expression twin of static_scores() (same formula,
-    searchservernew.dpr:874-897 with the acSet backlink add): evaluated
-    inside whole-stage codegen at scatter time so posting rows carry a
-    single float instead of four sidecar columns through the shuffle and
-    into the Python encoders.
-
-    Parity note: all terms except the backlink value are integer-valued and
-    exact in float64; JVM Math.log vs libm log may differ by ~1 ulp, and the
-    scatter stream narrows the value to float32 (it only feeds the
-    max_static pruning bounds; relative error ~6e-8 on values ≤ 65535), so
-    block-max consumers must treat bounds with a ±1 score-point margin
-    (query.py does)."""
-    w = w or DEFAULT_WEIGHTS
-    fd = F.col("fd")
-    flags = F.col("flags")
-    v = F.lit(float(w["b1"]))
-    v = v + F.when(flags.bitwiseAND(F.lit(1)) != 0, float(w["b2"])).otherwise(0.0)
-    v = v + F.when(flags.bitwiseAND(F.lit(2)) != 0, float(w["b3"])).otherwise(0.0)
-    v = v + F.when(flags.bitwiseAND(F.lit(4)) != 0, float(w["b4"])).otherwise(0.0)
-    v = v + F.when(fd.bitwiseAND(F.lit(128)) != 0, float(w["b5"])).otherwise(0.0)
-    v = v + F.when(fd.bitwiseAND(F.lit(64)) != 0, float(w["b6"])).otherwise(0.0)
-    if PREFER_DE:
-        v = v + F.when(fd.bitwiseAND(F.lit(32)) != 0, float(LANG_BONUS)).otherwise(0.0)
-    if PREFER_EN:
-        v = v + F.when(fd.bitwiseAND(F.lit(32)) == 0, float(LANG_BONUS)).otherwise(0.0)
-    v = v + (F.lit(31) - fd.bitwiseAND(F.lit(31))).cast("double") * float(w["b7"])
-    ln_mbl = math.log(max_bl) if max_bl > 0 else 0.0
-    bl = F.col("backlinks")
-    if ln_mbl > 0:
-        blv = F.when(bl == 0, 1.0).otherwise(
-            F.lit(2500.0) * F.log(bl.cast("double")) / F.lit(ln_mbl)
-        )
-    else:
-        blv = F.when(bl == 0, 1.0).otherwise(0.0)
-    v = v + F.bround(blv, 0)  # HALF_EVEN, like Pascal Round / np.round
-    rank_v = F.col("rank") + F.lit(1)
-    rank_v = F.when(rank_v == 0, UNRANKED_RANK_VALUE).otherwise(rank_v)
-    return (
-        (F.lit(1.0) - rank_v.cast("double") * F.lit(RANK_FACTOR))
-        * v
-        / F.col("he").cast("double")
-    )
 
 
 def _tokenize_partition(iterator):
@@ -1318,13 +1225,12 @@ def build_index(
     # ---- publish ------------------------------------------------------------
     if "publish" not in lin.done:
         t0 = time.time()
-        lex_stats = {"unique_words": 0, "word_occurrences": 0}
-        high_df: list[tuple[str, int]] = []
         if io.backend == "parquet" and not os.path.isdir(postings_dir):
             # fully-gated / empty corpus: publish a valid empty generation
             seg_stats = {"bytes": 0, "postings": 0, "segments": 0}
             os.makedirs(postings_dir, exist_ok=True)
             os.makedirs(lexicon_dir, exist_ok=True)
+            unique_words, word_occurrences, high_df = 0, 0, []
         else:
             seg_stats = (
                 io.read(postings_dir)
@@ -1337,64 +1243,13 @@ def build_index(
                 )
                 .collect()[0]
             )
-            # info.txt build-stats parity (GenDb.dpr:658-693): totals over
-            # the lexicon (vocabulary-sized, metadata-scale job) + the
-            # high-df term list. The reference appends per keys-step; here
-            # one report covers the whole generation. Under the same
-            # driver-copy cap the dict layout uses, both stats come from
-            # one local pyarrow read of the published parquet lexicon
-            # (bit-identical: count/sum/filter + the (-df, term) order the
-            # SQL used) — two fewer Spark jobs per build; above the cap or
-            # on a catalog backend the aggregate/collect jobs run as before.
-            lex_local = None
-            if io.backend == "parquet":
-                import pyarrow.dataset as pads
-
-                _lds = pads.dataset(lexicon_dir, partitioning="hive")
-                if _lds.count_rows() <= DICT_VOCAB_MAX:
-                    lex_local = _lds.to_table(columns=["term", "df"])
-            if lex_local is not None:
-                terms_l = lex_local.column("term").to_pylist()
-                dfs_l = lex_local.column("df").to_pylist()
-                lex_stats = {
-                    "unique_words": len(dfs_l),
-                    "word_occurrences": int(sum(dfs_l)),
-                }
-                high_df = sorted(
-                    (
-                        (t, int(d))
-                        for t, d in zip(terms_l, dfs_l)
-                        if d >= info_df_threshold
-                    ),
-                    key=lambda x: (-x[1], x[0]),
-                )[:INFO_TERM_LIST_CAP]
-            else:
-                lr = (
-                    io.read(lexicon_dir)
-                    .agg(
-                        F.count("*").alias("uw"),
-                        F.coalesce(F.sum("df"), F.lit(0)).alias("wo"),
-                    )
-                    .collect()[0]
-                )
-                lex_stats = {
-                    "unique_words": int(lr["uw"]),
-                    "word_occurrences": int(lr["wo"]),
-                }
-                high_df = [
-                    (r["term"], int(r["df"]))
-                    for r in io.read(lexicon_dir)
-                    .where(F.col("df") >= info_df_threshold)
-                    .orderBy(F.desc("df"), "term")
-                    .limit(INFO_TERM_LIST_CAP)
-                    .collect()
-                ]
-        with open(os.path.join(vdir, "info.txt"), "w") as f:
-            # reference line format: df right-aligned width 10, space, term
-            for term, df_ in sorted(high_df, key=lambda x: (x[0])):
-                f.write(f"{df_:10d} {term}\n")
-            f.write(f"UniqueWords={lex_stats['unique_words']}\n")
-            f.write(f"WordOccurences={lex_stats['word_occurrences']}\n")
+            unique_words, word_occurrences, high_df = lexicon_stats(
+                lexicon_dir,
+                info_df_threshold,
+                lambda: io.read(lexicon_dir),
+                local=io.backend == "parquet",
+            )
+        write_info_txt(vdir, unique_words, word_occurrences, high_df)
         meta = {
             "n_docs": int(n_docs),
             "max_backlinks": int(max_bl),
@@ -1405,8 +1260,8 @@ def build_index(
             "seg_size": seg_size,
             "n_salts": int(eff_salts),
             "n_buckets": N_TERM_BUCKETS,
-            "unique_words": lex_stats["unique_words"],
-            "word_occurrences": lex_stats["word_occurrences"],
+            "unique_words": unique_words,
+            "word_occurrences": word_occurrences,
             "high_df_terms": [[t, d] for t, d in high_df],
         }
         with open(os.path.join(vdir, "meta.json"), "w") as f:
@@ -1441,6 +1296,67 @@ def build_index(
         metrics["compressed_bytes"] = json.load(f)["compressed_bytes"]
     metrics["lineage"] = os.path.join(vdir, "_lineage.jsonl")
     return metrics
+
+
+def lexicon_stats(
+    lexicon_dir: str,
+    df_threshold: int,
+    read_lexicon,
+    local: bool = True,
+) -> tuple[int, int, list[tuple[str, int]]]:
+    """Build statistics of a published lexicon for info.txt and meta.json
+    (GenDb.dpr:658-693): (unique_words, word_occurrences, high_df), where
+    high_df lists the terms with df >= df_threshold by (df desc, term asc),
+    capped at INFO_TERM_LIST_CAP. A parquet lexicon (``local``) of at most
+    DICT_VOCAB_MAX terms is read once with pyarrow and stays columnar
+    until the capped slice — no Spark job; otherwise Spark aggregates
+    ``read_lexicon()``. Both give the same figures and order."""
+    if local:
+        import pyarrow.compute as pc
+        import pyarrow.dataset as pads
+
+        ds = pads.dataset(lexicon_dir, partitioning="hive")
+        if ds.count_rows() <= DICT_VOCAB_MAX:
+            lex = ds.to_table(columns=["term", "df"])
+            high = lex.filter(pc.field("df") >= df_threshold)
+            order = pc.sort_indices(
+                high, sort_keys=[("df", "descending"), ("term", "ascending")]
+            )
+            top = high.take(order[:INFO_TERM_LIST_CAP])
+            return (
+                lex.num_rows,
+                int(pc.sum(lex["df"]).as_py() or 0),
+                list(zip(top["term"].to_pylist(), top["df"].to_pylist())),
+            )
+    lex = read_lexicon()
+    totals = lex.agg(
+        F.count("*").alias("uw"), F.coalesce(F.sum("df"), F.lit(0)).alias("wo")
+    ).collect()[0]
+    high_df = [
+        (r["term"], int(r["df"]))
+        for r in lex.where(F.col("df") >= df_threshold)
+        .orderBy(F.desc("df"), "term")
+        .limit(INFO_TERM_LIST_CAP)
+        .collect()
+    ]
+    return int(totals["uw"]), int(totals["wo"]), high_df
+
+
+def write_info_txt(
+    vdir: str,
+    unique_words: int,
+    word_occurrences: int,
+    high_df: list[tuple[str, int]],
+) -> None:
+    """info.txt in the reference's format: the high-df terms by term, each
+    as df right-aligned to width 10, a space and the term; then the
+    totals. The reference appends per keys-step; here one report covers
+    the whole generation."""
+    with open(os.path.join(vdir, "info.txt"), "w") as f:
+        for term, df_ in sorted(high_df, key=lambda x: x[0]):
+            f.write(f"{df_:10d} {term}\n")
+        f.write(f"UniqueWords={unique_words}\n")
+        f.write(f"WordOccurences={word_occurrences}\n")
 
 
 def _with_doc_id(

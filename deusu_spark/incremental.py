@@ -283,7 +283,8 @@ def compact_index(spark: SparkSession, out_dir: str, io=None) -> dict:
     the build's scatter stage pays, minus tokenization (the dominant
     cost). Hot terms stay doc-range-salted across tasks like the build,
     so a 10^9-posting term never serializes through one task."""
-    from .build import SEGMENTS_SCHEMA, static_score_col
+    from .build import SEGMENTS_SCHEMA
+    from .scoring import static_score_col
     from .merge import _decode_segments_fn
     from .tableio import TableIO
 

@@ -71,9 +71,11 @@ from .build import (
     _encode_partition_fn,
     _pending_version,
     current_index_dir,
-    static_score_col,
+    lexicon_stats,
+    write_info_txt,
 )
-from .constants import INFO_DF_THRESHOLD, INFO_TERM_LIST_CAP
+from .constants import INFO_DF_THRESHOLD
+from .scoring import static_score_col
 from .incremental import _link_tree
 
 
@@ -451,23 +453,12 @@ def merge_indexes(
             )
             .collect()[0]
         )
-        lexdf = spark.read.parquet(lexicon_dir)
-        lr = lexdf.agg(
-            F.count("*").alias("uw"),
-            F.coalesce(F.sum("df"), F.lit(0)).alias("wo"),
-        ).collect()[0]
-        high_df = [
-            (r["term"], int(r["df"]))
-            for r in lexdf.where(F.col("df") >= INFO_DF_THRESHOLD)
-            .orderBy(F.desc("df"), "term")
-            .limit(INFO_TERM_LIST_CAP)
-            .collect()
-        ]
-        with open(os.path.join(vdir, "info.txt"), "w") as f:
-            for term, df_ in sorted(high_df, key=lambda x: (x[0])):
-                f.write(f"{df_:10d} {term}\n")
-            f.write(f"UniqueWords={int(lr['uw'])}\n")
-            f.write(f"WordOccurences={int(lr['wo'])}\n")
+        unique_words, word_occurrences, high_df = lexicon_stats(
+            lexicon_dir,
+            INFO_DF_THRESHOLD,
+            lambda: spark.read.parquet(lexicon_dir),
+        )
+        write_info_txt(vdir, unique_words, word_occurrences, high_df)
         meta = dict(metas[0])
         meta.update(
             {
@@ -476,8 +467,8 @@ def merge_indexes(
                 "n_postings": int(sum(int(m["n_postings"]) for m in metas)),
                 "compressed_bytes": int(seg_stats["bytes"]),
                 "n_segments": int(seg_stats["segments"]),
-                "unique_words": int(lr["uw"]),
-                "word_occurrences": int(lr["wo"]),
+                "unique_words": unique_words,
+                "word_occurrences": word_occurrences,
                 "high_df_terms": [[t, d] for t, d in high_df],
                 "merged_from": [
                     {"dir": d, "n_docs": int(m["n_docs"]), "offset": o}

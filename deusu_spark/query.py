@@ -32,6 +32,11 @@ Scale levers (all exercised even though tests run on local[32]):
     reads the rank-filtered accelerator lists, falls back to full postings
     when fewer than 1000 results — block-max WAND's semantic ancestor
     (GenDb.dpr:975-1109)
+
+Every posting is scored inside the ``mapInPandas`` stages by
+``scoring.score_term``, the same numpy kernel the serving tier
+(query_local) calls on its resident sidecars; the two-pass predicate is
+``queryplan.needs_fancy_pass``, shared with it too.
 """
 
 from __future__ import annotations
@@ -47,15 +52,10 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from . import codec
-from .build import current_index_dir, static_scores
-from .constants import (
-    DEFAULT_WEIGHTS,
-    FANCY_RANK_HI,
-    FANCY_RANK_LO,
-    MAX_RESULTS,
-    SCORE_CLAMP,
-)
-from .queryplan import PlanTerm, compile_query
+from .build import current_index_dir
+from .constants import DEFAULT_WEIGHTS, MAX_RESULTS, SCORE_CLAMP
+from .queryplan import PlanTerm, compile_query, is_fancy_term, needs_fancy_pass
+from .scoring import idf_scaled, location_mask, score_term, term_plan
 from .synth import crc32
 from .textproc import fold
 
@@ -346,12 +346,9 @@ class SearchEngine:
             )
             return [(d, round(s, 6)) for d, s in rows[:k]]
 
-        fancy_terms = [
-            t
-            for t in terms
-            if t.host is None and t.df > self.meta["fancy_threshold"]
-        ]
-        if fancy_terms and not self._fancy_provably_underfills(terms):
+        if needs_fancy_pass(
+            terms, self.meta["fancy_threshold"]
+        ) and not self._fancy_provably_underfills(terms):
             rows, count = self._run_pass(
                 terms, k, w, use_fancy=True, prune=prune, need_count=True
             )
@@ -372,7 +369,6 @@ class SearchEngine:
         are not in the term metadata → False (keep the two-pass
         protocol). Results are identical by construction; the saved pass
         was ~25 % of the 120-query batch wall on the 10M-doc index."""
-        thr = self.meta["fancy_threshold"]
         frames = self._fetch_term_meta(
             sorted({t.key for t in terms if t.host is None})
         )
@@ -382,7 +378,7 @@ class SearchEngine:
                 continue
             if t.host is not None:
                 return False
-            kind = "fancy" if (not t.fancy_hole and t.df > thr) else "full"
+            kind = self._kind(t, use_fancy=True)
             sub = frames.get(t.key)
             n = (
                 int(sub[sub["kind"] == kind]["n"].sum())
@@ -451,10 +447,7 @@ class SearchEngine:
             if not terms:
                 results[qi] = []
                 continue
-            has_fancy = any(
-                t.host is None and t.df > self.meta["fancy_threshold"]
-                for t in terms
-            )
+            has_fancy = needs_fancy_pass(terms, self.meta["fancy_threshold"])
             # two-pass shortcut (shared with search()): a query whose
             # fancy pass provably under-fills routes straight to the full
             # batch, skipping its fancy execution AND the serial residual
@@ -1041,10 +1034,7 @@ class SearchEngine:
             lo, hi, b = _disjoint_bounded(
                 sub["first_doc"].to_numpy(np.int64),
                 sub["last_doc"].to_numpy(np.int64),
-                np.minimum(
-                    np.round(sub["max_static"].to_numpy(np.float64) * idf[t.ti]),
-                    SCORE_CLAMP,
-                ),
+                idf_scaled(sub["max_static"].to_numpy(np.float64), idf[t.ti]),
             )
             los.append(lo)
             his.append(hi)
@@ -1118,7 +1108,7 @@ class SearchEngine:
             return "full"
         return (
             "fancy"
-            if use_fancy and t.df > self.meta["fancy_threshold"]
+            if use_fancy and is_fancy_term(t, self.meta["fancy_threshold"])
             else "full"
         )
 
@@ -1283,12 +1273,7 @@ class SearchEngine:
                                 docs, flags, tomb
                             )
                         for ti, uo, to in specs[(term, kind)]:
-                            if uo:
-                                m = (flags & 4) != 0
-                            elif to:
-                                m = (flags & 2) != 0
-                            else:
-                                m = slice(None)
+                            m = location_mask(flags, uo, to)
                             d, f = docs[m], flags[m]
                             tis.append(np.full(len(d), ti, dtype=np.int32))
                             dids.append(d)
@@ -1391,7 +1376,7 @@ class SearchEngine:
         _decode → _score_rows above the sidecar broadcast cap.
 
         Scores are bit-identical to the joined path: both call
-        _term_score_block on the same arrays."""
+        scoring.score_term on the same arrays."""
         side = self._sidecars_py()
         if side is None:
             return self._decode_score_grouped(
@@ -1405,20 +1390,8 @@ class SearchEngine:
                 plain, use_fancy, intervals, per_term_intervals
             )
             if segs is not None:
-                plan = {
-                    t.ti: {
-                        "idf": t.idf,
-                        "df": t.df,
-                        "include_bl": t.include_backlink,
-                        "is_host": False,
-                        "is_set": t.action == "SET",
-                        "hole": bool(t.fancy_hole),
-                    }
-                    for t in plain
-                }
-                max_bl = int(self.meta["max_backlinks"])
-                n_docs = int(self.meta["n_docs"])
-                avgdl = self.avgdl if mode == "bm25" else 1.0
+                plan = {t.ti: term_plan(t) for t in plain}
+                ctx = self._score_ctx(w, mode)
                 tomb_bc = self._tomb_bc
 
                 def fused_fn(iterator):
@@ -1449,30 +1422,16 @@ class SearchEngine:
                                 pos_ = pos_[hitm]
                                 if not len(docs):
                                     continue
-                            fd = sc["fd"][pos_]
-                            he = sc["he"][pos_]
-                            rank = sc["rank"][pos_]
-                            bl = sc["bl"][pos_]
-                            dl = sc["dl"][pos_]
+                            side_ = {
+                                c: sc[c][pos_]
+                                for c in ("fd", "he", "rank", "bl", "dl")
+                            }
                             for ti, uo, to in specs[(term, kind)]:
-                                if uo:
-                                    m = (flags & 4) != 0
-                                elif to:
-                                    m = (flags & 2) != 0
-                                else:
-                                    m = slice(None)
-                                p = plan[ti]
-                                d = docs[m]
-                                s = _term_score_block(
-                                    p, mode, n_docs, avgdl, max_bl, w,
-                                    flags[m], fd[m], he[m], rank[m],
-                                    bl[m], dl[m],
+                                m = location_mask(flags, uo, to)
+                                d, s = score_term(
+                                    plan[ti], docs[m], flags[m], side_, m,
+                                    **ctx,
                                 )
-                                if p["hole"]:
-                                    keep = (rank[m] > FANCY_RANK_LO) & (
-                                        rank[m] < FANCY_RANK_HI
-                                    )
-                                    d, s = d[keep], s[keep]
                                 tis.append(
                                     np.full(len(d), ti, dtype=np.int32)
                                 )
@@ -1521,7 +1480,7 @@ class SearchEngine:
         join (the old shape) shuffled and sorted every shared term's
         postings once PER QUERY — the dominant cost of the 10M-doc batch
         profile. Scores are bit-identical to _score_rows: same
-        _term_score_block on the same masked arrays (rank-identity
+        scoring.score_term on the same masked arrays (rank-identity
         pytest). Host terms keep the per-host-sized joined path."""
         plain = [t for t in terms if t.host is None]
         host = [t for t in terms if t.host is not None]
@@ -1546,20 +1505,8 @@ class SearchEngine:
                                 (gkey[k4], uo, to)
                             )
                         group_tis.setdefault(gkey[k4], []).append(ti)
-                plan = {
-                    t.ti: {
-                        "idf": t.idf,
-                        "df": t.df,
-                        "include_bl": t.include_backlink,
-                        "is_host": False,
-                        "is_set": t.action == "SET",
-                        "hole": bool(t.fancy_hole),
-                    }
-                    for t in plain
-                }
-                max_bl = int(self.meta["max_backlinks"])
-                n_docs = int(self.meta["n_docs"])
-                avgdl = self.avgdl if mode == "bm25" else 1.0
+                plan = {t.ti: term_plan(t) for t in plain}
+                ctx = self._score_ctx(w, mode)
                 tomb_bc = self._tomb_bc
 
                 def decode_fn(iterator):
@@ -1575,12 +1522,7 @@ class SearchEngine:
                                     docs, flags, tomb
                                 )
                             for gi, uo, to in dec_specs[(term, kind)]:
-                                if uo:
-                                    m = (flags & 4) != 0
-                                elif to:
-                                    m = (flags & 2) != 0
-                                else:
-                                    m = slice(None)
+                                m = location_mask(flags, uo, to)
                                 d, f = docs[m], flags[m]
                                 gis.append(
                                     np.full(len(d), gi, dtype=np.int32)
@@ -1606,33 +1548,19 @@ class SearchEngine:
                             continue
                         gi = pdf["ti"].to_numpy(np.int32)
                         flags = pdf["flags"].to_numpy(np.int64)
-                        fd = pdf["fd"].to_numpy(np.int64)
-                        he = pdf["he"].to_numpy(np.int64)
-                        rank = pdf["rank"].to_numpy(np.int64)
-                        bl = pdf["backlinks"].to_numpy(np.int64)
-                        dl = pdf["dl"].to_numpy(np.float64)
+                        side = _sidecar_cols(pdf)
                         doc_id = pdf["doc_id"].to_numpy(np.int64)
                         tis_o, dids_o, scs_o = [], [], []
                         for g, tis in group_tis.items():
                             m = gi == g
                             if not m.any():
                                 continue
-                            f_, fd_, he_, r_ = (
-                                flags[m], fd[m], he[m], rank[m]
-                            )
-                            b_, d_, doc_ = bl[m], dl[m], doc_id[m]
+                            side_ = {c: a[m] for c, a in side.items()}
                             for t_i in tis:
-                                p = plan[t_i]
-                                s = _term_score_block(
-                                    p, mode, n_docs, avgdl, max_bl, w,
-                                    f_, fd_, he_, r_, b_, d_,
+                                dd, s = score_term(
+                                    plan[t_i], doc_id[m], flags[m], side_,
+                                    None, **ctx,
                                 )
-                                dd = doc_
-                                if p["hole"]:
-                                    keep = (r_ > FANCY_RANK_LO) & (
-                                        r_ < FANCY_RANK_HI
-                                    )
-                                    dd, s = dd[keep], s[keep]
                                 tis_o.append(
                                     np.full(len(dd), t_i, dtype=np.int32)
                                 )
@@ -1665,6 +1593,17 @@ class SearchEngine:
         return out
 
     # -- scoring -------------------------------------------------------------
+    def _score_ctx(self, w, mode: str) -> dict:
+        """The scoring kernels' per-query constants (avgdl only for bm25:
+        computing it costs a Spark job)."""
+        return dict(
+            mode=mode,
+            w=w,
+            max_bl=int(self.meta["max_backlinks"]),
+            n_docs=int(self.meta["n_docs"]),
+            avgdl=self.avgdl if mode == "bm25" else 1.0,
+        )
+
     def _score_rows(
         self,
         decoded: DataFrame,
@@ -1672,27 +1611,10 @@ class SearchEngine:
         w,
         mode: str = "deusu",
     ) -> DataFrame:
-        """Join sidecars and compute per-posting scores, vectorized.
-
-        mode='deusu': the exact reference score (searchservernew.dpr:874-899
-        + host path :355-364). mode='bm25': textbook BM25 weight with binary
-        TF (idf = ln(1+(N-df+0.5)/(df+0.5)), k1=1.2, b=0.75).
-        """
-        plan = {
-            t.ti: {
-                "idf": t.idf,
-                "df": t.df,
-                "include_bl": t.include_backlink,
-                "is_host": t.host is not None,
-                "is_set": t.action == "SET",
-                "hole": bool(t.fancy_hole),
-            }
-            for t in terms
-        }
-        hole_tis = [ti for ti, p in plan.items() if p["hole"]]
-        max_bl = int(self.meta["max_backlinks"])
-        n_docs = int(self.meta["n_docs"])
-        avgdl = self.avgdl if mode == "bm25" else 1.0
+        """Join sidecars and score each posting with scoring.score_term
+        (deusu or bm25), vectorized per term."""
+        plan = {t.ti: term_plan(t) for t in terms}
+        ctx = self._score_ctx(w, mode)
         dm = self._docmeta_cols
         if int(self.meta["n_docs"]) <= self.docmeta_broadcast_max_docs:
             dm = F.broadcast(dm)
@@ -1700,42 +1622,29 @@ class SearchEngine:
 
         def score_fn(iterator):
             for pdf in iterator:
-                n = len(pdf)
-                if n == 0:
+                if len(pdf) == 0:
                     continue
                 ti = pdf["ti"].to_numpy(np.int32)
-                out = np.zeros(n, dtype=np.float64)
                 flags = pdf["flags"].to_numpy(np.int64)
-                fd = pdf["fd"].to_numpy(np.int64)
-                he = pdf["he"].to_numpy(np.int64)
-                rank = pdf["rank"].to_numpy(np.int64)
-                bl = pdf["backlinks"].to_numpy(np.int64)
-                dl = pdf["dl"].to_numpy(np.float64)
+                side = _sidecar_cols(pdf)
+                doc_id = pdf["doc_id"].to_numpy(np.int64)
+                tis, dids, scs = [], [], []
                 for t_i, p in plan.items():
                     m = ti == t_i
                     if not m.any():
                         continue
-                    out[m] = _term_score_block(
-                        p, mode, n_docs, avgdl, max_bl, w,
-                        flags[m], fd[m], he[m], rank[m], bl[m], dl[m],
+                    d, s = score_term(p, doc_id[m], flags[m], side, m, **ctx)
+                    tis.append(np.full(len(d), t_i, dtype=np.int32))
+                    dids.append(d)
+                    scs.append(s)
+                if tis:
+                    yield pd.DataFrame(
+                        {
+                            "ti": np.concatenate(tis),
+                            "doc_id": np.concatenate(dids),
+                            "score": np.concatenate(scs),
+                        }
                     )
-                doc_id = pdf["doc_id"].to_numpy(np.int64)
-                if hole_tis:
-                    # fancy-hole terms (federation): the part has no fancy
-                    # segments, so their full postings stand in — keep only
-                    # docs inside the domain-rank window, the exact per-doc
-                    # predicate the fancy encoder applies (build.py fancy
-                    # emit; GenDb.dpr:1053-1071)
-                    keep = np.ones(n, dtype=bool)
-                    for t_i in hole_tis:
-                        m = ti == t_i
-                        keep[m] = (rank[m] > FANCY_RANK_LO) & (
-                            rank[m] < FANCY_RANK_HI
-                        )
-                    ti, doc_id, out = ti[keep], doc_id[keep], out[keep]
-                yield pd.DataFrame(
-                    {"ti": ti, "doc_id": doc_id, "score": out}
-                )
 
         return joined.mapInPandas(score_fn, schema=SCORED_SCHEMA)
 
@@ -1759,7 +1668,7 @@ class SearchEngine:
         if sm.empty:
             return []
         ns = sm["n"].to_numpy(np.int64)
-        bounds = np.minimum(np.round(sm["max_static"].to_numpy() * t.idf), SCORE_CLAMP)
+        bounds = idf_scaled(sm["max_static"].to_numpy(), t.idf)
         order = np.argsort(-bounds, kind="stable")
         firsts = sm["first_doc"].to_numpy(np.int64)
         lasts = sm["last_doc"].to_numpy(np.int64)
@@ -1997,9 +1906,7 @@ class FederatedSearchEngine:
                 "fancy_holes": [
                     t.key
                     for t in terms
-                    if t.host is None
-                    and t.df > thr
-                    and p.term_df(t.key) <= thr
+                    if is_fancy_term(t, thr) and p.term_df(t.key) <= thr
                 ],
             }
             for i, p in enumerate(self.parts)
@@ -2019,7 +1926,7 @@ class FederatedSearchEngine:
         thr = self.meta["fancy_threshold"]
         return [
             dataclasses.replace(t, fancy_hole=True)
-            if t.host is None and t.df > thr and p.term_df(t.key) <= thr
+            if is_fancy_term(t, thr) and p.term_df(t.key) <= thr
             else t
             for t in terms
         ]
@@ -2049,9 +1956,8 @@ class FederatedSearchEngine:
         return [(d, int(s)) for d, s in rows[:k]]
 
     def _two_pass(self, terms, k, w, prune, mode):
-        if mode == "deusu" and any(
-            t.host is None and t.df > self.meta["fancy_threshold"]
-            for t in terms
+        if mode == "deusu" and needs_fancy_pass(
+            terms, self.meta["fancy_threshold"]
         ):
             rows, total = self._run(terms, k, w, True, prune, mode)
             if total >= MAX_RESULTS:
@@ -2145,10 +2051,7 @@ class FederatedSearchEngine:
             if not terms:
                 results[qi] = []
                 continue
-            has_fancy = any(
-                t.host is None and t.df > self.meta["fancy_threshold"]
-                for t in terms
-            )
+            has_fancy = needs_fancy_pass(terms, self.meta["fancy_threshold"])
             (fancy_batch if has_fancy else full_batch).append((qi, terms))
 
         if fancy_batch:
@@ -2230,56 +2133,15 @@ class FederatedSearchEngine:
         }
 
 
-def _term_score_block(
-    p: dict,
-    mode: str,
-    n_docs: int,
-    avgdl: float,
-    max_bl: int,
-    w,
-    flags: np.ndarray,
-    fd: np.ndarray,
-    he: np.ndarray,
-    rank: np.ndarray,
-    bl: np.ndarray,
-    dl: np.ndarray,
-) -> np.ndarray:
-    """Scores for ONE query-term's postings (arrays pre-masked to the
-    term). ``p`` is the per-term plan entry (idf/df/include_bl/is_host/
-    is_set). The single scoring implementation shared by the joined score
-    stage (_score_rows) and the fused decode+score stage — the reference
-    formula, searchservernew.dpr:874-899 + host path :355-364."""
-    import math as _math
-
-    if mode == "bm25":
-        if p["is_host"]:
-            return np.zeros(len(dl), dtype=np.float64)
-        idf = _math.log(1.0 + (n_docs - p["df"] + 0.5) / (p["df"] + 0.5))
-        return (
-            idf
-            * (1.2 + 1.0)
-            / (1.0 + 1.2 * (1 - 0.75 + 0.75 * dl / avgdl))
-        )
-    if p["is_host"]:
-        v = np.full(len(fd), w["b1"], dtype=np.float64)
-        v += (31 - (fd & 31)) * w["b7"]
-        if p["is_set"]:
-            v += np.round(_bl_value(bl, max_bl))
-        return np.clip(v, 1, SCORE_CLAMP)
-    s = static_scores(
-        flags, fd, he, rank, bl, max_bl,
-        include_backlink=p["include_bl"], weights=w,
-    )
-    return np.minimum(np.round(s * p["idf"]), SCORE_CLAMP)
-
-
-def _bl_value(bl: np.ndarray, max_bl: int) -> np.ndarray:
-    import math
-
-    ln_mbl = math.log(max_bl) if max_bl > 0 else 0.0
-    if ln_mbl <= 0:
-        return np.where(bl == 0, 1.0, 0.0)
-    return np.where(bl == 0, 1.0, 2500.0 * np.log(np.maximum(bl, 1)) / ln_mbl)
+def _sidecar_cols(pdf: pd.DataFrame) -> dict[str, np.ndarray]:
+    """The scoring kernels' sidecar arrays from a docmeta-joined batch."""
+    return {
+        "fd": pdf["fd"].to_numpy(np.int64),
+        "he": pdf["he"].to_numpy(np.int64),
+        "rank": pdf["rank"].to_numpy(np.int64),
+        "bl": pdf["backlinks"].to_numpy(np.int64),
+        "dl": pdf["dl"].to_numpy(np.float64),
+    }
 
 
 def _intersect_coverage(

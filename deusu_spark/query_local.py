@@ -18,33 +18,231 @@ and the URL shape), filled the first time a doc is a re-rank candidate.
 On the synthetic transcript corpus the display strings cost about
 0.4 KB per doc and a filled memo entry about 0.6 KB. ShardedSearcher and
 FederatedSearcher route each fetched id to the shard or part that owns
-it, one fetch per owner."""
+it, one fetch per owner.
+
+All three searchers share one request path (``_Coordinator``): the Q14
+result cache, the reference's two-pass rule and batch search. They differ
+only in how a pass runs: LocalSearcher runs it on its own docs, while
+ShardedSearcher and FederatedSearcher (``_FanOut``) run it on every member
+searcher and merge. Each posting is scored by ``scoring.term_scores``, the
+kernel the distributed engine's Spark stages call too."""
 
 from __future__ import annotations
 
 import json
-import math
 import os
 from concurrent.futures import ThreadPoolExecutor
 
 import numpy as np
 import pyarrow.dataset as pads
 
-from .build import current_index_dir, load_tombstones, static_scores
-from .constants import (
-    DEFAULT_WEIGHTS,
-    FANCY_RANK_HI,
-    FANCY_RANK_LO,
-    MAX_RESULTS,
-    SCORE_CLAMP,
-)
-from .queryplan import PlanTerm, compile_query
+from .build import current_index_dir, load_tombstones
+from .constants import DEFAULT_WEIGHTS, MAX_RESULTS, SCORE_CLAMP
+from .queryplan import PlanTerm, compile_query, is_fancy_term, needs_fancy_pass
+from .scoring import in_fancy_window, location_mask, term_plan, term_scores
 from .textproc import fold
 from . import codec
 from .synth import crc32
 
 
-class LocalSearcher:
+class _Coordinator:
+    """The serving query server's request path, shared by every serving
+    searcher: the Q14 result cache in front of everything, the
+    reference's two-pass rule, and batch search. A subclass supplies
+    ``meta``, ``compile(query)`` and ``_pass(terms, w, use_fancy, mode,
+    fetch, min_count)``, which returns one pass's top ``fetch`` rows by
+    (score desc, doc_id asc), or None when the pass found fewer than
+    ``min_count`` candidates (so a discarded pass builds no top-k)."""
+
+    def _init_result_cache(self) -> None:
+        # Q14 result cache — searchservernew.dpr:1077-1101: 2048 slots keyed
+        # by crc32 of (query, weights, mode); a slot holds ONE entry (new
+        # queries evict colliding ones), hits must match the full key. The
+        # reference caches the whole top-1000 so pagination re-slices for
+        # free; we do the same. A coordinator keeps it in front of its
+        # fan-out, so a repeat costs no member work.
+        self._result_cache: dict[int, tuple[str, list]] = {}
+        self.cache_slots = 2048
+        self.cache_hits = 0
+        self.cache_misses = 0
+
+    def search(
+        self,
+        query: str,
+        k: int = 10,
+        weights: dict[str, int] | None = None,
+        mode: str = "deusu",
+    ) -> list[tuple[int, int]]:
+        w = dict(DEFAULT_WEIGHTS)
+        if weights:
+            w.update(weights)
+        # Q14: the top-1000 for (query, weights, mode) is cached whole; any
+        # k <= 1000 (and any pagination slice) is served from the cached
+        # list. Larger k (an API extension beyond the reference's top-1000
+        # contract) bypasses the cache so results never depend on call order.
+        if k > MAX_RESULTS:
+            return self._search_uncached(query, k, w, mode)[:k]
+        cache_key = f"{query}\x00{mode}\x00{sorted(w.items())}"
+        slot = crc32(cache_key) % self.cache_slots
+        hit = self._result_cache.get(slot)
+        if hit is not None and hit[0] == cache_key:
+            self.cache_hits += 1
+            return hit[1][:k]
+        self.cache_misses += 1
+        rows = self._search_uncached(query, k, w, mode)
+        self._result_cache[slot] = (cache_key, rows)
+        return rows[:k]
+
+    def search_many(
+        self,
+        queries: list[str],
+        k: int = 10,
+        weights: dict[str, int] | None = None,
+        mode: str = "deusu",
+    ) -> list[list[tuple[int, int]]]:
+        """Batch serving twin of SearchEngine.search_many: per-query results
+        identical to search(). The amortization is the decoded-term cache —
+        a (term, kind) shared by several queries in the batch is read and
+        varbyte-decoded once per searcher — plus the Q14 result cache for
+        repeats."""
+        return [
+            self.search(q, k=k, weights=weights, mode=mode) for q in queries
+        ]
+
+    def _search_uncached(
+        self, query: str, k: int, w: dict[str, int], mode: str
+    ) -> list[tuple[int, int]]:
+        terms = self.compile(query)
+        if not terms:
+            return []
+        fetch = max(k, MAX_RESULTS)  # cache the full top-1000
+        # two-pass rule (searchservernew.dpr:1836-1855): the fancy pass
+        # stands only if it finds at least MAX_RESULTS candidates
+        if mode != "bm25" and needs_fancy_pass(
+            terms, self.meta["fancy_threshold"]
+        ):
+            rows = self._pass(terms, w, True, mode, fetch, MAX_RESULTS)
+            if rows is not None:
+                return rows
+        return self._pass(terms, w, False, mode, fetch, 0)
+
+
+class _PositionalSearch:
+    """Phrase, NEAR/w and proximity-ranked retrieval over the positions
+    sidecar (build_index(positions=True)): the searcher's own search()
+    retrieves in score order and ``_on_owners(cand, fn)`` returns
+    ``fn(searcher, ids)`` for each searcher owning some of the sorted
+    candidate ids — so the single server and the sharded coordinator
+    are rank-identical (tested)."""
+
+    def _require_positions(self) -> None:
+        from .positions import has_positions
+
+        if not has_positions(self.vdir):
+            raise RuntimeError(
+                "no positions sidecar on this index — build with "
+                "build_index(positions=True)"
+            )
+
+    def _verified_top(self, query, k, weights, verify_one):
+        """Top-k of ``query`` whose docs pass ``verify_one(searcher, ids)
+        -> set``: page the fetch ×4 until k verify or the candidate
+        stream ends; scores are the plain AND scores."""
+        fetch = max(4 * k, 64)
+        while True:
+            rows = self.search(query, k=fetch, weights=weights)
+            cand = np.asarray(sorted(d for d, _ in rows), dtype=np.int64)
+            ok = set().union(*self._on_owners(cand, verify_one))
+            verified = [(d, s) for d, s in rows if d in ok]
+            if len(verified) >= k or len(rows) < fetch:
+                return verified[:k]
+            fetch *= 4
+
+    def search_phrase(
+        self,
+        phrase: str,
+        k: int = 10,
+        weights: dict[str, int] | None = None,
+    ) -> list[tuple[int, int]]:
+        """Serving-tier phrase top-k — the exact twin of
+        SearchEngine.search_phrase: AND-retrieve in score order, verify
+        adjacency from decoded positions of the candidate docs only (on
+        the shard owning each), page the fetch ×4 until k matches verify."""
+        from .positions import phrase_pattern
+
+        self._require_positions()
+        pattern = phrase_pattern(phrase)
+        if not pattern:
+            return []
+        query = " ".join(t for _, t in pattern)
+        if len(pattern) == 1:
+            return self.search(query, k=k, weights=weights)
+        return self._verified_top(
+            query, k, weights, lambda sh, c: sh._phrase_verify(pattern, c)
+        )
+
+    def search_near(
+        self,
+        query: str,
+        k: int = 10,
+        window: int = 8,
+        weights: dict[str, int] | None = None,
+    ) -> list[tuple[int, int]]:
+        """Serving-tier unordered proximity top-k (NEAR/w) — the exact
+        twin of SearchEngine.search_near: plain AND scores, verified by
+        the shared minimal-window sweep (positions.near_window_match)."""
+        from .positions import phrase_pattern
+
+        self._require_positions()
+        terms = [t for _, t in phrase_pattern(query)]
+        if not terms:
+            return []
+        uniq = list(dict.fromkeys(terms))
+        if len(uniq) == 1:
+            return self.search(uniq[0], k=k, weights=weights)
+        return self._verified_top(
+            " ".join(terms),
+            k,
+            weights,
+            lambda sh, c: sh._near_verify(uniq, int(window), c),
+        )
+
+    def search_proximity(
+        self,
+        query: str,
+        k: int = 10,
+        weights: dict[str, int] | None = None,
+    ) -> list[tuple[int, int]]:
+        """Serving-tier proximity-RANKED top-k — the exact twin of
+        SearchEngine.search_proximity (same shared rerank loop, boost and
+        sweep; rank-identical, tested): each owning searcher computes the
+        minimal windows of its own candidates."""
+        from .positions import phrase_pattern, proximity_rerank
+
+        self._require_positions()
+        terms = [t for _, t in phrase_pattern(query)]
+        if not terms:
+            return []
+        uniq = list(dict.fromkeys(terms))
+        qstr = " ".join(terms)
+
+        def spans_of(cand: np.ndarray) -> dict[int, int]:
+            out: dict[int, int] = {}
+            for part in self._on_owners(
+                cand, lambda sh, c: sh._min_spans(uniq, c)
+            ):
+                out.update(part)
+            return out
+
+        return proximity_rerank(
+            lambda fetch: self.search(qstr, k=fetch, weights=weights),
+            spans_of,
+            k,
+            len(uniq),
+        )
+
+
+class LocalSearcher(_Coordinator, _PositionalSearch):
     def __init__(
         self,
         index_root: str,
@@ -135,15 +333,7 @@ class LocalSearcher:
         self.term_cache_hits = 0
         self.term_cache_misses = 0
         self.term_cache_evictions = 0
-        # Q14 result cache — searchservernew.dpr:1077-1101: 2048 slots keyed
-        # by crc32 of (query, weights, mode); a slot holds ONE entry (new
-        # queries evict colliding ones), hits must match the full key. The
-        # reference caches the whole top-1000 so pagination re-slices for
-        # free; we do the same.
-        self._result_cache: dict[int, tuple[str, list]] = {}
-        self.cache_slots = 2048
-        self.cache_hits = 0
-        self.cache_misses = 0
+        self._init_result_cache()
         self.n_docs = int(self.meta["n_docs"])
         self.max_bl = int(self.meta["max_backlinks"])
         self.avgdl = float(self.dl.mean()) if len(self.dl) else 1.0
@@ -175,8 +365,7 @@ class LocalSearcher:
             # sidecar, which is precisely what merge.py's fancy-hole
             # rebuild materializes offline.
             docs, flags = self._term_postings(term, False, df)
-            loc = docs - self.doc_lo
-            m = (self.rank[loc] > FANCY_RANK_LO) & (self.rank[loc] < FANCY_RANK_HI)
+            m = in_fancy_window(self.rank[docs - self.doc_lo])
             return docs[m], flags[m]
         ckey = (term, kind)
         hit = self._term_cache.get(ckey)
@@ -307,67 +496,10 @@ class LocalSearcher:
             query, self.compile(query), self.n_docs, self.meta["fancy_threshold"]
         )
 
-    def search(
-        self,
-        query: str,
-        k: int = 10,
-        weights: dict[str, int] | None = None,
-        mode: str = "deusu",
-    ) -> list[tuple[int, int]]:
-        w = dict(DEFAULT_WEIGHTS)
-        if weights:
-            w.update(weights)
-        # Q14: the top-1000 for (query, weights, mode) is cached whole; any
-        # k <= 1000 (and any pagination slice) is served from the cached
-        # list. Larger k (an API extension beyond the reference's top-1000
-        # contract) bypasses the cache so results never depend on call order.
-        if k > MAX_RESULTS:
-            return self._search_uncached(query, k, w, mode)[:k]
-        cache_key = f"{query}\x00{mode}\x00{sorted(w.items())}"
-        slot = crc32(cache_key) % self.cache_slots
-        hit = self._result_cache.get(slot)
-        if hit is not None and hit[0] == cache_key:
-            self.cache_hits += 1
-            return hit[1][:k]
-        self.cache_misses += 1
-        rows = self._search_uncached(query, k, w, mode)
-        self._result_cache[slot] = (cache_key, rows)
-        return rows[:k]
-
-    def search_phrase(
-        self,
-        phrase: str,
-        k: int = 10,
-        weights: dict[str, int] | None = None,
-    ) -> list[tuple[int, int]]:
-        """Serving-tier phrase top-k — the exact twin of
-        SearchEngine.search_phrase (positions sidecar required, built by
-        build_index(positions=True)): AND-retrieve in score order, verify
-        adjacency from decoded positions of the candidate docs only, page
-        the fetch ×4 until k matches verify. Scores are the plain AND
-        scores; results are rank-identical to the distributed path."""
-        from .positions import has_positions, phrase_pattern
-
-        if not has_positions(self.vdir):
-            raise RuntimeError(
-                "no positions sidecar on this index — build with "
-                "build_index(positions=True)"
-            )
-        pattern = phrase_pattern(phrase)
-        if not pattern:
-            return []
-        query = " ".join(t for _, t in pattern)
-        if len(pattern) == 1:
-            return self.search(query, k=k, weights=weights)
-        fetch = max(4 * k, 64)
-        while True:
-            rows = self.search(query, k=fetch, weights=weights)
-            cand = np.asarray(sorted(d for d, _ in rows), dtype=np.int64)
-            ok = self._phrase_verify(pattern, cand)
-            verified = [(d, s) for d, s in rows if d in ok]
-            if len(verified) >= k or len(rows) < fetch:
-                return verified[:k]
-            fetch *= 4
+    # the shared request path, also bound in this class's own namespace:
+    # perfbench/trace.py wraps LocalSearcher.search from the class dict,
+    # which then times single-server calls only
+    search = _Coordinator.search
 
     def _candidate_positions(
         self, terms: set[str], cand: np.ndarray
@@ -431,40 +563,6 @@ class LocalSearcher:
                 out.add(doc)
         return out
 
-    def search_near(
-        self,
-        query: str,
-        k: int = 10,
-        window: int = 8,
-        weights: dict[str, int] | None = None,
-    ) -> list[tuple[int, int]]:
-        """Serving-tier unordered proximity top-k (NEAR/w) — the exact
-        twin of SearchEngine.search_near: plain AND scores, verified by
-        the shared minimal-window sweep (positions.near_window_match)."""
-        from .positions import has_positions, phrase_pattern
-
-        if not has_positions(self.vdir):
-            raise RuntimeError(
-                "no positions sidecar on this index — build with "
-                "build_index(positions=True)"
-            )
-        terms = [t for _, t in phrase_pattern(query)]
-        if not terms:
-            return []
-        uniq = list(dict.fromkeys(terms))
-        if len(uniq) == 1:
-            return self.search(uniq[0], k=k, weights=weights)
-        qstr = " ".join(terms)
-        fetch = max(4 * k, 64)
-        while True:
-            rows = self.search(qstr, k=fetch, weights=weights)
-            cand = np.asarray(sorted(d for d, _ in rows), dtype=np.int64)
-            ok = self._near_verify(uniq, int(window), cand)
-            verified = [(d, s) for d, s in rows if d in ok]
-            if len(verified) >= k or len(rows) < fetch:
-                return verified[:k]
-            fetch *= 4
-
     def _near_verify(
         self, uniq: list[str], window: int, cand: np.ndarray
     ) -> set[int]:
@@ -505,71 +603,14 @@ class LocalSearcher:
             out[doc] = int(min_cover_window(lists))
         return out
 
-    def search_proximity(
-        self,
-        query: str,
-        k: int = 10,
-        weights: dict[str, int] | None = None,
-    ) -> list[tuple[int, int]]:
-        """Serving-tier proximity-RANKED top-k — the exact twin of
-        SearchEngine.search_proximity (same shared rerank loop, boost and
-        sweep; rank-identical, tested)."""
-        from .positions import (
-            has_positions,
-            phrase_pattern,
-            proximity_rerank,
-        )
+    def _pass(self, terms, w, use_fancy, mode, fetch, min_count):
+        docs, vals = self._run_pass(terms, w, use_fancy, mode)
+        if len(docs) < min_count:
+            return None
+        return self._topk(docs, vals, fetch, is_float=mode == "bm25")
 
-        if not has_positions(self.vdir):
-            raise RuntimeError(
-                "no positions sidecar on this index — build with "
-                "build_index(positions=True)"
-            )
-        terms = [t for _, t in phrase_pattern(query)]
-        if not terms:
-            return []
-        uniq = list(dict.fromkeys(terms))
-        qstr = " ".join(terms)
-        return proximity_rerank(
-            lambda fetch: self.search(qstr, k=fetch, weights=weights),
-            lambda cand: self._min_spans(uniq, cand),
-            k,
-            len(uniq),
-        )
-
-    def search_many(
-        self,
-        queries: list[str],
-        k: int = 10,
-        weights: dict[str, int] | None = None,
-        mode: str = "deusu",
-    ) -> list[list[tuple[int, int]]]:
-        """Batch serving twin of SearchEngine.search_many: per-query results
-        identical to search(). The amortization is the decoded-term cache —
-        a (term, kind) shared by several queries in the batch is read and
-        varbyte-decoded once — plus the Q14 result cache for repeats."""
-        return [
-            self.search(q, k=k, weights=weights, mode=mode) for q in queries
-        ]
-
-    def _search_uncached(
-        self, query: str, k: int, w: dict[str, int], mode: str
-    ) -> list[tuple[int, int]]:
-        terms = self.compile(query)
-        if not terms:
-            return []
-        fetch = max(k, MAX_RESULTS)  # cache the full top-1000
-        if mode == "bm25":
-            docs, vals = self._run_pass(terms, w, use_fancy=False, mode="bm25")
-            return self._topk(docs, vals, fetch, is_float=True)
-        if any(
-            t.host is None and t.df > self.meta["fancy_threshold"] for t in terms
-        ):
-            docs, vals = self._run_pass(terms, w, use_fancy=True)
-            if len(docs) >= MAX_RESULTS:
-                return self._topk(docs, vals, fetch)
-        docs, vals = self._run_pass(terms, w, use_fancy=False)
-        return self._topk(docs, vals, fetch)
+    def _on_owners(self, cand: np.ndarray, fn) -> list:
+        return [fn(self, cand)]
 
     def fetch_results(self, rows: list[tuple[int, int]]):
         """Q15 (ShowLink, searchservernew.dpr:1166-1204): join the engine's
@@ -618,77 +659,91 @@ class LocalSearcher:
 
     def _run_pass(self, terms, w, use_fancy, mode="deusu"):
         """Sequential acSet/acAnd/acNot over sorted doc arrays (the bitfield
-        walk of searchservernew.dpr:742-954 as numpy set algebra)."""
+        walk of searchservernew.dpr:742-954 as numpy set algebra); each
+        positive term's postings are scored by scoring.term_scores."""
+        side = {
+            "fd": self.fd,
+            "he": self.he,
+            "rank": self.rank,
+            "bl": self.backlinks,
+            "dl": self.dl,
+        }
+        ctx = dict(
+            mode=mode, w=w, max_bl=self.max_bl, n_docs=self.n_docs,
+            avgdl=self.avgdl,
+        )
         cand_docs = np.empty(0, dtype=np.int64)
         cand_vals = np.empty(0, dtype=np.float64)
-        for i, t in enumerate(terms):
-            action = "SET" if i == 0 else t.action
+        for t in terms:
             if t.host is not None:
                 docs = self._host_docs.get(t.host, np.empty(0, dtype=np.int64))
-                loc = docs - self.doc_lo  # sidecar arrays hold [doc_lo, hi)
-                if mode == "bm25":
-                    vals = np.zeros(len(docs))
-                else:
-                    v = w["b1"] + (31 - (self.fd[loc] & 31)) * w["b7"]
-                    if action == "SET":
-                        v = v + np.round(_blv(self.backlinks[loc], self.max_bl))
-                    vals = np.clip(v, 1, SCORE_CLAMP)
+                flags = np.zeros(len(docs), dtype=np.int64)  # host rows: no flags
             else:
                 docs, flags = self._term_postings(t.key, use_fancy, t.df)
-                if t.url_only:
-                    m = (flags & 4) != 0
-                    docs, flags = docs[m], flags[m]
-                elif t.title_only:
-                    m = (flags & 2) != 0
-                    docs, flags = docs[m], flags[m]
-                loc = docs - self.doc_lo
-                if mode == "bm25":
-                    idf = math.log(
-                        1.0 + (self.n_docs - t.df + 0.5) / (t.df + 0.5)
-                    )
-                    vals = (
-                        idf
-                        * 2.2
-                        / (1.0 + 1.2 * (0.25 + 0.75 * self.dl[loc] / self.avgdl))
-                    )
-                else:
-                    s = static_scores(
-                        flags,
-                        self.fd[loc],
-                        self.he[loc],
-                        self.rank[loc],
-                        self.backlinks[loc],
-                        self.max_bl,
-                        include_backlink=t.include_backlink,
-                        weights=w,
-                    )
-                    vals = np.minimum(np.round(s * t.idf), SCORE_CLAMP)
-
-            if action == "SET":
-                cand_docs, cand_vals = docs, vals.astype(np.float64)
-            elif action == "AND":
-                # docs ascending on both sides → searchsorted intersection
-                pos = np.searchsorted(docs, cand_docs)
-                pos_ok = pos < len(docs)
-                hit = np.zeros(len(cand_docs), dtype=bool)
-                hit[pos_ok] = docs[pos[pos_ok]] == cand_docs[pos_ok]
-                add = np.zeros(hit.sum())
-                pos2 = np.searchsorted(docs, cand_docs[hit])
-                add = vals[pos2]
-                cand_docs = cand_docs[hit]
-                base = cand_vals[hit] + add
-                cand_vals = (
-                    np.minimum(base, SCORE_CLAMP) if mode == "deusu" else base
-                )
-            else:  # NOT
+                m = location_mask(flags, t.url_only, t.title_only)
+                docs, flags = docs[m], flags[m]
+            if t.action == "NOT":
                 hit = np.isin(cand_docs, docs, assume_unique=True)
                 cand_docs, cand_vals = cand_docs[~hit], cand_vals[~hit]
-            if action == "AND" and len(cand_docs) == 0:
-                return cand_docs, cand_vals
+                continue
+            # sidecar arrays hold [doc_lo, hi)
+            vals = term_scores(term_plan(t), flags, side, docs - self.doc_lo, **ctx)
+            if t.action == "SET":
+                cand_docs, cand_vals = docs, vals
+                continue
+            # AND: docs ascending on both sides → searchsorted intersection
+            pos = np.searchsorted(docs, cand_docs)
+            pos_ok = pos < len(docs)
+            hit = np.zeros(len(cand_docs), dtype=bool)
+            hit[pos_ok] = docs[pos[pos_ok]] == cand_docs[pos_ok]
+            cand_docs = cand_docs[hit]
+            base = cand_vals[hit] + vals[pos[hit]]
+            cand_vals = np.minimum(base, SCORE_CLAMP) if mode == "deusu" else base
+            if len(cand_docs) == 0:
+                break
         return cand_docs, cand_vals
 
 
-class ShardedSearcher:
+class _FanOut(_Coordinator):
+    """Coordinator over member LocalSearchers (doc-range shards or
+    independently built parts). A pass runs on every member, its local ids
+    shift by the member's doc-id offset, the members' top-k lists merge by
+    (score desc, doc_id asc) and their candidate counts sum for the
+    two-pass rule — so both decisions equal the single server's. With
+    ``parallel`` the members run on a thread pool: their work is
+    numpy/pyarrow, which releases the GIL, and the merge is independent
+    of completion order."""
+
+    def _init_fan_out(self, members, offsets, parallel: bool) -> None:
+        self._members = list(zip(members, offsets))
+        self._pool = (
+            ThreadPoolExecutor(max_workers=len(members))
+            if parallel and len(members) > 1
+            else None
+        )
+        self._init_result_cache()
+
+    def _map(self, fn, items: list) -> list:
+        if self._pool is not None and len(items) > 1:
+            return list(self._pool.map(fn, items))
+        return [fn(x) for x in items]
+
+    def _pass(self, terms, w, use_fancy, mode, fetch, min_count):
+        def one(member):
+            s, off = member
+            docs, vals = s._run_pass(terms, w, use_fancy, mode)
+            top = s._topk(docs, vals, fetch, is_float=mode == "bm25")
+            return len(docs), [(d + off, v) for d, v in top] if off else top
+
+        outs = self._map(one, self._members)
+        if sum(n for n, _ in outs) < min_count:
+            return None
+        rows = [r for _, top in outs for r in top]
+        rows.sort(key=lambda r: (-r[1], r[0]))
+        return rows[:fetch]
+
+
+class ShardedSearcher(_FanOut, _PositionalSearch):
     """Doc-range-sharded serving tier — the beyond-10^8-docs design
     (round-2 review, Missing #4). LocalSearcher's per-doc sidecar vectors
     are its only O(n_docs) RAM; sharding the corpus into S contiguous doc
@@ -709,11 +764,8 @@ class ShardedSearcher:
     fan-out (this class in-process is the same code path); the Q14 result
     cache belongs in front of the fan-out, exactly where the reference
     puts it. In-process the shards fan out on a thread pool
-    (``parallel=True``): the per-shard work is numpy/pyarrow, which
-    releases the GIL, so the fan-out overlaps shard CPU the way separate
-    shard servers would; results merge deterministically regardless of
-    completion order (global (score desc, doc_id asc) sort; candidate
-    totals are an order-free sum)."""
+    (``parallel=True``), overlapping shard CPU the way separate shard
+    servers would."""
 
     def __init__(self, index_root: str, n_shards: int = 2, parallel: bool = True):
         with open(
@@ -727,255 +779,30 @@ class ShardedSearcher:
         ]
         self.shards = [LocalSearcher(index_root, doc_range=r) for r in ranges]
         self.meta = self.shards[0].meta
-        self._pool = (
-            ThreadPoolExecutor(max_workers=len(self.shards))
-            if parallel and len(self.shards) > 1
-            else None
-        )
+        self.vdir = self.shards[0].vdir
         # bm25 needs the GLOBAL avgdl on every shard (a shard's local mean
         # would skew its scores)
         total_dl = sum(float(s.dl.sum()) for s in self.shards)
         avgdl = total_dl / max(n_docs, 1)
         for s in self.shards:
             s.avgdl = avgdl
-        # Q14 result cache IN FRONT of the fan-out (exactly where the
-        # reference puts it, searchservernew.dpr:1077-1101, and where the
-        # class docstring has always placed it): a repeat costs zero shard
-        # work. Same 2048-slot crc32-keyed shape as LocalSearcher.
-        self._result_cache: dict[int, tuple[str, list]] = {}
-        self.cache_slots = 2048
-        self.cache_hits = 0
-        self.cache_misses = 0
+        # shards already answer in global doc ids: offset 0
+        self._init_fan_out(self.shards, [0] * len(self.shards), parallel)
 
-    def search(
-        self,
-        query: str,
-        k: int = 10,
-        weights: dict[str, int] | None = None,
-        mode: str = "deusu",
-    ) -> list[tuple[int, int]]:
-        w = dict(DEFAULT_WEIGHTS)
-        if weights:
-            w.update(weights)
-        if k > MAX_RESULTS:  # beyond the cached top-1000: compute directly
-            return self._search_uncached(query, k, w, mode)[:k]
-        cache_key = f"{query}\x00{mode}\x00{sorted(w.items())}"
-        slot = crc32(cache_key) % self.cache_slots
-        hit = self._result_cache.get(slot)
-        if hit is not None and hit[0] == cache_key:
-            self.cache_hits += 1
-            return hit[1][:k]
-        self.cache_misses += 1
-        rows = self._search_uncached(query, max(k, MAX_RESULTS), w, mode)
-        self._result_cache[slot] = (cache_key, rows)
-        return rows[:k]
+    def compile(self, query: str) -> list[PlanTerm]:
+        return self.shards[0].compile(query)
 
-    def _search_uncached(
-        self, query: str, k: int, w: dict[str, int], mode: str
-    ) -> list[tuple[int, int]]:
-        terms = self.shards[0].compile(query)
-        if not terms:
-            return []
-        fetch = max(k, MAX_RESULTS)
-
-        def one_shard(sh, use_fancy: bool, md: str):
-            docs, vals = sh._run_pass(terms, w, use_fancy, mode=md)
-            return len(docs), sh._topk(docs, vals, fetch, is_float=md == "bm25")
-
-        def run(use_fancy: bool, md: str):
-            if self._pool is not None:
-                parts = list(
-                    self._pool.map(
-                        lambda sh: one_shard(sh, use_fancy, md), self.shards
-                    )
-                )
-            else:
-                parts = [one_shard(sh, use_fancy, md) for sh in self.shards]
-            rows: list = []
-            total = 0
-            for n, top in parts:
-                total += n
-                rows.extend(top)
-            rows.sort(key=lambda r: (-r[1], r[0]))
-            return rows[:fetch], total
-
-        if mode == "bm25":
-            rows, _ = run(False, "bm25")
-            return rows[:k]
-        if any(
-            t.host is None and t.df > self.meta["fancy_threshold"]
-            for t in terms
-        ):
-            rows, total = run(True, "deusu")
-            if total >= MAX_RESULTS:
-                return rows[:k]
-        rows, _ = run(False, "deusu")
-        return rows[:k]
-
-    def search_many(
-        self,
-        queries: list[str],
-        k: int = 10,
-        weights: dict[str, int] | None = None,
-        mode: str = "deusu",
-    ) -> list[list[tuple[int, int]]]:
-        """Batch over the shard fan-out; each shard's decoded-term cache
-        amortizes shared terms across the batch within its doc range."""
-        return [
-            self.search(q, k=k, weights=weights, mode=mode) for q in queries
-        ]
-
-    def _verify_sharded(self, cand: np.ndarray, verify_one) -> set[int]:
-        """Fan a sorted candidate array out to its owning shards (contiguous
-        doc ranges) and union the per-shard position verdicts —
-        ``verify_one(shard, shard_cand) -> set[int]``. Each shard verifies
-        only its own range, exactly what separate shard servers (holding
-        only their range's positions segments) would do."""
+    def _on_owners(self, cand: np.ndarray, fn) -> list:
+        """``fn(shard, ids)`` for each shard owning some of the sorted
+        candidate ids — exactly what separate shard servers (holding only
+        their range's positions segments) would do."""
         work = []
         for sh in self.shards:
             lo = np.searchsorted(cand, sh.doc_lo, side="left")
             hi = np.searchsorted(cand, sh.doc_hi, side="left")
             if hi > lo:
                 work.append((sh, cand[lo:hi]))
-        if self._pool is not None and len(work) > 1:
-            parts = list(
-                self._pool.map(lambda a: verify_one(a[0], a[1]), work)
-            )
-        else:
-            parts = [verify_one(sh, c) for sh, c in work]
-        ok: set[int] = set()
-        for p in parts:
-            ok |= p
-        return ok
-
-    def search_phrase(
-        self,
-        phrase: str,
-        k: int = 10,
-        weights: dict[str, int] | None = None,
-    ) -> list[tuple[int, int]]:
-        """Coordinator phrase top-k — rank-identical to
-        LocalSearcher.search_phrase on the same index (CLAUDE.md contract:
-        every semantics addition lands on LocalSearcher AND
-        ShardedSearcher together). Retrieval is the coordinator's own
-        merged search(); verification fans the candidates out to their
-        owning shards and pages fetch ×4 until k survive."""
-        from .positions import has_positions, phrase_pattern
-
-        if not has_positions(self.shards[0].vdir):
-            raise RuntimeError(
-                "no positions sidecar on this index — build with "
-                "build_index(positions=True)"
-            )
-        pattern = phrase_pattern(phrase)
-        if not pattern:
-            return []
-        query = " ".join(t for _, t in pattern)
-        if len(pattern) == 1:
-            return self.search(query, k=k, weights=weights)
-        fetch = max(4 * k, 64)
-        while True:
-            rows = self.search(query, k=fetch, weights=weights)
-            cand = np.asarray(sorted(d for d, _ in rows), dtype=np.int64)
-            ok = self._verify_sharded(
-                cand, lambda sh, c: sh._phrase_verify(pattern, c)
-            )
-            verified = [(d, s) for d, s in rows if d in ok]
-            if len(verified) >= k or len(rows) < fetch:
-                return verified[:k]
-            fetch *= 4
-
-    def search_near(
-        self,
-        query: str,
-        k: int = 10,
-        window: int = 8,
-        weights: dict[str, int] | None = None,
-    ) -> list[tuple[int, int]]:
-        """Coordinator NEAR/w top-k — rank-identical to
-        LocalSearcher.search_near (same shared minimal-window sweep on the
-        shard owning each candidate; global (score desc, doc_id asc)
-        ordering comes from the coordinator's merged search())."""
-        from .positions import has_positions, phrase_pattern
-
-        if not has_positions(self.shards[0].vdir):
-            raise RuntimeError(
-                "no positions sidecar on this index — build with "
-                "build_index(positions=True)"
-            )
-        terms = [t for _, t in phrase_pattern(query)]
-        if not terms:
-            return []
-        uniq = list(dict.fromkeys(terms))
-        if len(uniq) == 1:
-            return self.search(uniq[0], k=k, weights=weights)
-        qstr = " ".join(terms)
-        fetch = max(4 * k, 64)
-        while True:
-            rows = self.search(qstr, k=fetch, weights=weights)
-            cand = np.asarray(sorted(d for d, _ in rows), dtype=np.int64)
-            ok = self._verify_sharded(
-                cand, lambda sh, c: sh._near_verify(uniq, int(window), c)
-            )
-            verified = [(d, s) for d, s in rows if d in ok]
-            if len(verified) >= k or len(rows) < fetch:
-                return verified[:k]
-            fetch *= 4
-
-    def search_proximity(
-        self,
-        query: str,
-        k: int = 10,
-        weights: dict[str, int] | None = None,
-    ) -> list[tuple[int, int]]:
-        """Coordinator proximity-RANKED top-k — rank-identical to
-        LocalSearcher.search_proximity: base retrieval is the merged
-        coordinator search(); each shard computes minimal windows for its
-        own candidates (shared sweep), the coordinator merges the span
-        dicts and applies the shared rerank loop."""
-        from .positions import (
-            has_positions,
-            phrase_pattern,
-            proximity_rerank,
-        )
-
-        if not has_positions(self.shards[0].vdir):
-            raise RuntimeError(
-                "no positions sidecar on this index — build with "
-                "build_index(positions=True)"
-            )
-        terms = [t for _, t in phrase_pattern(query)]
-        if not terms:
-            return []
-        uniq = list(dict.fromkeys(terms))
-        qstr = " ".join(terms)
-
-        def spans_of(cand: np.ndarray) -> dict[int, int]:
-            work = []
-            for sh in self.shards:
-                lo = np.searchsorted(cand, sh.doc_lo, side="left")
-                hi = np.searchsorted(cand, sh.doc_hi, side="left")
-                if hi > lo:
-                    work.append((sh, cand[lo:hi]))
-            if self._pool is not None and len(work) > 1:
-                parts = list(
-                    self._pool.map(
-                        lambda a: a[0]._min_spans(uniq, a[1]), work
-                    )
-                )
-            else:
-                parts = [sh._min_spans(uniq, c) for sh, c in work]
-            out: dict[int, int] = {}
-            for p in parts:
-                out.update(p)
-            return out
-
-        return proximity_rerank(
-            lambda fetch: self.search(qstr, k=fetch, weights=weights),
-            spans_of,
-            k,
-            len(uniq),
-        )
+        return self._map(lambda a: fn(*a), work)
 
     def fetch_results(self, rows: list[tuple[int, int]]):
         """Q15 display fetch: each global doc id from the shard whose doc
@@ -987,7 +814,7 @@ class ShardedSearcher:
         )
 
 
-class FederatedSearcher:
+class FederatedSearcher(_FanOut):
     """Query-time federation over k INDEPENDENTLY BUILT indexes —
     rank-identical to querying merge.merge_indexes() of the same indexes,
     without running the merge. Three things make per-part execution exact
@@ -1033,17 +860,7 @@ class FederatedSearcher:
             p.avgdl = avgdl
             p.max_bl = gmax_bl
             p.n_docs = self.n_docs  # bm25 idf must use the global corpus
-        self._pool = (
-            ThreadPoolExecutor(max_workers=len(self.parts))
-            if parallel and len(self.parts) > 1
-            else None
-        )
-        # Q14 result cache in front of the part fan-out (same placement
-        # as ShardedSearcher — the coordinator is the query server)
-        self._result_cache: dict[int, tuple[str, list]] = {}
-        self.cache_slots = 2048
-        self.cache_hits = 0
-        self.cache_misses = 0
+        self._init_fan_out(self.parts, self.offsets, parallel)
 
     def term_df(self, term: str) -> int:
         return sum(p.term_df(term) for p in self.parts)
@@ -1072,91 +889,12 @@ class FederatedSearcher:
                 "fancy_holes": [
                     t.key
                     for t in terms
-                    if t.host is None
-                    and t.df > thr
-                    and p.term_df(t.key) <= thr
+                    if is_fancy_term(t, thr) and p.term_df(t.key) <= thr
                 ],
             }
             for i, p in enumerate(self.parts)
         ]
         return out
-
-    def search(
-        self,
-        query: str,
-        k: int = 10,
-        weights: dict[str, int] | None = None,
-        mode: str = "deusu",
-    ) -> list[tuple[int, int]]:
-        w = dict(DEFAULT_WEIGHTS)
-        if weights:
-            w.update(weights)
-        if k > MAX_RESULTS:
-            return self._search_uncached(query, k, w, mode)[:k]
-        cache_key = f"{query}\x00{mode}\x00{sorted(w.items())}"
-        slot = crc32(cache_key) % self.cache_slots
-        hit = self._result_cache.get(slot)
-        if hit is not None and hit[0] == cache_key:
-            self.cache_hits += 1
-            return hit[1][:k]
-        self.cache_misses += 1
-        rows = self._search_uncached(query, max(k, MAX_RESULTS), w, mode)
-        self._result_cache[slot] = (cache_key, rows)
-        return rows[:k]
-
-    def _search_uncached(
-        self, query: str, k: int, w: dict[str, int], mode: str
-    ) -> list[tuple[int, int]]:
-        terms = self.compile(query)
-        if not terms:
-            return []
-        fetch = max(k, MAX_RESULTS)
-
-        def one_part(arg, use_fancy: bool, md: str):
-            p, off = arg
-            docs, vals = p._run_pass(terms, w, use_fancy, mode=md)
-            top = p._topk(docs, vals, fetch, is_float=md == "bm25")
-            return len(docs), [(d + off, v) for d, v in top]
-
-        def run(use_fancy: bool, md: str):
-            args = list(zip(self.parts, self.offsets))
-            if self._pool is not None:
-                parts = list(
-                    self._pool.map(lambda a: one_part(a, use_fancy, md), args)
-                )
-            else:
-                parts = [one_part(a, use_fancy, md) for a in args]
-            rows: list = []
-            total = 0
-            for n, top in parts:
-                total += n
-                rows.extend(top)
-            rows.sort(key=lambda r: (-r[1], r[0]))
-            return rows[:fetch], total
-
-        if mode == "bm25":
-            rows, _ = run(False, "bm25")
-            return rows[:k]
-        if any(
-            t.host is None and t.df > self.meta["fancy_threshold"]
-            for t in terms
-        ):
-            rows, total = run(True, "deusu")
-            if total >= MAX_RESULTS:
-                return rows[:k]
-        rows, _ = run(False, "deusu")
-        return rows[:k]
-
-    def search_many(
-        self,
-        queries: list[str],
-        k: int = 10,
-        weights: dict[str, int] | None = None,
-        mode: str = "deusu",
-    ) -> list[list[tuple[int, int]]]:
-        return [
-            self.search(q, k=k, weights=weights, mode=mode) for q in queries
-        ]
 
     def suggest(self, term: str, k: int = 3) -> list[str]:
         """Federated did-you-mean, identical to the merged index's
@@ -1207,9 +945,3 @@ def _lev_le1(a: str, b: str) -> bool:
         i += 1
     return a[i:] == b[i + 1:]
 
-
-def _blv(bl: np.ndarray, max_bl: int) -> np.ndarray:
-    ln_mbl = math.log(max_bl) if max_bl > 0 else 0.0
-    if ln_mbl <= 0:
-        return np.where(bl == 0, 1.0, 0.0)
-    return np.where(bl == 0, 1.0, 2500.0 * np.log(np.maximum(bl, 1)) / ln_mbl)

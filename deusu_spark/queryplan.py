@@ -67,6 +67,19 @@ class PlanTerm:
     fancy_hole: bool = False
 
 
+def is_fancy_term(t: PlanTerm, fancy_threshold: int) -> bool:
+    """A plain term whose df exceeds the threshold has a fancy accelerator
+    list (GenDb.dpr:975-1109); host terms never do."""
+    return t.host is None and t.df > fancy_threshold
+
+
+def needs_fancy_pass(terms: list[PlanTerm], fancy_threshold: int) -> bool:
+    """The reference's two-pass rule (searchservernew.dpr:1836-1855): a
+    query with any fancy term runs the fancy pass first, and falls back to
+    the full pass when that finds fewer than MAX_RESULTS results."""
+    return any(is_fancy_term(t, fancy_threshold) for t in terms)
+
+
 def host_of(key: str) -> str | None:
     """Host-term detection — searchservernew.dpr:696-736."""
     kl = key.lower()
@@ -174,14 +187,11 @@ def explain_plan(
     test_serving_compose."""
     from .synth import crc32
 
-    fancy_terms = [
-        t for t in terms if t.host is None and t.df > fancy_threshold
-    ]
     return {
         "query": query,
         "n_docs": n_docs,
         "n_terms": len(terms),
-        "two_pass": bool(fancy_terms),
+        "two_pass": needs_fancy_pass(terms, fancy_threshold),
         "evaluation_order": [t.key for t in terms],
         "terms": [
             {
@@ -194,13 +204,11 @@ def explain_plan(
                 "title_only": t.title_only,
                 "url_only": t.url_only,
                 "include_backlink": t.include_backlink,
-                "fancy_eligible": t.host is None and t.df > fancy_threshold,
+                "fancy_eligible": is_fancy_term(t, fancy_threshold),
                 "fancy_hole": t.fancy_hole,
                 "postings_kind": (
                     "fancy"
-                    if t.host is None
-                    and t.df > fancy_threshold
-                    and not t.fancy_hole
+                    if is_fancy_term(t, fancy_threshold) and not t.fancy_hole
                     else "full"
                 ),
             }

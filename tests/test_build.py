@@ -174,7 +174,7 @@ def test_fancy_lists_match_oracle(spark, tiny_index_dir, oracle_index):
 def test_block_max_is_true_upper_bound(spark, tiny_index_dir, oracle_index):
     """max_static must dominate every posting's static score in its segment
     (block-max WAND safety)."""
-    from deusu_spark.build import static_scores
+    from deusu_spark.scoring import static_scores
 
     vdir = current_index_dir(tiny_index_dir)
     segs = (

@@ -48,10 +48,10 @@ def merge_env(spark, tiny_corpus):
     shutil.rmtree(root, ignore_errors=True)
 
 
-def test_merge_meta_matches_fresh_build(tiny_index_dir, merge_env):
+def test_merge_meta_matches_fresh_build(spark, tiny_index_dir, merge_env):
     import json
 
-    from deusu_spark.build import current_index_dir
+    from deusu_spark.build import current_index_dir, lexicon_stats
 
     _root, _dirs, out, m = merge_env
     with open(os.path.join(current_index_dir(tiny_index_dir), "meta.json")) as f:
@@ -63,6 +63,27 @@ def test_merge_meta_matches_fresh_build(tiny_index_dir, merge_env):
     assert merged["max_backlinks"] == fresh["max_backlinks"]
     assert merged["unique_words"] == fresh["unique_words"]
     assert merged["word_occurrences"] == fresh["word_occurrences"]
+    assert merged["high_df_terms"] == fresh["high_df_terms"]
+
+    def info(root):
+        with open(os.path.join(current_index_dir(root), "info.txt"), "rb") as f:
+            return f.read()
+
+    assert info(out) == info(tiny_index_dir)
+    # no tiny-corpus term reaches INFO_DF_THRESHOLD, so the published lists
+    # are empty: compare the shared stats helper at a low threshold too,
+    # on both of its paths (pyarrow and Spark)
+    stats = []
+    for root in (out, tiny_index_dir):
+        lex = os.path.join(current_index_dir(root), "lexicon")
+        for local in (True, False):
+            stats.append(
+                lexicon_stats(
+                    lex, 2, lambda: spark.read.parquet(lex), local=local
+                )
+            )
+    assert stats[0][2], "threshold 2 should list terms"
+    assert all(st == stats[0] for st in stats)
 
 
 def test_merge_rank_identity_serving(tiny_index_dir, merge_env):
@@ -200,6 +221,18 @@ def test_federated_equals_merged_and_fresh(tiny_index_dir, merge_env):
     seq = FederatedSearcher(dirs, parallel=False)
     for q in QUERIES[:6]:
         assert seq.search(q, k=100) == fed.search(q, k=100), q
+
+
+def test_federated_result_cache(merge_env):
+    """The federation coordinator's Q14 cache sits in front of its part
+    fan-out: the same semantics, pinned by the same check, as
+    LocalSearcher's and ShardedSearcher's."""
+    from deusu_spark.query_local import FederatedSearcher
+    from tests.test_serving_compose import check_result_cache
+
+    _root, dirs, _out, _m = merge_env
+    fed = FederatedSearcher(dirs)
+    check_result_cache(fed, fed.parts)
 
 
 def test_federated_engine_equals_merged(spark, merge_env):

@@ -67,20 +67,51 @@ def test_render_host_query_disables_collapse(local_searcher):
     assert len(page) > 3  # all turns of the conversation, no 3-cap
 
 
-def test_result_cache_hits(local_searcher):
-    ls = local_searcher
-    h0, m0 = ls.cache_hits, ls.cache_misses
-    a = ls.search("google w0003", k=10)
-    b = ls.search("google w0003", k=10)
+def check_result_cache(searcher, members):
+    """Q14 semantics of a serving searcher whose per-query work runs on
+    ``members`` (itself, or a coordinator's shards/parts): a repeat is one
+    cache hit and no member work, any k <= MAX_RESULTS re-slices the
+    cached top-1000, new weights miss, and k > MAX_RESULTS bypasses the
+    cache and does the work again."""
+
+    def work():
+        return [m.term_cache_hits + m.term_cache_misses for m in members]
+
+    q = "google w0003"
+    h0, m0 = searcher.cache_hits, searcher.cache_misses
+    a = searcher.search(q, k=10)
+    w0 = work()
+    b = searcher.search(q, k=10)
     assert a == b
-    assert ls.cache_hits == h0 + 1 and ls.cache_misses == m0 + 1
+    assert searcher.cache_hits == h0 + 1 and searcher.cache_misses == m0 + 1
+    assert work() == w0
     # different k reuses the cached top-1000
-    c = ls.search("google w0003", k=25)
-    assert ls.cache_hits == h0 + 2
+    c = searcher.search(q, k=25)
+    assert searcher.cache_hits == h0 + 2
     assert c[:10] == a
+    assert work() == w0
     # different weights -> different key -> miss
-    ls.search("google w0003", k=10, weights={"b1": 4 * 256})
-    assert ls.cache_misses == m0 + 2
+    searcher.search(q, k=10, weights={"b1": 4 * 256})
+    assert searcher.cache_misses == m0 + 2
+    # beyond the cached top-1000: neither a hit nor a miss, every member
+    # works again
+    w1 = work()
+    big = searcher.search(q, k=MAX_RESULTS + 1)
+    assert (searcher.cache_hits, searcher.cache_misses) == (h0 + 2, m0 + 2)
+    assert all(after > before for after, before in zip(work(), w1))
+    assert big[:25] == c
+
+
+def test_result_cache_hits(local_searcher):
+    check_result_cache(local_searcher, [local_searcher])
+
+
+def test_result_cache_hits_sharded(tiny_index_dir):
+    from deusu_spark.query_local import ShardedSearcher
+
+    sh = ShardedSearcher(tiny_index_dir, n_shards=3)
+    assert len(sh.shards) == 3
+    check_result_cache(sh, sh.shards)
 
 
 def test_cache_consistent_with_uncached(local_searcher):
