@@ -3755,17 +3755,24 @@ def _kcore_sql() -> str:
     from deusu_spark.pipelines import KCORE_K as K
     from deusu_spark.pipelines import KCORE_MINW, KCORE_ROUNDS
 
-    rounds = ["a0 AS (SELECT DISTINCT s AS v FROM edges)"]
+    # a{i} reads a{i - 1} twice, so inlined CTEs double the plan per round
+    # (KCORE_ROUNDS=8: 256 copies of the edges self-join, minutes of CPU
+    # in DuckDB). MATERIALIZED evaluates each CTE once; the result is the
+    # same.
+    edges = _COPURCHASE_EDGES.format(minw=KCORE_MINW).replace(
+        " AS (", " AS MATERIALIZED ("
+    )
+    rounds = ["a0 AS MATERIALIZED (SELECT DISTINCT s AS v FROM edges)"]
     for i in range(1, KCORE_ROUNDS + 1):
         rounds.append(
-            f"a{i} AS (SELECT e.s AS v FROM edges e "
+            f"a{i} AS MATERIALIZED (SELECT e.s AS v FROM edges e "
             f"JOIN a{i - 1} x ON e.s = x.v JOIN a{i - 1} y ON e.d = y.v "
             f"GROUP BY e.s HAVING count(*) >= {K})"
         )
     chain = ",\n             ".join(rounds)
     last = f"a{KCORE_ROUNDS}"
     return f"""
-        WITH {_COPURCHASE_EDGES.format(minw=KCORE_MINW)},
+        WITH {edges},
              {chain}
         SELECT e.s AS part, count(*) AS core_deg
         FROM edges e JOIN {last} x ON e.s = x.v JOIN {last} y ON e.d = y.v
@@ -5956,27 +5963,31 @@ def _kish_neff_sql() -> str:
 def _ipf_raking_sql() -> str:
     from deusu_spark.pipelines import IPF_ROUNDS
 
+    # Each round reads the previous round's cells twice, so inlined CTEs
+    # grow the plan 4x per round (IPF_ROUNDS=5: ~1,000 copies of the
+    # orders-customer join, minutes of CPU and >12 GiB in DuckDB).
+    # MATERIALIZED evaluates each CTE once; the result is the same.
     rt = "(SELECT n * 1.0 / nr FROM nn)"
     ct = "(SELECT n * 1.0 / np FROM nn)"
     ctes = [
-        """cells0 AS (SELECT c_mktsegment AS r, o_orderpriority AS p,
+        """cells0 AS MATERIALIZED (SELECT c_mktsegment AS r, o_orderpriority AS p,
                              count(*) AS cnt, CAST(1.0 AS DOUBLE) AS w
                       FROM orders JOIN customer ON o_custkey = c_custkey
                       GROUP BY 1, 2)""",
-        """nn AS (SELECT sum(cnt) AS n, count(DISTINCT r) AS nr,
+        """nn AS MATERIALIZED (SELECT sum(cnt) AS n, count(DISTINCT r) AS nr,
                          count(DISTINCT p) AS np
                   FROM cells0)""",
     ]
     for i in range(1, IPF_ROUNDS + 1):
         ctes.append(
-            f"""cr{i} AS (SELECT r, sum(cnt * w) AS rsum
+            f"""cr{i} AS MATERIALIZED (SELECT r, sum(cnt * w) AS rsum
                       FROM cells{i - 1} GROUP BY r),
-             ca{i} AS (SELECT c.r, c.p, c.cnt,
+             ca{i} AS MATERIALIZED (SELECT c.r, c.p, c.cnt,
                               c.w * {rt} / rsum AS w
                        FROM cells{i - 1} c JOIN cr{i} USING (r)),
-             cc{i} AS (SELECT p, sum(cnt * w) AS csum
+             cc{i} AS MATERIALIZED (SELECT p, sum(cnt * w) AS csum
                        FROM ca{i} GROUP BY p),
-             cells{i} AS (SELECT c.r, c.p, c.cnt,
+             cells{i} AS MATERIALIZED (SELECT c.r, c.p, c.cnt,
                                  c.w * {ct} / csum AS w
                           FROM ca{i} c JOIN cc{i} USING (p))"""
         )
@@ -5984,7 +5995,7 @@ def _ipf_raking_sql() -> str:
     chain = ",\n ".join(ctes)
     return f"""
         WITH {chain},
-             err AS (SELECT round(max(abs(rsum - {rt})) / {rt}, 6)
+             err AS MATERIALIZED (SELECT round(max(abs(rsum - {rt})) / {rt}, 6)
                                 AS max_row_err
                      FROM (SELECT r, sum(cnt * w) AS rsum
                            FROM {last} GROUP BY r))
