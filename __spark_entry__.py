@@ -2240,6 +2240,9 @@ def _mmr_diversify_sql() -> str:
         MMR_TERM,
     )
 
+    # round r reads sel{r - 1} three times (directly and through m{r} and
+    # sc{r}), so inlined CTEs multiply the plan per pick; MATERIALIZED
+    # evaluates each CTE once, with the same rows.
     lam = f"CAST({MMR_LAMBDA} AS DOUBLE)"
     ctes = [
         f"""d AS (SELECT doc_id,
@@ -2249,7 +2252,7 @@ def _mmr_diversify_sql() -> str:
              tok AS (SELECT doc_id, unnest(a) AS t FROM d),
              rel AS (SELECT doc_id, CAST(count(*) AS DOUBLE) AS rel
                      FROM tok WHERE t = '{MMR_TERM}' GROUP BY 1),
-             pool AS (SELECT doc_id, rel FROM (
+             pool AS MATERIALIZED (SELECT doc_id, rel FROM (
                           SELECT *, row_number() OVER (
                               ORDER BY rel DESC, doc_id) AS rn
                           FROM rel) WHERE rn <= {MMR_POOL}),
@@ -2261,33 +2264,33 @@ def _mmr_diversify_sql() -> str:
                        FROM dtok a JOIN dtok b
                          ON a.t = b.t AND a.doc_id <> b.doc_id
                        GROUP BY 1, 2),
-             sim AS (SELECT da, db,
+             sim AS MATERIALIZED (SELECT da, db,
                             CAST(i AS DOUBLE) / (na.nt + nb.nt - i) AS sim
                      FROM inter
                      JOIN nset na ON na.doc_id = da
                      JOIN nset nb ON nb.doc_id = db),
-             s1 AS (SELECT doc_id, 1 AS pick, {lam} * rel AS mmr FROM (
+             s1 AS MATERIALIZED (SELECT doc_id, 1 AS pick, {lam} * rel AS mmr FROM (
                         SELECT *, row_number() OVER (
                             ORDER BY rel DESC, doc_id) AS rn
                         FROM pool) WHERE rn = 1),
-             sel1 AS (SELECT doc_id FROM s1)"""
+             sel1 AS MATERIALIZED (SELECT doc_id FROM s1)"""
     ]
     for r in range(2, MMR_K + 1):
         ctes.append(
-            f"""m{r} AS (SELECT da AS doc_id, max(sim) AS maxsim
+            f"""m{r} AS MATERIALIZED (SELECT da AS doc_id, max(sim) AS maxsim
                      FROM sim WHERE db IN (SELECT doc_id FROM sel{r - 1})
                      GROUP BY 1),
-             sc{r} AS (SELECT p.doc_id,
+             sc{r} AS MATERIALIZED (SELECT p.doc_id,
                               {lam} * p.rel - (1 - {lam})
                               * coalesce(m{r}.maxsim, 0) AS mmr
                        FROM pool p LEFT JOIN m{r} USING (doc_id)
                        WHERE p.doc_id NOT IN
                              (SELECT doc_id FROM sel{r - 1})),
-             s{r} AS (SELECT doc_id, {r} AS pick, mmr FROM (
+             s{r} AS MATERIALIZED (SELECT doc_id, {r} AS pick, mmr FROM (
                           SELECT *, row_number() OVER (
                               ORDER BY mmr DESC, doc_id) AS rn
                           FROM sc{r}) WHERE rn = 1),
-             sel{r} AS (SELECT doc_id FROM sel{r - 1}
+             sel{r} AS MATERIALIZED (SELECT doc_id FROM sel{r - 1}
                         UNION ALL SELECT doc_id FROM s{r})"""
         )
     union = " UNION ALL ".join(
@@ -4198,8 +4201,11 @@ def _maxsim_topk_sql() -> str:
 def _greedy_max_coverage_sql() -> str:
     from deusu_spark.pipelines import COV_K, COV_MAX_DOC
 
+    # step r reads every earlier s{i} and c{r - 1}, and c{r} reads
+    # c{r - 1} and s{r}, so inlined CTEs multiply the plan per step;
+    # MATERIALIZED evaluates each CTE once, with the same rows.
     ctes = [
-        f"""dt AS (SELECT DISTINCT doc_id, t FROM (
+        f"""dt AS MATERIALIZED (SELECT DISTINCT doc_id, t FROM (
                 SELECT doc_id, unnest(regexp_split_to_array(lower(text),
                     '[^a-z0-9]+')) AS t FROM documents
                 WHERE doc_id < {COV_MAX_DOC})
@@ -4217,21 +4223,25 @@ def _greedy_max_coverage_sql() -> str:
         covcond = f"AND t NOT IN (SELECT t FROM c{r - 1}) " if r > 1 else ""
         where = f"WHERE {excl}1=1 {covcond}" if (excl or covcond) else ""
         ctes.append(
-            f"g{r} AS (SELECT doc_id, count(*) AS gain FROM dt {where}"
+            f"g{r} AS MATERIALIZED (SELECT doc_id, count(*) AS gain "
+            f"FROM dt {where}"
             f"GROUP BY 1)"
         )
         ctes.append(
-            f"s{r} AS (SELECT doc_id, gain FROM g{r} "
+            f"s{r} AS MATERIALIZED (SELECT doc_id, gain FROM g{r} "
             f"ORDER BY gain DESC, doc_id LIMIT 1)"
         )
         newtok = (
             f"SELECT t FROM dt WHERE doc_id = (SELECT doc_id FROM s{r})"
         )
         if r == 1:
-            ctes.append(f"c1 AS (SELECT DISTINCT t FROM ({newtok}))")
+            ctes.append(
+                f"c1 AS MATERIALIZED (SELECT DISTINCT t FROM ({newtok}))"
+            )
         else:
             ctes.append(
-                f"c{r} AS (SELECT t FROM c{r - 1} UNION {newtok})"
+                f"c{r} AS MATERIALIZED "
+                f"(SELECT t FROM c{r - 1} UNION {newtok})"
             )
         finals.append(
             f"SELECT {r} AS step, doc_id, gain, "

@@ -37,6 +37,13 @@ Every posting is scored inside the ``mapInPandas`` stages by
 ``scoring.score_term``, the same numpy kernel the serving tier
 (query_local) calls on its resident sidecars; the two-pass predicate is
 ``queryplan.needs_fancy_pass``, shared with it too.
+
+SearchEngine and FederatedSearchEngine share one request path
+(``_Coordinator``, the twin of query_local's): the one-job term-metadata
+prefetch, the two-pass rule with its provable under-fill shortcut, and
+the search_many schedule. They differ only in how a pass runs:
+SearchEngine runs it on its own index, FederatedSearchEngine runs it on
+every part and merges.
 """
 
 from __future__ import annotations
@@ -44,6 +51,7 @@ from __future__ import annotations
 import json
 import os
 import threading
+from concurrent.futures import ThreadPoolExecutor
 
 import numpy as np
 import pandas as pd
@@ -54,7 +62,15 @@ from pyspark.sql import types as T
 from . import codec
 from .build import current_index_dir
 from .constants import DEFAULT_WEIGHTS, MAX_RESULTS, SCORE_CLAMP
-from .queryplan import PlanTerm, compile_query, is_fancy_term, needs_fancy_pass
+from .queryplan import (
+    PlanTerm,
+    compile_query,
+    explain_plan,
+    is_fancy_term,
+    lexicon_key,
+    needs_fancy_pass,
+    parse_query,
+)
 from .scoring import idf_scaled, location_mask, score_term, term_plan
 from .synth import crc32
 from .textproc import fold
@@ -75,8 +91,198 @@ SCORED_SCHEMA = T.StructType(
     ]
 )
 
+# score-side docmeta join strategy: up to this many docs the sidecars are
+# broadcast into the python score stage; above it the sort-merge join
+# stands — docmeta cannot broadcast at 10^12 docs
+DOCMETA_BROADCAST_MAX_DOCS = 8_000_000
 
-class SearchEngine:
+
+class _Coordinator:
+    """The distributed request path, shared by SearchEngine and
+    FederatedSearchEngine: compile after one term-metadata prefetch, the
+    reference's two-pass rule and batch search. A subclass supplies
+    ``meta``, ``term_df``, ``_map_engines(fn)`` (fn applied to every
+    SearchEngine holding index data: itself, or the federation's parts),
+    ``_fancy_bound(terms)`` and the two passes:
+    ``_pass(terms, k, w, use_fancy, prune, mode)`` → (rows by (score
+    desc, doc_id asc), count signal), and
+    ``_execute_many(batch, fetch_by_qi, w, use_fancy, mode, prune)`` →
+    {qi: rows}, where a query's row count is its count signal."""
+
+    def compile(self, query: str) -> list[PlanTerm]:
+        self._prefetch([query])  # ONE job; term_df is then warm
+        return compile_query(query, self.meta["n_docs"], self.term_df)
+
+    def _prefetch(self, queries: list[str]) -> None:
+        """One bucket/term-pruned metadata job per engine for every
+        lexicon key of ``queries``: df derivation, the fancy decisions
+        and both passes then read the warm term-metadata cache."""
+        keys = set()
+        for q in queries:
+            for kw in parse_query(q):
+                key, in_lexicon = lexicon_key(kw)
+                if in_lexicon:
+                    keys.add(key)
+        keys = sorted(keys)
+        self._map_engines(lambda e: e._fetch_term_meta(keys))
+
+    def explain(self, query: str) -> dict:
+        """Query EXPLAIN: the compiled plan + physical decisions as plain
+        data (shared shape across engines — queryplan.explain_plan)."""
+        return explain_plan(
+            query,
+            self.compile(query),
+            self.meta["n_docs"],
+            self.meta["fancy_threshold"],
+        )
+
+    def query_info(self, query: str) -> dict:
+        """Corpus/term statistics echoed by the reference response
+        (searchservernew.dpr:1349-1357): corpussize + per-term df and idf."""
+        terms = self.compile(query)
+        return {
+            "corpussize": int(self.meta["n_docs"]),
+            "keywords": [
+                {"keyword": t.key, "occurrences": t.df, "idf": round(t.idf, 6)}
+                for t in terms
+            ],
+        }
+
+    def suggest(self, term: str, k: int = 3) -> list[str]:
+        """Distributed did-you-mean, the twin of the serving suggest: []
+        for an empty or in-vocabulary term, else every engine's verified
+        SymSpell candidates ranked by (-df, term) on the df summed over
+        engines — a term present in only one federation part competes on
+        its federation-wide frequency (tested identical to the serving
+        engines)."""
+        t = fold(term.lower()) if term else term
+        if not t or self.term_df(t) > 0:
+            return []
+        dfs: dict[str, int] = {}
+        for rows in self._map_engines(lambda e: e._suggest_rows(t)):
+            for c, d in rows:
+                dfs[c] = dfs.get(c, 0) + d
+        scored = sorted(dfs.items(), key=lambda x: (-x[1], x[0]))
+        return [c for c, _ in scored[:k]]
+
+    def search(
+        self,
+        query: str,
+        k: int = 10,
+        weights: dict[str, int] | None = None,
+        prune: bool = True,
+        mode: str = "deusu",
+    ) -> list[tuple[int, int]]:
+        """Top-k [(doc_id, score)] by (score desc, doc_id asc).
+
+        mode='deusu': the reference scoring formula (SURVEY §2.6), integer
+        scores, rank-identical to the oracle. mode='bm25': textbook
+        BM25(k1=1.2, b=0.75) with binary TF and dl = body token count (the
+        reference computes WordCount but discards it, SURVEY §2.6) — single
+        full-postings pass, float scores.
+        """
+        w, prune = _request(weights, prune, mode)
+        terms = self.compile(query)
+        if not terms:
+            return []
+        if self._runs_fancy(terms, mode):
+            rows, count = self._pass(terms, k, w, True, prune, mode)
+            if count >= MAX_RESULTS:
+                return _page(rows, k, mode)
+        rows, _ = self._pass(terms, k, w, False, prune, mode)
+        return _page(rows, k, mode)
+
+    def _runs_fancy(self, terms: list[PlanTerm], mode: str) -> bool:
+        """The reference's two-pass rule (searchservernew.dpr:1836-1855):
+        a deusu query with a fancy term runs the fancy pass first and
+        falls back to the full pass when it finds fewer than MAX_RESULTS
+        results. The fancy pass is skipped when that count is PROVABLY
+        below MAX_RESULTS — ``_fancy_bound`` from the warm term metadata
+        — because the fallback would then fire unconditionally. Results
+        are identical by construction; the saved pass was ~25 % of the
+        120-query batch wall on the 10M-doc index."""
+        if mode == "bm25" or not needs_fancy_pass(
+            terms, self.meta["fancy_threshold"]
+        ):
+            return False
+        bound = self._fancy_bound(terms)
+        return bound is None or bound >= MAX_RESULTS
+
+    def search_many(
+        self,
+        queries: list[str],
+        k: int = 10,
+        weights: dict[str, int] | None = None,
+        prune: bool = True,
+        mode: str = "deusu",
+    ) -> list[list[tuple[int, int]]]:
+        """Batch top-k: N queries amortized into ONE metadata job (per
+        engine) + one union decode/score plan per pass (at most three
+        passes: fancy and full side by side, then the full pass for the
+        queries the fancy accelerator under-fills — the same two-pass
+        rule as search(), searchservernew.dpr:1848-1855).
+
+        This is the offline/throughput shape a training-data pipeline needs
+        (millions of retrieval queries): per-query results are
+        rank-identical to search(), but fixed per-job Spark overhead is
+        paid once per batch instead of 2-3× per query. Terms shared by
+        several queries are scanned and decoded once; the per-query AND /
+        NOT / top-k all happen inside the single plan (groupBy (query,
+        doc) + window), so nothing funnels through the driver beyond the
+        k·N result rows."""
+        w, prune = _request(weights, prune, mode)
+        self._prefetch(queries)  # ONE job for the union of all queries
+        compiled = [self.compile(q) for q in queries]  # warm: no more jobs
+        nt = 0
+        for terms in compiled:
+            for t in terms:
+                t.ti = nt
+                nt += 1
+        # (Routing single-term queries through per-query block-max jobs
+        # instead of the union plan measured 5× SLOWER at 10M docs — 40
+        # queries × per-job scan/scheduling overhead drowns the decode
+        # savings; the union plan IS the batch shape.)
+        fancy_batch, full_batch = [], []
+        for qi, terms in enumerate(compiled):
+            if terms:
+                runs_fancy = self._runs_fancy(terms, mode)
+                (fancy_batch if runs_fancy else full_batch).append((qi, terms))
+        fetch = max(k, MAX_RESULTS + 1)
+
+        def run(batch, use_fancy):
+            n = fetch if use_fancy else k
+            return self._execute_many(
+                batch, {qi: n for qi, _ in batch}, w, use_fancy, mode, prune
+            )
+
+        # the fancy pass and the no-fancy full pass touch DISJOINT query
+        # sets — run their plans CONCURRENTLY (Spark schedules jobs from
+        # separate threads side by side), then a residual full pass picks
+        # up only the fancy queries the accelerator under-filled
+        self._map_engines(lambda e: e._sidecars_py())  # once, outside threads
+        out_fancy: dict = {}
+        out_full: dict = {}
+        if fancy_batch and full_batch:
+            with ThreadPoolExecutor(max_workers=2) as ex:
+                f_fancy = ex.submit(run, fancy_batch, True)
+                f_full = ex.submit(run, full_batch, False)
+                out_fancy, out_full = f_fancy.result(), f_full.result()
+        elif fancy_batch:
+            out_fancy = run(fancy_batch, True)
+        elif full_batch:
+            out_full = run(full_batch, False)
+        out = {**out_fancy, **out_full}
+        residual = [
+            (qi, terms)
+            for qi, terms in fancy_batch
+            if len(out.get(qi, [])) < MAX_RESULTS
+        ]
+        if residual:
+            out.update(run(residual, False))
+        return [_page(out.get(qi, []), k, mode) for qi in range(len(queries))]
+
+
+class SearchEngine(_Coordinator):
     def __init__(
         self,
         spark: SparkSession,
@@ -98,13 +304,9 @@ class SearchEngine:
         self.docmeta = self.io.read(os.path.join(self.vdir, "docmeta"))
         self.lexicon = self.io.read(os.path.join(self.vdir, "lexicon"))
         self.postings = self.io.read(os.path.join(self.vdir, "postings"))
-        # score-side docmeta join strategy threshold (also used just below
-        # for the cache layout): under the cap the sidecars broadcast /
-        # live python-side; above it the sort-merge join stands — docmeta
-        # cannot broadcast at 10^12 docs
-        self.docmeta_broadcast_max_docs = int(
-            os.environ.get("SPARK_GRAFT_DOCMETA_BCAST_MAX", "8000000")
-        )
+        # score-side docmeta join strategy (also picks the cache layout
+        # just below); settable per engine, like wand_min_postings
+        self.docmeta_broadcast_max_docs = DOCMETA_BROADCAST_MAX_DOCS
         dmc = self.docmeta.select(
             "doc_id", "fd", "he", "rank", "backlinks", "dl"
         )  # the reference's in-RAM sidecar vectors (LoadCacheData)
@@ -220,17 +422,6 @@ class SearchEngine:
         )
         return [(r["term"], int(r["df"])) for r in cand.collect()]
 
-    def suggest(self, term: str, k: int = 3) -> list[str]:
-        """Distributed did-you-mean twin of LocalSearcher.suggest: [] for
-        an empty or in-vocabulary term, else the SymSpell candidates
-        ranked by (-df, term) — identical output to the serving engine on
-        the same index (tested)."""
-        t = fold(term.lower()) if term else term
-        if not t or self.term_df(t) > 0:
-            return []
-        scored = sorted(self._suggest_rows(t), key=lambda x: (-x[1], x[0]))
-        return [c for c, _ in scored[:k]]
-
     def _fetch_term_meta(self, keys: list[str]) -> dict[str, pd.DataFrame]:
         """One bucket/term-pruned metadata job for every unseen key (both
         kinds, no blobs), ALWAYS through the two-level doc-range-block
@@ -288,87 +479,20 @@ class SearchEngine:
                 out[t] = sub
         return out
 
-    def compile(self, query: str) -> list[PlanTerm]:
-        # prefetch all candidate terms' metadata with ONE pruned job; df
-        # derives from the full-kind row counts (sum n)
-        from .queryplan import host_of, parse_query
+    def _map_engines(self, fn) -> list:
+        return [fn(self)]
 
-        cands = set()
-        for kw in parse_query(query):
-            key = kw[1:] if kw[:1] in "+-" else kw
-            if host_of(key) is None and ":" not in key:
-                cands.add(key)
-        self._fetch_term_meta(sorted(cands))  # ONE job; term_df is then warm
-        return compile_query(query, self.meta["n_docs"], self.term_df)
+    # the shared batch driver, also bound in this class's own namespace:
+    # perfbench/trace.py wraps SearchEngine.search_many from the class
+    # dict, which then times this engine's batches only
+    search_many = _Coordinator.search_many
 
-    def explain(self, query: str) -> dict:
-        """Query EXPLAIN: the compiled plan + physical decisions as plain
-        data (shared shape across engines — queryplan.explain_plan)."""
-        from .queryplan import explain_plan
-
-        return explain_plan(
-            query,
-            self.compile(query),
-            self.meta["n_docs"],
-            self.meta["fancy_threshold"],
-        )
-
-    # -- public API ----------------------------------------------------------
-    def search(
-        self,
-        query: str,
-        k: int = 10,
-        weights: dict[str, int] | None = None,
-        prune: bool = True,
-        mode: str = "deusu",
-    ) -> list[tuple[int, int]]:
-        """Top-k [(doc_id, score)] by (score desc, doc_id asc).
-
-        mode='deusu': the reference scoring formula (SURVEY §2.6), integer
-        scores, rank-identical to the oracle. mode='bm25': textbook
-        BM25(k1=1.2, b=0.75) with binary TF and dl = body token count (the
-        reference computes WordCount but discards it, SURVEY §2.6) — single
-        full-postings pass, float scores.
-        """
-        w = dict(DEFAULT_WEIGHTS)
-        if weights:
-            w.update(weights)
-        terms = self.compile(query)
-        if not terms:
-            return []
-        # block-max bounds are computed for default deusu weights at build
-        prune = prune and w == DEFAULT_WEIGHTS and mode == "deusu"
-
-        if mode == "bm25":
-            rows, _ = self._run_pass(
-                terms, k, w, use_fancy=False, prune=False,
-                need_count=False, mode="bm25",
-            )
-            return [(d, round(s, 6)) for d, s in rows[:k]]
-
-        if needs_fancy_pass(
-            terms, self.meta["fancy_threshold"]
-        ) and not self._fancy_provably_underfills(terms):
-            rows, count = self._run_pass(
-                terms, k, w, use_fancy=True, prune=prune, need_count=True
-            )
-            if count >= MAX_RESULTS:
-                return [(d, int(s)) for d, s in rows[:k]]
-        rows, _ = self._run_pass(
-            terms, k, w, use_fancy=False, prune=prune, need_count=False
-        )
-        return [(d, int(s)) for d, s in rows[:k]]
-
-    def _fancy_provably_underfills(self, terms: list[PlanTerm]) -> bool:
-        """True when the fancy pass's result count is PROVABLY below
-        MAX_RESULTS — the AND result set is no larger than any positive
-        term's posting count in the kinds that pass reads (fancy for hot
-        terms, full for cold) — so the reference's '<1000 → full pass'
-        rule (searchservernew.dpr:1848-1855) would fire unconditionally
-        and the fancy execution can be skipped. Host terms' doc counts
-        are not in the term metadata → False (keep the two-pass
-        protocol). Results are identical by construction; the saved pass
-        was ~25 % of the 120-query batch wall on the 10M-doc index."""
+    def _fancy_bound(self, terms: list[PlanTerm]) -> int | None:
+        """Upper bound on the fancy pass's result count: the AND result
+        set is no larger than any positive term's posting count in the
+        kind that pass reads (fancy for hot terms, full for cold terms and
+        fancy holes). Host terms' doc counts are not in the term metadata
+        → None (keep the two-pass protocol)."""
         frames = self._fetch_term_meta(
             sorted({t.key for t in terms if t.host is None})
         )
@@ -377,139 +501,21 @@ class SearchEngine:
             if t.action == "NOT":
                 continue
             if t.host is not None:
-                return False
-            kind = self._kind(t, use_fancy=True)
+                return None
             sub = frames.get(t.key)
             n = (
-                int(sub[sub["kind"] == kind]["n"].sum())
+                int(sub[sub["kind"] == self._kind(t, True)]["n"].sum())
                 if sub is not None
                 else 0
             )
             bound = n if bound is None else min(bound, n)
-        return bound is not None and bound < MAX_RESULTS
+        return bound
 
-    def search_many(
-        self,
-        queries: list[str],
-        k: int = 10,
-        weights: dict[str, int] | None = None,
-        prune: bool = True,
-        mode: str = "deusu",
-    ) -> list[list[tuple[int, int]]]:
-        """Batch top-k: N queries amortized into ONE metadata job + one
-        union decode/score plan per pass (at most two passes: fancy, then
-        full for the queries the fancy accelerator under-fills — the same
-        two-pass rule as search(), searchservernew.dpr:1848-1855).
-
-        This is the offline/throughput shape a training-data pipeline needs
-        (millions of retrieval queries): per-query results are
-        rank-identical to search(), but fixed per-job Spark overhead is
-        paid once per batch instead of 2-3× per query. Terms shared by
-        several queries are scanned and decoded once; the per-query AND /
-        NOT / top-k all happen inside the single plan (groupBy (query,
-        doc) + window), so nothing funnels through the driver beyond the
-        k·N result rows."""
-        from .queryplan import host_of, parse_query
-
-        w = dict(DEFAULT_WEIGHTS)
-        if weights:
-            w.update(weights)
-        # ONE metadata prefetch for the union of all queries' terms
-        cands = set()
-        for q in queries:
-            for kw in parse_query(q):
-                key = kw[1:] if kw[:1] in "+-" else kw
-                if host_of(key) is None and ":" not in key:
-                    cands.add(key)
-        self._fetch_term_meta(sorted(cands))
-        compiled = [self.compile(q) for q in queries]  # warm: no more jobs
-        nt = 0
-        for terms in compiled:
-            for t in terms:
-                t.ti = nt
-                nt += 1
-
-        results: list[list[tuple[int, int]] | None] = [None] * len(queries)
-        prune = prune and w == DEFAULT_WEIGHTS and mode == "deusu"
-
-        if mode == "bm25":
-            batch = [(qi, t) for qi, t in enumerate(compiled) if t]
-            out = self._execute_many(
-                batch, {qi: k for qi, _ in batch}, w, False, "bm25", False
-            )
-            return [
-                [(d, round(s, 6)) for d, s in out.get(qi, [])[:k]] if t else []
-                for qi, t in enumerate(compiled)
-            ]
-
-        fancy_batch, full_batch = [], []
-        for qi, terms in enumerate(compiled):
-            if not terms:
-                results[qi] = []
-                continue
-            has_fancy = needs_fancy_pass(terms, self.meta["fancy_threshold"])
-            # two-pass shortcut (shared with search()): a query whose
-            # fancy pass provably under-fills routes straight to the full
-            # batch, skipping its fancy execution AND the serial residual
-            # pass it would land in. Metadata is warm — no jobs.
-            # (Routing single-term queries through per-query block-max
-            # jobs instead of the union plan measured 5× SLOWER at 10M
-            # docs — 40 queries × per-job scan/scheduling overhead drowns
-            # the decode savings; the union plan IS the batch shape.)
-            if has_fancy and self._fancy_provably_underfills(terms):
-                has_fancy = False
-            (fancy_batch if has_fancy else full_batch).append((qi, terms))
-
-        # the fancy pass and the no-fancy full pass touch DISJOINT query
-        # sets — run their plans CONCURRENTLY (Spark schedules jobs from
-        # separate threads side by side), then a residual full pass picks
-        # up only the fancy queries the accelerator under-filled
-        def run_fancy():
-            fetch = max(k, MAX_RESULTS + 1)
-            return self._execute_many(
-                fancy_batch,
-                {qi: fetch for qi, _ in fancy_batch},
-                w, True, mode, prune,
-            )
-
-        def run_full(batch):
-            return self._execute_many(
-                batch, {qi: k for qi, _ in batch}, w, False, mode, prune
-            )
-
-        residual: list[tuple[int, list[PlanTerm]]] = []
-        self._sidecars_py()  # build the broadcast once, outside the threads
-        out_fancy: dict = {}
-        out_full: dict = {}
-        if fancy_batch and full_batch:
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(max_workers=2) as ex:
-                f_fancy = ex.submit(run_fancy)
-                f_full = ex.submit(run_full, list(full_batch))
-                out_fancy, out_full = f_fancy.result(), f_full.result()
-        elif fancy_batch:
-            out_fancy = run_fancy()
-        elif full_batch:
-            out_full = run_full(full_batch)
-        for qi, _ in full_batch:
-            results[qi] = [
-                (d, int(s)) for d, s in out_full.get(qi, [])[:k]
-            ]
-        if fancy_batch:
-            for qi, terms in fancy_batch:
-                rows = out_fancy.get(qi, [])
-                if len(rows) >= MAX_RESULTS:
-                    results[qi] = [(d, int(s)) for d, s in rows[:k]]
-                else:
-                    residual.append((qi, terms))
-        if residual:
-            out_res = run_full(residual)
-            for qi, _ in residual:
-                results[qi] = [
-                    (d, int(s)) for d, s in out_res.get(qi, [])[:k]
-                ]
-        return results  # type: ignore[return-value]
+    def _pass(self, terms, k, w, use_fancy, prune, mode):
+        return self._run_pass(
+            terms, k, w, use_fancy=use_fancy, prune=prune,
+            need_count=use_fancy, mode=mode,
+        )
 
     def _execute_many(
         self,
@@ -853,18 +859,6 @@ class SearchEngine:
         rows = self.search(query, k=min(startwith + showcount - 1, 1000), **kw)
         return rows[startwith - 1 :]
 
-    def query_info(self, query: str) -> dict:
-        """Corpus/term statistics echoed by the reference response
-        (searchservernew.dpr:1349-1357): corpussize + per-term df and idf."""
-        terms = self.compile(query)
-        return {
-            "corpussize": int(self.meta["n_docs"]),
-            "keywords": [
-                {"keyword": t.key, "occurrences": t.df, "idf": round(t.idf, 6)}
-                for t in terms
-            ],
-        }
-
     # -- one pass -------------------------------------------------------------
     def _run_pass(
         self,
@@ -877,8 +871,8 @@ class SearchEngine:
         mode: str = "deusu",
     ) -> tuple[list[tuple[int, int]], int]:
         """Execute one pass. Returns (ordered rows, count_signal) where
-        count_signal = min(ResultCount, max(k, 1001)) — enough for the
-        two-pass '<1000 results → full pass' decision
+        count_signal = min(ResultCount, max(k, 1001)) = len(rows) — enough
+        for the two-pass '<1000 results → full pass' decision
         (searchservernew.dpr:1848-1855)."""
         fetch = max(k, MAX_RESULTS + 1) if need_count else k
         pos = [t for t in terms if t.action in ("SET", "AND")]
@@ -1166,32 +1160,43 @@ class SearchEngine:
         queries: one pushed-down condition per distinct (term, kind),
         scan splits coalesced for the Python stage that follows.
 
-        Returns (segs DataFrame | None, specs) where specs maps
-        (term, kind) → [(ti, url_only, title_only)] — the per-query-term
-        fan-out the decode stage applies after decoding each blob once.
+        Returns (segs DataFrame | None, specs, groups): specs maps
+        (term, kind) → [(gi, url_only, title_only)], one entry per
+        distinct location mask, and groups maps gi → the query terms' ti
+        scored from that group's postings — the decode stage decodes
+        each blob once and masks it once per group.
+
+        ``intervals`` reaches the scan as (first_doc <= hi AND last_doc
+        >= lo) range predicates — parquet row-group stats prune them; no
+        isin literals. ``per_term_intervals`` (batch mode) overrides it
+        per ``t.ti``: a term shared by several queries scans the UNION of
+        its queries' intervals (absent key = that query is unrestricted,
+        so the shared scan must be too). Unions only loosen pruning — the
+        per-query AND/NOT aggregation downstream filters exactly.
 
         The predicate is built as ONE SQL string and parsed once:
         building the same tree with Column operators costs a py4j round
         trip per operator (~4 s of driver wall on a 120-term batch);
         Catalyst sees identical predicates either way, so pushdown and
         bucket-directory pruning are unchanged."""
-
-        def iv_for(t: PlanTerm) -> np.ndarray | None:
-            if per_term_intervals is not None:
-                return per_term_intervals.get(t.ti)
-            return intervals
-
-        term_specs: dict[tuple[str, str], list[tuple[int, bool, bool]]] = {}
+        specs: dict[tuple[str, str], list[tuple[int, bool, bool]]] = {}
+        groups: dict[int, list[int]] = {}
+        gkey: dict[tuple, int] = {}
         key_iv: dict[tuple[str, str], list | None] = {}
         for t in terms:
             if t.host is not None:
                 continue
             kind = self._kind(t, use_fancy)
             k2 = (t.key, kind)
-            term_specs.setdefault(k2, []).append(
-                (t.ti, t.url_only, t.title_only)
-            )
-            iv_t = iv_for(t)
+            k4 = (t.key, kind, t.url_only, t.title_only)
+            if k4 not in gkey:
+                gkey[k4] = len(gkey)
+                specs.setdefault(k2, []).append(
+                    (gkey[k4], t.url_only, t.title_only)
+                )
+                groups[gkey[k4]] = []
+            groups[gkey[k4]].append(t.ti)
+            iv_t = _iv_for(t, intervals, per_term_intervals)
             if k2 not in key_iv:
                 key_iv[k2] = [] if iv_t is not None else None
             if key_iv[k2] is not None:
@@ -1200,7 +1205,7 @@ class SearchEngine:
                 else:
                     key_iv[k2].append(iv_t)
         if not key_iv:
-            return None, term_specs
+            return None, specs, groups
         # per-key interval budget: the whole scan predicate stays under
         # max_range_predicates_batch_total range terms however many keys
         # the batch unions (coarsening is a correct superset; downstream
@@ -1232,102 +1237,43 @@ class SearchEngine:
                 "term", "kind", "blob"
             )
         )
-        return segs, term_specs
+        return segs, specs, groups
 
-    def _decode(
+    def _host_rows(
         self,
         terms: list[PlanTerm],
-        use_fancy: bool,
         intervals: np.ndarray | None,
-        per_term_intervals: dict[int, np.ndarray] | None = None,
-    ) -> DataFrame | None:
-        """DataFrame (ti, doc_id, flags) of all query-term postings after
-        location filters; host terms contribute docmeta-derived rows.
-
-        ``intervals`` (already coarsened to <= max_range_predicates) reaches
-        the scan as (first_doc <= hi AND last_doc >= lo) range predicates —
-        parquet row-group stats prune them; no isin literals.
-
-        ``per_term_intervals`` (batch mode) overrides ``intervals`` per
-        ``t.ti``: a term shared by several queries scans the UNION of its
-        queries' intervals (absent key = that query is unrestricted, so the
-        shared scan must be too). Unions only loosen pruning — the per-query
-        AND/NOT aggregation downstream filters exactly."""
-        parts: list[DataFrame] = []
-        segs, specs = self._plain_scan(
-            terms, use_fancy, intervals, per_term_intervals
-        )
-        if segs is not None:
-            tomb_bc = self._tomb_bc
-
-            def decode_fn(iterator):
-                tomb = tomb_bc.value if tomb_bc is not None else None
-                for pdf in iterator:
-                    tis, dids, fls = [], [], []
-                    for term, kind, blob in zip(
-                        pdf["term"], pdf["kind"], pdf["blob"]
-                    ):
-                        docs, flags = codec.decode(bytes(blob))
-                        if tomb is not None:
-                            docs, flags = codec.remove_sorted(
-                                docs, flags, tomb
-                            )
-                        for ti, uo, to in specs[(term, kind)]:
-                            m = location_mask(flags, uo, to)
-                            d, f = docs[m], flags[m]
-                            tis.append(np.full(len(d), ti, dtype=np.int32))
-                            dids.append(d)
-                            fls.append(f.astype(np.int32))
-                    if tis:
-                        yield pd.DataFrame(
-                            {
-                                "ti": np.concatenate(tis),
-                                "doc_id": np.concatenate(dids),
-                                "flags": np.concatenate(fls),
-                            }
-                        )
-
-            parts.append(segs.mapInPandas(decode_fn, schema=DECODED_SCHEMA))
-
-        # host terms: host_postings ≡ docmeta filtered by host. When an AND
-        # interval restriction exists, docs outside it cannot be candidates
-        # (they lack some plain term's coverage) — filter them at the scan.
-        def iv_for(t: PlanTerm) -> np.ndarray | None:
-            if per_term_intervals is not None:
-                return per_term_intervals.get(t.ti)
-            return intervals
-
+        per_term_intervals: dict[int, np.ndarray] | None,
+    ) -> DataFrame:
+        """(ti, doc_id, flags=0) rows of HOST terms: host_postings ≡
+        docmeta filtered by host, tombstoned docs removed. When an AND
+        interval restriction exists, docs outside it cannot be candidates
+        (they lack some plain term's coverage) — filter them at the scan."""
+        out = None
         for t in terms:
-            if t.host is not None:
-                hc = F.col("host") == t.host
-                iv_t = iv_for(t)
-                if iv_t is not None:
-                    iv_t = _coarsen_intervals(iv_t, self.max_range_predicates)
-                    doc_iv = None
-                    for lo, hi in iv_t:
-                        e = (F.col("doc_id") >= int(lo)) & (
-                            F.col("doc_id") <= int(hi)
-                        )
-                        doc_iv = e if doc_iv is None else (doc_iv | e)
-                    hc = hc & doc_iv
-                hp = self.docmeta.where(hc).select(
-                    F.lit(t.ti).cast("int").alias("ti"),
-                    "doc_id",
-                    F.lit(0).cast("int").alias("flags"),
-                )
-                if self._tomb_df is not None:
-                    hp = hp.join(
-                        F.broadcast(self._tomb_df.select("doc_id")),
-                        "doc_id",
-                        "left_anti",
+            hc = F.col("host") == t.host
+            iv_t = _iv_for(t, intervals, per_term_intervals)
+            if iv_t is not None:
+                iv_t = _coarsen_intervals(iv_t, self.max_range_predicates)
+                doc_iv = None
+                for lo, hi in iv_t:
+                    e = (F.col("doc_id") >= int(lo)) & (
+                        F.col("doc_id") <= int(hi)
                     )
-                parts.append(hp)
-
-        if not parts:
-            return None
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
+                    doc_iv = e if doc_iv is None else (doc_iv | e)
+                hc = hc & doc_iv
+            hp = self.docmeta.where(hc).select(
+                F.lit(t.ti).cast("int").alias("ti"),
+                "doc_id",
+                F.lit(0).cast("int").alias("flags"),
+            )
+            if self._tomb_df is not None:
+                hp = hp.join(
+                    F.broadcast(self._tomb_df.select("doc_id")),
+                    "doc_id",
+                    "left_anti",
+                )
+            out = hp if out is None else out.unionByName(hp)
         return out
 
     # -- fused decode + score -------------------------------------------------
@@ -1365,226 +1311,50 @@ class SearchEngine:
         w,
         mode: str,
     ) -> DataFrame | None:
-        """Scored postings (ti, doc_id, score) for the query terms in ONE
-        python stage when the sidecars fit a broadcast: each blob is
-        decoded AND scored inside the same task (sidecar lookup is a
-        vectorized searchsorted against the broadcast arrays), so each
-        posting crosses the JVM↔Arrow boundary once instead of twice and
-        the per-posting docmeta join disappears from the plan. Host terms
-        (docmeta-derived rows, no blobs) keep the joined path — they are
-        per-host-sized, not corpus-sized. Falls back to
-        _decode → _score_rows above the sidecar broadcast cap.
+        """Scored postings (ti, doc_id, score) of the query terms.
 
-        Scores are bit-identical to the joined path: both call
+        Under the sidecar broadcast cap each blob is decoded AND scored
+        inside ONE python stage (sidecar lookup is a vectorized
+        searchsorted against the broadcast arrays), so each posting
+        crosses the JVM↔Arrow boundary once and the per-posting docmeta
+        join disappears from the plan. Above the cap the decoded postings
+        sort-merge join docmeta with ONE row per distinct (term, kind,
+        location mask) group, and the fan-out to query terms happens
+        after the join, inside the score stage: a 120-query batch shares
+        its hot terms across dozens of queries, and fanning out before
+        the join shuffled each shared term's postings once PER QUERY (the
+        dominant cost of the 10M-doc batch profile). Host terms
+        (docmeta-derived rows, no blobs) always take the joined score
+        stage — they are per-host-sized, not corpus-sized.
+
+        Scores are bit-identical on every path: all call
         scoring.score_term on the same arrays."""
-        side = self._sidecars_py()
-        if side is None:
-            return self._decode_score_grouped(
-                terms, use_fancy, intervals, per_term_intervals, w, mode
-            )
-        plain = [t for t in terms if t.host is None]
-        host = [t for t in terms if t.host is not None]
+        segs, specs, groups = self._plain_scan(
+            terms, use_fancy, intervals, per_term_intervals
+        )
+        plan = {t.ti: term_plan(t) for t in terms}
+        ctx = self._score_ctx(w, mode)
         parts: list[DataFrame] = []
-        if plain:
-            segs, specs = self._plain_scan(
-                plain, use_fancy, intervals, per_term_intervals
-            )
-            if segs is not None:
-                plan = {t.ti: term_plan(t) for t in plain}
-                ctx = self._score_ctx(w, mode)
-                tomb_bc = self._tomb_bc
-
-                def fused_fn(iterator):
-                    sc = side.value
-                    tomb = tomb_bc.value if tomb_bc is not None else None
-                    ids = sc["ids"]
-                    for pdf in iterator:
-                        tis, dids, scs = [], [], []
-                        for term, kind, blob in zip(
-                            pdf["term"], pdf["kind"], pdf["blob"]
-                        ):
-                            docs, flags = codec.decode(bytes(blob))
-                            if tomb is not None:
-                                docs, flags = codec.remove_sorted(
-                                    docs, flags, tomb
-                                )
-                            if not len(docs):
-                                continue
-                            pos_ = np.searchsorted(ids, docs)
-                            # membership mask: a decoded doc_id absent from
-                            # docmeta must DROP (inner-join semantics of the
-                            # joined path), not alias a neighbor's sidecar row
-                            okm = pos_ < len(ids)
-                            hitm = np.zeros(len(docs), dtype=bool)
-                            hitm[okm] = ids[pos_[okm]] == docs[okm]
-                            if not hitm.all():
-                                docs, flags = docs[hitm], flags[hitm]
-                                pos_ = pos_[hitm]
-                                if not len(docs):
-                                    continue
-                            side_ = {
-                                c: sc[c][pos_]
-                                for c in ("fd", "he", "rank", "bl", "dl")
-                            }
-                            for ti, uo, to in specs[(term, kind)]:
-                                m = location_mask(flags, uo, to)
-                                d, s = score_term(
-                                    plan[ti], docs[m], flags[m], side_, m,
-                                    **ctx,
-                                )
-                                tis.append(
-                                    np.full(len(d), ti, dtype=np.int32)
-                                )
-                                dids.append(d)
-                                scs.append(s)
-                        if tis:
-                            yield pd.DataFrame(
-                                {
-                                    "ti": np.concatenate(tis),
-                                    "doc_id": np.concatenate(dids),
-                                    "score": np.concatenate(scs),
-                                }
-                            )
-
-                parts.append(
-                    segs.mapInPandas(fused_fn, schema=SCORED_SCHEMA)
+        if segs is not None:
+            side = self._sidecars_py()
+            if side is not None:
+                fn = _fused_score_fn(side, self._tomb_bc, specs, groups, plan, ctx)
+                parts.append(segs.mapInPandas(fn, schema=SCORED_SCHEMA))
+            else:
+                decoded = segs.mapInPandas(
+                    _decode_fn(self._tomb_bc, specs), schema=DECODED_SCHEMA
                 )
-        if host:
-            hdec = self._decode(
-                host, use_fancy, intervals,
-                per_term_intervals=per_term_intervals,
-            )
-            if hdec is not None:
-                parts.append(self._score_rows(hdec, host, w, mode=mode))
-        if not parts:
-            return None
-        out = parts[0]
-        for pth in parts[1:]:
-            out = out.unionByName(pth)
-        return out
-
-    def _decode_score_grouped(
-        self,
-        terms: list[PlanTerm],
-        use_fancy: bool,
-        intervals: np.ndarray | None,
-        per_term_intervals: dict[int, np.ndarray] | None,
-        w,
-        mode: str,
-    ) -> DataFrame | None:
-        """At-scale (above the sidecar broadcast cap) scored postings:
-        the docmeta sort-merge join runs on ONE row per distinct
-        (term, kind, location-mask) posting — query-term fan-out happens
-        AFTER the join, inside the score stage. A 120-query batch shares
-        its hot terms across dozens of queries; fanning out before the
-        join (the old shape) shuffled and sorted every shared term's
-        postings once PER QUERY — the dominant cost of the 10M-doc batch
-        profile. Scores are bit-identical to _score_rows: same
-        scoring.score_term on the same masked arrays (rank-identity
-        pytest). Host terms keep the per-host-sized joined path."""
-        plain = [t for t in terms if t.host is None]
+                parts.append(self._score_rows(decoded, groups, plan, ctx))
         host = [t for t in terms if t.host is not None]
-        parts: list[DataFrame] = []
-        if plain:
-            segs, specs = self._plain_scan(
-                plain, use_fancy, intervals, per_term_intervals
-            )
-            if segs is not None:
-                # group key: (term, kind, url_only, title_only) — one
-                # decoded+joined row per group; gi -> the query terms it
-                # fans out to in the score stage
-                gkey: dict[tuple, int] = {}
-                dec_specs: dict[tuple[str, str], list] = {}
-                group_tis: dict[int, list[int]] = {}
-                for (term, kind), lst in specs.items():
-                    for ti, uo, to in lst:
-                        k4 = (term, kind, uo, to)
-                        if k4 not in gkey:
-                            gkey[k4] = len(gkey)
-                            dec_specs.setdefault((term, kind), []).append(
-                                (gkey[k4], uo, to)
-                            )
-                        group_tis.setdefault(gkey[k4], []).append(ti)
-                plan = {t.ti: term_plan(t) for t in plain}
-                ctx = self._score_ctx(w, mode)
-                tomb_bc = self._tomb_bc
-
-                def decode_fn(iterator):
-                    tomb = tomb_bc.value if tomb_bc is not None else None
-                    for pdf in iterator:
-                        gis, dids, fls = [], [], []
-                        for term, kind, blob in zip(
-                            pdf["term"], pdf["kind"], pdf["blob"]
-                        ):
-                            docs, flags = codec.decode(bytes(blob))
-                            if tomb is not None:
-                                docs, flags = codec.remove_sorted(
-                                    docs, flags, tomb
-                                )
-                            for gi, uo, to in dec_specs[(term, kind)]:
-                                m = location_mask(flags, uo, to)
-                                d, f = docs[m], flags[m]
-                                gis.append(
-                                    np.full(len(d), gi, dtype=np.int32)
-                                )
-                                dids.append(d)
-                                fls.append(f.astype(np.int32))
-                        if gis:
-                            yield pd.DataFrame(
-                                {
-                                    "ti": np.concatenate(gis),
-                                    "doc_id": np.concatenate(dids),
-                                    "flags": np.concatenate(fls),
-                                }
-                            )
-
-                grouped = segs.mapInPandas(decode_fn, schema=DECODED_SCHEMA)
-                joined = grouped.join(self._docmeta_cols, "doc_id")
-
-                def score_fn(iterator):
-                    for pdf in iterator:
-                        n = len(pdf)
-                        if n == 0:
-                            continue
-                        gi = pdf["ti"].to_numpy(np.int32)
-                        flags = pdf["flags"].to_numpy(np.int64)
-                        side = _sidecar_cols(pdf)
-                        doc_id = pdf["doc_id"].to_numpy(np.int64)
-                        tis_o, dids_o, scs_o = [], [], []
-                        for g, tis in group_tis.items():
-                            m = gi == g
-                            if not m.any():
-                                continue
-                            side_ = {c: a[m] for c, a in side.items()}
-                            for t_i in tis:
-                                dd, s = score_term(
-                                    plan[t_i], doc_id[m], flags[m], side_,
-                                    None, **ctx,
-                                )
-                                tis_o.append(
-                                    np.full(len(dd), t_i, dtype=np.int32)
-                                )
-                                dids_o.append(dd)
-                                scs_o.append(s)
-                        if tis_o:
-                            yield pd.DataFrame(
-                                {
-                                    "ti": np.concatenate(tis_o),
-                                    "doc_id": np.concatenate(dids_o),
-                                    "score": np.concatenate(scs_o),
-                                }
-                            )
-
-                parts.append(
-                    joined.mapInPandas(score_fn, schema=SCORED_SCHEMA)
-                )
         if host:
-            hdec = self._decode(
-                host, use_fancy, intervals,
-                per_term_intervals=per_term_intervals,
+            parts.append(
+                self._score_rows(
+                    self._host_rows(host, intervals, per_term_intervals),
+                    {t.ti: [t.ti] for t in host},
+                    plan,
+                    ctx,
+                )
             )
-            if hdec is not None:
-                parts.append(self._score_rows(hdec, host, w, mode=mode))
         if not parts:
             return None
         out = parts[0]
@@ -1607,46 +1377,20 @@ class SearchEngine:
     def _score_rows(
         self,
         decoded: DataFrame,
-        terms: list[PlanTerm],
-        w,
-        mode: str = "deusu",
+        groups: dict[int, list[int]],
+        plan: dict[int, dict],
+        ctx: dict,
     ) -> DataFrame:
-        """Join sidecars and score each posting with scoring.score_term
-        (deusu or bm25), vectorized per term."""
-        plan = {t.ti: term_plan(t) for t in terms}
-        ctx = self._score_ctx(w, mode)
+        """Join decoded (gi, doc_id, flags) rows to the docmeta sidecars
+        (broadcast under the cap, sort-merge above it) and score each
+        group's rows once per query term ti in ``groups[gi]`` with
+        scoring.score_term."""
         dm = self._docmeta_cols
         if int(self.meta["n_docs"]) <= self.docmeta_broadcast_max_docs:
             dm = F.broadcast(dm)
-        joined = decoded.join(dm, "doc_id")
-
-        def score_fn(iterator):
-            for pdf in iterator:
-                if len(pdf) == 0:
-                    continue
-                ti = pdf["ti"].to_numpy(np.int32)
-                flags = pdf["flags"].to_numpy(np.int64)
-                side = _sidecar_cols(pdf)
-                doc_id = pdf["doc_id"].to_numpy(np.int64)
-                tis, dids, scs = [], [], []
-                for t_i, p in plan.items():
-                    m = ti == t_i
-                    if not m.any():
-                        continue
-                    d, s = score_term(p, doc_id[m], flags[m], side, m, **ctx)
-                    tis.append(np.full(len(d), t_i, dtype=np.int32))
-                    dids.append(d)
-                    scs.append(s)
-                if tis:
-                    yield pd.DataFrame(
-                        {
-                            "ti": np.concatenate(tis),
-                            "doc_id": np.concatenate(dids),
-                            "score": np.concatenate(scs),
-                        }
-                    )
-
-        return joined.mapInPandas(score_fn, schema=SCORED_SCHEMA)
+        return decoded.join(dm, "doc_id").mapInPandas(
+            _joined_score_fn(groups, plan, ctx), schema=SCORED_SCHEMA
+        )
 
     # -- single-term block-max top-k --------------------------------------------
     def _single_term_blockmax(
@@ -1673,8 +1417,11 @@ class SearchEngine:
         firsts = sm["first_doc"].to_numpy(np.int64)
         lasts = sm["last_doc"].to_numpy(np.int64)
 
-        def _iv(sel):
-            return _merge_intervals(np.stack([firsts[sel], lasts[sel]], axis=1))
+        def decode(sel) -> list[tuple[int, int]]:
+            iv = _merge_intervals(np.stack([firsts[sel], lasts[sel]], axis=1))
+            scored = self._decode_score([t], use_fancy, iv, None, w, "deusu")
+            rows = scored.select("doc_id", "score").collect()
+            return [(r["doc_id"], r["score"]) for r in rows]
 
         # round 1: decode the highest-bound segments covering >= fetch postings
         got, pos = 0, 0
@@ -1683,7 +1430,7 @@ class SearchEngine:
             batch.append(order[pos])
             got += int(ns[order[pos]])
             pos += 1
-        heap = self._decode_segments(t, _iv(np.array(batch)), use_fancy, w)
+        heap = decode(np.array(batch))
         heap.sort(key=lambda r: (-r[1], r[0]))
         self.last_stats.update(strategy="single_blockmax", segments_selected=len(batch))
         if pos >= len(order):
@@ -1692,8 +1439,7 @@ class SearchEngine:
             # metadata said the batch covered >= fetch postings but fewer
             # survived decode (tombstone masking) — no theta exists yet, so
             # the remaining segments must all be decoded for exactness
-            rest_all = np.array(order[pos:])
-            heap.extend(self._decode_segments(t, _iv(rest_all), use_fancy, w))
+            heap.extend(decode(np.array(order[pos:])))
             heap = list({d: (d, s) for d, s in heap}.values())
             heap.sort(key=lambda r: (-r[1], r[0]))
             self.last_stats["segments_selected"] = len(order)
@@ -1708,7 +1454,7 @@ class SearchEngine:
         theta = heap[fetch - 1][1]
         rest = np.array([i for i in order[pos:] if bounds[i] >= theta - 1])
         if len(rest):
-            heap.extend(self._decode_segments(t, _iv(rest), use_fancy, w))
+            heap.extend(decode(rest))
             # range decodes may overlap across rounds; duplicates carry the
             # same exact score — keep one per doc
             heap = list({d: (d, s) for d, s in heap}.values())
@@ -1716,53 +1462,7 @@ class SearchEngine:
             self.last_stats["segments_selected"] = len(batch) + len(rest)
         return heap[:fetch]
 
-    def _decode_segments(
-        self, t: PlanTerm, intervals: np.ndarray, use_fancy: bool, w
-    ) -> list[tuple[int, int]]:
-        kind = self._kind(t, use_fancy)
-        b = crc32(t.key) % 64
-        iv = _coarsen_intervals(intervals, self.max_range_predicates)
-        segs = self._coalesce_scan(
-            self.postings.where(
-                (F.col("bucket") == b)
-                & (F.col("term") == t.key)
-                & (F.col("kind") == kind)
-                & _interval_filter_expr(iv)
-            ).select("blob")
-        )
-        decoded = segs.mapInPandas(
-            _decode_only_fn(t.ti, self._tomb_bc), schema=DECODED_SCHEMA
-        )
-        scored = self._score_rows(decoded, [t], w)
-        rows = scored.select("doc_id", "score").collect()
-        return [(r["doc_id"], r["score"]) for r in rows]
-
-
-def _decode_only_fn(ti: int, tomb_bc=None):
-    def fn(iterator):
-        tomb = tomb_bc.value if tomb_bc is not None else None
-        for pdf in iterator:
-            dids, fls = [], []
-            for blob in pdf["blob"]:
-                d, f = codec.decode(bytes(blob))
-                if tomb is not None:
-                    d, f = codec.remove_sorted(d, f, tomb)
-                dids.append(d)
-                fls.append(f.astype(np.int32))
-            if dids:
-                d = np.concatenate(dids)
-                yield pd.DataFrame(
-                    {
-                        "ti": np.full(len(d), ti, dtype=np.int32),
-                        "doc_id": d,
-                        "flags": np.concatenate(fls),
-                    }
-                )
-
-    return fn
-
-
-class FederatedSearchEngine:
+class FederatedSearchEngine(_Coordinator):
     """Distributed query-time federation over k INDEPENDENTLY BUILT indexes
     — rank-identical to ``SearchEngine`` over ``merge.merge_indexes()`` of
     the same indexes, without running the merge. The distributed twin of
@@ -1777,15 +1477,16 @@ class FederatedSearchEngine:
     - fancy holes: a term hot globally but cold in one part has no fancy
       segments there; PlanTerm.fancy_hole makes that part execute full
       postings masked by the domain-rank window at score time
-      (_score_rows), the per-doc predicate merge.py materializes offline.
+      (scoring.score_term), the per-doc predicate merge.py materializes
+      offline.
 
     Execution stays fully distributed: each part runs its own pruned
     passes (two-level metadata, interval intersection, block-max WAND —
     unchanged and still exact per part, so merged per-part top-k is the
     exact global top-k), submitted concurrently from a thread pool — on a
     cluster the per-part jobs share executors, so federating costs no
-    repartition or rewrite of index files. The coordinator applies the
-    reference's two-pass rule on the SUMMED candidate counts
+    repartition or rewrite of index files. The shared ``_Coordinator``
+    applies the reference's two-pass rule on the SUMMED candidate counts
     (searchservernew.dpr:1848-1855): per-part counts clamp at
     max(k, 1001) ≥ MAX_RESULTS, so the summed signal crosses the
     1000-results threshold exactly when the merged index's would.
@@ -1800,8 +1501,6 @@ class FederatedSearchEngine:
         io=None,
         parallel: bool = True,
     ):
-        from concurrent.futures import ThreadPoolExecutor
-
         self.spark = spark
         self.parts = [SearchEngine(spark, r, io=io) for r in index_roots]
         thrs = {int(p.meta["fancy_threshold"]) for p in self.parts}
@@ -1832,7 +1531,7 @@ class FederatedSearchEngine:
             else None
         )
 
-    def _map_parts(self, fn):
+    def _map_engines(self, fn) -> list:
         if self._pool is not None:
             return list(self._pool.map(fn, self.parts))
         return [fn(p) for p in self.parts]
@@ -1843,7 +1542,7 @@ class FederatedSearchEngine:
         merged docmeta would average. Pushed into each part so bm25's
         length normalization uses the federation-wide value."""
         if self._avgdl is None:
-            totals = self._map_parts(
+            totals = self._map_engines(
                 lambda p: float(
                     p.docmeta.agg(F.sum("dl")).collect()[0][0] or 0.0
                 )
@@ -1856,46 +1555,12 @@ class FederatedSearchEngine:
     def term_df(self, term: str) -> int:
         return sum(p.term_df(term) for p in self.parts)
 
-    def suggest(self, term: str, k: int = 3) -> list[str]:
-        """Federated did-you-mean, same globalization rule as the serving
-        FederatedSearcher: every part contributes its FULL verified
-        candidate set (one bounded job each, concurrent), ranking uses
-        the SUMMED df — a term present in only one part competes on its
-        true federation-wide frequency."""
-        t = fold(term.lower()) if term else term
-        if not t or self.term_df(t) > 0:
-            return []
-        dfs: dict[str, int] = {}
-        for rows in self._map_parts(lambda p: p._suggest_rows(t)):
-            for c, d in rows:
-                dfs[c] = dfs.get(c, 0) + d
-        scored = sorted(dfs.items(), key=lambda x: (-x[1], x[0]))
-        return [c for c, _ in scored[:k]]
-
-    def compile(self, query: str) -> list[PlanTerm]:
-        """Global compile: ONE pruned metadata job per part (concurrent)
-        prefetches every candidate term, then df sums across parts."""
-        from .queryplan import host_of, parse_query
-
-        cands = set()
-        for kw in parse_query(query):
-            key = kw[1:] if kw[:1] in "+-" else kw
-            if host_of(key) is None and ":" not in key:
-                cands.add(key)
-        sc = sorted(cands)
-        self._map_parts(lambda p: p._fetch_term_meta(sc))
-        return compile_query(query, self.n_docs, self.term_df)
-
     def explain(self, query: str) -> dict:
         """Federated EXPLAIN: the GLOBAL plan plus per-part fancy holes
         (same shape as the serving FederatedSearcher.explain; the hole
         rule is _part_terms')."""
-        from .queryplan import explain_plan
-
-        terms = self.compile(query)
-        out = explain_plan(
-            query, terms, self.n_docs, self.meta["fancy_threshold"]
-        )
+        out = super().explain(query)
+        terms = self.compile(query)  # warm: no jobs
         thr = self.meta["fancy_threshold"]
         bounds = self.offsets + [self.n_docs]
         out["parts"] = [
@@ -1931,188 +1596,56 @@ class FederatedSearchEngine:
             for t in terms
         ]
 
-    def search(
-        self,
-        query: str,
-        k: int = 10,
-        weights: dict[str, int] | None = None,
-        prune: bool = True,
-        mode: str = "deusu",
-    ) -> list[tuple[int, int]]:
-        """Top-k [(doc_id, score)] on the federated (merged) id space, by
-        (score desc, doc_id asc) — the SearchEngine.search contract."""
-        w = dict(DEFAULT_WEIGHTS)
-        if weights:
-            w.update(weights)
-        terms = self.compile(query)
-        if not terms:
-            return []
-        prune = prune and w == DEFAULT_WEIGHTS and mode == "deusu"
-        if mode == "bm25":
-            _ = self.avgdl  # ensure the global normalizer is pushed down
-        rows, _ = self._two_pass(terms, k, w, prune, mode)
-        if mode == "bm25":
-            return [(d, round(s, 6)) for d, s in rows[:k]]
-        return [(d, int(s)) for d, s in rows[:k]]
+    def _fancy_bound(self, terms: list[PlanTerm]) -> int | None:
+        """Σ of the parts' fancy-count bounds on their per-part plans. A
+        hole term reads its part's full postings, which can only
+        over-estimate that part's fancy count."""
+        bounds = [
+            p._fancy_bound(self._part_terms(p, terms, True))
+            for p in self.parts
+        ]
+        return None if None in bounds else sum(bounds)
 
-    def _two_pass(self, terms, k, w, prune, mode):
-        if mode == "deusu" and needs_fancy_pass(
-            terms, self.meta["fancy_threshold"]
-        ):
-            rows, total = self._run(terms, k, w, True, prune, mode)
-            if total >= MAX_RESULTS:
-                return rows, total
-        return self._run(terms, k, w, False, prune, mode)
+    def _pass(self, terms, k, w, use_fancy, prune, mode):
+        """One federated pass: every part executes its own pruned pass on
+        its per-part plan, concurrently."""
 
-    def _run(
-        self, terms, k: int, w, use_fancy: bool, prune: bool, mode: str
-    ) -> tuple[list[tuple[int, int]], int]:
-        """One federated pass: every part executes its own pruned pass
-        concurrently; merge by (score desc, global doc asc); sum counts."""
+        def one(p):
+            pt = self._part_terms(p, terms, use_fancy)
+            rows, _ = p._pass(pt, k, w, use_fancy, prune, mode)
+            return {0: rows}
 
-        def one_part(arg):
-            p, off = arg
-            rows, cnt = p._run_pass(
-                self._part_terms(p, terms, use_fancy),
-                k,
-                w,
-                use_fancy=use_fancy,
-                prune=prune,
-                need_count=use_fancy,
-                mode=mode,
-            )
-            return cnt, [(d + off, s) for d, s in rows]
+        rows = self._merge_parts(one, mode).get(0, [])
+        return rows, len(rows)
 
-        args = list(zip(self.parts, self.offsets))
-        if self._pool is not None:
-            outs = list(self._pool.map(one_part, args))
-        else:
-            outs = [one_part(a) for a in args]
-        merged: list[tuple[int, int]] = []
-        total = 0
-        for cnt, rows in outs:
-            total += cnt
-            merged.extend(rows)
-        merged.sort(key=lambda r: (-r[1], r[0]))
-        return merged, total
-
-    def search_many(
-        self,
-        queries: list[str],
-        k: int = 10,
-        weights: dict[str, int] | None = None,
-        prune: bool = True,
-        mode: str = "deusu",
-    ) -> list[list[tuple[int, int]]]:
-        """Batch federation, fully amortized: ONE union metadata prefetch
-        per part, then at most two union decode/score plans PER PART for
-        the whole batch (fancy, then full for the under-filled queries) —
-        N queries over P parts cost ~2·P plans, not N·P. The two-pass
-        decision and fancy-hole flags stay per-query GLOBAL (parts' own
-        search_many cannot be delegated to); per-query results are
-        rank-identical to search()."""
-        from .queryplan import host_of, parse_query
-
-        w = dict(DEFAULT_WEIGHTS)
-        if weights:
-            w.update(weights)
-        cands = set()
-        for q in queries:
-            for kw in parse_query(q):
-                key = kw[1:] if kw[:1] in "+-" else kw
-                if host_of(key) is None and ":" not in key:
-                    cands.add(key)
-        sc = sorted(cands)
-        self._map_parts(lambda p: p._fetch_term_meta(sc))
-        compiled = [self.compile(q) for q in queries]  # warm: no more jobs
-        nt = 0
-        for terms in compiled:
-            for t in terms:
-                t.ti = nt
-                nt += 1
-        prune = prune and w == DEFAULT_WEIGHTS and mode == "deusu"
-        results: list[list[tuple[int, int]] | None] = [None] * len(queries)
-
-        if mode == "bm25":
-            _ = self.avgdl
-            batch = [(qi, t) for qi, t in enumerate(compiled) if t]
-            merged, _ = self._run_many(
-                batch, {qi: k for qi, _ in batch}, w, False, mode, prune
-            )
-            return [
-                [(d, round(s, 6)) for d, s in merged.get(qi, [])[:k]]
-                if t
-                else []
-                for qi, t in enumerate(compiled)
-            ]
-
-        fancy_batch, full_batch = [], []
-        for qi, terms in enumerate(compiled):
-            if not terms:
-                results[qi] = []
-                continue
-            has_fancy = needs_fancy_pass(terms, self.meta["fancy_threshold"])
-            (fancy_batch if has_fancy else full_batch).append((qi, terms))
-
-        if fancy_batch:
-            fetch = max(k, MAX_RESULTS + 1)
-            merged, counts = self._run_many(
-                fancy_batch, {qi: fetch for qi, _ in fancy_batch},
-                w, True, mode, prune,
-            )
-            for qi, terms in fancy_batch:
-                if counts.get(qi, 0) >= MAX_RESULTS:
-                    results[qi] = [
-                        (d, int(s)) for d, s in merged.get(qi, [])[:k]
-                    ]
-                else:
-                    full_batch.append((qi, terms))
-        if full_batch:
-            merged, _ = self._run_many(
-                full_batch, {qi: k for qi, _ in full_batch},
-                w, False, mode, prune,
-            )
-            for qi, _ in full_batch:
-                results[qi] = [(d, int(s)) for d, s in merged.get(qi, [])[:k]]
-        return results  # type: ignore[return-value]
-
-    def _run_many(
-        self, batch, fetch_by_qi, w, use_fancy: bool, mode: str, prune: bool
-    ) -> tuple[dict[int, list[tuple[int, float]]], dict[int, int]]:
+    def _execute_many(self, batch, fetch_by_qi, w, use_fancy, mode, prune):
         """One federated batch pass: every part runs ONE union plan for the
-        whole batch (_execute_many, hole-flagged terms per part), parts
-        concurrent. Returns (merged rows per query, summed count signal per
-        query — per-part counts clamp at fetch ≥ 1001, so the summed
-        ≥1000 decision matches the merged index's exactly)."""
+        whole batch (SearchEngine._execute_many on its hole-flagged
+        terms), parts concurrent — N queries over P parts cost ~P plans
+        per pass, not N·P."""
+        return self._merge_parts(
+            lambda p: p._execute_many(
+                [(qi, self._part_terms(p, terms, use_fancy)) for qi, terms in batch],
+                fetch_by_qi, w, use_fancy, mode, prune,
+            ),
+            mode,
+        )
 
-        def one_part(arg):
-            p, off = arg
-            pb = [
-                (qi, self._part_terms(p, terms, use_fancy))
-                for qi, terms in batch
-            ]
-            out = p._execute_many(pb, fetch_by_qi, w, use_fancy, mode, prune)
-            return {
-                qi: [(d + off, s) for d, s in rows]
-                for qi, rows in out.items()
-            }
-
-        args = list(zip(self.parts, self.offsets))
-        if self._pool is not None:
-            outs = list(self._pool.map(one_part, args))
-        else:
-            outs = [one_part(a) for a in args]
-        merged: dict[int, list[tuple[int, float]]] = {
-            qi: [] for qi, _ in batch
-        }
-        counts: dict[int, int] = {qi: 0 for qi, _ in batch}
-        for po in outs:
-            for qi, rows in po.items():
-                counts[qi] += len(rows)
-                merged[qi].extend(rows)
-        for qi in merged:
-            merged[qi].sort(key=lambda r: (-r[1], r[0]))
-        return merged, counts
+    def _merge_parts(self, run, mode: str) -> dict[int, list]:
+        """``run(part)`` → {qi: rows} on every part; each part's rows shift
+        by its doc-id offset and merge per qi by (score desc, global doc
+        asc). Nothing is cut, so a merged list's length is the SUM of the
+        parts' count signals (a part's signal is its row count, clamped at
+        fetch)."""
+        if mode == "bm25":
+            _ = self.avgdl  # push the global normalizer into every part
+        merged: dict[int, list] = {}
+        for off, out in zip(self.offsets, self._map_engines(run)):
+            for qi, rows in out.items():
+                merged.setdefault(qi, []).extend((d + off, s) for d, s in rows)
+        for rows in merged.values():
+            rows.sort(key=lambda r: (-r[1], r[0]))
+        return merged
 
     def fetch_results(self, rows: list[tuple[int, int]]):
         """Q15 display fetch: resolve each global doc id to its owning
@@ -2121,16 +1654,6 @@ class FederatedSearchEngine:
         from .rerank import fetch_partitioned
 
         return fetch_partitioned(self.parts, self.offsets, rows, rebase=True)
-
-    def query_info(self, query: str) -> dict:
-        terms = self.compile(query)
-        return {
-            "corpussize": self.n_docs,
-            "keywords": [
-                {"keyword": t.key, "occurrences": t.df, "idf": round(t.idf, 6)}
-                for t in terms
-            ],
-        }
 
 
 def _sidecar_cols(pdf: pd.DataFrame) -> dict[str, np.ndarray]:
@@ -2184,14 +1707,139 @@ def _coarsen_intervals(iv: np.ndarray, max_n: int) -> np.ndarray:
     return np.array(out, dtype=np.int64)
 
 
-def _interval_filter_expr(iv: np.ndarray):
-    """OR-chain of (first_doc <= hi AND last_doc >= lo) range predicates —
-    pushed into the parquet scan (row-group min/max pruning)."""
-    c = None
-    for lo, hi in iv:
-        e = (F.col("first_doc") <= int(hi)) & (F.col("last_doc") >= int(lo))
-        c = e if c is None else (c | e)
-    return c if c is not None else F.lit(False)
+def _request(weights, prune: bool, mode: str) -> tuple[dict[str, int], bool]:
+    """A request's weights (defaults overlaid) and whether it may prune:
+    block-max bounds are computed for default deusu weights at build."""
+    w = dict(DEFAULT_WEIGHTS)
+    if weights:
+        w.update(weights)
+    return w, prune and w == DEFAULT_WEIGHTS and mode == "deusu"
+
+
+def _page(rows, k: int, mode: str) -> list[tuple[int, int]]:
+    """The top k of a pass's rows as the API returns them: integer deusu
+    scores, bm25 scores rounded to 6 places."""
+    if mode == "bm25":
+        return [(d, round(s, 6)) for d, s in rows[:k]]
+    return [(d, int(s)) for d, s in rows[:k]]
+
+
+def _iv_for(t: PlanTerm, intervals, per_term_intervals):
+    if per_term_intervals is not None:
+        return per_term_intervals.get(t.ti)
+    return intervals
+
+
+def _decoded(pdf: pd.DataFrame, tomb):
+    """(term, kind, docs, flags) of each scanned blob, tombstoned docs
+    removed — masking at decode keeps every downstream count, WAND θ and
+    two-pass decision consistent with the serving engine."""
+    for term, kind, blob in zip(pdf["term"], pdf["kind"], pdf["blob"]):
+        docs, flags = codec.decode(bytes(blob))
+        if tomb is not None:
+            docs, flags = codec.remove_sorted(docs, flags, tomb)
+        yield term, kind, docs, flags
+
+
+def _frame(tis: list, dids: list, col: str, vals: list) -> pd.DataFrame:
+    return pd.DataFrame(
+        {
+            "ti": np.concatenate(tis),
+            "doc_id": np.concatenate(dids),
+            col: np.concatenate(vals),
+        }
+    )
+
+
+def _fused_score_fn(side_bc, tomb_bc, specs, groups, plan, ctx):
+    """mapInPandas body of the fused stage: decode each blob and score it
+    against the broadcast sidecar arrays in the same task."""
+
+    def fn(iterator):
+        sc = side_bc.value
+        ids = sc["ids"]
+        tomb = tomb_bc.value if tomb_bc is not None else None
+        for pdf in iterator:
+            tis, dids, scs = [], [], []
+            for term, kind, docs, flags in _decoded(pdf, tomb):
+                pos = np.searchsorted(ids, docs)
+                # membership mask: a decoded doc_id absent from docmeta
+                # must DROP (inner-join semantics of the joined path), not
+                # alias a neighbor's sidecar row
+                ok = pos < len(ids)
+                hit = np.zeros(len(docs), dtype=bool)
+                hit[ok] = ids[pos[ok]] == docs[ok]
+                if not hit.all():
+                    docs, flags, pos = docs[hit], flags[hit], pos[hit]
+                if not len(docs):
+                    continue
+                side = {c: sc[c][pos] for c in ("fd", "he", "rank", "bl", "dl")}
+                for gi, uo, to in specs[(term, kind)]:
+                    m = location_mask(flags, uo, to)
+                    for ti in groups[gi]:
+                        d, s = score_term(
+                            plan[ti], docs[m], flags[m], side, m, **ctx
+                        )
+                        tis.append(np.full(len(d), ti, dtype=np.int32))
+                        dids.append(d)
+                        scs.append(s)
+            if tis:
+                yield _frame(tis, dids, "score", scs)
+
+    return fn
+
+
+def _decode_fn(tomb_bc, specs):
+    """mapInPandas body of the above-cap decode stage: one (gi, doc_id,
+    flags) row per posting of each location-mask group."""
+
+    def fn(iterator):
+        tomb = tomb_bc.value if tomb_bc is not None else None
+        for pdf in iterator:
+            gis, dids, fls = [], [], []
+            for term, kind, docs, flags in _decoded(pdf, tomb):
+                for gi, uo, to in specs[(term, kind)]:
+                    m = location_mask(flags, uo, to)
+                    d = docs[m]
+                    gis.append(np.full(len(d), gi, dtype=np.int32))
+                    dids.append(d)
+                    fls.append(flags[m].astype(np.int32))
+            if gis:
+                yield _frame(gis, dids, "flags", fls)
+
+    return fn
+
+
+def _joined_score_fn(groups, plan, ctx):
+    """mapInPandas body of the joined score stage: each docmeta-joined
+    group's rows are scored once per query term of the group."""
+
+    def fn(iterator):
+        for pdf in iterator:
+            if len(pdf) == 0:
+                continue
+            gi = pdf["ti"].to_numpy(np.int32)
+            flags = pdf["flags"].to_numpy(np.int64)
+            doc_id = pdf["doc_id"].to_numpy(np.int64)
+            side = _sidecar_cols(pdf)
+            tis, dids, scs = [], [], []
+            for g, members in groups.items():
+                m = gi == g
+                if not m.any():
+                    continue
+                side_g = {c: a[m] for c, a in side.items()}
+                docs_g, flags_g = doc_id[m], flags[m]
+                for ti in members:
+                    d, s = score_term(
+                        plan[ti], docs_g, flags_g, side_g, None, **ctx
+                    )
+                    tis.append(np.full(len(d), ti, dtype=np.int32))
+                    dids.append(d)
+                    scs.append(s)
+            if tis:
+                yield _frame(tis, dids, "score", scs)
+
+    return fn
 
 
 def _count_selected_postings(

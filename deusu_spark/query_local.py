@@ -707,9 +707,10 @@ class LocalSearcher(_Coordinator, _PositionalSearch):
 class _FanOut(_Coordinator):
     """Coordinator over member LocalSearchers (doc-range shards or
     independently built parts). A pass runs on every member, its local ids
-    shift by the member's doc-id offset, the members' top-k lists merge by
-    (score desc, doc_id asc) and their candidate counts sum for the
-    two-pass rule — so both decisions equal the single server's. With
+    shift by the member's doc-id offset, the members' top-``fetch`` arrays
+    merge in one lexsort by (score desc, doc_id asc) and their candidate
+    counts sum for the two-pass rule — so both decisions equal the single
+    server's. With
     ``parallel`` the members run on a thread pool: their work is
     numpy/pyarrow, which releases the GIL, and the merge is independent
     of completion order."""
@@ -732,15 +733,23 @@ class _FanOut(_Coordinator):
         def one(member):
             s, off = member
             docs, vals = s._run_pass(terms, w, use_fancy, mode)
-            top = s._topk(docs, vals, fetch, is_float=mode == "bm25")
-            return len(docs), [(d + off, v) for d, v in top] if off else top
+            n = len(docs)
+            if n > fetch:  # only a member's top fetch can place
+                keep = np.lexsort((docs, -vals))[:fetch]
+                docs, vals = docs[keep], vals[keep]
+            return n, docs + off if off else docs, vals
 
         outs = self._map(one, self._members)
-        if sum(n for n, _ in outs) < min_count:
+        if sum(n for n, _, _ in outs) < min_count:
             return None
-        rows = [r for _, top in outs for r in top]
-        rows.sort(key=lambda r: (-r[1], r[0]))
-        return rows[:fetch]
+        # one merge over the members' unrounded scores, exactly the single
+        # server's top-k (bm25 rounds after the merge, as it does there)
+        return LocalSearcher._topk(
+            np.concatenate([d for _, d, _ in outs]),
+            np.concatenate([v for _, _, v in outs]),
+            fetch,
+            is_float=mode == "bm25",
+        )
 
 
 class ShardedSearcher(_FanOut, _PositionalSearch):

@@ -92,6 +92,14 @@ def host_of(key: str) -> str | None:
     return None
 
 
+def lexicon_key(kw: str) -> tuple[str, bool]:
+    """A parsed keyword's bare key (its +/- prefix stripped) and whether
+    that key is looked up in the lexicon: host terms (host:, site:, www.,
+    .de, .com) and field-prefixed keys (inurl:, intitle:) are not."""
+    key = kw[1:] if kw[:1] in "+-" else kw
+    return key, host_of(key) is None and ":" not in key
+
+
 def compile_query(
     query: str,
     n_docs: int,
@@ -104,14 +112,10 @@ def compile_query(
     actions: list[str] = []
     dfs: list[int] = []
     for kw in kws:
-        key = kw
-        action = "AND"
-        if key.startswith("+"):
-            key = key[1:]
-        elif key.startswith("-"):
-            key, action = key[1:], "NOT"
+        key, in_lexicon = lexicon_key(kw)
+        action = "NOT" if kw[:1] == "-" else "AND"
         df = 0
-        if host_of(key) is None and ":" not in key:
+        if in_lexicon:
             df = df_lookup(key)
             if df == 0:
                 # auto host-rewrite of unknown www*/*com/*de terms

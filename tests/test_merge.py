@@ -335,7 +335,7 @@ def test_federated_engine_fancy_hole_pass(spark, merge_env):
         for p in fed.parts
         for pt in fed._part_terms(p, ft, use_fancy=True)
     )
-    rows_f, cnt_f = fed._run(ft, 1000, w, True, True, "deusu")
+    rows_f, cnt_f = fed._pass(ft, 1000, w, True, True, "deusu")
     mt = merged.compile(hole_term)
     rows_m, cnt_m = merged._run_pass(
         mt, 1000, w, use_fancy=True, prune=True, need_count=True, mode="deusu"
@@ -344,6 +344,33 @@ def test_federated_engine_fancy_hole_pass(spark, merge_env):
     assert [(d, int(s)) for d, s in rows_f] == [
         (d, int(s)) for d, s in rows_m
     ]
+
+def test_federated_engine_skips_underfilled_fancy_pass(spark, merge_env):
+    """A federated query whose fancy pass PROVABLY under-fills (hot AND
+    rare: the sum of the parts' posting-count bounds is below 1000) runs
+    no fancy pass on any part, and still equals the merged engine."""
+    from deusu_spark.query import FederatedSearchEngine, SearchEngine
+    from deusu_spark.queryplan import needs_fancy_pass
+
+    _root, dirs, out, _m = merge_env
+    fed = FederatedSearchEngine(spark, dirs, parallel=False)
+    merged = SearchEngine(spark, out)
+    q = "w0001 w0042"  # w0001 is hot; its fancy list is short
+    terms = fed.compile(q)
+    assert needs_fancy_pass(terms, TINY_FANCY_THRESHOLD)
+    assert fed._fancy_bound(terms) < 1000
+    passes = []
+    for p in fed.parts:
+
+        def spy(*a, real=p._run_pass, **kw):
+            passes.append(kw["use_fancy"])
+            return real(*a, **kw)
+
+        p._run_pass = spy
+    got = fed.search(q, k=1000)
+    assert passes and not any(passes)
+    assert got and got == merged.search(q, k=1000)
+
 
 def test_federated_explain_exposes_holes(spark, merge_env):
     """Both federated tiers' explain() return the same GLOBAL plan (summed

@@ -94,7 +94,30 @@ def test_custom_weights_rank_identity(engine, oracle_index, q):
 
 
 def test_prune_matches_noprune(engine):
-    for q in ("linux", "linux ubuntu", "w0042 linux"):
-        assert engine.search(q, k=20, prune=True) == engine.search(
-            q, k=20, prune=False
-        ), q
+    for q, k in (
+        ("linux", 20),
+        ("linux ubuntu", 20),
+        ("w0042 linux", 20),
+        ("linux", 1000),  # single term: block-max rounds 1 and 2
+        ("w0042", 1000),
+    ):
+        unpruned = engine.search(q, k=k, prune=False)
+        assert engine.search(q, k=k, prune=True) == unpruned, (q, k)
+        if (q, k) == ("linux", 1000):
+            assert engine.last_stats["strategy"] == "single_blockmax"
+
+
+def test_above_broadcast_cap_rank_identity(spark, tiny_index_dir, oracle_index):
+    """Above docmeta_broadcast_max_docs the sidecars are not broadcast:
+    decoded postings sort-merge join docmeta per location-mask group and
+    score after the join. Results must equal the oracle's, and a batch
+    must equal per-query search on the same engine."""
+    from deusu_spark.query import SearchEngine
+
+    eng = SearchEngine(spark, tiny_index_dir)
+    eng.docmeta_broadcast_max_docs = 0  # every index is above the cap
+    assert eng._sidecars_py() is None
+    qs = ["linux", "linux ubuntu", "linux -google", "host:conv00000017 linux"]
+    for q in qs:
+        assert eng.search(q, k=10) == oracle.search(oracle_index, q, k=10), q
+    assert eng.search_many(qs, k=10) == [eng.search(q, k=10) for q in qs]
