@@ -77,7 +77,6 @@ def _engine_trial(spark, sdf, n_convs: int) -> tuple[dict, dict]:
             sdf,
             idx_dir,
             fancy_threshold=max(1000, n_convs // 4),
-            bucket_groups=2,
         )
         build_s = time.time() - t0
         times["fts_build"] = round(build_s, 3)

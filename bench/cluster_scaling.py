@@ -69,7 +69,7 @@ JOB = textwrap.dedent(
     t0 = time.time()
     metrics = build_index(
         spark, sdf, idx_dir,
-        fancy_threshold=max(1000, int(sys.argv[4]) // 4), bucket_groups=2,
+        fancy_threshold=max(1000, int(sys.argv[4]) // 4),
     )
     build_s = time.time() - t0
     # executors granted (exclude the driver entry)
@@ -81,10 +81,7 @@ JOB = textwrap.dedent(
             for line in f:
                 rec = json.loads(line)
                 if rec.get("status") == "done" and "wall_s" in rec:
-                    step = rec["step"]
-                    if step.startswith("segments_g"):
-                        step = "segments"
-                    stages[step] = round(stages.get(step, 0) + rec["wall_s"], 2)
+                    stages[rec["step"]] = round(rec["wall_s"], 2)
     import shutil as _sh
     _sh.rmtree(idx_dir, ignore_errors=True)
     print("RESULT " + json.dumps({

@@ -1,10 +1,10 @@
 #!/usr/bin/env python
-"""Interleaved A/B of the fused shuffle's two row layouts — int64 dict
-term ids (default when the vocab fits DICT_VOCAB_MAX) vs term strings
-(forced via SPARK_GRAFT_DICT_VOCAB_MAX=1) — at ONE parallelism level,
-same input, fresh process per build, min-of-trials per mode. Same
-discipline as fused_ab.py: cross-window comparisons are invalid on this
-host (wall noise +-2-3x), so the modes alternate inside one window.
+"""Interleaved A/B of the segment shuffle's two row layouts — int64 dict
+term ids (default when the vocab fits build.DICT_VOCAB_MAX) vs term
+strings (the child process sets build.DICT_VOCAB_MAX = 0) — at ONE
+parallelism level, same input, fresh process per build, min-of-trials
+per mode. Cross-window comparisons are invalid on a noisy host (wall
+noise +-2-3x), so the modes alternate inside one window.
 
     SPARK_GRAFT_AB_CORES=8 SPARK_GRAFT_AB_TRIALS=3 python bench/dict_ab.py
 """
@@ -13,24 +13,65 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import subprocess
 import sys
+import tempfile
+import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-MODES = {"dict": None, "string": "1"}  # value -> SPARK_GRAFT_DICT_VOCAB_MAX
+MODES = ("dict", "string")
+
+
+def run_one(cores: int, n_convs: int, mode: str) -> dict:
+    """One build in this process; ``mode == "string"`` forces the string
+    layout by setting the dict cap below any vocabulary."""
+    os.environ["SPARK_GRAFT_CPUS"] = str(cores)
+    from deusu_spark import build, synth
+    from deusu_spark.session import get_spark
+
+    if mode == "string":
+        build.DICT_VOCAB_MAX = 0
+    spark = get_spark(
+        app=f"deusu-ab-{mode}",
+        master=f"local[{cores}]",
+        shuffle_partitions=cores,
+    )
+    spark.sparkContext.setLogLevel("ERROR")
+    corpus_path = os.path.join(
+        tempfile.gettempdir(), f"deusu_scale_corpus_{n_convs}.parquet"
+    )
+    if not os.path.exists(corpus_path):
+        synth.write_parquet(synth.gen_transcripts(n_convs), corpus_path)
+    sdf = spark.read.parquet(corpus_path)
+    idx_dir = tempfile.mkdtemp(prefix=f"deusu_ab_{mode}_")
+    t0 = time.time()
+    metrics = build.build_index(
+        spark, sdf, idx_dir, fancy_threshold=max(1000, n_convs // 4)
+    )
+    build_s = time.time() - t0
+    stages: dict[str, float] = {}
+    with open(metrics["lineage"]) as f:
+        for line in f:
+            rec = json.loads(line)
+            if rec.get("status") == "done" and "wall_s" in rec:
+                stages[rec["step"]] = round(rec["wall_s"], 2)
+    shutil.rmtree(idx_dir, ignore_errors=True)
+    return {
+        "build_s": round(build_s, 2),
+        "postings_per_s": round(metrics["n_postings"] / build_s, 1),
+        "stages": stages,
+    }
 
 
 def main() -> None:
-    if len(sys.argv) == 3 and sys.argv[1] == "--one":
-        sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-        from fused_ab import run_one
-
+    if len(sys.argv) == 4 and sys.argv[1] == "--one":
         print(
             "RESULT "
             + json.dumps(
-                run_one(int(sys.argv[2]), int(os.environ["_AB_CONVS"]), True)
+                run_one(int(sys.argv[2]), int(os.environ["_AB_CONVS"]), sys.argv[3])
             )
         )
         return
@@ -44,17 +85,13 @@ def main() -> None:
         order = list(MODES) if trial % 2 == 0 else list(reversed(MODES))
         for mode in order:
             env = dict(os.environ, _AB_CONVS=str(n_convs), PYTHONPATH=REPO)
-            cap = MODES[mode]
-            if cap is None:
-                env.pop("SPARK_GRAFT_DICT_VOCAB_MAX", None)
-            else:
-                env["SPARK_GRAFT_DICT_VOCAB_MAX"] = cap
             out = subprocess.run(
                 [
                     sys.executable,
                     os.path.abspath(__file__),
                     "--one",
                     str(cores),
+                    mode,
                 ],
                 capture_output=True,
                 text=True,

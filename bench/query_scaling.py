@@ -117,7 +117,7 @@ def ensure_index(n_convs: int) -> str:
         synth.write_parquet(synth.gen_transcripts(n_convs), corpus_path)
     sdf = spark.read.parquet(corpus_path)
     build_index(
-        spark, sdf, idx, fancy_threshold=max(1000, n_convs // 4), bucket_groups=2
+        spark, sdf, idx, fancy_threshold=max(1000, n_convs // 4)
     )
     assert current_index_dir(idx)
     with open(marker, "w") as f:

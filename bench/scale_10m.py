@@ -112,7 +112,6 @@ def main() -> None:
     metrics = build_index(
         spark, sdf, idx,
         fancy_threshold=max(1000, n_convs // 4),
-        bucket_groups=2,
     )
     build_s = time.time() - t0
 
@@ -123,12 +122,7 @@ def main() -> None:
             for line in f:
                 rec = json.loads(line)
                 if rec.get("status") == "done" and "wall_s" in rec:
-                    step = rec["step"]
-                    if step.startswith("segments_g"):
-                        step = "segments"
-                    stages[step] = round(
-                        stages.get(step, 0) + rec["wall_s"], 2
-                    )
+                    stages[rec["step"]] = round(rec["wall_s"], 2)
 
     from deusu_spark.build import current_index_dir
 

@@ -67,11 +67,10 @@ def run_level(cores: int, n_convs: int) -> dict:
     t0 = time.time()
     metrics = build_index(
         spark, sdf, idx_dir, fancy_threshold=max(1000, n_convs // 4),
-        bucket_groups=2,
     )
     build_s = time.time() - t0
-    # per-stage walls from the lineage journal (segments_g* folded into one
-    # row) — the 2-vs-8 efficiency diagnosis lives here
+    # per-stage walls from the lineage journal — the 2-vs-8 efficiency
+    # diagnosis lives here
     stages: dict[str, float] = {}
     lp = metrics.get("lineage")
     if lp and os.path.exists(lp):
@@ -79,10 +78,7 @@ def run_level(cores: int, n_convs: int) -> dict:
             for line in f:
                 rec = json.loads(line)
                 if rec.get("status") == "done" and "wall_s" in rec:
-                    step = rec["step"]
-                    if step.startswith("segments_g"):
-                        step = "segments"
-                    stages[step] = round(stages.get(step, 0) + rec["wall_s"], 2)
+                    stages[rec["step"]] = round(rec["wall_s"], 2)
 
     eng = SearchEngine(spark, idx_dir)
     t0 = time.time()

@@ -11,8 +11,8 @@ reports:
   * whether the fused dict-encoding (int64 term ids under
     DICT_VOCAB_MAX) still engages, and the build throughput with a
     ~million-term vocabulary vs the 5k-term baseline,
-  * the same build FORCED over the cap (SPARK_GRAFT_DICT_VOCAB_MAX=1)
-    via a child process — the string-layout fallback — with rank
+  * the same build FORCED over the cap (a child process sets
+    build.DICT_VOCAB_MAX = 0) — the string-layout fallback — with rank
     identity between the two indexes (they must be identical),
   * a rare-term query answered correctly (df=1 terms stress the
     per-term metadata path the hot-term tests never touch).
@@ -65,13 +65,17 @@ def ensure_corpus(n_convs: int, rare_every: int) -> str:
     return d
 
 
-def build_once(corpus: str, tag: str) -> dict:
-    """Child-process build (so SPARK_GRAFT_DICT_VOCAB_MAX is re-read) —
-    returns metrics + the index dir (kept for the identity check)."""
+def build_once(corpus: str, tag: str, dict_vocab_max: int | None = None) -> dict:
+    """Child-process build (``dict_vocab_max`` overrides
+    build.DICT_VOCAB_MAX there) — returns metrics + the index dir (kept
+    for the identity check)."""
     code = f"""
 import json, os, sys, time
 sys.path.insert(0, {REPO!r})
 os.environ['SPARK_GRAFT_CPUS'] = '8'
+from deusu_spark import build
+if {dict_vocab_max!r} is not None:
+    build.DICT_VOCAB_MAX = {dict_vocab_max!r}
 from deusu_spark.build import build_index, current_index_dir
 from deusu_spark.session import get_spark
 spark = get_spark(app='vg-{tag}', master='local[8]', shuffle_partitions=64)
@@ -80,7 +84,7 @@ sdf = spark.read.parquet({corpus!r})
 idx = {json.dumps(os.path.join(tempfile.gettempdir(), "deusu_vg_idx_"))} + {tag!r}
 import shutil; shutil.rmtree(idx, ignore_errors=True)
 t0 = time.time()
-m = build_index(spark, sdf, idx, fancy_threshold=50000, bucket_groups=2)
+m = build_index(spark, sdf, idx, fancy_threshold=50000)
 wall = time.time() - t0
 vdir = current_index_dir(idx)
 meta = json.load(open(os.path.join(vdir, 'meta.json')))
@@ -115,12 +119,9 @@ def main() -> None:
     corpus = ensure_corpus(n_convs, rare_every)
 
     # dict path (default cap 2M — ~1M-term vocab stays under it)
-    os.environ.pop("SPARK_GRAFT_DICT_VOCAB_MAX", None)
     dict_res = build_once(corpus, "dict")
     # string fallback (cap forced below the vocab)
-    os.environ["SPARK_GRAFT_DICT_VOCAB_MAX"] = "1"
-    str_res = build_once(corpus, "str")
-    os.environ.pop("SPARK_GRAFT_DICT_VOCAB_MAX", None)
+    str_res = build_once(corpus, "str", dict_vocab_max=0)
 
     # identity + rare-term query check on both indexes
     os.environ["SPARK_GRAFT_CPUS"] = "8"

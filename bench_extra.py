@@ -49,7 +49,7 @@ def serving_percentiles() -> None:
     idx = tempfile.mkdtemp(prefix="deusu_p99_idx_")
     build_index(
         spark, spark.read.parquet(corpus), idx,
-        fancy_threshold=max(1000, n_convs // 4), bucket_groups=2,
+        fancy_threshold=max(1000, n_convs // 4),
     )
     hot = ["linux", "google", "java", "python", "ubuntu", "firefox"]
     cold_q, warm_q = [], []

@@ -4,37 +4,27 @@ Pipeline (mirrors GenDb's passes, re-expressed as one Spark DAG with durable
 stage boundaries — GenDb.dpr:1315-1352's gendb.progress becomes a lineage
 journal + idempotent per-stage reruns):
 
-  stage docs     tokenize every turn (pure JVM column expressions — fold,
-                 regexp tokenize, stopword filter, dedup, flags; zero Python),
-                 assign dense doc_id over (conv_id, turn_idx), derive per-doc
-                 sidecar values (filter byte, host elements, domain rank,
-                 backlinks — GenDb.dpr:343-426)
-  stage scatter  explode (term, doc_id, flags) and hash-scatter into the 64
-                 reference term buckets crc32(term)&63 (GenDb.dpr:349). The
-                 shuffle key is (bucket, term-group, doc-range salt) and each
-                 output file holds whole (term-group, salt) groups sorted by
-                 (term, doc_id) — so this ONE shuffle does all the data
-                 movement the segment encoder needs
-  stage segments per bucket group: per-term df (lexicon), then shuffle-free
-                 stream-encode of the scatter files (runs are already
-                 term-contiguous and doc-sorted): delta-gap + varbyte
-                 encoding into bounded posting segments, fancy accelerator
-                 lists (GenDb.dpr:975-1109), block-max metadata
-  stage publish  meta.json + CURRENT pointer → atomic index swap
-                 (the ready2.dat dual-path swap, GenDb.dpr:1354-1357)
+  stage docs      tokenize every turn (pure JVM column expressions — fold,
+                  regexp tokenize, stopword filter, dedup, flags; zero
+                  Python), assign dense doc_id over (conv_id, turn_idx),
+                  derive per-doc sidecar values (filter byte, host elements,
+                  domain rank, backlinks — GenDb.dpr:343-426)
+  stage docmeta   the published per-doc table (docs minus the term arrays)
+  stage lexicon   df per (bucket, term) straight off the staged docs, into
+                  the 64 reference term buckets crc32(term)&63 (GenDb.dpr:349)
+  stage segments  ``write_segments``, the one segment write path: explode
+  (segments_fused) packed (term, doc) postings, shuffle by (bucket,
+                  term-group, doc-range salt), sort, encode with
+                  delta-gap + varbyte into bounded posting segments plus
+                  fancy accelerator lists (GenDb.dpr:975-1109) and block-max
+                  metadata (mapInArrow), and write — one job, no
+                  intermediate posting files. Compaction and the merge's
+                  fancy rebuild write through the same function.
+  stage publish   meta.json + CURRENT pointer → atomic index swap
+                  (the ready2.dat dual-path swap, GenDb.dpr:1354-1357)
 
-By default the scatter and segments stages run FUSED (scatterless): the
-lexicon df aggregates straight off the staged docs, and the grouped scatter
-shuffle feeds the segment encoder in the same job (shuffle → sort-within →
-mapInArrow → segment write) without ever materializing the 42M-row scatter
-parquet — the build's largest intermediate write+rescan, which
-bench/encode_control.py showed is pure non-scaling page-allocation cost on a
-shared-memory host. ``fuse_scatter=False`` keeps the staged layout (scatter
-files on disk, per-bucket-group encode) for bucket-group-granular resume.
-
-Resumable: each stage (and each bucket group of the staged segments stage)
-records a lineage row; rerunning build() skips completed stages and keeps
-whichever layout the interrupted build used.
+Resumable: each stage records a lineage row; rerunning build() skips
+completed stages.
 """
 
 from __future__ import annotations
@@ -63,19 +53,19 @@ from .constants import (
 )
 from .scoring import static_score_col
 
-# fused-mode encode tasks hold one whole sorted shuffle partition in Arrow;
+# encode tasks hold one whole sorted shuffle partition in Arrow;
 # this bounds the per-task posting count (~4M rows ≈ 150-200 MB) so worker
 # memory stays flat while task count grows with the corpus
 FUSED_ROWS_PER_TASK = 4_000_000
 
-# fused-mode term dictionary: when the vocabulary fits under this many
+# segment-shuffle term dictionary: when the vocabulary fits under this many
 # terms, each posting shuffles an int64 term id (bucket<<26 | rank-within-
 # bucket) instead of the term string — smaller shuffle rows, a radix-
 # sortable numeric sort key instead of UTF8 byte compares, and the encoder
 # recovers strings per SEGMENT (vocabulary-sized work) from a broadcast
 # reverse map. Above the cap (driver copy of the vocab would be too big)
 # the string layout is used unchanged — output is identical either way.
-DICT_VOCAB_MAX = int(os.environ.get("SPARK_GRAFT_DICT_VOCAB_MAX", "2000000"))
+DICT_VOCAB_MAX = 2_000_000
 DICT_BUCKET_BITS = 26  # ≤2^26 terms per crc bucket under the cap
 
 DOCS_SCHEMA = T.StructType(
@@ -315,8 +305,6 @@ def _encode_partition_fn(
     n_salts: int,
     n_docs: int,
     hot_terms_bc=None,
-    rank_lo: int = FANCY_RANK_LO,
-    rank_hi: int = FANCY_RANK_HI,
     emit_full: bool = True,
     dict_bc=None,
 ):
@@ -325,37 +313,27 @@ def _encode_partition_fn(
     per task instead of one applyInPandas call per term: per-group overhead
     disappears and a hot term's salted sub-ranges encode in parallel tasks.
 
-    Input contract (what the scatter layout guarantees): the stream is a
+    Input rows are the packed layout ``write_segments`` shuffles: ``term``
+    (or the dict-layout ``tid``), ``pack`` = doc_id<<4 | fancy_eligible<<3 |
+    flags, ``static`` and an optional ``run_salt``. The stream is a
     concatenation of runs, each run = one (term, salt) group's rows sorted
     ascending by doc_id, where salt = trunc(doc_id * n_salts / n_docs)
-    assigns disjoint contiguous doc ranges. No global order is assumed —
-    file packing/splitting may deliver runs in any order — and two salt
-    groups of one term may sit adjacent in one stream (shuffle-key hash
-    collision) while the doc range BETWEEN them lives in another task, so a
-    run boundary is term change OR salt change OR a non-ascending doc_id
-    (the latter covers parquet row-group splits of one run). The salt is
-    recomputed here with the same float64 arithmetic as the scatter's JVM
-    partition expression, so boundaries match the grouping exactly; this
-    keeps every emitted segment internally sorted and all segment
-    doc-ranges globally disjoint per (term, kind) — LocalSearcher and the
-    block-max pruning rely on that.
+    assigns disjoint contiguous doc ranges. No global order is assumed, and
+    two salt groups of one term may sit adjacent in one stream (shuffle-key
+    hash collision) while the doc range BETWEEN them lives in another task,
+    so a run boundary is term change OR salt change OR run_salt change OR a
+    non-ascending doc_id. The salt is recomputed here with the same float64
+    arithmetic as the JVM partition expression, so boundaries match the
+    grouping exactly; this keeps every emitted segment internally sorted
+    and all segment doc-ranges globally disjoint per (term, kind) —
+    LocalSearcher and the block-max pruning rely on that.
 
-    When ``hot_terms_bc`` (a broadcast set) is given, terms in it also emit
-    rank-window-filtered 'fancy' accelerator segments (GenDb.dpr:1053-1071)
-    from the SAME pass — the posting stream is shuffled and scanned exactly
-    once per bucket group instead of once for 'full' plus once for 'fancy'.
-    Mirrors GenDb pass 2 (:512-705) and the codec rwi.pas:76-153."""
+    When ``hot_terms_bc`` (a broadcast set) or the dict's ``hot_tids`` is
+    non-empty, hot terms also emit rank-window-filtered 'fancy' accelerator
+    segments (GenDb.dpr:1053-1071) from the SAME pass. Mirrors GenDb pass 2
+    (:512-705) and the codec rwi.pas:76-153."""
 
-    cols = [
-        "bucket",
-        "term",
-        "kind",
-        "first_doc",
-        "last_doc",
-        "n",
-        "max_static",
-        "blob",
-    ]
+    cols = [f.name for f in SEGMENTS_SCHEMA.fields]
 
     def encode_partition(iterator):
         # Fully vectorized: ZERO per-run Python. Run/segment boundaries,
@@ -363,10 +341,7 @@ def _encode_partition_fn(
         # (reduceat max, fancy-indexed first/last docs) are each ONE numpy
         # pass over the whole task; the term column never leaves Arrow
         # (pc.take at segment starts) and the blob column is built
-        # zero-copy from the concatenated byte stream + offsets. This is
-        # what cleared the segments-stage scaling residual: the old
-        # per-run emit paid numpy fixed cost + list appends per segment,
-        # which dominated because most of the vocabulary has tiny df.
+        # zero-copy from the concatenated byte stream + offsets.
         import pyarrow as pa
         import pyarrow.compute as pc
 
@@ -378,12 +353,11 @@ def _encode_partition_fn(
         if n == 0:
             return
         hot = hot_terms_bc.value if hot_terms_bc is not None else frozenset()
-        if dict_bc is not None and "tid" in tbl.column_names:
-            # dict layout (fused path, vocab under DICT_VOCAB_MAX): the
-            # term string never rides the shuffle — tid = bucket<<26 |
-            # rank-within-bucket, decoded per segment from the broadcast
-            # reverse map (dict_tids sorted ascending, so searchsorted is
-            # an exact index)
+        if dict_bc is not None:
+            # dict layout: the term string never rides the shuffle — tid =
+            # bucket<<26 | rank-within-bucket, decoded per segment from the
+            # broadcast reverse map (dict_tids sorted ascending, so
+            # searchsorted is an exact index)
             dmaps = dict_bc.value
             dict_tids = dmaps["tids"]
             dict_terms = dmaps["terms"]
@@ -394,44 +368,21 @@ def _encode_partition_fn(
             dict_tids = dict_terms = hot_tids = tids = None
             terms = tbl.column("term").chunk(0)
         statics = tbl.column("static").chunk(0).to_numpy().astype(np.float64)
-        if "pack" in tbl.column_names:
-            # packed layout (fused path): doc_id<<4 | fancy_eligible<<3 |
-            # flags — one long instead of (doc_id, flags, rank, bucket),
-            # halving the bytes each posting drags through the shuffle and
-            # the Arrow materialization. Bucket is recomputed per emitted
-            # SEGMENT (vocabulary-sized work) instead of carried per
-            # POSTING; fancy eligibility (rank_lo < rank < rank_hi) was
-            # folded to one bit JVM-side before the shuffle.
-            pack = tbl.column("pack").chunk(0).to_numpy()
-            docs = pack >> 4
-            flags = (pack & 7).astype(np.int64)
-            fancy_ok = (pack & 8) != 0
-            ranks = None
-            buckets = None
-        else:
-            docs = tbl.column("doc_id").chunk(0).to_numpy()
-            flags = tbl.column("flags").chunk(0).to_numpy().astype(np.int64)
-            buckets = tbl.column("bucket").chunk(0).to_numpy()
-            fancy_ok = None
-            ranks = (
-                tbl.column("rank").chunk(0).to_numpy().astype(np.int64)
-                if "rank" in tbl.column_names
-                else None
-            )
-        # run boundary = term change OR salt change OR non-ascending doc_id
-        # (see the input contract above). A "run_salt" input column overrides
-        # the computed salt: merge.py's fancy rebuild feeds disjoint
-        # doc-range holes whose boundaries the global salt formula cannot
-        # see — two holes of one term in one task would otherwise fuse into
-        # a segment spanning ranges already covered by linked fancy
-        # segments, breaking per-(term, kind) range disjointness.
-        if "run_salt" in tbl.column_names:
-            salts = tbl.column("run_salt").chunk(0).to_numpy().astype(np.int64)
-        else:
-            salts = np.trunc(docs * n_salts / n_docs).astype(np.int64)
+        pack = tbl.column("pack").chunk(0).to_numpy()
+        docs = pack >> 4
+        flags = (pack & 7).astype(np.int64)
+        fancy_ok = (pack & 8) != 0
+        salts = np.trunc(docs * n_salts / n_docs).astype(np.int64)
         start_mask = np.empty(n, dtype=bool)
         start_mask[0] = True
         start_mask[1:] = (docs[1:] <= docs[:-1]) | (salts[1:] != salts[:-1])
+        if "run_salt" in tbl.column_names:
+            # merge.py's fancy rebuild feeds disjoint doc-range holes whose
+            # boundaries the global salt formula cannot see — two holes of
+            # one term in one task must not fuse into a segment spanning a
+            # range already covered by linked fancy segments
+            rs = tbl.column("run_salt").chunk(0).to_numpy()
+            start_mask[1:] |= rs[1:] != rs[:-1]
         if n > 1:
             if terms is None:
                 start_mask[1:] |= tids[1:] != tids[:-1]
@@ -442,7 +393,7 @@ def _encode_partition_fn(
         run_starts = np.flatnonzero(start_mask)
         run_id = np.cumsum(start_mask) - 1
 
-        def emit_batches(d, f, st, bk, rid, abs_idx, kind):
+        def emit_batches(d, f, st, rid, abs_idx, kind):
             """Segment concatenated ascending runs and emit RecordBatches.
 
             ``rid`` identifies each posting's run; ``abs_idx`` maps posting
@@ -491,21 +442,16 @@ def _encode_partition_fn(
                     bk_seg = (seg_tids >> DICT_BUCKET_BITS).astype(np.int32)
                 else:
                     seg_terms = pc.take(terms, pa.array(take_ix))
-                    if bk is None:
-                        # packed layout: bucket = crc32(term) % 64,
-                        # recomputed at segment granularity (same parity as
-                        # the JVM F.crc32 expression — zlib.crc32 over
-                        # UTF-8 bytes)
-                        bk_seg = np.fromiter(
-                            (
-                                zlib.crc32(t.encode("utf-8")) % N_TERM_BUCKETS
-                                for t in seg_terms.to_pylist()
-                            ),
-                            dtype=np.int32,
-                            count=b - a,
-                        )
-                    else:
-                        bk_seg = bk[ss].astype(np.int32, copy=False)
+                    # bucket = crc32(term) % 64 per SEGMENT (same parity as
+                    # the JVM F.crc32 expression — zlib.crc32 over UTF-8)
+                    bk_seg = np.fromiter(
+                        (
+                            zlib.crc32(t.encode("utf-8")) % N_TERM_BUCKETS
+                            for t in seg_terms.to_pylist()
+                        ),
+                        dtype=np.int32,
+                        count=b - a,
+                    )
                 yield pa.RecordBatch.from_arrays(
                     [
                         pa.array(bk_seg),
@@ -522,36 +468,23 @@ def _encode_partition_fn(
                 a = b
 
         if emit_full:
+            yield from emit_batches(docs, flags, statics, run_id, None, "full")
+        if terms is None:
+            if hot_tids.size == 0:
+                return
+            run_hot = np.isin(tids[run_starts], hot_tids)
+        else:
+            if not hot:
+                return
+            run_hot = pc.is_in(
+                pc.take(terms, pa.array(run_starts)),
+                options=pc.SetLookupOptions(value_set=pa.array(sorted(hot))),
+            ).to_numpy(zero_copy_only=False)
+        fidx = np.flatnonzero(run_hot[run_id] & fancy_ok)
+        if fidx.size:
             yield from emit_batches(
-                docs, flags, statics, buckets, run_id, None, "full"
+                docs[fidx], flags[fidx], statics[fidx], run_id[fidx], fidx, "fancy"
             )
-        hot_any = bool(hot) or (hot_tids is not None and hot_tids.size > 0)
-        if (ranks is not None or fancy_ok is not None) and hot_any:
-            if terms is None:
-                run_hot = np.isin(tids[run_starts], hot_tids)
-            else:
-                run_hot = pc.is_in(
-                    pc.take(terms, pa.array(run_starts)),
-                    options=pc.SetLookupOptions(
-                        value_set=pa.array(sorted(hot))
-                    ),
-                ).to_numpy(zero_copy_only=False)
-            eligible = (
-                fancy_ok
-                if ranks is None
-                else (ranks > rank_lo) & (ranks < rank_hi)
-            )
-            fidx = np.flatnonzero(run_hot[run_id] & eligible)
-            if fidx.size:
-                yield from emit_batches(
-                    docs[fidx],
-                    flags[fidx],
-                    statics[fidx],
-                    None if buckets is None else buckets[fidx],
-                    run_id[fidx],
-                    fidx,
-                    "fancy",
-                )
 
     return encode_partition
 
@@ -576,39 +509,6 @@ class Lineage:
         self.done[step] = rec
 
 
-# Measured bracket (BENCH_CLUSTER.md heap study): 2.0 GiB/core spills the
-# fused shuffle (4g/2-core executors lose to staged), 4.0 GiB/core wins
-# outright (8g/2-core sets the records) — the knee is placed between them.
-FUSE_MIN_GIB_PER_CORE = 3.0
-
-
-def _mem_gib(mem: str) -> float:
-    """Parse a Spark memory string ('4g', '4096m', '2048k', bytes)."""
-    m = str(mem).strip().lower()
-    mult = {"k": 1 / (1024 * 1024), "m": 1 / 1024, "g": 1.0, "t": 1024.0}
-    if m and m[-1] in mult:
-        return float(m[:-1]) * mult[m[-1]]
-    return float(m) / (1024**3)
-
-
-def default_fuse_scatter(master: str, executor_memory: str, executor_cores) -> bool:
-    """Pick the build layout from the deployment shape: the fused
-    scatterless path holds the full posting shuffle + in-partition sort
-    in executor memory, which the cluster heap study (BENCH_CLUSTER.md)
-    showed spills at 2 GiB per executor core and wins outright at 4 —
-    below the knee the staged write-then-rescan layout is faster.
-    local[*] masters run
-    one big driver-sized JVM where the fused path measured neutral-to-
-    better, so they stay fused."""
-    if str(master).startswith("local"):
-        return True
-    try:
-        per_core = _mem_gib(executor_memory) / max(int(executor_cores), 1)
-    except (ValueError, TypeError):
-        return True
-    return per_core >= FUSE_MIN_GIB_PER_CORE
-
-
 def build_index(
     spark: SparkSession,
     transcripts: DataFrame,
@@ -617,14 +517,13 @@ def build_index(
     fancy_threshold: int = FANCY_DF_THRESHOLD,
     seg_size: int = SEGMENT_SIZE,
     n_salts: int = 8,
-    bucket_groups: int = 4,
+    bucket_groups: int | None = None,
     doc_id_offset: int = 0,
     io=None,
     ignore_hosts=None,
     drop_quote_urls: bool = False,
     index_gate: str | None = None,
     info_df_threshold: int = INFO_DF_THRESHOLD,
-    fuse_scatter: bool | None = None,
     positions: bool = False,
 ) -> dict:
     """Build (or resume) the index under ``out_dir`` and atomically publish.
@@ -632,9 +531,13 @@ def build_index(
     ``io`` (a tableio.TableIO) is the storage seam for the PUBLISHED tables
     (docmeta/lexicon/postings) and the atomic generation publish — Iceberg
     when its runtime + a catalog are configured, parquet dirs + CURRENT
-    pointer otherwise. Stage checkpoints (stage_docs/stage_postings and the
-    per-group tmp dirs) are transient scratch and always live on the
-    filesystem — they are the resume granularity, not the published state.
+    pointer otherwise. The stage_docs checkpoint and the tmp dirs are
+    transient scratch and always live on the filesystem — they are the
+    resume granularity, not the published state.
+
+    ``bucket_groups`` is accepted and ignored: it sized the per-bucket-group
+    loop of the removed staged layout, and existing callers (the perfbench
+    harness among them) still pass it.
 
     Returns the build metrics dict (postings/sec, bytes, per-stage walls).
     """
@@ -649,7 +552,6 @@ def build_index(
     metrics: dict = {"version": version}
 
     stage_docs = os.path.join(vdir, "stage_docs")
-    stage_postings = os.path.join(vdir, "stage_postings")
     docmeta_dir = os.path.join(vdir, "docmeta")
     lexicon_dir = os.path.join(vdir, "lexicon")
     postings_dir = os.path.join(vdir, "postings")
@@ -745,150 +647,8 @@ def build_index(
         io.write(sd.drop("terms", "tflags", "nt"), docmeta_dir)
         lin.record("docmeta", wall_s=round(time.time() - t0, 3))
 
-    # ---- stage scatter (GenDb G2: 64-way term scatter) ---------------------
-    # Shuffle key (bucket, tgrp, salt): tgrp spreads a bucket's vocabulary
-    # over tasks, salt = contiguous doc-range splits hot terms WITHOUT
-    # needing their df (no join against the postings stream). Because every
-    # (bucket, tgrp, salt) group lands wholly inside one shuffle partition
-    # and files are sorted by (term, doc_id), the scatter output already
-    # satisfies the segment encoder's input contract — the segments stage
-    # needs NO further shuffle or sort. The keys are hash expressions only
-    # (never materialized as columns).
-    nparts = max(spark.sparkContext.defaultParallelism * 2, 8)
-    # encoder-group count (64 buckets × n_tgrp × n_salts) must comfortably
-    # exceed the task count for load balance — grow the vocabulary fan-out
-    # with the cluster (stays 8 below ~1024 cores, so local runs and tests
-    # are unaffected)
-    n_tgrp = max(8, nparts * 4 // (N_TERM_BUCKETS * max(n_salts, 1)) + 1)
-    # a universal term's per-salt run is ~n_docs/n_salts postings; grow the
-    # salt count so no single encode task ever holds more than ~256 segments
-    # of one term (no-op below ~8M docs with the default seg_size). Recorded
-    # in lineage so the encoder always splits on exactly the grouping the
-    # scatter used, even on resume with changed args.
-    eff_salts = max(n_salts, n_docs // (seg_size * 256) + 1)
-
-    def _posting_stream(packed: bool = False) -> DataFrame:
-        """Exploded posting rows with folded static score — the input of
-        BOTH segment paths (staged scatter write / fused shuffle).
-
-        ``packed=False`` (staged layout): (bucket, term, doc_id, flags,
-        static, rank) — the on-disk scatter format, resumable per bucket
-        group, parquet-stat-prunable by term.
-
-        ``packed=True`` (fused shuffle): (term, pack, static) where
-        pack = doc_id<<4 | fancy_eligible<<3 | flags. The shuffle is the
-        build's largest data movement (every posting exactly once); packing
-        drops the bucket and rank columns and merges flags into the doc id,
-        roughly halving the bytes per posting through shuffle write/read,
-        the partition sort, and the Arrow hand-off to the encoder. Bucket
-        and fancy eligibility are recovered term-/bit-wise downstream
-        (fancy window per FANCY_RANK_LO/HI — the encoder's defaults)."""
-        sd = _with_doc_id(
-            spark.read.parquet(stage_docs), doc_id_offset, pid_counts
-        )
-        base = (
-            sd.select(
-                "doc_id",
-                "fd",
-                "he",
-                "rank",
-                "backlinks",
-                F.explode(F.arrays_zip("terms", "tflags")).alias("p"),
-            )
-            .select(
-                F.col("p.terms").alias("term"),
-                # tinyint: flags are 3 bits — narrower rows through the
-                # scatter shuffle and files (the biggest data in the build)
-                F.col("p.tflags").cast("tinyint").alias("flags"),
-                "doc_id",
-                "fd",
-                "he",
-                "rank",
-                "backlinks",
-            )
-            # fold the four sidecar columns into the single pre-IDF static
-            # score while still JVM-side (whole-stage codegen); float32 —
-            # it only feeds the max_static pruning bounds (±1 margin)
-            .withColumn("static", static_score_col(int(max_bl)).cast("float"))
-        )
-        if packed:
-            eligible = (F.col("rank") > FANCY_RANK_LO) & (
-                F.col("rank") < FANCY_RANK_HI
-            )
-            return base.select(
-                "term",
-                (
-                    F.shiftleft(F.col("doc_id"), 4)
-                    + F.when(eligible, F.lit(8)).otherwise(F.lit(0))
-                    + F.col("flags").cast("bigint")
-                ).alias("pack"),
-                "static",
-            )
-        return base.withColumn(
-            "bucket",
-            (F.crc32(F.encode(F.col("term"), "UTF-8")) % N_TERM_BUCKETS).cast(
-                "int"
-            ),
-        ).select("bucket", "term", "doc_id", "flags", "static", "rank")
-
-    # Fused mode (default) never materializes the scatter files: the SAME
-    # grouped shuffle feeds the segment encoder directly (sort → mapInArrow
-    # → segment write in one job), eliminating the build's largest
-    # intermediate write+rescan — the component bench/encode_control.py
-    # proved is the host's non-scaling page-allocation cost. The staged
-    # path remains for bucket-group-granular resume (fuse_scatter=False)
-    # and is what a resumed pre-fused build keeps using. On small-memory
-    # executors the fused in-job shuffle+sort spills where the staged
-    # layout streams through the page cache (measured: BENCH_CLUSTER.md —
-    # @4×4g executors fused loses 144 vs 118 s, @8g it wins outright), so
-    # the default adapts to executor memory per core.
-    if fuse_scatter is not None:
-        fused = fuse_scatter
-    else:
-        fused = default_fuse_scatter(
-            spark.conf.get("spark.master", "local"),
-            spark.conf.get("spark.executor.memory", "4g"),
-            spark.conf.get("spark.executor.cores", "2"),
-        )
-    if "scatter" in lin.done or any(s.startswith("segments_g") for s in lin.done):
-        fused = False
-    elif "lexicon" in lin.done or "segments_fused" in lin.done:
-        fused = True
-
-    if not fused and "scatter" not in lin.done:
-        t0 = time.time()
-        (
-            _posting_stream().repartition(
-                nparts,
-                F.col("bucket"),
-                F.pmod(F.hash("term"), F.lit(n_tgrp)),
-                (F.col("doc_id") * eff_salts / F.lit(max(n_docs, 1))).cast("int"),
-            )
-            # (term, doc_id)-sorted files: each (tgrp, salt) group is one
-            # set of contiguous sorted runs, and parquet row-group min/max
-            # stats still prune term probes inside each bucket file.
-            # bucket FIRST: partitionBy(bucket) writes require an ordering
-            # on the partition column — leading with it makes this sort
-            # satisfy that requirement, otherwise V1Writes inserts its own
-            # (unstable) sort and scrambles the (term, doc_id) order the
-            # segment encoder depends on
-            .sortWithinPartitions("bucket", "term", "doc_id")
-            .write.mode("overwrite")
-            .partitionBy("bucket")
-            .parquet(stage_postings)
-        )
-        lin.record(
-            "scatter",
-            layout="grouped_v2",
-            eff_salts=int(eff_salts),
-            wall_s=round(time.time() - t0, 3),
-        )
-    if not fused:
-        scatter_grouped = lin.done["scatter"].get("layout") == "grouped_v2"
-        eff_salts = int(lin.done["scatter"].get("eff_salts", eff_salts))
-
-    # ---- fused lexicon + segments (scatterless path) ------------------------
-    if fused and "lexicon" not in lin.done:
+    # ---- lexicon ------------------------------------------------------------
+    if "lexicon" not in lin.done:
         t0 = time.time()
         # df per (bucket, term) straight off the staged docs (terms arrays
         # are per-doc-deduped, so count == document frequency) — map-side
@@ -897,40 +657,20 @@ def build_index(
         lex = (
             spark.read.parquet(stage_docs)
             .select(F.explode("terms").alias("term"))
-            .withColumn(
-                "bucket",
-                (F.crc32(F.encode(F.col("term"), "UTF-8")) % N_TERM_BUCKETS).cast(
-                    "int"
-                ),
-            )
+            .withColumn("bucket", _bucket_col("term"))
             .groupBy("bucket", "term")
             .agg(F.count("*").alias("df"))
         )
-        # same sliver-file story as the segments write: re-key the
-        # vocabulary-sized aggregate so each bucket dir holds a few
-        # data-sized files instead of one per (agg task, bucket) pair
+        # re-key the vocabulary-sized aggregate so each bucket dir holds a
+        # few data-sized files instead of one per (agg task, bucket) pair
         lex = lex.repartition(
             F.col("bucket"), F.pmod(F.hash("term"), F.lit(4))
         ).sortWithinPartitions("bucket", "term")
-        if io.backend == "parquet":
-            lex_tmp = lexicon_dir + "_tmp_fused"
-            io.write(lex, lex_tmp, partition_by=["bucket"])
-            _move_bucket_dirs(lex_tmp, lexicon_dir)
-        else:
-            io.write(
-                lex,
-                lexicon_dir,
-                mode="overwrite_partitions",
-                partition_by=["bucket"],
-            )
-        # eff_salts rides the lineage so a resume with changed args still
-        # splits encode runs on exactly the grouping this build shuffled
-        lin.record(
-            "lexicon", eff_salts=int(eff_salts), wall_s=round(time.time() - t0, 3)
-        )
-    if fused:
-        eff_salts = int(lin.done["lexicon"].get("eff_salts", eff_salts))
-    if fused and "segments_fused" not in lin.done:
+        _write_buckets(io, lex, lexicon_dir)
+        lin.record("lexicon", wall_s=round(time.time() - t0, 3))
+
+    # ---- segments: one shuffle → sort → encode → write job -------------------
+    if "segments_fused" not in lin.done:
         t0 = time.time()
         # one driver copy of the lexicon decides the shuffle layout: under
         # DICT_VOCAB_MAX terms, postings shuffle an int64 term id instead
@@ -938,11 +678,9 @@ def build_index(
         # same copy yields the hot-term set; above the cap, the string
         # layout + a hot-term collect (both re-derivable on resume)
         lex_df = io.read(lexicon_dir).select("bucket", "term", "df")
-        # parquet backend: the vocabulary already sits on disk in
-        # hive-partitioned parquet — a footer-metadata count and (under the
-        # cap) a direct local columnar read replace the count() job and the
-        # toArrow() collect job (guide §5: two fewer driver-blocking Spark
-        # jobs per build; the serving tier reads these dirs the same way)
+        # parquet backend: a footer-metadata count and (under the cap) a
+        # direct local columnar read replace the count() job and the
+        # toArrow() collect job
         lex_ds = None
         if io.backend == "parquet":
             import pyarrow.dataset as pads
@@ -951,47 +689,43 @@ def build_index(
             vocab_n = lex_ds.count_rows()
         else:
             vocab_n = lex_df.count()
+        stream = _posting_stream(
+            _with_doc_id(spark.read.parquet(stage_docs), doc_id_offset, pid_counts),
+            max_bl,
+        )
         dict_bc = None
-        hot_bc = None
-        tid_dim = None
+        hot_terms = frozenset()
         if 0 < vocab_n <= DICT_VOCAB_MAX:
-            import pyarrow as pa
             import pyarrow.compute as pc
 
             if lex_ds is not None:
-                ltbl = lex_ds.to_table(
-                    columns=["bucket", "term", "df"]
-                ).combine_chunks()
+                ltbl = lex_ds.to_table(columns=["bucket", "term", "df"])
             else:
-                ltbl = lex_df.toArrow().combine_chunks()
-            order = pc.sort_indices(
-                ltbl,
-                sort_keys=[("bucket", "ascending"), ("term", "ascending")],
-            )
-            ltbl = ltbl.take(order).combine_chunks()
+                ltbl = lex_df.toArrow()
+            ltbl = ltbl.take(
+                pc.sort_indices(
+                    ltbl, sort_keys=[("bucket", "ascending"), ("term", "ascending")]
+                )
+            ).combine_chunks()
             bks = ltbl.column("bucket").chunk(0).to_numpy().astype(np.int64)
             dfs = ltbl.column("df").chunk(0).to_numpy()
             terms_arr = ltbl.column("term").chunk(0)
             # rank within bucket: arange minus each bucket run's start
-            starts = np.flatnonzero(
-                np.concatenate(([True], bks[1:] != bks[:-1]))
-            )
-            run_ix = np.cumsum(
-                np.concatenate(([True], bks[1:] != bks[:-1]))
-            ) - 1
-            seq = np.arange(len(bks), dtype=np.int64) - starts[run_ix]
+            new_run = np.concatenate(([True], bks[1:] != bks[:-1]))
+            seq = np.arange(len(bks), dtype=np.int64) - np.flatnonzero(new_run)[
+                np.cumsum(new_run) - 1
+            ]
             tids = (bks << DICT_BUCKET_BITS) | seq
             dict_bc = spark.sparkContext.broadcast(
-                {
-                    "tids": tids,
-                    "terms": terms_arr,
-                    "hot_tids": tids[dfs > fancy_threshold],
-                }
+                {"tids": tids, "terms": terms_arr, "hot_tids": tids[dfs > fancy_threshold]}
             )
             tid_dim = spark.createDataFrame(
-                pd.DataFrame(
-                    {"term": terms_arr.to_pylist(), "tid": tids}
-                )
+                pd.DataFrame({"term": terms_arr.to_pylist(), "tid": tids})
+            )
+            # the broadcast hash join maps term→tid JVM-side before the
+            # shuffle; bucket rides in the tid's high bits
+            stream = stream.join(F.broadcast(tid_dim), "term").select(
+                "tid", "pack", "static"
             )
         else:
             hot_terms = frozenset(
@@ -1000,227 +734,26 @@ def build_index(
                 .select("term")
                 .collect()
             )
-            hot_bc = (
-                spark.sparkContext.broadcast(hot_terms) if hot_terms else None
-            )
-        encode_fn = _encode_partition_fn(
-            seg_size,
-            eff_salts,
-            max(n_docs, 1),
-            hot_terms_bc=hot_bc,
+        eff_salts = write_segments(
+            stream,
+            postings_dir,
+            io=io,
+            seg_size=seg_size,
+            n_salts=n_salts,
+            n_docs=n_docs,
+            n_rows=total_postings,
+            hot_terms=hot_terms,
             dict_bc=dict_bc,
         )
-        # each task Arrow-materializes its whole sorted shuffle partition —
-        # bound the per-task posting count so worker memory stays flat as
-        # the corpus grows (tasks scale out, not up)
-        nparts_f = max(nparts, int(total_postings) // FUSED_ROWS_PER_TASK + 1)
-        salt_expr = (
-            F.shiftright(F.col("pack"), 4) * eff_salts / F.lit(max(n_docs, 1))
-        ).cast("int")
-        if dict_bc is not None:
-            # dict rows: (tid, pack, static) — the broadcast hash join maps
-            # term→tid JVM-side before the shuffle; bucket rides in the
-            # tid's high bits so every grouping key is a numeric expression
-            stream = (
-                _posting_stream(packed=True)
-                .join(F.broadcast(tid_dim), "term")
-                .select("tid", "pack", "static")
-                .repartition(
-                    nparts_f,
-                    F.shiftright(F.col("tid"), DICT_BUCKET_BITS),
-                    F.pmod(F.hash("tid"), F.lit(n_tgrp)),
-                    salt_expr,
-                )
-                # tid groups runs; pack ascending == doc_id ascending (doc
-                # id occupies the high bits; each (term, doc) is unique)
-                .sortWithinPartitions("tid", "pack")
-            )
-        else:
-            # packed rows: same grouping keys as the staged scatter (bucket
-            # and salt recomputed from term / pack>>4 inside the
-            # repartition expressions), but each posting carries one long +
-            # one float + the term instead of six columns
-            stream = (
-                _posting_stream(packed=True)
-                .repartition(
-                    nparts_f,
-                    (
-                        F.crc32(F.encode(F.col("term"), "UTF-8"))
-                        % N_TERM_BUCKETS
-                    ).cast("int"),
-                    F.pmod(F.hash("term"), F.lit(n_tgrp)),
-                    salt_expr,
-                )
-                .sortWithinPartitions("term", "pack")
-            )
-        # segment rows are ~8× smaller than the posting stream that produced
-        # them, but a partitionBy(bucket) write straight off the encode tasks
-        # emits one sliver file per (task, bucket) pair — 2620 × 7 KB at
-        # bench scale, O(nparts_f × 64) tiny files at 100 TB. One cheap
-        # re-key of the ENCODED rows bounds the output layout: ~4 term
-        # slices per bucket, files sized by data not by task count (guide
-        # §6.2 — compact on write; the extra exchange moves only the
-        # compressed segments, never the raw postings).
-        seg_slices = max(4, nparts_f // 16)
-        encoded = (
-            stream.mapInArrow(encode_fn, schema=SEGMENTS_SCHEMA)
-            # no explicit partition count: AQE coalesces the re-key by
-            # advisory size, so file count tracks DATA volume at any scale
-            .repartition(
-                F.col("bucket"), F.pmod(F.hash("term"), F.lit(seg_slices))
-            )
-            .sortWithinPartitions("bucket", "term", "first_doc")
-        )
-        if io.backend == "parquet":
-            seg_tmp = postings_dir + "_tmp_fused"
-            io.write(encoded, seg_tmp, partition_by=["bucket"])
-            _move_bucket_dirs(seg_tmp, postings_dir)
-        else:
-            io.write(
-                encoded,
-                postings_dir,
-                mode="overwrite_partitions",
-                partition_by=["bucket"],
-            )
-        if hot_bc is not None:
-            hot_bc.unpersist()
         if dict_bc is not None:
             dict_bc.unpersist()
         lin.record(
             "segments_fused",
             dict_encoded=dict_bc is not None,
+            eff_salts=int(eff_salts),
             wall_s=round(time.time() - t0, 3),
         )
-
-    # ---- stage segments, per bucket group ----------------------------------
-    # One streaming pass per task cuts exact segments — full AND fancy kinds
-    # in the same pass (hot-term set broadcast from the lexicon job). The
-    # scatter files already group and sort the stream, so this stage is
-    # shuffle-free: scan → encode → write. (A resumed pre-v2 scatter layout
-    # gets the legacy re-shuffle + sort instead.)
-    groups = (
-        []
-        if fused
-        else [
-            list(range(g, N_TERM_BUCKETS, bucket_groups))
-            for g in range(bucket_groups)
-        ]
-    )
-    # encode parallelism is set by file packing/splitting of the scatter
-    # read — size read partitions so each bucket group fans out to ~nparts
-    # tasks (row-group splits of one file are safe: the encoder's boundary
-    # rule handles them). Restored after the loop.
-    scatter_bytes = 0
-    if os.path.isdir(stage_postings):
-        for r, _, fs in os.walk(stage_postings):
-            scatter_bytes += sum(
-                os.path.getsize(os.path.join(r, f))
-                for f in fs
-                if f.endswith(".parquet")
-            )
-    read_part_bytes = max(
-        4 << 20, scatter_bytes // max(nparts * len(groups), 1)
-    )
-    prev_mpb = spark.conf.get("spark.sql.files.maxPartitionBytes", None)
-
-    def _legacy_regroup(df_):
-        return df_.repartition(
-            nparts,
-            F.col("bucket"),
-            F.pmod(F.hash("term"), F.lit(n_tgrp)),
-            (F.col("doc_id") * eff_salts / F.lit(max(n_docs, 1))).cast("int"),
-        ).sortWithinPartitions("term", "doc_id")
-
-    spark.conf.set("spark.sql.files.maxPartitionBytes", str(read_part_bytes))
-    try:
-        for gi, buckets in enumerate(groups):
-            step = f"segments_g{gi}"
-            if step in lin.done:
-                continue
-            t0 = time.time()
-            pg = spark.read.parquet(stage_postings).where(
-                F.col("bucket").isin(buckets)
-            )
-            seg_tmp = postings_dir + f"_tmp_g{gi}"
-            lex_tmp = lexicon_dir + f"_tmp_g{gi}"
-
-            # lexicon first: per-term df is a map-side-combined hash
-            # aggregate over the scatter files (output rows ∝ vocabulary,
-            # not postings). persist → hot-term collect and the write share
-            # ONE aggregation, and nothing re-reads the tmp dir (which is
-            # schema-less when a group happens to hold zero postings —
-            # gated/tiny corpora).
-            lex = (
-                pg.groupBy("bucket", "term").agg(F.count("*").alias("df")).persist()
-            )
-            # hot terms (df > threshold) get fancy accelerator lists
-            # (GenDb.dpr:1053-1071). Hot terms are few BY DEFINITION (each
-            # holds > threshold postings, so there are < n_postings/threshold
-            # of them) — a broadcast set lets the encode workers emit full +
-            # rank-filtered fancy segments from the same sorted stream.
-            hot_terms = frozenset(
-                r["term"]
-                for r in lex.where(F.col("df") > fancy_threshold)
-                .select("term")
-                .collect()
-            )
-            if io.backend == "parquet":
-                # per-group tmp dir + idempotent bucket-dir move (a crashed
-                # group rerun overwrites its tmp, never the published dir)
-                io.write(
-                    lex.sortWithinPartitions("bucket", "term"),
-                    lex_tmp,
-                    partition_by=["bucket"],
-                )
-            else:
-                # iceberg: identity-partition on the engine's crc32 bucket
-                # column, NOT the bucket(64, term) transform — iceberg's
-                # murmur buckets of term do not align with the crc32 groups,
-                # so a group's dynamic partition overwrite would clobber
-                # other groups' rows sharing an iceberg bucket. Identity
-                # partitions are disjoint per group (idempotent under
-                # resume) and prune the same bucket == b probe predicates.
-                io.write(
-                    lex.sortWithinPartitions("bucket", "term"),
-                    lexicon_dir,
-                    mode="overwrite_partitions",
-                    partition_by=["bucket"],
-                )
-            lex.unpersist()
-            hot_bc = spark.sparkContext.broadcast(hot_terms) if hot_terms else None
-            encode_fn = _encode_partition_fn(
-                seg_size, eff_salts, max(n_docs, 1), hot_terms_bc=hot_bc
-            )
-
-            # one shuffle-free pass: scan the pre-grouped scatter files and
-            # stream-encode. Output sorted within files by (term, first_doc):
-            # parquet row-group min/max stats then prune term probes inside
-            # each bucket file
-            stream = pg if scatter_grouped else _legacy_regroup(pg)
-            encoded = stream.mapInArrow(
-                encode_fn, schema=SEGMENTS_SCHEMA
-            ).sortWithinPartitions("bucket", "term", "first_doc")
-            if io.backend == "parquet":
-                io.write(encoded, seg_tmp, partition_by=["bucket"])
-                # idempotent move of finished bucket dirs into place
-                _move_bucket_dirs(seg_tmp, postings_dir)
-                _move_bucket_dirs(lex_tmp, lexicon_dir)
-            else:
-                # identity bucket partitions (see the lexicon write above)
-                io.write(
-                    encoded,
-                    postings_dir,
-                    mode="overwrite_partitions",
-                    partition_by=["bucket"],
-                )
-            if hot_bc is not None:
-                hot_bc.unpersist()
-            lin.record(step, buckets=buckets, wall_s=round(time.time() - t0, 3))
-    finally:
-        if prev_mpb is not None:
-            spark.conf.set("spark.sql.files.maxPartitionBytes", prev_mpb)
-        else:
-            spark.conf.unset("spark.sql.files.maxPartitionBytes")
+    eff_salts = int(lin.done["segments_fused"]["eff_salts"])
 
     # ---- publish ------------------------------------------------------------
     if "publish" not in lin.done:
@@ -1232,17 +765,7 @@ def build_index(
             os.makedirs(lexicon_dir, exist_ok=True)
             unique_words, word_occurrences, high_df = 0, 0, []
         else:
-            seg_stats = (
-                io.read(postings_dir)
-                .agg(
-                    F.coalesce(F.sum(F.length("blob")), F.lit(0)).alias("bytes"),
-                    F.coalesce(
-                        F.sum(F.when(F.col("kind") == "full", F.col("n"))), F.lit(0)
-                    ).alias("postings"),
-                    F.count("*").alias("segments"),
-                )
-                .collect()[0]
-            )
+            seg_stats = segment_stats(io.read(postings_dir))
             unique_words, word_occurrences, high_df = lexicon_stats(
                 lexicon_dir,
                 info_df_threshold,
@@ -1296,6 +819,216 @@ def build_index(
         metrics["compressed_bytes"] = json.load(f)["compressed_bytes"]
     metrics["lineage"] = os.path.join(vdir, "_lineage.jsonl")
     return metrics
+
+
+def _bucket_col(term: str):
+    """crc32(term) & 63 — the reference's term bucket (GenDb.dpr:349)."""
+    return (F.crc32(F.encode(F.col(term), "UTF-8")) % N_TERM_BUCKETS).cast("int")
+
+
+def _packed_rows(df: DataFrame, max_bl: int) -> DataFrame:
+    """(term, doc_id, flags, fd, he, rank, backlinks[, run_salt]) rows →
+    the packed posting rows ``write_segments`` takes: (term, pack, static
+    [, run_salt]) with pack = doc_id<<4 | fancy_eligible<<3 | flags. One
+    long instead of (doc_id, flags, rank, bucket) roughly halves the bytes
+    each posting drags through the shuffle, the partition sort and the
+    Arrow hand-off; fancy eligibility (FANCY_RANK_LO < rank < FANCY_RANK_HI)
+    folds to one bit and the bucket is recomputed per segment. The four
+    sidecar columns fold into the pre-IDF static score JVM-side (float32 —
+    it only feeds the max_static pruning bounds, ±1 margin)."""
+    eligible = (F.col("rank") > FANCY_RANK_LO) & (F.col("rank") < FANCY_RANK_HI)
+    pack = (
+        F.shiftleft(F.col("doc_id"), 4)
+        + F.when(eligible, F.lit(8)).otherwise(F.lit(0))
+        + F.col("flags").cast("bigint")
+    )
+    extra = ["run_salt"] if "run_salt" in df.columns else []
+    return df.select(
+        "term",
+        pack.alias("pack"),
+        static_score_col(int(max_bl)).cast("float").alias("static"),
+        *extra,
+    )
+
+
+def _posting_stream(sd: DataFrame, max_bl: int) -> DataFrame:
+    """Packed posting rows of the staged docs (with doc ids): one row per
+    (term, doc) — the build's largest data movement."""
+    return _packed_rows(
+        sd.select(
+            "doc_id",
+            "fd",
+            "he",
+            "rank",
+            "backlinks",
+            F.explode(F.arrays_zip("terms", "tflags")).alias("p"),
+        ).select(
+            F.col("p.terms").alias("term"),
+            # tinyint: flags are 3 bits
+            F.col("p.tflags").cast("tinyint").alias("flags"),
+            "doc_id",
+            "fd",
+            "he",
+            "rank",
+            "backlinks",
+        ),
+        max_bl,
+    )
+
+
+def _decode_segments(iterator):
+    """mapInArrow: segments (term, blob[, run_salt]) → posting rows (term,
+    doc_id, flags[, run_salt])."""
+    import pyarrow as pa
+
+    for batch in iterator:
+        blobs = batch.column("blob").to_pylist()
+        decoded = [codec.decode(b) for b in blobs]
+        lens = np.array([len(d) for d, _ in decoded], dtype=np.int64)
+        if not lens.sum():
+            continue
+        rep = np.repeat(np.arange(len(blobs)), lens)
+        cols = {
+            "term": batch.column("term").take(pa.array(rep)),
+            "doc_id": pa.array(np.concatenate([d for d, _ in decoded])),
+            "flags": pa.array(
+                np.concatenate([f for _, f in decoded]).astype(np.int32)
+            ),
+        }
+        if "run_salt" in batch.schema.names:
+            cols["run_salt"] = batch.column("run_salt").take(pa.array(rep))
+        yield pa.RecordBatch.from_arrays(list(cols.values()), names=list(cols))
+
+
+def decoded_postings(segs: DataFrame, docmeta: DataFrame, max_bl: int) -> DataFrame:
+    """Decode segments back into packed posting rows: blob decode → docmeta
+    re-join (one equi-join on doc_id) → static score. ``segs`` holds (term,
+    blob) and an optional ``run_salt`` carried through to the output."""
+    extra = ["run_salt"] if "run_salt" in segs.columns else []
+    post = segs.select("term", "blob", *extra).mapInArrow(
+        _decode_segments,
+        schema="term string, doc_id long, flags int"
+        + (", run_salt long" if extra else ""),
+    )
+    dm = docmeta.select("doc_id", "fd", "he", "rank", "backlinks")
+    return _packed_rows(post.join(dm, "doc_id"), max_bl)
+
+
+def write_segments(
+    postings: DataFrame,
+    dest: str,
+    *,
+    seg_size: int,
+    n_salts: int,
+    n_docs: int,
+    n_rows: int = 0,
+    hot_terms=frozenset(),
+    dict_bc=None,
+    emit_full: bool = True,
+    io=None,
+) -> int:
+    """The one segment write path (build, compaction, merge fancy rebuild):
+    shuffle packed posting rows by (bucket, term-group, doc-range salt[,
+    run_salt]), sort each partition by (term, doc), encode with
+    ``_encode_partition_fn`` and write ``dest`` bucket-partitioned.
+    Returns the salt count used (meta.json's n_salts).
+
+    ``postings`` carries ``term`` (or the dict layout's ``tid`` with
+    ``dict_bc``), ``pack``, ``static`` and optionally ``run_salt``. Every
+    (bucket, tgrp, salt) group lands wholly inside one shuffle partition,
+    so runs reach the encoder whole and doc-sorted. ``hot_terms`` (string
+    layout) or the dict's hot tids get fancy segments too; ``emit_full``
+    False emits fancy segments only."""
+    from .tableio import TableIO
+
+    spark = postings.sparkSession
+    n_docs = max(int(n_docs), 1)
+    # a universal term's per-salt run is ~n_docs/n_salts postings; grow the
+    # salt count so no single encode task ever holds more than ~256
+    # segments of one term (no-op below ~8M docs with the default seg_size)
+    eff_salts = max(int(n_salts), n_docs // (seg_size * 256) + 1)
+    nparts = max(spark.sparkContext.defaultParallelism * 2, 8)
+    # encoder-group count (64 buckets × n_tgrp × n_salts) must comfortably
+    # exceed the task count for load balance — grow the vocabulary fan-out
+    # with the cluster (stays 8 below ~1024 cores)
+    n_tgrp = max(8, nparts * 4 // (N_TERM_BUCKETS * max(n_salts, 1)) + 1)
+    # each task Arrow-materializes its whole sorted shuffle partition —
+    # bound the per-task posting count so worker memory stays flat as the
+    # corpus grows (tasks scale out, not up)
+    nparts = max(nparts, int(n_rows) // FUSED_ROWS_PER_TASK + 1)
+    key = "tid" if dict_bc is not None else "term"
+    bucket = (
+        F.shiftright(F.col("tid"), DICT_BUCKET_BITS)
+        if dict_bc is not None
+        else _bucket_col("term")
+    )
+    salt = (F.shiftright(F.col("pack"), 4) * eff_salts / F.lit(n_docs)).cast("int")
+    run_key = [F.col("run_salt")] if "run_salt" in postings.columns else []
+    hot_bc = spark.sparkContext.broadcast(hot_terms) if hot_terms else None
+    encode_fn = _encode_partition_fn(
+        seg_size, eff_salts, n_docs, hot_bc, emit_full=emit_full, dict_bc=dict_bc
+    )
+    # segment rows are ~8× smaller than the postings, but a
+    # partitionBy(bucket) write straight off the encode tasks emits one
+    # sliver file per (task, bucket) pair. One cheap re-key of the ENCODED
+    # rows (AQE coalesces it by advisory size) bounds the output to ~4
+    # term slices per bucket, sorted by (term, first_doc) so parquet
+    # row-group stats prune term probes.
+    seg_slices = max(4, nparts // 16)
+    encoded = (
+        postings.repartition(
+            nparts, bucket, F.pmod(F.hash(key), F.lit(n_tgrp)), salt, *run_key
+        )
+        # pack ascending == doc_id ascending (doc id occupies the high bits)
+        .sortWithinPartitions(key, "pack")
+        .mapInArrow(encode_fn, schema=SEGMENTS_SCHEMA)
+        .repartition(F.col("bucket"), F.pmod(F.hash("term"), F.lit(seg_slices)))
+        .sortWithinPartitions("bucket", "term", "first_doc")
+    )
+    _write_buckets(io or TableIO(spark), encoded, dest)
+    if hot_bc is not None:
+        hot_bc.unpersist()
+    return eff_salts
+
+
+def _write_buckets(io, df: DataFrame, dest: str) -> None:
+    """Write a bucket-partitioned table so a rerun replaces exactly the
+    buckets it writes: a tmp dir + idempotent bucket-dir move on parquet,
+    a dynamic partition overwrite on iceberg. Iceberg identity-partitions
+    on the engine's crc32 bucket column, NOT the bucket(64, term)
+    transform, whose murmur buckets do not align with crc32."""
+    if io.backend == "parquet":
+        io.write(df, dest + "_tmp", partition_by=["bucket"])
+        _move_bucket_dirs(dest + "_tmp", dest)
+    else:
+        io.write(df, dest, mode="overwrite_partitions", partition_by=["bucket"])
+
+
+def segment_stats(segs: DataFrame) -> dict:
+    """{bytes, postings, segments} of a segments table in one job."""
+    r = segs.agg(
+        F.coalesce(F.sum(F.length("blob")), F.lit(0)).alias("bytes"),
+        F.coalesce(
+            F.sum(F.when(F.col("kind") == "full", F.col("n"))), F.lit(0)
+        ).alias("postings"),
+        F.count("*").alias("segments"),
+    ).collect()[0]
+    return {k: int(r[k]) for k in ("bytes", "postings", "segments")}
+
+
+def lexicon_from_segments(spark: SparkSession, postings_dir: str, lexicon_dir: str) -> None:
+    """Write the lexicon (bucket, term, df) from segment METADATA — df is
+    the sum of the 'full' segments' n, so rows ∝ segments, no decode."""
+    (
+        spark.read.parquet(postings_dir)
+        .where(F.col("kind") == "full")
+        .groupBy("bucket", "term")
+        .agg(F.sum("n").alias("df"))
+        .sortWithinPartitions("bucket", "term")
+        .write.mode("overwrite")
+        .partitionBy("bucket")
+        .parquet(lexicon_dir)
+    )
 
 
 def lexicon_stats(

@@ -97,15 +97,9 @@ def incremental_update(
         )
 
     # recompute lexicon from merged segment metadata (no posting decode)
-    lex = (
-        spark.read.parquet(os.path.join(vdir, "postings"))
-        .where(F.col("kind") == "full")
-        .groupBy("bucket", "term")
-        .agg(F.sum("n").alias("df"))
+    buildmod.lexicon_from_segments(
+        spark, os.path.join(vdir, "postings"), os.path.join(vdir, "lexicon")
     )
-    lex.sortWithinPartitions("term").write.mode("overwrite").partitionBy(
-        "bucket"
-    ).parquet(os.path.join(vdir, "lexicon"))
 
     with open(os.path.join(delta_vdir, "meta.json")) as f:
         delta_meta = json.load(f)
@@ -262,39 +256,32 @@ def compact_index(spark: SparkSession, out_dir: str, io=None) -> dict:
     full rebuild (the staleness stream_transcripts documents). Compaction
     closes both without touching the corpus:
 
-      - decode the published 'full' segments back into posting rows
-        (linear mapInArrow, the merge fancy-rebuild's decoder)
-      - rejoin docmeta for the static score + rank window (one equi-join)
-      - re-encode through the build's OWN segment encoder in one pass,
-        emitting full + fancy segments with the hot set taken from the
-        GLOBAL lexicon df — exactly what a from-scratch build would emit
+      - decode the published 'full' segments back into posting rows,
+        rejoin docmeta for the static score + rank window
+        (``build.decoded_postings``)
+      - re-encode through the build's own segment write path
+        (``build.write_segments``) in one pass, emitting full + fancy
+        segments with the hot set taken from the GLOBAL lexicon df —
+        exactly what a from-scratch build would emit
       - recompute lexicon + compressed-bytes stats; hard-link docmeta,
         tombstones and info.txt (df is unchanged by construction); publish
         as a new version via the atomic CURRENT swap
 
     Logical content is untouched: same doc_ids, same df/idf, same integer
     scores, same tombstone masking — rank identity to the pre-compaction
-    index AND to a from-scratch build of the union corpus is the test
-    contract (tests/test_compaction.py).
+    index AND byte identity to a from-scratch build of the union corpus is
+    the test contract (tests/test_compaction.py).
 
     100 TB shape: decode and encode are linear Arrow passes with no
-    per-posting Python; the shuffles are the docmeta join and the
-    (bucket, term, salt) grouping the encoder requires — the same shuffle
-    the build's scatter stage pays, minus tokenization (the dominant
-    cost). Hot terms stay doc-range-salted across tasks like the build,
-    so a 10^9-posting term never serializes through one task."""
-    from .build import SEGMENTS_SCHEMA
-    from .scoring import static_score_col
-    from .merge import _decode_segments_fn
+    per-posting Python; the shuffles are the docmeta join and the build's
+    own (bucket, term-group, salt) grouping, minus tokenization (the
+    dominant cost). Hot terms stay doc-range-salted across tasks like the
+    build, so a 10^9-posting term never serializes through one task."""
     from .tableio import TableIO
 
     old_vdir = current_index_dir(out_dir)
     with open(os.path.join(old_vdir, "meta.json")) as f:
         meta = json.load(f)
-    n_docs = int(meta["n_docs"])
-    seg_size = int(meta["seg_size"])
-    fancy_threshold = int(meta["fancy_threshold"])
-    max_bl = int(meta["max_backlinks"])
 
     version = _pending_version(out_dir)
     vdir = os.path.join(out_dir, version)
@@ -303,77 +290,36 @@ def compact_index(spark: SparkSession, out_dir: str, io=None) -> dict:
     lin = Lineage(os.path.join(vdir, "_lineage.jsonl"))
 
     old_postings = os.path.join(old_vdir, "postings")
-    old_stats = (
-        spark.read.parquet(old_postings)
-        .agg(
-            F.count("*").alias("segments"),
-            F.sum(F.length("blob")).alias("bytes"),
-        )
-        .collect()[0]
-    )
+    old_stats = buildmod.segment_stats(spark.read.parquet(old_postings))
 
     # hot set from the GLOBAL lexicon — the df a from-scratch build of the
     # whole corpus would see (same > comparison as build_index)
-    lex_old = spark.read.parquet(os.path.join(old_vdir, "lexicon"))
     hot_terms = frozenset(
         r["term"]
-        for r in lex_old.where(F.col("df") > fancy_threshold)
+        for r in spark.read.parquet(os.path.join(old_vdir, "lexicon"))
+        .where(F.col("df") > int(meta["fancy_threshold"]))
         .select("term")
         .collect()
     )
-    hot_bc = spark.sparkContext.broadcast(hot_terms) if hot_terms else None
-
-    # decode -> rejoin docmeta -> re-encode (the merge fancy-rebuild
-    # pipeline, applied to the WHOLE index with emit_full=True)
-    segs = (
-        spark.read.parquet(old_postings)
-        .where(F.col("kind") == "full")
-        .withColumn("shard", F.lit(0))
-        .select("bucket", "term", "shard", "blob")
+    rows = buildmod.decoded_postings(
+        spark.read.parquet(old_postings).where(F.col("kind") == "full"),
+        spark.read.parquet(os.path.join(old_vdir, "docmeta")),
+        int(meta["max_backlinks"]),
     )
-    post = segs.mapInArrow(
-        _decode_segments_fn(),
-        schema="bucket int, term string, shard int, doc_id long, flags int",
-    ).drop("shard")
-    dm = spark.read.parquet(os.path.join(old_vdir, "docmeta")).select(
-        "doc_id", "fd", "he", "rank", "backlinks"
+    eff_salts = buildmod.write_segments(
+        rows,
+        os.path.join(vdir, "postings"),
+        seg_size=int(meta["seg_size"]),
+        n_salts=int(meta.get("n_salts", 8)),
+        n_docs=int(meta["n_docs"]),
+        n_rows=int(meta["n_postings"]),
+        hot_terms=hot_terms,
     )
-    eff_salts = max(
-        int(meta.get("n_salts", 8)), n_docs // (seg_size * 256) + 1
-    )
-    salt = (F.col("doc_id") * eff_salts / F.lit(max(n_docs, 1))).cast("int")
-    rows = (
-        post.join(dm, "doc_id")
-        .withColumn("static", static_score_col(max_bl).cast("float"))
-        .select("bucket", "term", "doc_id", "flags", "static", "rank")
-    )
-    from .build import _encode_partition_fn
-
-    encode_fn = _encode_partition_fn(
-        seg_size, eff_salts, max(n_docs, 1), hot_terms_bc=hot_bc
-    )
-    nparts = max(spark.sparkContext.defaultParallelism, 8)
-    (
-        rows.repartition(nparts, F.col("bucket"), F.hash("term"), salt)
-        .sortWithinPartitions("bucket", "term", "doc_id")
-        .mapInArrow(encode_fn, schema=SEGMENTS_SCHEMA)
-        .sortWithinPartitions("bucket", "term", "first_doc")
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(os.path.join(vdir, "postings"))
-    )
-
     # lexicon: re-aggregate df from the new segment metadata (must equal
     # the old lexicon — compaction moves bytes, not postings)
-    lex = (
-        spark.read.parquet(os.path.join(vdir, "postings"))
-        .where(F.col("kind") == "full")
-        .groupBy("bucket", "term")
-        .agg(F.sum("n").alias("df"))
+    buildmod.lexicon_from_segments(
+        spark, os.path.join(vdir, "postings"), os.path.join(vdir, "lexicon")
     )
-    lex.sortWithinPartitions("bucket", "term").write.mode(
-        "overwrite"
-    ).partitionBy("bucket").parquet(os.path.join(vdir, "lexicon"))
 
     _link_tree(os.path.join(old_vdir, "docmeta"), os.path.join(vdir, "docmeta"))
     if os.path.isdir(os.path.join(old_vdir, "tombstones")):
@@ -385,17 +331,12 @@ def compact_index(spark: SparkSession, out_dir: str, io=None) -> dict:
         os.link(
             os.path.join(old_vdir, "info.txt"), os.path.join(vdir, "info.txt")
         )
-    new_stats = (
+    new_stats = buildmod.segment_stats(
         spark.read.parquet(os.path.join(vdir, "postings"))
-        .agg(
-            F.count("*").alias("segments"),
-            F.sum(F.length("blob")).alias("bytes"),
-        )
-        .collect()[0]
     )
     meta = dict(meta)
-    meta["compressed_bytes"] = int(new_stats["bytes"])
-    meta["n_segments"] = int(new_stats["segments"])
+    meta["compressed_bytes"] = new_stats["bytes"]
+    meta["n_segments"] = new_stats["segments"]
     meta["n_salts"] = int(eff_salts)
     meta["compacted_from"] = os.path.basename(old_vdir)
     with open(os.path.join(vdir, "meta.json"), "w") as f:
@@ -415,10 +356,10 @@ def compact_index(spark: SparkSession, out_dir: str, io=None) -> dict:
 
     metrics = {
         "version": version,
-        "segments_before": int(old_stats["segments"]),
-        "segments_after": int(new_stats["segments"]),
-        "bytes_before": int(old_stats["bytes"]),
-        "bytes_after": int(new_stats["bytes"]),
+        "segments_before": old_stats["segments"],
+        "segments_after": new_stats["segments"],
+        "bytes_before": old_stats["bytes"],
+        "bytes_after": new_stats["bytes"],
         "n_hot_terms": len(hot_terms),
         "positions_segments": pos_segments,
         "wall_s": round(time.time() - t_start, 3),

@@ -60,7 +60,6 @@ import os
 import shutil
 import time
 
-import numpy as np
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
@@ -68,14 +67,16 @@ from . import codec
 from .build import (
     SEGMENTS_SCHEMA,
     Lineage,
-    _encode_partition_fn,
     _pending_version,
     current_index_dir,
+    decoded_postings,
+    lexicon_from_segments,
     lexicon_stats,
+    segment_stats,
     write_info_txt,
+    write_segments,
 )
 from .constants import INFO_DF_THRESHOLD
-from .scoring import static_score_col
 from .incremental import _link_tree
 
 
@@ -114,44 +115,6 @@ def _shift_segments_fn(offset: int):
             )
 
     return shift
-
-
-def _decode_segments_fn():
-    """mapInArrow: full segments → posting rows (bucket, term, shard,
-    doc_id, flags) for the fancy-rebuild stage. Bounded: only runs over
-    hot terms' uncovered shard ranges."""
-
-    def decode(iterator):
-        import pyarrow as pa
-
-        for batch in iterator:
-            tbl = pa.Table.from_batches([batch])
-            blobs = tbl.column("blob").to_pylist()
-            buckets = tbl.column("bucket").to_numpy()
-            shards = tbl.column("shard").to_numpy()
-            terms = tbl.column("term").to_pylist()
-            out_b, out_t, out_s, out_d, out_f = [], [], [], [], []
-            for i, blob in enumerate(blobs):
-                d, f = codec.decode(blob)
-                out_b.append(np.full(len(d), buckets[i], dtype=np.int32))
-                out_s.append(np.full(len(d), shards[i], dtype=np.int32))
-                out_t.extend([terms[i]] * len(d))
-                out_d.append(d)
-                out_f.append(f.astype(np.int32))
-            if not out_d:
-                continue
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(np.concatenate(out_b)),
-                    pa.array(out_t, type=pa.string()),
-                    pa.array(np.concatenate(out_s)),
-                    pa.array(np.concatenate(out_d)),
-                    pa.array(np.concatenate(out_f)),
-                ],
-                names=["bucket", "term", "shard", "doc_id", "flags"],
-            )
-
-    return decode
 
 
 def _stage_then_link(
@@ -214,6 +177,7 @@ def merge_indexes(
         offsets.append(offsets[-1] + int(m["n_docs"]))
     n_docs = offsets[-1] + int(metas[-1]["n_docs"])
     max_bl = max(int(m["max_backlinks"]) for m in metas)
+    n_salts = max(int(m.get("n_salts", 8)) for m in metas)
 
     os.makedirs(out_dir, exist_ok=True)
     version = _pending_version(out_dir)
@@ -293,15 +257,7 @@ def merge_indexes(
     # ---- lexicon: re-aggregate df from merged segment metadata -----------
     if "lexicon" not in lin.done:
         t0 = time.time()
-        lex = (
-            spark.read.parquet(postings_dir)
-            .where(F.col("kind") == "full")
-            .groupBy("bucket", "term")
-            .agg(F.sum("n").alias("df"))
-        )
-        lex.sortWithinPartitions("term").write.mode("overwrite").partitionBy(
-            "bucket"
-        ).parquet(lexicon_dir)
+        lexicon_from_segments(spark, postings_dir, lexicon_dir)
         lin.record("lexicon", wall_s=round(time.time() - t0, 3))
 
     # ---- fancy reconciliation (GenDb pass 5 over the merged corpus) ------
@@ -349,77 +305,35 @@ def merge_indexes(
             hot_set = frozenset(
                 r["term"] for r in need.select("term").distinct().collect()
             )
-            hot_bc = spark.sparkContext.broadcast(hot_set)
-            nparts = max(spark.sparkContext.defaultParallelism, 8)
-            eff_salts = max(8, n_docs // (seg_size * 256) + 1)
             stage = os.path.join(vdir, "_stage_fancy")
 
             def write_fancy(stage=stage):
                 segs = spark.read.parquet(postings_dir).where(
                     F.col("kind") == "full"
                 )
+                # run_salt = shard: two holes of one term in one task must
+                # NOT fuse into a segment spanning the covered shard range
+                # between them (per-(term, kind) range disjointness)
                 to_decode = segs.join(
                     F.broadcast(holes),
                     (segs["term"] == holes["term"])
                     & (segs["first_doc"] >= holes["lo"])
                     & (segs["first_doc"] < holes["hi"]),
-                ).select(segs["bucket"], segs["term"], "shard", "blob")
-                post = to_decode.mapInArrow(
-                    _decode_segments_fn(),
-                    schema=(
-                        "bucket int, term string, shard int,"
-                        " doc_id long, flags int"
+                ).select(
+                    segs["term"],
+                    F.col("shard").cast("long").alias("run_salt"),
+                    "blob",
+                )
+                write_segments(
+                    decoded_postings(
+                        to_decode, spark.read.parquet(docmeta_dir), max_bl
                     ),
-                )
-                dm = spark.read.parquet(docmeta_dir).select(
-                    "doc_id", "fd", "he", "rank", "backlinks"
-                )
-                # run_salt folds the shard into the encoder's run key: two
-                # holes of one term in one task must NOT fuse into a
-                # segment spanning the covered shard range between them
-                # (per-(term, kind) range disjointness). Monotone in
-                # doc_id within a term, as the encoder requires.
-                salt = (
-                    F.col("doc_id") * eff_salts / F.lit(max(n_docs, 1))
-                ).cast("int")
-                rows = (
-                    post.join(dm, "doc_id")
-                    .withColumn(
-                        "static", static_score_col(int(max_bl)).cast("float")
-                    )
-                    .withColumn(
-                        "run_salt",
-                        (F.col("shard") * F.lit(eff_salts + 1) + salt).cast(
-                            "long"
-                        ),
-                    )
-                    .select(
-                        "bucket",
-                        "term",
-                        "doc_id",
-                        "flags",
-                        "static",
-                        "rank",
-                        "run_salt",
-                    )
-                )
-                encode_fn = _encode_partition_fn(
-                    seg_size,
-                    eff_salts,
-                    max(n_docs, 1),
-                    hot_terms_bc=hot_bc,
+                    os.path.join(stage, "postings"),
+                    seg_size=seg_size,
+                    n_salts=n_salts,
+                    n_docs=n_docs,
+                    hot_terms=hot_set,
                     emit_full=False,
-                )
-                (
-                    rows.repartition(
-                        nparts, F.col("bucket"), F.hash("term"), F.col("run_salt")
-                    )
-                    .sortWithinPartitions("bucket", "term", "doc_id")
-                    .mapInArrow(encode_fn, schema=SEGMENTS_SCHEMA)
-                    .sortWithinPartitions("bucket", "term", "first_doc")
-                    .write.mode("overwrite")
-                    .partitionBy("bucket")
-                    .parquet(os.path.join(stage, "postings"))
                 )
 
             _stage_then_link(
@@ -429,7 +343,6 @@ def merge_indexes(
                 [("postings", postings_dir)],
                 write_fancy,
             )
-            hot_bc.unpersist()
         else:
             lin.record("fancy", holes=0)
         need.unpersist()
@@ -441,18 +354,7 @@ def merge_indexes(
 
     # ---- publish ----------------------------------------------------------
     if "publish" not in lin.done:
-        seg_stats = (
-            spark.read.parquet(postings_dir)
-            .agg(
-                F.coalesce(F.sum(F.length("blob")), F.lit(0)).alias("bytes"),
-                F.coalesce(
-                    F.sum(F.when(F.col("kind") == "full", F.col("n"))),
-                    F.lit(0),
-                ).alias("postings"),
-                F.count("*").alias("segments"),
-            )
-            .collect()[0]
-        )
+        seg_stats = segment_stats(spark.read.parquet(postings_dir))
         unique_words, word_occurrences, high_df = lexicon_stats(
             lexicon_dir,
             INFO_DF_THRESHOLD,
@@ -465,8 +367,9 @@ def merge_indexes(
                 "n_docs": int(n_docs),
                 "max_backlinks": int(max_bl),
                 "n_postings": int(sum(int(m["n_postings"]) for m in metas)),
-                "compressed_bytes": int(seg_stats["bytes"]),
-                "n_segments": int(seg_stats["segments"]),
+                "compressed_bytes": seg_stats["bytes"],
+                "n_segments": seg_stats["segments"],
+                "n_salts": n_salts,
                 "unique_words": unique_words,
                 "word_occurrences": word_occurrences,
                 "high_df_terms": [[t, d] for t, d in high_df],

@@ -88,13 +88,13 @@ def static_scores(
 def static_score_col(max_bl: int, w: dict[str, int] | None = None):
     """JVM column-expression twin of static_scores() (same formula,
     searchservernew.dpr:874-897 with the acSet backlink add): evaluated
-    inside whole-stage codegen at scatter time so posting rows carry a
+    inside whole-stage codegen before the posting shuffle so rows carry a
     single float instead of four sidecar columns through the shuffle and
     into the Python encoders.
 
     Parity note: all terms except the backlink value are integer-valued and
     exact in float64; JVM Math.log vs libm log may differ by ~1 ulp, and the
-    scatter stream narrows the value to float32 (it only feeds the
+    posting stream narrows the value to float32 (it only feeds the
     max_static pruning bounds; relative error ~6e-8 on values ≤ 65535), so
     block-max consumers must treat bounds with a ±1 score-point margin
     (query.py does)."""

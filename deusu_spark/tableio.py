@@ -102,8 +102,8 @@ class TableIO:
         TRANSFORM's partitions. Iceberg's murmur bucket(col) does not match
         the engine's crc32 bucket column, so writes grouped by the crc32
         column would dynamically overwrite (and lose) other groups' rows —
-        the build therefore identity-partitions its group-overwritten
-        tables on the bucket column (build.py segments stage).
+        the build therefore identity-partitions its partition-overwritten
+        tables on the bucket column (build._write_buckets).
         """
         if self.backend == "parquet":
             w = df.write.mode(mode)

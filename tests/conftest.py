@@ -36,7 +36,6 @@ def tiny_index_dir(spark, tiny_corpus):
         fancy_threshold=TINY_FANCY_THRESHOLD,
         seg_size=TINY_SEG_SIZE,
         n_salts=4,
-        bucket_groups=2,
     )
     yield d
     shutil.rmtree(d, ignore_errors=True)

@@ -112,7 +112,6 @@ def test_info_txt_high_df_list(spark, tiny_corpus):
             fancy_threshold=300,
             seg_size=256,
             n_salts=2,
-            bucket_groups=2,
             info_df_threshold=50,
         )
         vdir = current_index_dir(d)
@@ -223,31 +222,9 @@ def test_resume_skips_done_stages(spark, tiny_corpus, tiny_index_dir):
     vdir = current_index_dir(tiny_index_dir)
     with open(f"{vdir}/_lineage.jsonl") as f:
         steps = [json.loads(line)["step"] for line in f]
-    assert "docs" in steps and "publish" in steps
-    # either layout: fused (lexicon + segments_fused) or staged
-    # (scatter + per-group segments)
-    assert ("lexicon" in steps and "segments_fused" in steps) or (
-        "scatter" in steps and any(s.startswith("segments_g") for s in steps)
-    )
-
-
-def test_default_fuse_scatter_tracks_heap_per_core():
-    """The fused layout engages only where the heap study says it wins:
-    local masters always; cluster executors above the measured heap knee
-    (2 GiB/core spills, 4 GiB/core wins; knee at 3)."""
-    from deusu_spark.build import default_fuse_scatter
-
-    assert default_fuse_scatter("local[32]", "1g", "8")
-    assert default_fuse_scatter("local", "512m", "1")
-    # the measured 4-executor configs from BENCH_CLUSTER.md
-    assert not default_fuse_scatter("spark://h:7077", "4g", "2")  # spills
-    assert default_fuse_scatter("spark://h:7077", "8g", "2")      # record
-    assert not default_fuse_scatter("spark://h:7077", "4096m", "2")
-    assert default_fuse_scatter("spark://h:7077", "8388608k", "2")
-    assert not default_fuse_scatter("k8s://api", "16g", "8")
-    assert default_fuse_scatter("yarn", "24g", "4")
-    # unparseable memory config falls back to fused (the common case)
-    assert default_fuse_scatter("spark://h:7077", "auto", "2")
+    # the one build layout: lexicon off the staged docs, then one
+    # shuffle → encode → write job for the segments
+    assert steps[:5] == ["docs", "docmeta", "lexicon", "segments_fused", "publish"]
 
 
 def test_high_df_order_matches_sql_shape(spark, tiny_corpus):
@@ -273,7 +250,6 @@ def test_high_df_order_matches_sql_shape(spark, tiny_corpus):
             fancy_threshold=300,
             seg_size=256,
             n_salts=2,
-            bucket_groups=2,
             info_df_threshold=2,  # low bar => many entries incl. df ties
         )
         vdir = current_index_dir(d)
@@ -290,5 +266,55 @@ def test_high_df_order_matches_sql_shape(spark, tiny_corpus):
         # ties exist in the fixture, so this pins the asc-term tie-break
         dfs = [df for _, df in sql_order]
         assert len(dfs) != len(set(dfs)), "fixture should produce df ties"
+    finally:
+        shutil.rmtree(d, ignore_errors=True)
+
+
+def test_string_layout_equals_dict_layout(spark, tiny_corpus, tiny_index_dir, monkeypatch):
+    """Above DICT_VOCAB_MAX the segments stage shuffles term strings
+    instead of int64 term ids. Forcing that layout on the tiny corpus must
+    give the same lexicon and the same segment rows, blob for blob."""
+    import json
+    import shutil
+    import tempfile
+
+    from deusu_spark import build
+    from tests.conftest import TINY_FANCY_THRESHOLD, TINY_SEG_SIZE
+
+    def tables(root):
+        vdir = current_index_dir(root)
+        lex = sorted(
+            tuple(r)
+            for r in spark.read.parquet(f"{vdir}/lexicon")
+            .select("bucket", "term", "df")
+            .collect()
+        )
+        segs = sorted(
+            (r["bucket"], r["term"], r["kind"], r["first_doc"], r["n"], bytes(r["blob"]))
+            for r in spark.read.parquet(f"{vdir}/postings").collect()
+        )
+        with open(f"{vdir}/_lineage.jsonl") as f:
+            seg_step = [
+                rec for rec in map(json.loads, f) if rec["step"] == "segments_fused"
+            ]
+        return lex, segs, seg_step[0]["dict_encoded"]
+
+    monkeypatch.setattr(build, "DICT_VOCAB_MAX", 0)
+    d = tempfile.mkdtemp(prefix="deusu_strlayout_")
+    try:
+        build.build_index(
+            spark,
+            spark.createDataFrame(tiny_corpus),
+            d,
+            fancy_threshold=TINY_FANCY_THRESHOLD,
+            seg_size=TINY_SEG_SIZE,
+            n_salts=4,
+        )
+        lex_s, segs_s, dict_s = tables(d)
+        lex_d, segs_d, dict_d = tables(tiny_index_dir)
+        assert dict_d and not dict_s
+        assert any(k == "fancy" for _, _, k, *_ in segs_s)
+        assert lex_s == lex_d
+        assert segs_s == segs_d
     finally:
         shutil.rmtree(d, ignore_errors=True)

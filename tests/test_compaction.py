@@ -30,7 +30,7 @@ from deusu_spark.incremental import (
 )
 from deusu_spark.query_local import LocalSearcher
 
-KW = dict(fancy_threshold=60, seg_size=128, n_salts=2, bucket_groups=2)
+KW = dict(fancy_threshold=60, seg_size=128, n_salts=2)
 QUERIES = (
     "linux",
     "google",

@@ -21,7 +21,6 @@ def gated_index(spark, tiny_corpus):
         d,
         fancy_threshold=10**9,
         seg_size=256,
-        bucket_groups=2,
         ignore_hosts=["conv00000017", "CONV00000003"],  # case-insensitive
     )
     yield d
@@ -52,7 +51,6 @@ def test_ignored_hosts_dataframe_form(spark, tiny_corpus):
             d,
             fancy_threshold=10**9,
             seg_size=256,
-            bucket_groups=2,
             ignore_hosts=ig,
         )
         vdir = current_index_dir(d)
@@ -76,7 +74,6 @@ def test_index_gate_de_only(spark, tiny_corpus):
             d,
             fancy_threshold=10**9,
             seg_size=256,
-            bucket_groups=2,
             index_gate="de_only",
         )
         vdir = current_index_dir(d)

@@ -28,7 +28,7 @@ def split_corpora():
 
 def test_incremental_equals_full_rebuild(spark, split_corpora):
     full, base, delta = split_corpora
-    kw = dict(fancy_threshold=100, seg_size=128, n_salts=2, bucket_groups=2)
+    kw = dict(fancy_threshold=100, seg_size=128, n_salts=2)
     d_full, d_inc = tempfile.mkdtemp(prefix="ifull_"), tempfile.mkdtemp(prefix="iinc_")
     try:
         build_index(spark, spark.createDataFrame(full), d_full, **kw)

@@ -39,7 +39,6 @@ def merge_env(spark, tiny_corpus):
             fancy_threshold=TINY_FANCY_THRESHOLD,
             seg_size=TINY_SEG_SIZE,
             n_salts=4,
-            bucket_groups=2,
         )
         dirs.append(d)
     out = os.path.join(root, "merged")
@@ -370,6 +369,60 @@ def test_federated_engine_skips_underfilled_fancy_pass(spark, merge_env):
     got = fed.search(q, k=1000)
     assert passes and not any(passes)
     assert got and got == merged.search(q, k=1000)
+
+
+def test_fancy_pass_stands_distributed(spark, merge_env, monkeypatch):
+    """No fancy list of the tiny corpus reaches MAX_RESULTS (1000), so the
+    other tests never keep a distributed fancy pass. With MAX_RESULTS
+    lowered to 30 the longest lists (w0000: 55 postings, w0002: 50) fill
+    it: the fancy pass then stands on search and in search_many's fancy
+    batch (run beside the full batch, plus a residual full pass for the
+    under-filled NOT query), search_many equals per-query search, and the
+    federation over the two shards equals the engine over their merge."""
+    from deusu_spark import query
+    from deusu_spark.query import FederatedSearchEngine, SearchEngine
+
+    monkeypatch.setattr(query, "MAX_RESULTS", 30)
+    _root, dirs, out, _m = merge_env
+    merged = SearchEngine(spark, out)
+    fed = FederatedSearchEngine(spark, dirs)
+    qs = ["w0000", "w0002", "w0000 w0001", "w0000 -w0002", "w0013", "w0042"]
+
+    passes = []
+
+    def spy_pass(terms, k, w, use_fancy, prune, mode, real=merged._pass):
+        rows, count = real(terms, k, w, use_fancy, prune, mode)
+        passes.append((use_fancy, count))
+        return rows, count
+
+    monkeypatch.setattr(merged, "_pass", spy_pass)
+    single, stood = {}, []
+    for q in qs:
+        passes.clear()
+        single[q] = merged.search(q, k=20)
+        if passes[0][0] and len(passes) == 1:
+            assert passes[0][1] >= 30
+            stood.append(q)
+    assert {"w0000", "w0002"} <= set(stood)
+    assert "w0042" not in stood and "w0000 -w0002" not in stood
+
+    batches = []
+
+    def spy_many(batch, fetch, w, use_fancy, mode, prune, real=merged._execute_many):
+        batches.append((use_fancy, [qi for qi, _ in batch]))
+        return real(batch, fetch, w, use_fancy, mode, prune)
+
+    monkeypatch.setattr(merged, "_execute_many", spy_many)
+    assert merged.search_many(qs, k=20) == [single[q] for q in qs]
+    fancy_qis = {qi for f, qis in batches if f for qi in qis}
+    full_qis = {qi for f, qis in batches if not f for qi in qis}
+    assert {qs.index(q) for q in stood} <= fancy_qis - full_qis
+    assert qs.index("w0042") in full_qis
+    assert batches[-1] == (False, [qs.index("w0000 -w0002")])  # residual
+
+    for q in qs:
+        assert fed.search(q, k=20) == single[q], q
+    assert fed.search_many(qs, k=20) == [single[q] for q in qs]
 
 
 def test_federated_explain_exposes_holes(spark, merge_env):

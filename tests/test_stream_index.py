@@ -14,7 +14,7 @@ from deusu_spark.build import build_index, current_index_dir
 from deusu_spark.incremental import stream_transcripts
 from deusu_spark.query_local import LocalSearcher
 
-KW = dict(fancy_threshold=100, seg_size=128, n_salts=2, bucket_groups=2)
+KW = dict(fancy_threshold=100, seg_size=128, n_salts=2)
 
 SCHEMA = (
     "conv_id string, turn_idx int, role string, text string, "

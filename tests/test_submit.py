@@ -39,7 +39,7 @@ JOB = textwrap.dedent(
     convs = synth.gen_transcripts(60)
     idx = sys.argv[1]
     build_index(spark, spark.createDataFrame(convs), idx,
-                fancy_threshold=300, seg_size=256, n_salts=2, bucket_groups=2)
+                fancy_threshold=300, seg_size=256, n_salts=2)
     oidx = oracle.build_index(convs, fancy_threshold=300)
     eng = SearchEngine(spark, idx)
     for q in ["linux", "linux ubuntu", "linux -google", "w0042"]:

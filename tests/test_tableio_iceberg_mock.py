@@ -123,7 +123,6 @@ def test_full_build_query_on_mock_iceberg(spark, mock_io, tiny_corpus, oracle_in
             fancy_threshold=300,
             seg_size=256,
             n_salts=4,
-            bucket_groups=2,
             io=io,
         )
         vdir = current_index_dir(d)
@@ -141,15 +140,16 @@ def test_full_build_query_on_mock_iceberg(spark, mock_io, tiny_corpus, oracle_in
 
 
 def test_resume_on_mock_iceberg(spark, mock_io):
-    """Crash after segments_g0 → resume reruns g1 + publish; the g1
-    overwritePartitions replaces its own buckets idempotently (stale rows
-    from the interrupted attempt don't survive, nothing else touched) and
-    the final index matches a fresh parquet build byte-for-byte."""
+    """Crash between the lexicon and segment steps → resume redoes only
+    segments + publish; the segments' overwritePartitions replaces the
+    buckets the interrupted attempt already committed (no duplicate rows
+    survive) and the final index matches a fresh parquet build
+    byte-for-byte."""
     io, cat = mock_io
     corpus = synth.gen_transcripts(50)
     dp = tempfile.mkdtemp(prefix="ice_ref_")
     di = tempfile.mkdtemp(prefix="ice_res_")
-    kw = dict(fancy_threshold=100, seg_size=128, n_salts=2, bucket_groups=2)
+    kw = dict(fancy_threshold=100, seg_size=128, n_salts=2)
     try:
         build_index(spark, spark.createDataFrame(corpus), dp, **kw)
 
@@ -160,13 +160,18 @@ def test_resume_on_mock_iceberg(spark, mock_io):
         keep = [
             line
             for line in open(lineage)
-            if json.loads(line)["step"] not in ("segments_g1", "publish")
+            if json.loads(line)["step"] not in ("segments_fused", "publish")
         ]
         with open(lineage, "w") as f:
             f.writelines(keep)
         os.remove(os.path.join(v, "meta.json"))
         m = build_index(spark, spark.createDataFrame(corpus), di, io=io, **kw)
         assert m["version"] == os.path.basename(v)
+        with open(lineage) as f:
+            steps = [json.loads(line)["step"] for line in f]
+        assert steps.count("lexicon") == 1  # lexicon was NOT redone
+        assert steps.count("segments_fused") == 1
+        assert steps.count("publish") == 1
 
         def fp(df):
             rows = df.select(

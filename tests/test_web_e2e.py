@@ -59,7 +59,7 @@ def web_index(spark, web_corpus):
     tx = as_transcripts(html_docs(df))
     d = tempfile.mkdtemp(prefix="deusu_web_")
     build_index(
-        spark, tx, d, fancy_threshold=10, seg_size=16, n_salts=2, bucket_groups=2
+        spark, tx, d, fancy_threshold=10, seg_size=16, n_salts=2
     )
     yield d
     shutil.rmtree(d, ignore_errors=True)
