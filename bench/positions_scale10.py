@@ -156,6 +156,8 @@ def main() -> None:
 
     import pyarrow.dataset as pads
 
+    from deusu_spark.queryplan import coarsen_intervals, merge_intervals
+
     ds = pads.dataset(pos_dir, partitioning="hive")
     total_segs = pm["n_segments"]
     prune = {}
@@ -167,7 +169,7 @@ def main() -> None:
             prune[q] = {"segments_read": 0, "of_total": total_segs,
                         "fraction": 0.0, "note": "no AND candidates"}
             continue
-        iv = posmod._candidate_intervals(cand)
+        iv = coarsen_intervals(merge_intervals(np.stack([cand, cand], axis=1)), 64)
         read = 0
         for _, t in pat:
             from zlib import crc32

@@ -670,6 +670,10 @@ def build_index(
         lin.record("lexicon", wall_s=round(time.time() - t0, 3))
 
     # ---- segments: one shuffle → sort → encode → write job -------------------
+    if "segments_fused" not in lin.done and n_docs == 0:
+        # fully-gated / empty corpus: nothing to encode (publish writes the
+        # empty tables)
+        lin.record("segments_fused", dict_encoded=False, eff_salts=n_salts, wall_s=0.0)
     if "segments_fused" not in lin.done:
         t0 = time.time()
         # one driver copy of the lexicon decides the shuffle layout: under
@@ -758,11 +762,15 @@ def build_index(
     # ---- publish ------------------------------------------------------------
     if "publish" not in lin.done:
         t0 = time.time()
-        if io.backend == "parquet" and not os.path.isdir(postings_dir):
+        if n_docs == 0:
             # fully-gated / empty corpus: publish a valid empty generation
+            # (schema-only tables, so both engines can open it)
             seg_stats = {"bytes": 0, "postings": 0, "segments": 0}
-            os.makedirs(postings_dir, exist_ok=True)
-            os.makedirs(lexicon_dir, exist_ok=True)
+            for schema, path in (
+                (SEGMENTS_SCHEMA, postings_dir),
+                ("bucket int, term string, df long", lexicon_dir),
+            ):
+                io.write(spark.createDataFrame([], schema), path)
             unique_words, word_occurrences, high_df = 0, 0, []
         else:
             seg_stats = segment_stats(io.read(postings_dir))
@@ -1112,7 +1120,7 @@ def _with_doc_id(
     for pid in sorted(counts):
         rows.append((pid, acc))
         acc += counts[pid]
-    off = spark.createDataFrame(rows, ["_pid", "_off"])
+    off = spark.createDataFrame(rows, "_pid int, _off long")
     return (
         stage_docs_df.join(F.broadcast(off), "_pid")
         .withColumn("doc_id", (F.col("_off") + F.col("_rn")).cast("long"))

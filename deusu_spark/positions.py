@@ -1,5 +1,5 @@
-"""Optional token-POSITIONS sidecar: build pass + positions-driven phrase
-verification.
+"""Optional token-POSITIONS sidecar: build pass + the per-doc kernels of
+positions-driven phrase, NEAR and proximity retrieval.
 
 The reference's postings are positionless by design (DbTypes.pas:119-127)
 — a deliberate, documented DEVIATION: at 100 TB a phrase query that
@@ -37,6 +37,17 @@ never pattern terms (they are unindexed). Build-side tokenization uses
 the same fold + body-token regex as the index (colfns.fold_col,
 ParserClass.pas:1173-1204); the query side folds the phrase with the
 python twin (textproc.fold / body_tokens), which is parity-tested.
+
+Query side: every engine tier (query_local.LocalSearcher and
+ShardedSearcher, query.SearchEngine) runs one request loop
+(query_local._SearchViews) and one set of per-doc kernels over
+``{term: {doc: positions}}``: ``phrase_docs`` (start intersection),
+``near_docs`` (near_window_match) and ``min_spans`` (min_cover_window).
+A tier supplies only the read of the candidates' positions, and both
+reads decode a segment with ``doc_positions``: the serving tier reads
+segments through pyarrow, the distributed tier scans them in Spark and
+collects only candidate docs' positions — bounded by candidates × terms ×
+positions per doc, and the verify loop bounds the candidates.
 """
 
 from __future__ import annotations
@@ -142,34 +153,19 @@ def build_positions(
         terms = pdf["term"].to_numpy()
         docs = pdf["doc_id"].to_numpy(np.int64)
         poss = pdf["tpos"].to_numpy(np.int64)
-        out = {k: [] for k in ("bucket", "term", "first_doc",
-                               "last_doc", "n", "blob")}
-        # term run boundaries in the sorted stream
-        change = np.flatnonzero(terms[1:] != terms[:-1]) + 1
-        starts = np.concatenate(([0], change, [len(pdf)]))
-        for si in range(len(starts) - 1):
-            lo, hi = int(starts[si]), int(starts[si + 1])
-            t = terms[lo]
-            d = docs[lo:hi]
-            p = poss[lo:hi]
-            # per-doc grouping (stream sorted by doc, then pos)
-            dchange = np.flatnonzero(d[1:] != d[:-1]) + 1
-            dstarts = np.concatenate(([0], dchange, [len(d)]))
-            udocs = d[dstarts[:-1]]
-            counts = np.diff(dstarts)
-            for s0 in range(0, len(udocs), seg_size):
-                s1 = min(s0 + seg_size, len(udocs))
-                flat_lo, flat_hi = int(dstarts[s0]), int(dstarts[s1])
-                blob = poscodec.encode_positions(
-                    udocs[s0:s1], counts[s0:s1], p[flat_lo:flat_hi]
-                )
-                out["bucket"].append(_crc(t) % 64)
-                out["term"].append(t)
-                out["first_doc"].append(int(udocs[s0]))
-                out["last_doc"].append(int(udocs[s1 - 1]))
-                out["n"].append(int(s1 - s0))
-                out["blob"].append(blob)
-        yield pd.DataFrame(out)
+
+        def runs():
+            # term runs of the sorted stream, then per-doc grouping (each
+            # run is sorted by doc, then pos)
+            change = np.flatnonzero(terms[1:] != terms[:-1]) + 1
+            starts = np.concatenate(([0], change, [len(pdf)]))
+            for lo, hi in zip(starts[:-1].tolist(), starts[1:].tolist()):
+                d = docs[lo:hi]
+                dchange = np.flatnonzero(d[1:] != d[:-1]) + 1
+                dstarts = np.concatenate(([0], dchange, [len(d)]))
+                yield terms[lo], d[dstarts[:-1]], np.diff(dstarts), poss[lo:hi]
+
+        yield _segment_frame(runs(), seg_size)
 
     segs = (
         rows.repartition(F.col("bucket"), F.col("salt"))
@@ -206,6 +202,30 @@ def _write_posmeta(
         json.dump({"seg_size": seg_size, "n_salts": n_salts,
                    "n_segments": n_segs, "n_docs": n_docs,
                    "version": os.path.basename(vdir)}, f)
+
+
+def _segment_frame(runs, seg_size: int) -> pd.DataFrame:
+    """POS_SCHEMA rows for ``runs`` of (term, docs, counts, positions) —
+    one term's ascending docs, their position counts and the flat
+    positions — chunked into segments of ``seg_size`` docs. The one
+    segment emitter of the sidecar build and its compaction."""
+    out = {k: [] for k in ("bucket", "term", "first_doc", "last_doc", "n", "blob")}
+    for t, d, c, p in runs:
+        cstarts = np.zeros(len(d) + 1, dtype=np.int64)
+        np.cumsum(c, out=cstarts[1:])
+        for s0 in range(0, len(d), seg_size):
+            s1 = min(s0 + seg_size, len(d))
+            out["bucket"].append(_crc(t) % 64)
+            out["term"].append(t)
+            out["first_doc"].append(int(d[s0]))
+            out["last_doc"].append(int(d[s1 - 1]))
+            out["n"].append(int(s1 - s0))
+            out["blob"].append(
+                poscodec.encode_positions(
+                    d[s0:s1], c[s0:s1], p[cstarts[s0]:cstarts[s1]]
+                )
+            )
+    return pd.DataFrame(out)
 
 
 def has_positions(vdir: str) -> bool:
@@ -270,32 +290,13 @@ def compact_positions(
         pdf = pd.concat(list(iterator), ignore_index=True)
         if len(pdf) == 0:
             return
-        out = {k: [] for k in ("bucket", "term", "first_doc",
-                               "last_doc", "n", "blob")}
-        for (t, _salt), g in pdf.groupby(["term", "salt"], sort=False):
-            ds, cs, ps = [], [], []
-            for blob in g["blob"]:
-                d, c, p = poscodec.decode_positions(bytes(blob))
-                ds.append(d)
-                cs.append(c)
-                ps.append(p)
-            d = np.concatenate(ds)
-            c = np.concatenate(cs)
-            p = np.concatenate(ps)
-            cstarts = np.zeros(len(d) + 1, dtype=np.int64)
-            np.cumsum(c, out=cstarts[1:])
-            for s0 in range(0, len(d), seg_size):
-                s1 = min(s0 + seg_size, len(d))
-                blob = poscodec.encode_positions(
-                    d[s0:s1], c[s0:s1], p[cstarts[s0]:cstarts[s1]]
-                )
-                out["bucket"].append(_crc(t) % 64)
-                out["term"].append(t)
-                out["first_doc"].append(int(d[s0]))
-                out["last_doc"].append(int(d[s1 - 1]))
-                out["n"].append(int(s1 - s0))
-                out["blob"].append(blob)
-        yield pd.DataFrame(out)
+
+        def runs():
+            for (t, _salt), g in pdf.groupby(["term", "salt"], sort=False):
+                dec = [poscodec.decode_positions(bytes(b)) for b in g["blob"]]
+                yield (t, *(np.concatenate(col) for col in zip(*dec)))
+
+        yield _segment_frame(runs(), seg_size)
 
     segs = (
         tbl.repartition(F.col("bucket"), F.col("salt"))
@@ -317,23 +318,6 @@ def phrase_pattern(phrase: str) -> list[tuple[int, str]]:
 
     toks = body_tokens(fold(phrase))
     return [(i, t) for i, t in enumerate(toks) if not is_fill_word(t)]
-
-
-def _candidate_intervals(docs: np.ndarray, max_n: int = 64) -> list:
-    """Merge sorted candidate doc ids into <= max_n [lo, hi] ranges (a
-    coarsened superset — decode filters exactly)."""
-    docs = np.sort(np.asarray(docs, dtype=np.int64))
-    gaps = np.diff(docs)
-    cut = np.flatnonzero(gaps > 1)
-    lo = np.concatenate(([docs[0]], docs[cut + 1]))
-    hi = np.concatenate((docs[cut], [docs[-1]]))
-    while len(lo) > max_n:
-        # merge the pair with the smallest inter-range gap
-        g = lo[1:] - hi[:-1]
-        j = int(np.argmin(g))
-        hi = np.delete(hi, j)
-        lo = np.delete(lo, j + 1)
-    return list(zip(lo.tolist(), hi.tolist()))
 
 
 def min_cover_window(pos_lists: list[np.ndarray]) -> int | None:
@@ -385,118 +369,62 @@ def near_window_match(
     return w is not None and (w - 1) < window
 
 
-def _decode_candidate_positions(
-    spark: SparkSession,
-    vdir: str,
-    ordinal: dict[str, int],
-    candidates: np.ndarray,
-    io=None,
-):
-    """(oi, doc_id, pos) rows for the given terms restricted to the
-    candidate docs: scan only the terms' segments overlapping the
-    candidates' doc ranges (pushed-down predicates), decode per segment,
-    keep candidate docs only. Shared by the phrase and NEAR verifiers."""
-    if io is None:
-        from .tableio import TableIO
-
-        io = TableIO(spark)
-    pos_tbl = io.read(os.path.join(vdir, "positions"))
-    ivs = _candidate_intervals(candidates)
-    rng = " OR ".join(
-        f"(first_doc <= {hi} AND last_doc >= {lo})" for lo, hi in ivs
-    )
-    conds = []
-    for t in ordinal:
-        tq = t.replace("'", "''")
-        conds.append(
-            f"(bucket = {_crc(t) % 64} AND term = '{tq}' AND ({rng}))"
-        )
-    segs = pos_tbl.where(F.expr(" OR ".join(conds))).select("term", "blob")
-    segs = segs.coalesce(2 * spark.sparkContext.defaultParallelism)
-    cand_bc = spark.sparkContext.broadcast(candidates)
-    ord_bc = spark.sparkContext.broadcast(ordinal)
-
-    def decode_fn(iterator):
-        cand = cand_bc.value
-        omap = ord_bc.value
-        for pdf in iterator:
-            ois, dids, ps = [], [], []
-            for term, blob in zip(pdf["term"], pdf["blob"]):
-                d, c, p = poscodec.decode_positions(bytes(blob))
-                idx = np.searchsorted(cand, d)
-                ok = idx < len(cand)
-                hit = np.zeros(len(d), dtype=bool)
-                hit[ok] = cand[idx[ok]] == d[ok]
-                if not hit.any():
-                    continue
-                keep_flat = np.repeat(hit, c)
-                d_flat = np.repeat(d, c)[keep_flat]
-                p_kept = p[keep_flat]
-                ois.append(
-                    np.full(len(d_flat), omap[term], dtype=np.int32)
-                )
-                dids.append(d_flat)
-                ps.append(p_kept)
-            if ois:
-                yield pd.DataFrame(
-                    {
-                        "oi": np.concatenate(ois),
-                        "doc_id": np.concatenate(dids),
-                        "pos": np.concatenate(ps),
-                    }
-                )
-
-    return segs.mapInPandas(
-        decode_fn, schema="oi int, doc_id long, pos long"
-    )
+def doc_positions(blob: bytes, cand: np.ndarray) -> dict[int, np.ndarray]:
+    """{doc: positions} of one positions segment, for the docs among the
+    sorted ids ``cand`` only — the per-blob step of every tier's read."""
+    d, c, p = poscodec.decode_positions(blob)
+    idx = np.searchsorted(cand, d)
+    ok = idx < len(cand)
+    hit = np.zeros(len(d), dtype=bool)
+    hit[ok] = cand[idx[ok]] == d[ok]
+    cstarts = np.zeros(len(d) + 1, dtype=np.int64)
+    np.cumsum(c, out=cstarts[1:])
+    return {
+        int(d[i]): p[cstarts[i]:cstarts[i + 1]] for i in np.flatnonzero(hit)
+    }
 
 
-def verify_phrase_docs(
-    spark: SparkSession,
-    vdir: str,
-    pattern: list[tuple[int, str]],
-    candidates: np.ndarray,
-    io=None,
-) -> np.ndarray:
-    """Doc ids among ``candidates`` that contain the phrase, verified
-    from the positions sidecar: candidate-range-pruned decode, then a
-    start-position intersection per doc in one applyInPandas pass
-    grouped by doc. Never touches ``text``."""
-    if not pattern or len(candidates) == 0:
-        return np.asarray([], dtype=np.int64)
-    candidates = np.sort(np.asarray(candidates, dtype=np.int64))
-    ordinal: dict[str, int] = {}
-    for oi, (_, t) in enumerate(pattern):
-        ordinal.setdefault(t, oi)  # duplicate terms share one decode
-    decoded = _decode_candidate_positions(
-        spark, vdir, ordinal, candidates, io=io
-    )
-    offsets = [off for off, _ in pattern]
-    pat_oi = [ordinal[t] for _, t in pattern]
+def _doc_lists(term_pos: dict, terms: list[str]):
+    """(doc, [positions of each term]) for the docs holding every term."""
+    for doc in term_pos.get(terms[0], {}):
+        lists = [term_pos.get(t, {}).get(doc) for t in terms]
+        if all(p is not None for p in lists):
+            yield doc, lists
 
-    def verify_group(pdf):
-        doc = int(pdf["doc_id"].iloc[0])
-        by_oi = {
-            int(oi): g["pos"].to_numpy(np.int64)
-            for oi, g in pdf.groupby("oi")
-        }
-        starts = None
-        for off, oi in zip(offsets, pat_oi):
-            p = by_oi.get(oi)
-            if p is None:
-                return pd.DataFrame({"doc_id": pd.Series([], dtype="int64")})
-            s = p - off
-            starts = s if starts is None else np.intersect1d(starts, s)
+
+def phrase_docs(term_pos: dict, pattern: list[tuple[int, str]]) -> set[int]:
+    """Docs of ``term_pos`` ({term: {doc: positions}}) holding the phrase
+    ``pattern`` ((offset, term) pairs): some start s with s + offset a
+    position of its term for every pair. A repeated term reads one list."""
+    out = set()
+    for doc, lists in _doc_lists(term_pos, [t for _, t in pattern]):
+        starts = lists[0] - pattern[0][0]
+        for (off, _), p in zip(pattern[1:], lists[1:]):
+            starts = np.intersect1d(starts, p - off)
             if len(starts) == 0:
-                return pd.DataFrame({"doc_id": pd.Series([], dtype="int64")})
-        return pd.DataFrame({"doc_id": [doc]})
+                break
+        if len(starts):
+            out.add(doc)
+    return out
 
-    matched = (
-        decoded.groupBy("doc_id")
-        .applyInPandas(verify_group, schema="doc_id long")
-        .collect()
-    )
-    return np.asarray(sorted(r["doc_id"] for r in matched), dtype=np.int64)
+
+def near_docs(term_pos: dict, uniq: list[str], window: int) -> set[int]:
+    """Docs of ``term_pos`` where every unique term occurs within one
+    ``window``-token span (near_window_match)."""
+    return {
+        doc
+        for doc, lists in _doc_lists(term_pos, uniq)
+        if near_window_match(lists, window)
+    }
+
+
+def min_spans(term_pos: dict, uniq: list[str]) -> dict[int, int]:
+    """{doc: minimal covering window span} of the docs of ``term_pos``
+    holding every unique term (min_cover_window); others are absent."""
+    return {
+        doc: min_cover_window(lists)
+        for doc, lists in _doc_lists(term_pos, uniq)
+    }
 
 
 PROXIMITY_SCALE = 10_000  # adjacency boost; integer-exact across engines
@@ -552,92 +480,3 @@ def proximity_rerank(fetch_rows, spans_of, k: int, n_terms: int):
             if lowest_base + PROXIMITY_SCALE < theta:
                 return [(d, s) for s, d in boosted[:k]]
         fetch *= 4
-
-
-def min_span_docs(
-    spark: SparkSession,
-    vdir: str,
-    terms: list[str],
-    candidates: np.ndarray,
-    io=None,
-) -> dict[int, int]:
-    """{doc: minimal covering window span} over the candidate docs for
-    the unique ``terms`` — the distributed spans_of for proximity-ranked
-    retrieval (same candidate-range-pruned segment decode as NEAR; the
-    per-doc reduction is the shared min_cover_window sweep). Docs without
-    full body co-occurrence are absent."""
-    if not terms or len(candidates) == 0:
-        return {}
-    candidates = np.sort(np.asarray(candidates, dtype=np.int64))
-    ordinal = {t: i for i, t in enumerate(dict.fromkeys(terms))}
-    decoded = _decode_candidate_positions(
-        spark, vdir, ordinal, candidates, io=io
-    )
-    n_terms = len(ordinal)
-
-    def span_group(pdf):
-        doc = int(pdf["doc_id"].iloc[0])
-        by_oi = {
-            int(oi): g["pos"].to_numpy(np.int64)
-            for oi, g in pdf.groupby("oi")
-        }
-        if len(by_oi) < n_terms:
-            return pd.DataFrame(
-                {"doc_id": pd.Series([], dtype="int64"),
-                 "span": pd.Series([], dtype="int64")}
-            )
-        w = min_cover_window([by_oi[i] for i in range(n_terms)])
-        return pd.DataFrame({"doc_id": [doc], "span": [int(w)]})
-
-    rows = (
-        decoded.groupBy("doc_id")
-        .applyInPandas(span_group, schema="doc_id long, span long")
-        .collect()
-    )
-    return {int(r["doc_id"]): int(r["span"]) for r in rows}
-
-
-def verify_near_docs(
-    spark: SparkSession,
-    vdir: str,
-    terms: list[str],
-    window: int,
-    candidates: np.ndarray,
-    io=None,
-) -> np.ndarray:
-    """Doc ids among ``candidates`` where every term in ``terms`` occurs
-    within one token window of size ``window`` (unordered proximity —
-    the NEAR/w operator the positions sidecar enables beyond exact
-    phrases). Same candidate-range-pruned decode as the phrase verify;
-    the per-doc check is the shared minimal-window sweep
-    (near_window_match)."""
-    if not terms or len(candidates) == 0:
-        return np.asarray([], dtype=np.int64)
-    candidates = np.sort(np.asarray(candidates, dtype=np.int64))
-    ordinal = {t: i for i, t in enumerate(dict.fromkeys(terms))}
-    decoded = _decode_candidate_positions(
-        spark, vdir, ordinal, candidates, io=io
-    )
-    n_terms = len(ordinal)
-    win = int(window)
-
-    def verify_group(pdf):
-        doc = int(pdf["doc_id"].iloc[0])
-        by_oi = {
-            int(oi): g["pos"].to_numpy(np.int64)
-            for oi, g in pdf.groupby("oi")
-        }
-        if len(by_oi) < n_terms:
-            return pd.DataFrame({"doc_id": pd.Series([], dtype="int64")})
-        if near_window_match(
-            [by_oi[i] for i in range(n_terms)], win
-        ):
-            return pd.DataFrame({"doc_id": [doc]})
-        return pd.DataFrame({"doc_id": pd.Series([], dtype="int64")})
-
-    matched = (
-        decoded.groupBy("doc_id")
-        .applyInPandas(verify_group, schema="doc_id long")
-        .collect()
-    )
-    return np.asarray(sorted(r["doc_id"] for r in matched), dtype=np.int64)

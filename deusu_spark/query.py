@@ -44,6 +44,14 @@ prefetch, the two-pass rule with its provable under-fill shortcut, and
 the search_many schedule. They differ only in how a pass runs:
 SearchEngine runs it on its own index, FederatedSearchEngine runs it on
 every part and merges.
+
+Pagination and the phrase, NEAR/w and proximity-ranked operators are
+``query_local._SearchViews``, the one implementation every engine tier
+shares: one request loop over this engine's search() and one set of
+per-doc numpy kernels (``positions``). SearchEngine supplies only the
+Spark read of the candidates' positions (``_candidate_positions``): a
+pruned scan of the positions sidecar, decoded in mapInPandas, whose
+candidate rows are collected to the driver.
 """
 
 from __future__ import annotations
@@ -64,13 +72,16 @@ from .build import current_index_dir
 from .constants import DEFAULT_WEIGHTS, MAX_RESULTS, SCORE_CLAMP
 from .queryplan import (
     PlanTerm,
+    coarsen_intervals,
     compile_query,
     explain_plan,
     is_fancy_term,
     lexicon_key,
+    merge_intervals,
     needs_fancy_pass,
     parse_query,
 )
+from .query_local import _SearchViews
 from .scoring import idf_scaled, location_mask, score_term, term_plan
 from .synth import crc32
 from .textproc import fold
@@ -282,7 +293,7 @@ class _Coordinator:
         return [_page(out.get(qi, []), k, mode) for qi in range(len(queries))]
 
 
-class SearchEngine(_Coordinator):
+class SearchEngine(_Coordinator, _SearchViews):
     def __init__(
         self,
         spark: SparkSession,
@@ -682,147 +693,6 @@ class SearchEngine(_Coordinator):
         }
         return out
 
-    def search_phrase(
-        self,
-        phrase: str,
-        k: int = 10,
-        weights: dict[str, int] | None = None,
-    ) -> list[tuple[int, int]]:
-        """Exact phrase top-k, verified from the POSITIONS sidecar
-        (build_index(positions=True)) instead of rescanning ``text`` —
-        the round-4 phrase/proximity index kind (a documented deviation
-        from the positionless reference, DbTypes.pas:119-127).
-
-        Plan: AND-retrieve the phrase's indexable terms in score order,
-        verify adjacency from positions (deusu_spark.positions), and page
-        the fetch up (×4) until k phrase matches are verified or the
-        candidate stream is exhausted — so the verify stage only ever
-        decodes candidate doc ranges, never the corpus. Scores are the
-        ordinary AND scores (rank-identical to search() on the same
-        terms); the phrase is a filter, exactly like the text-verify
-        oracle path."""
-        from .positions import (
-            has_positions,
-            phrase_pattern,
-            verify_phrase_docs,
-        )
-
-        if not has_positions(self.vdir):
-            raise RuntimeError(
-                "no positions sidecar on this index — build with "
-                "build_index(positions=True)"
-            )
-        pattern = phrase_pattern(phrase)
-        if not pattern:
-            return []
-        query = " ".join(t for _, t in pattern)
-        if len(pattern) == 1:
-            return self.search(query, k=k, weights=weights)
-        fetch = max(4 * k, 64)
-        verified: list[tuple[int, int]] = []
-        while True:
-            rows = self.search(query, k=fetch, weights=weights)
-            cand = np.asarray([d for d, _ in rows], dtype=np.int64)
-            ok = set(
-                verify_phrase_docs(
-                    self.spark, self.vdir, pattern, cand, io=self.io
-                ).tolist()
-            )
-            verified = [(d, s) for d, s in rows if d in ok]
-            if len(verified) >= k or len(rows) < fetch:
-                return verified[:k]
-            fetch *= 4
-
-    def search_near(
-        self,
-        query: str,
-        k: int = 10,
-        window: int = 8,
-        weights: dict[str, int] | None = None,
-    ) -> list[tuple[int, int]]:
-        """Unordered proximity top-k (NEAR/w): docs where EVERY indexable
-        query term occurs within one ``window``-token span, scored with
-        the plain AND scores — the proximity operator the positions
-        sidecar enables beyond exact phrases (same retrieve → verify →
-        page loop as search_phrase; window = phrase length degenerates
-        toward adjacency but unordered)."""
-        from .positions import (
-            has_positions,
-            phrase_pattern,
-            verify_near_docs,
-        )
-
-        if not has_positions(self.vdir):
-            raise RuntimeError(
-                "no positions sidecar on this index — build with "
-                "build_index(positions=True)"
-            )
-        terms = [t for _, t in phrase_pattern(query)]
-        if not terms:
-            return []
-        if len(set(terms)) == 1:
-            return self.search(terms[0], k=k, weights=weights)
-        qstr = " ".join(terms)
-        fetch = max(4 * k, 64)
-        verified: list[tuple[int, int]] = []
-        while True:
-            rows = self.search(qstr, k=fetch, weights=weights)
-            cand = np.asarray([d for d, _ in rows], dtype=np.int64)
-            ok = set(
-                verify_near_docs(
-                    self.spark, self.vdir, terms, window, cand, io=self.io
-                ).tolist()
-            )
-            verified = [(d, s) for d, s in rows if d in ok]
-            if len(verified) >= k or len(rows) < fetch:
-                return verified[:k]
-            fetch *= 4
-
-    def search_proximity(
-        self,
-        query: str,
-        k: int = 10,
-        weights: dict[str, int] | None = None,
-    ) -> list[tuple[int, int]]:
-        """Proximity-RANKED top-k: every AND result keeps its plain
-        integer score plus an exact-integer proximity boost
-        ``PROXIMITY_SCALE // (minimal_window_span − n_terms + 1)`` from
-        the positions sidecar (the standard 1/(window−k+1) proximity
-        term) — tight co-occurrences outrank scattered ones instead of
-        being a binary NEAR filter. Docs whose terms only co-occur
-        across title/url (no full body window) keep boost 0. Bounded
-        early termination: the base ranking pages ×4 until no unfetched
-        candidate can reach the current top-k (boost ≤ SCALE). The
-        reference has nothing like it — positions are the documented
-        deviation (DbTypes.pas:119-127); ranking semantics are pinned by
-        a brute-force text oracle + three-tier rank identity
-        (tests/test_proximity.py)."""
-        from .positions import (
-            has_positions,
-            min_span_docs,
-            phrase_pattern,
-            proximity_rerank,
-        )
-
-        if not has_positions(self.vdir):
-            raise RuntimeError(
-                "no positions sidecar on this index — build with "
-                "build_index(positions=True)"
-            )
-        terms = [t for _, t in phrase_pattern(query)]
-        if not terms:
-            return []
-        uniq = list(dict.fromkeys(terms))
-        qstr = " ".join(terms)
-        return proximity_rerank(
-            lambda fetch: self.search(qstr, k=fetch, weights=weights),
-            lambda cand: min_span_docs(
-                self.spark, self.vdir, uniq, cand, io=self.io
-            ),
-            k,
-            len(uniq),
-        )
-
     def fetch_results(self, rows: list[tuple[int, int]]):
         """Q15 (ShowLink, searchservernew.dpr:1166-1204): join the engine's
         (doc_id, score) rows back to display fields as a rerank.Candidates,
@@ -844,20 +714,56 @@ class SearchEngine(_Coordinator):
         }
         return Candidates.from_docmeta(rows, fetched)
 
-    def search_page(
-        self,
-        query: str,
-        startwith: int = 1,
-        showcount: int = 10,
-        **kw,
-    ) -> list[tuple[int, int]]:
-        """Pagination semantics — searchservernew.dpr:1820-1821,1328-1363:
-        startwith clamped 1..991, showcount 10..1000, results beyond 1000
-        never shown (startwith > 991 yields nothing beyond the top-1000)."""
-        startwith = min(max(startwith, 1), 991)
-        showcount = min(max(showcount, 10), 1000)
-        rows = self.search(query, k=min(startwith + showcount - 1, 1000), **kw)
-        return rows[startwith - 1 :]
+    def _candidate_positions(
+        self, terms, cand: np.ndarray
+    ) -> dict[str, dict[int, np.ndarray]]:
+        """term → {candidate doc → positions} for the sorted ids ``cand``:
+        one scan of the terms' positions segments, pushed down to their
+        bucket/term and the candidates' coarsened doc ranges and read
+        through ``self.io`` (Iceberg too), decoded by
+        positions.doc_positions in mapInPandas. Only candidate docs'
+        positions reach the driver: candidates × terms × positions per
+        doc, and the positional request loop bounds the candidates."""
+        from .positions import doc_positions
+
+        iv = coarsen_intervals(
+            merge_intervals(np.stack([cand, cand], axis=1)),
+            self.max_range_predicates,
+        )
+        rngs = " OR ".join(
+            f"(first_doc <= {hi} AND last_doc >= {lo})" for lo, hi in iv.tolist()
+        )
+        conds = []
+        for t in terms:
+            tq = t.replace("'", "''")
+            conds.append(f"(bucket = {crc32(t) % 64} AND term = '{tq}' AND ({rngs}))")
+        segs = self.io.read(os.path.join(self.vdir, "positions")).where(
+            F.expr(" OR ".join(conds))
+        )
+        cand_bc = self.spark.sparkContext.broadcast(cand)
+
+        def decode(iterator):
+            for pdf in iterator:
+                out = {"term": [], "doc_id": [], "pos": []}
+                for term, blob in zip(pdf["term"], pdf["blob"]):
+                    for d, p in doc_positions(bytes(blob), cand_bc.value).items():
+                        out["term"].append(term)
+                        out["doc_id"].append(d)
+                        out["pos"].append(p)
+                yield pd.DataFrame(out)
+
+        try:
+            rows = (
+                self._coalesce_scan(segs.select("term", "blob"))
+                .mapInPandas(decode, schema="term string, doc_id long, pos array<long>")
+                .collect()
+            )
+        finally:
+            cand_bc.unpersist()
+        term_pos: dict[str, dict[int, np.ndarray]] = {t: {} for t in terms}
+        for r in rows:
+            term_pos[r["term"]][r["doc_id"]] = np.asarray(r["pos"], dtype=np.int64)
+        return term_pos
 
     # -- one pass -------------------------------------------------------------
     def _run_pass(
@@ -955,7 +861,7 @@ class SearchEngine(_Coordinator):
         """Decode → score → AND/NOT → top-k, restricted to ``intervals``
         (None = everything). One declarative plan; no driver funnels."""
         if intervals is not None:
-            intervals = _coarsen_intervals(intervals, self.max_range_predicates)
+            intervals = coarsen_intervals(intervals, self.max_range_predicates)
         scored = self._decode_score(terms, use_fancy, intervals, None, w, mode)
         if scored is None:
             return []
@@ -1060,7 +966,7 @@ class SearchEngine(_Coordinator):
         n_a = min(int(np.searchsorted(np.cumsum(span), 2 * fetch)) + 1, len(by_bound))
         if n_a == len(by_bound):
             # everything is already in phase A — single pass, no pruning
-            iv = _merge_intervals(np.stack([alo, ahi], axis=1))
+            iv = merge_intervals(np.stack([alo, ahi], axis=1))
             rows = self._execute(
                 terms, pos, neg, seg_meta, iv, fetch, w, use_fancy, mode
             )
@@ -1069,7 +975,7 @@ class SearchEngine(_Coordinator):
             )
             return rows, len(rows)
         sel_a = by_bound[:n_a]
-        iv_a = _merge_intervals(np.stack([alo[sel_a], ahi[sel_a]], axis=1))
+        iv_a = merge_intervals(np.stack([alo[sel_a], ahi[sel_a]], axis=1))
         rows_a = self._execute(
             terms, pos, neg, seg_meta, iv_a, fetch, w, use_fancy, mode
         )
@@ -1084,7 +990,7 @@ class SearchEngine(_Coordinator):
             return rows, len(rows)
         theta = rows_a[fetch - 1][1]
         sel_b = ab >= (theta - len(pos))
-        iv_b = _merge_intervals(np.stack([alo[sel_b], ahi[sel_b]], axis=1))
+        iv_b = merge_intervals(np.stack([alo[sel_b], ahi[sel_b]], axis=1))
         rows = self._execute(
             terms, pos, neg, seg_meta, iv_b, fetch, w, use_fancy, mode
         )
@@ -1223,8 +1129,8 @@ class SearchEngine(_Coordinator):
             kq = key.replace("'", "''")
             c = f"(bucket = {b} AND term = '{kq}' AND kind = '{kind}'"
             if ivs is not None:
-                iv = _coarsen_intervals(
-                    _merge_intervals(np.concatenate(ivs)), per_key_cap
+                iv = coarsen_intervals(
+                    merge_intervals(np.concatenate(ivs)), per_key_cap
                 )
                 rngs = " OR ".join(
                     f"(first_doc <= {int(hi)} AND last_doc >= {int(lo)})"
@@ -1254,7 +1160,7 @@ class SearchEngine(_Coordinator):
             hc = F.col("host") == t.host
             iv_t = _iv_for(t, intervals, per_term_intervals)
             if iv_t is not None:
-                iv_t = _coarsen_intervals(iv_t, self.max_range_predicates)
+                iv_t = coarsen_intervals(iv_t, self.max_range_predicates)
                 doc_iv = None
                 for lo, hi in iv_t:
                     e = (F.col("doc_id") >= int(lo)) & (
@@ -1418,7 +1324,7 @@ class SearchEngine(_Coordinator):
         lasts = sm["last_doc"].to_numpy(np.int64)
 
         def decode(sel) -> list[tuple[int, int]]:
-            iv = _merge_intervals(np.stack([firsts[sel], lasts[sel]], axis=1))
+            iv = merge_intervals(np.stack([firsts[sel], lasts[sel]], axis=1))
             scored = self._decode_score([t], use_fancy, iv, None, w, "deusu")
             rows = scored.select("doc_id", "score").collect()
             return [(r["doc_id"], r["score"]) for r in rows]
@@ -1682,29 +1588,11 @@ def _intersect_coverage(
         if sub.empty:
             # a positive term with no postings: AND result is empty
             return None, True
-        iv = _merge_intervals(sub[["first_doc", "last_doc"]].to_numpy(np.int64))
+        iv = merge_intervals(sub[["first_doc", "last_doc"]].to_numpy(np.int64))
         inter = iv if inter is None else _intersect_intervals(inter, iv)
         if len(inter) == 0:
             return inter, True
     return inter, False
-
-
-def _coarsen_intervals(iv: np.ndarray, max_n: int) -> np.ndarray:
-    """Reduce a sorted, disjoint interval list to <= max_n intervals by
-    closing the smallest gaps — a SUPERSET of the input, so pruning built on
-    it stays correct; it just decodes a few extra segments. This is what
-    bounds every scan filter to a fixed number of range predicates instead
-    of multi-megabyte literals."""
-    if len(iv) <= max_n:
-        return iv
-    gaps = iv[1:, 0] - iv[:-1, 1]
-    keep = np.sort(np.argsort(-gaps, kind="stable")[: max_n - 1])
-    out, prev = [], 0
-    for g in keep:
-        out.append([iv[prev, 0], iv[g, 1]])
-        prev = g + 1
-    out.append([iv[prev, 0], iv[-1, 1]])
-    return np.array(out, dtype=np.int64)
 
 
 def _request(weights, prune: bool, mode: str) -> tuple[dict[str, int], bool]:
@@ -1897,19 +1785,6 @@ def _disjoint_bounded(
         np.array(out_hi, dtype=np.int64),
         np.array(out_b, dtype=np.float64),
     )
-
-
-def _merge_intervals(iv: np.ndarray) -> np.ndarray:
-    if len(iv) == 0:
-        return iv
-    iv = iv[np.argsort(iv[:, 0])]
-    out = [iv[0].tolist()]
-    for lo, hi in iv[1:]:
-        if lo <= out[-1][1] + 1:
-            out[-1][1] = max(out[-1][1], hi)
-        else:
-            out.append([lo, hi])
-    return np.array(out, dtype=np.int64)
 
 
 def _intersect_intervals(a: np.ndarray, b: np.ndarray) -> np.ndarray:

@@ -25,7 +25,12 @@ result cache, the reference's two-pass rule and batch search. They differ
 only in how a pass runs: LocalSearcher runs it on its own docs, while
 ShardedSearcher and FederatedSearcher (``_FanOut``) run it on every member
 searcher and merge. Each posting is scored by ``scoring.term_scores``, the
-kernel the distributed engine's Spark stages call too."""
+kernel the distributed engine's Spark stages call too.
+
+Pagination and phrase, NEAR/w and proximity-ranked retrieval are
+``_SearchViews``, which LocalSearcher, ShardedSearcher and the distributed
+query.SearchEngine all use; a tier supplies only the read of its
+candidates' positions."""
 
 from __future__ import annotations
 
@@ -127,32 +132,66 @@ class _Coordinator:
         return self._pass(terms, w, False, mode, fetch, 0)
 
 
-class _PositionalSearch:
-    """Phrase, NEAR/w and proximity-ranked retrieval over the positions
-    sidecar (build_index(positions=True)): the searcher's own search()
-    retrieves in score order and ``_on_owners(cand, fn)`` returns
-    ``fn(searcher, ids)`` for each searcher owning some of the sorted
-    candidate ids — so the single server and the sharded coordinator
-    are rank-identical (tested)."""
+class _SearchViews:
+    """Views over a tier's own ranked ``search()``, shared by every engine
+    tier (LocalSearcher, ShardedSearcher and query.SearchEngine): the
+    result page, and phrase, NEAR/w and proximity-ranked retrieval over
+    the positions sidecar (build_index(positions=True)).
 
-    def _require_positions(self) -> None:
-        from .positions import has_positions
+    The positional operators AND-retrieve in score order and check the
+    candidates with the per-doc kernels of ``positions``. A tier supplies
+    only ``_candidate_positions(terms, ids)`` → {term: {doc: positions}}
+    for sorted candidate ids (a pyarrow read on the serving tier, a Spark
+    scan on the distributed one). ``_on_owners(cand, fn)`` returns
+    ``fn(searcher, ids)`` for each searcher owning some of the sorted
+    candidate ids: the searcher itself, or, on ShardedSearcher, every
+    shard holding some of them. So all tiers are rank-identical (tested).
+    Positions are a documented deviation from the positionless reference
+    (DbTypes.pas:119-127): the verify decodes only the candidates'
+    segments and never rescans ``text``."""
+
+    def search_page(
+        self, query: str, startwith: int = 1, showcount: int = 10, **kw
+    ) -> list[tuple[int, int]]:
+        """Pagination — searchservernew.dpr:1820-1821,1328-1363:
+        startwith clamped 1..991, showcount 10..1000, results beyond 1000
+        never shown (startwith > 991 yields nothing beyond the top-1000)."""
+        startwith = min(max(startwith, 1), 991)
+        showcount = min(max(showcount, 10), 1000)
+        rows = self.search(query, k=min(startwith + showcount - 1, 1000), **kw)
+        return rows[startwith - 1 :]
+
+    def _on_owners(self, cand: np.ndarray, fn) -> list:
+        return [fn(self, cand)]
+
+    def _positional_pattern(self, query: str) -> list[tuple[int, str]]:
+        from .positions import has_positions, phrase_pattern
 
         if not has_positions(self.vdir):
             raise RuntimeError(
                 "no positions sidecar on this index — build with "
                 "build_index(positions=True)"
             )
+        return phrase_pattern(query)
 
-    def _verified_top(self, query, k, weights, verify_one):
-        """Top-k of ``query`` whose docs pass ``verify_one(searcher, ids)
-        -> set``: page the fetch ×4 until k verify or the candidate
-        stream ends; scores are the plain AND scores."""
+    def _per_owner(self, terms, cand: np.ndarray, kernel) -> list:
+        """``kernel({term: {doc: positions}})`` on each owner of the
+        sorted candidate ids, reading only the owner's candidates."""
+        if not len(cand):
+            return []
+        return self._on_owners(
+            cand, lambda sh, c: kernel(sh._candidate_positions(terms, c))
+        )
+
+    def _verified_top(self, query, terms, k, weights, kernel):
+        """Top-k of ``query`` whose docs are in ``kernel``'s set: page the
+        fetch ×4 until k verify or the candidate stream ends; scores are
+        the plain AND scores (the check is a filter)."""
         fetch = max(4 * k, 64)
         while True:
             rows = self.search(query, k=fetch, weights=weights)
             cand = np.asarray(sorted(d for d, _ in rows), dtype=np.int64)
-            ok = set().union(*self._on_owners(cand, verify_one))
+            ok = set().union(*self._per_owner(terms, cand, kernel))
             verified = [(d, s) for d, s in rows if d in ok]
             if len(verified) >= k or len(rows) < fetch:
                 return verified[:k]
@@ -164,21 +203,24 @@ class _PositionalSearch:
         k: int = 10,
         weights: dict[str, int] | None = None,
     ) -> list[tuple[int, int]]:
-        """Serving-tier phrase top-k — the exact twin of
-        SearchEngine.search_phrase: AND-retrieve in score order, verify
-        adjacency from decoded positions of the candidate docs only (on
-        the shard owning each), page the fetch ×4 until k matches verify."""
-        from .positions import phrase_pattern
+        """Exact phrase top-k: AND-retrieve the phrase's indexable terms in
+        score order and keep the docs where they occur at the phrase's
+        token offsets (positions.phrase_docs). Scores are the ordinary AND
+        scores, so this equals the text-verify oracle path."""
+        from .positions import phrase_docs
 
-        self._require_positions()
-        pattern = phrase_pattern(phrase)
+        pattern = self._positional_pattern(phrase)
         if not pattern:
             return []
         query = " ".join(t for _, t in pattern)
         if len(pattern) == 1:
             return self.search(query, k=k, weights=weights)
         return self._verified_top(
-            query, k, weights, lambda sh, c: sh._phrase_verify(pattern, c)
+            query,
+            {t for _, t in pattern},
+            k,
+            weights,
+            lambda tp: phrase_docs(tp, pattern),
         )
 
     def search_near(
@@ -188,13 +230,12 @@ class _PositionalSearch:
         window: int = 8,
         weights: dict[str, int] | None = None,
     ) -> list[tuple[int, int]]:
-        """Serving-tier unordered proximity top-k (NEAR/w) — the exact
-        twin of SearchEngine.search_near: plain AND scores, verified by
-        the shared minimal-window sweep (positions.near_window_match)."""
-        from .positions import phrase_pattern
+        """Unordered proximity top-k (NEAR/w): docs where every indexable
+        query term occurs within one ``window``-token span
+        (positions.near_docs), with the plain AND scores."""
+        from .positions import near_docs
 
-        self._require_positions()
-        terms = [t for _, t in phrase_pattern(query)]
+        terms = [t for _, t in self._positional_pattern(query)]
         if not terms:
             return []
         uniq = list(dict.fromkeys(terms))
@@ -202,9 +243,10 @@ class _PositionalSearch:
             return self.search(uniq[0], k=k, weights=weights)
         return self._verified_top(
             " ".join(terms),
+            uniq,
             k,
             weights,
-            lambda sh, c: sh._near_verify(uniq, int(window), c),
+            lambda tp: near_docs(tp, uniq, int(window)),
         )
 
     def search_proximity(
@@ -213,14 +255,15 @@ class _PositionalSearch:
         k: int = 10,
         weights: dict[str, int] | None = None,
     ) -> list[tuple[int, int]]:
-        """Serving-tier proximity-RANKED top-k — the exact twin of
-        SearchEngine.search_proximity (same shared rerank loop, boost and
-        sweep; rank-identical, tested): each owning searcher computes the
-        minimal windows of its own candidates."""
-        from .positions import phrase_pattern, proximity_rerank
+        """Proximity-RANKED top-k: every AND result keeps its plain integer
+        score plus ``PROXIMITY_SCALE // (minimal_window_span − n_terms +
+        1)`` (positions.proximity_boost; 0 without a full body window).
+        positions.proximity_rerank pages the base ranking ×4 until no
+        unfetched candidate can reach the top-k; each owner computes the
+        minimal windows of its own candidates (positions.min_spans)."""
+        from .positions import min_spans, proximity_rerank
 
-        self._require_positions()
-        terms = [t for _, t in phrase_pattern(query)]
+        terms = [t for _, t in self._positional_pattern(query)]
         if not terms:
             return []
         uniq = list(dict.fromkeys(terms))
@@ -228,8 +271,8 @@ class _PositionalSearch:
 
         def spans_of(cand: np.ndarray) -> dict[int, int]:
             out: dict[int, int] = {}
-            for part in self._on_owners(
-                cand, lambda sh, c: sh._min_spans(uniq, c)
+            for part in self._per_owner(
+                uniq, cand, lambda tp: min_spans(tp, uniq)
             ):
                 out.update(part)
             return out
@@ -242,7 +285,7 @@ class _PositionalSearch:
         )
 
 
-class LocalSearcher(_Coordinator, _PositionalSearch):
+class LocalSearcher(_Coordinator, _SearchViews):
     def __init__(
         self,
         index_root: str,
@@ -303,7 +346,7 @@ class LocalSearcher(_Coordinator, _PositionalSearch):
         sorted_hosts = hosts[host_order]
         bounds = np.flatnonzero(
             np.concatenate(([True], sorted_hosts[1:] != sorted_hosts[:-1]))
-        )
+        )[: len(sorted_hosts)]  # an empty corpus has no host runs
         for i, s in enumerate(bounds):
             e = bounds[i + 1] if i + 1 < len(bounds) else len(sorted_hosts)
             hd = np.sort(host_order[s:e]).astype(np.int64) + self.doc_lo
@@ -502,12 +545,12 @@ class LocalSearcher(_Coordinator, _PositionalSearch):
     search = _Coordinator.search
 
     def _candidate_positions(
-        self, terms: set[str], cand: np.ndarray
+        self, terms, cand: np.ndarray
     ) -> dict[str, dict[int, np.ndarray]]:
-        """term → {candidate doc → positions}, decoded from only the
-        positions segments overlapping the candidate range (shared by
-        the phrase and NEAR verifiers)."""
-        from . import poscodec
+        """term → {candidate doc → positions} for the sorted ids ``cand``,
+        decoded from only the positions segments overlapping the
+        candidate range."""
+        from .positions import doc_positions
 
         pos_ds = pads.dataset(
             os.path.join(self.vdir, "positions"), partitioning="hive"
@@ -522,95 +565,16 @@ class LocalSearcher(_Coordinator, _PositionalSearch):
                 & (pads.field("last_doc") >= lo),
                 columns=["blob"],
             )
-            per: dict[int, np.ndarray] = {}
+            term_pos[t] = {}
             for blob in tbl["blob"].to_pylist():
-                d, c, p = poscodec.decode_positions(blob)
-                idx = np.searchsorted(cand, d)
-                okm = idx < len(cand)
-                hit = np.zeros(len(d), dtype=bool)
-                hit[okm] = cand[idx[okm]] == d[okm]
-                if not hit.any():
-                    continue
-                cstarts = np.zeros(len(d) + 1, dtype=np.int64)
-                np.cumsum(c, out=cstarts[1:])
-                for di in np.flatnonzero(hit):
-                    per[int(d[di])] = p[cstarts[di] : cstarts[di + 1]]
-            term_pos[t] = per
+                term_pos[t].update(doc_positions(blob, cand))
         return term_pos
-
-    def _phrase_verify(
-        self, pattern: list[tuple[int, str]], cand: np.ndarray
-    ) -> set[int]:
-        """Docs among sorted ``cand`` containing the phrase."""
-        if len(cand) == 0:
-            return set()
-        term_pos = self._candidate_positions({t for _, t in pattern}, cand)
-        out: set[int] = set()
-        for doc in cand.tolist():
-            starts = None
-            okdoc = True
-            for off, t in pattern:
-                p = term_pos[t].get(doc)
-                if p is None:
-                    okdoc = False
-                    break
-                s = p - off
-                starts = s if starts is None else np.intersect1d(starts, s)
-                if len(starts) == 0:
-                    okdoc = False
-                    break
-            if okdoc and starts is not None and len(starts):
-                out.add(doc)
-        return out
-
-    def _near_verify(
-        self, uniq: list[str], window: int, cand: np.ndarray
-    ) -> set[int]:
-        """Docs among sorted ``cand`` where every term in ``uniq`` occurs
-        within one ``window``-token span (shared by the single-server and
-        sharded-coordinator NEAR paths)."""
-        from .positions import near_window_match
-
-        ok: set[int] = set()
-        if not len(cand):
-            return ok
-        term_pos = self._candidate_positions(set(uniq), cand)
-        for doc in cand.tolist():
-            lists = [term_pos[t].get(doc) for t in uniq]
-            if any(p is None for p in lists):
-                continue
-            if near_window_match(lists, window):
-                ok.add(doc)
-        return ok
-
-    def _min_spans(
-        self, uniq: list[str], cand: np.ndarray
-    ) -> dict[int, int]:
-        """{doc: minimal covering window span} over sorted ``cand`` for
-        the unique terms — the serving spans_of for proximity ranking
-        (shared min_cover_window sweep; docs without full body
-        co-occurrence absent)."""
-        from .positions import min_cover_window
-
-        out: dict[int, int] = {}
-        if not len(cand):
-            return out
-        term_pos = self._candidate_positions(set(uniq), cand)
-        for doc in cand.tolist():
-            lists = [term_pos[t].get(doc) for t in uniq]
-            if any(p is None for p in lists):
-                continue
-            out[doc] = int(min_cover_window(lists))
-        return out
 
     def _pass(self, terms, w, use_fancy, mode, fetch, min_count):
         docs, vals = self._run_pass(terms, w, use_fancy, mode)
         if len(docs) < min_count:
             return None
         return self._topk(docs, vals, fetch, is_float=mode == "bm25")
-
-    def _on_owners(self, cand: np.ndarray, fn) -> list:
-        return [fn(self, cand)]
 
     def fetch_results(self, rows: list[tuple[int, int]]):
         """Q15 (ShowLink, searchservernew.dpr:1166-1204): join the engine's
@@ -638,15 +602,6 @@ class LocalSearcher(_Coordinator, _PositionalSearch):
             memo=self._features,
             slot=loc,
         )
-
-    def search_page(
-        self, query: str, startwith: int = 1, showcount: int = 10, **kw
-    ) -> list[tuple[int, int]]:
-        """Pagination — searchservernew.dpr:1820-1821,1328-1363."""
-        startwith = min(max(startwith, 1), 991)
-        showcount = min(max(showcount, 10), 1000)
-        rows = self.search(query, k=min(startwith + showcount - 1, 1000), **kw)
-        return rows[startwith - 1 :]
 
     @staticmethod
     def _topk(docs, vals, k, is_float=False):
@@ -752,7 +707,7 @@ class _FanOut(_Coordinator):
         )
 
 
-class ShardedSearcher(_FanOut, _PositionalSearch):
+class ShardedSearcher(_FanOut, _SearchViews):
     """Doc-range-sharded serving tier — the beyond-10^8-docs design
     (round-2 review, Missing #4). LocalSearcher's per-doc sidecar vectors
     are its only O(n_docs) RAM; sharding the corpus into S contiguous doc

@@ -15,6 +15,8 @@ import math
 from dataclasses import dataclass
 from typing import Callable
 
+import numpy as np
+
 from . import textproc
 from .constants import MAX_QUERY_KEYWORDS, is_fill_word
 
@@ -219,3 +221,33 @@ def explain_plan(
             for t in terms
         ],
     }
+
+
+def merge_intervals(iv: np.ndarray) -> np.ndarray:
+    """Sorted, disjoint union of the inclusive [lo, hi] rows of ``iv``;
+    overlapping or adjacent intervals merge."""
+    if len(iv) == 0:
+        return iv
+    iv = iv[np.argsort(iv[:, 0], kind="stable")]
+    hi = np.maximum.accumulate(iv[:, 1])
+    starts = np.flatnonzero(np.concatenate(([True], iv[1:, 0] > hi[:-1] + 1)))
+    ends = np.concatenate((starts[1:], [len(iv)])) - 1
+    return np.stack([iv[starts, 0], hi[ends]], axis=1).astype(np.int64)
+
+
+def coarsen_intervals(iv: np.ndarray, max_n: int) -> np.ndarray:
+    """Reduce a sorted, disjoint interval list to <= max_n intervals by
+    closing the smallest gaps — a SUPERSET of the input, so pruning built on
+    it stays correct; it just decodes a few extra segments. This is what
+    bounds every scan filter to a fixed number of range predicates instead
+    of multi-megabyte literals."""
+    if len(iv) <= max_n:
+        return iv
+    gaps = iv[1:, 0] - iv[:-1, 1]
+    keep = np.sort(np.argsort(-gaps, kind="stable")[: max_n - 1])
+    out, prev = [], 0
+    for g in keep:
+        out.append([iv[prev, 0], iv[g, 1]])
+        prev = g + 1
+    out.append([iv[prev, 0], iv[-1, 1]])
+    return np.array(out, dtype=np.int64)

@@ -102,3 +102,33 @@ def test_unknown_gate_rejected(spark, tiny_corpus):
             ).withColumn("backlinks", F.lit(1).cast("long")),
             index_gate="nope",
         )
+
+
+def test_fully_gated_corpus_publishes_empty_index(spark, tiny_corpus):
+    """ignore_hosts naming every conversation gates out every document:
+    the build still publishes (an empty generation) and both engines
+    answer every query with no results."""
+    import json
+
+    from deusu_spark.query import SearchEngine
+
+    d = tempfile.mkdtemp(prefix="deusu_gate_empty_")
+    try:
+        corpus = tiny_corpus.head(40)
+        build_index(
+            spark,
+            spark.createDataFrame(corpus),
+            d,
+            fancy_threshold=10**9,
+            seg_size=256,
+            ignore_hosts=sorted(set(corpus["conv_id"])),
+        )
+        with open(f"{current_index_dir(d)}/meta.json") as f:
+            assert json.load(f)["n_docs"] == 0
+        ls = LocalSearcher(d)
+        eng = SearchEngine(spark, d)
+        for q in ("linux", "linux google", "linux -google", "host:conv00000001"):
+            assert ls.search(q, k=10) == [], q
+            assert eng.search(q, k=10) == [], q
+    finally:
+        shutil.rmtree(d, ignore_errors=True)

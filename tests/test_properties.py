@@ -8,12 +8,11 @@ from hypothesis import strategies as st
 
 from deusu_spark import codec
 from deusu_spark.query import (
-    _coarsen_intervals,
     _disjoint_bounded,
     _intersect_intervals,
-    _merge_intervals,
     _overlaps_any,
 )
+from deusu_spark.queryplan import coarsen_intervals, merge_intervals
 
 # --------------------------------------------------------------------------
 # codec: roundtrip + byte-parity with a deliberately naive reference encoder
@@ -115,7 +114,7 @@ def _covers(iv, x):
 @given(intervals)
 def test_merge_preserves_coverage(ivs):
     iv = np.array(ivs, dtype=np.int64).reshape(-1, 2)
-    out = _merge_intervals(iv)
+    out = merge_intervals(iv)
     # sorted + disjoint (with no mergeable adjacency left)
     assert all(out[i + 1][0] > out[i][1] + 1 for i in range(len(out) - 1))
     # same point coverage on a probe set
@@ -127,8 +126,8 @@ def test_merge_preserves_coverage(ivs):
 @settings(max_examples=200, deadline=None)
 @given(intervals, intervals)
 def test_intersection_is_conjunction(a, b):
-    A = _merge_intervals(np.array(a, dtype=np.int64).reshape(-1, 2))
-    B = _merge_intervals(np.array(b, dtype=np.int64).reshape(-1, 2))
+    A = merge_intervals(np.array(a, dtype=np.int64).reshape(-1, 2))
+    B = merge_intervals(np.array(b, dtype=np.int64).reshape(-1, 2))
     out = _intersect_intervals(A, B)
     probes = {x for lo, hi in list(a)[:6] + list(b)[:6] for x in (lo, hi)}
     for x in probes:
@@ -138,8 +137,8 @@ def test_intersection_is_conjunction(a, b):
 @settings(max_examples=200, deadline=None)
 @given(intervals, st.integers(1, 16))
 def test_coarsen_is_bounded_superset(ivs, max_n):
-    iv = _merge_intervals(np.array(ivs, dtype=np.int64).reshape(-1, 2))
-    out = _coarsen_intervals(iv, max_n)
+    iv = merge_intervals(np.array(ivs, dtype=np.int64).reshape(-1, 2))
+    out = coarsen_intervals(iv, max_n)
     assert len(out) <= max(max_n, 1)
     for lo, hi in iv:
         assert ((out[:, 0] <= lo) & (out[:, 1] >= hi)).any()
@@ -185,7 +184,7 @@ def test_overlaps_any_matches_bruteforce(rows, sel):
         return
     lo = np.array([r[0] for r in rows], dtype=np.int64)
     hi = np.array([r[1] for r in rows], dtype=np.int64)
-    inter = _merge_intervals(np.array(sel, dtype=np.int64).reshape(-1, 2))
+    inter = merge_intervals(np.array(sel, dtype=np.int64).reshape(-1, 2))
     got = _overlaps_any(lo, hi, inter)
     for i in range(len(lo)):
         want = any(lo[i] <= ihi and hi[i] >= ilo for ilo, ihi in inter.tolist())

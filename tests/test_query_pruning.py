@@ -8,12 +8,8 @@ pruning is an optimization, rank-identity is the contract."""
 import numpy as np
 import pytest
 
-from deusu_spark.query import (
-    SearchEngine,
-    _coarsen_intervals,
-    _intersect_coverage,
-    _merge_intervals,
-)
+from deusu_spark.query import SearchEngine, _intersect_coverage
+from deusu_spark.queryplan import coarsen_intervals, merge_intervals
 
 MULTI = [
     "linux google",
@@ -27,7 +23,7 @@ MULTI = [
 
 def test_coarsen_intervals_superset_and_bounded():
     iv = np.array([[i * 10, i * 10 + 3] for i in range(500)], dtype=np.int64)
-    out = _coarsen_intervals(iv, 64)
+    out = coarsen_intervals(iv, 64)
     assert len(out) <= 64
     # superset: every input interval is contained in some output interval
     for lo, hi in iv:
@@ -35,7 +31,7 @@ def test_coarsen_intervals_superset_and_bounded():
     # sorted + disjoint
     assert (out[1:, 0] > out[:-1, 1]).all()
     # small lists pass through untouched
-    assert (_coarsen_intervals(iv[:10], 64) == iv[:10]).all()
+    assert (coarsen_intervals(iv[:10], 64) == iv[:10]).all()
 
 
 def test_intersect_coverage_signals():
@@ -190,5 +186,5 @@ def test_no_isin_literals_in_decode(spark, tiny_index_dir):
 
 def test_merge_intervals_adjacent():
     iv = np.array([[0, 4], [5, 9], [20, 30]], dtype=np.int64)
-    out = _merge_intervals(iv)
+    out = merge_intervals(iv)
     assert [list(x) for x in out] == [[0, 9], [20, 30]]
