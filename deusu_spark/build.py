@@ -20,8 +20,10 @@ journal + idempotent per-stage reruns):
                   metadata (mapInArrow), and write — one job, no
                   intermediate posting files. Compaction and the merge's
                   fancy rebuild write through the same function.
-  stage publish   meta.json + CURRENT pointer → atomic index swap
-                  (the ready2.dat dual-path swap, GenDb.dpr:1354-1357)
+  stage publish   meta.json + info.txt + CURRENT pointer → atomic index
+                  swap (the ready2.dat dual-path swap, GenDb.dpr:1354-1357)
+                  through ``IndexVersion``, the version lifecycle every
+                  index writer shares; stage_docs is removed after it
 
 Resumable: each stage records a lineage row; rerunning build() skips
 completed stages.
@@ -509,6 +511,133 @@ class Lineage:
         self.done[step] = rec
 
 
+def _link_tree(src: str, dst: str) -> None:
+    """Hard-link every file of src into dst (same directory layout) —
+    zero-copy reuse of immutable parquet files across index versions."""
+    for root, _dirs, files in os.walk(src):
+        rel = os.path.relpath(root, src)
+        troot = os.path.join(dst, rel) if rel != "." else dst
+        os.makedirs(troot, exist_ok=True)
+        for f in files:
+            s, t = os.path.join(root, f), os.path.join(troot, f)
+            if not os.path.exists(t):
+                os.link(s, t)
+
+
+def _write_replacing(path: str, text: str) -> None:
+    """Write a file through a rename, so a hard link shared with an older
+    version keeps that version's bytes."""
+    with open(path + ".tmp", "w") as f:
+        f.write(text)
+    os.replace(path + ".tmp", path)
+
+
+class IndexVersion:
+    """One index version (``v_NNNN`` under ``root``) being written — the
+    lifecycle every writer shares (build, append, deletion, compaction,
+    merge; the reference's GenDb generation + ready2.dat swap):
+
+      open     resolve the base version and its meta (``base=True``:
+               CURRENT), pick the pending version dir, start its journal
+      carry    hard-link tables and files taken unchanged from a base
+      seal     write meta.json, and info.txt when the version wrote its
+               own lexicon
+      publish  record the lineage ``publish`` row, drop scratch dirs and
+               swap CURRENT through TableIO
+
+    The statistics a version records describe its own tables: a writer
+    that writes a lexicon seals with ``lexicon=True`` (unique_words,
+    word_occurrences, high_df_terms and info.txt derived from it); a
+    writer that links the lexicon carries info.txt and keeps the base's
+    figures."""
+
+    def __init__(self, root: str, base: bool = False):
+        os.makedirs(root, exist_ok=True)
+        self.root = root
+        self.base_vdir = current_index_dir(root) if base else None
+        self.base_meta: dict = {}
+        if base:
+            with open(os.path.join(self.base_vdir, "meta.json")) as f:
+                self.base_meta = json.load(f)
+        self.name = _pending_version(root)
+        self.vdir = os.path.join(root, self.name)
+        os.makedirs(self.vdir, exist_ok=True)
+        self.lin = Lineage(os.path.join(self.vdir, "_lineage.jsonl"))
+
+    def path(self, sub: str) -> str:
+        return os.path.join(self.vdir, sub)
+
+    def carry(self, *subs: str, src: str | None = None) -> None:
+        """Hard-link each of ``subs`` (postings, docmeta, lexicon,
+        tombstones, positions, info.txt) from ``src`` (default: the base)
+        into this version, each only if present there; a positions
+        sidecar only if its n_docs stamp is valid (has_positions)."""
+        from .positions import has_positions
+
+        src = src or self.base_vdir
+        for sub in subs:
+            s, d = os.path.join(src, sub), self.path(sub)
+            if sub == "positions" and not has_positions(src):
+                continue
+            if os.path.isdir(s):
+                _link_tree(s, d)
+            elif os.path.isfile(s) and not os.path.exists(d):
+                os.link(s, d)
+
+    def carry_positions(self, spark, io=None, delta=None):
+        """The base's positions sidecar in this version: linked and
+        extended with the ``delta`` transcripts (append; delta doc ids
+        sort after every base id), or re-segmented without one
+        (compaction). Both read n_docs from this version's meta.json, so
+        seal first. Returns the sidecar's segment count, None when the
+        base has no valid sidecar. A deletion carries it unchanged."""
+        from .positions import build_positions, compact_positions, has_positions
+
+        if not has_positions(self.base_vdir):
+            return None
+        if delta is None:
+            return compact_positions(spark, self.base_vdir, self.vdir, io=io)[
+                "n_segments"
+            ]
+        self.carry("positions")
+        with open(self.path("positions/_POSMETA.json")) as f:
+            pm = json.load(f)
+        return build_positions(
+            spark, delta, self.root, version=self.name,
+            seg_size=int(pm.get("seg_size", self.base_meta["seg_size"])),
+            n_salts=int(pm.get("n_salts", 8)), io=io, append=True,
+        )["n_segments"]
+
+    def seal(self, meta: dict, io, lexicon: bool = True) -> None:
+        """Write meta.json; with ``lexicon``, first derive the lexicon
+        statistics and info.txt from this version's lexicon table (read
+        through ``io``)."""
+        if lexicon:
+            lex_dir = self.path("lexicon")
+            thr = int(meta.get("info_df_threshold", INFO_DF_THRESHOLD))
+            uw, wo, high = lexicon_stats(
+                lex_dir, thr, lambda: io.read(lex_dir),
+                local=io.backend == "parquet",
+            )
+            write_info_txt(self.vdir, uw, wo, high)
+            meta.update(
+                unique_words=uw,
+                word_occurrences=wo,
+                high_df_terms=[[t, d] for t, d in high],
+            )
+        _write_replacing(self.path("meta.json"), json.dumps(meta, indent=1))
+
+    def publish(self, io, scratch: tuple[str, ...] = (), **row) -> None:
+        """Record the ``publish`` row, remove the ``scratch`` subdirs
+        (nothing reads them once published) and swap CURRENT: a CURRENT-
+        pointer swap (the ready2.dat analog) on parquet, a snapshot
+        bookkeeping commit plus the pointer on iceberg."""
+        self.lin.record("publish", **row)
+        for sub in scratch:
+            shutil.rmtree(self.path(sub), ignore_errors=True)
+        io.publish(self.root, self.name)
+
+
 def build_index(
     spark: SparkSession,
     transcripts: DataFrame,
@@ -533,7 +662,8 @@ def build_index(
     when its runtime + a catalog are configured, parquet dirs + CURRENT
     pointer otherwise. The stage_docs checkpoint and the tmp dirs are
     transient scratch and always live on the filesystem — they are the
-    resume granularity, not the published state.
+    resume granularity, not the published state, and stage_docs is
+    removed once the version is published.
 
     ``bucket_groups`` is accepted and ignored: it sized the per-bucket-group
     loop of the removed staged layout, and existing callers (the perfbench
@@ -544,17 +674,14 @@ def build_index(
     from .tableio import TableIO
 
     io = io or TableIO(spark)
-    os.makedirs(out_dir, exist_ok=True)
-    version = _pending_version(out_dir)
-    vdir = os.path.join(out_dir, version)
-    os.makedirs(vdir, exist_ok=True)
-    lin = Lineage(os.path.join(vdir, "_lineage.jsonl"))
+    pv = IndexVersion(out_dir)
+    lin, version = pv.lin, pv.name
     metrics: dict = {"version": version}
 
-    stage_docs = os.path.join(vdir, "stage_docs")
-    docmeta_dir = os.path.join(vdir, "docmeta")
-    lexicon_dir = os.path.join(vdir, "lexicon")
-    postings_dir = os.path.join(vdir, "postings")
+    stage_docs = pv.path("stage_docs")
+    docmeta_dir = pv.path("docmeta")
+    lexicon_dir = pv.path("lexicon")
+    postings_dir = pv.path("postings")
 
     # ---- stage docs -------------------------------------------------------
     if "docs" not in lin.done:
@@ -765,44 +892,32 @@ def build_index(
         if n_docs == 0:
             # fully-gated / empty corpus: publish a valid empty generation
             # (schema-only tables, so both engines can open it)
-            seg_stats = {"bytes": 0, "postings": 0, "segments": 0}
             for schema, path in (
                 (SEGMENTS_SCHEMA, postings_dir),
                 ("bucket int, term string, df long", lexicon_dir),
             ):
                 io.write(spark.createDataFrame([], schema), path)
-            unique_words, word_occurrences, high_df = 0, 0, []
-        else:
-            seg_stats = segment_stats(io.read(postings_dir))
-            unique_words, word_occurrences, high_df = lexicon_stats(
-                lexicon_dir,
-                info_df_threshold,
-                lambda: io.read(lexicon_dir),
-                local=io.backend == "parquet",
-            )
-        write_info_txt(vdir, unique_words, word_occurrences, high_df)
-        meta = {
-            "n_docs": int(n_docs),
-            "max_backlinks": int(max_bl),
-            "n_postings": int(total_postings),
-            "compressed_bytes": int(seg_stats["bytes"]),
-            "n_segments": int(seg_stats["segments"]),
-            "fancy_threshold": fancy_threshold,
-            "seg_size": seg_size,
-            "n_salts": int(eff_salts),
-            "n_buckets": N_TERM_BUCKETS,
-            "unique_words": unique_words,
-            "word_occurrences": word_occurrences,
-            "high_df_terms": [[t, d] for t, d in high_df],
-        }
-        with open(os.path.join(vdir, "meta.json"), "w") as f:
-            json.dump(meta, f, indent=1)
-        lin.record("publish", wall_s=round(time.time() - t0, 3), **{
-            "bytes": int(seg_stats["bytes"])
-        })
-        # atomic generation publish — CURRENT-pointer swap (ready2.dat
-        # analog) on parquet, snapshot/version table on iceberg
-        io.publish(out_dir, version)
+        seg_stats = segment_stats(io.read(postings_dir))
+        pv.seal(
+            {
+                "n_docs": int(n_docs),
+                "max_backlinks": int(max_bl),
+                "n_postings": int(total_postings),
+                "compressed_bytes": seg_stats["bytes"],
+                "n_segments": seg_stats["segments"],
+                "fancy_threshold": fancy_threshold,
+                "seg_size": seg_size,
+                "n_salts": eff_salts,
+                "n_buckets": N_TERM_BUCKETS,
+                "info_df_threshold": info_df_threshold,
+            },
+            io,
+        )
+        # stage_docs is resume scratch: nothing reads it once published
+        pv.publish(
+            io, scratch=("stage_docs",),
+            wall_s=round(time.time() - t0, 3), bytes=seg_stats["bytes"],
+        )
 
     # optional phrase/proximity sidecar (positions=True): its own resumable
     # step AFTER publish — the core index is identical with or without it
@@ -823,9 +938,8 @@ def build_index(
     build_wall = sum(r.get("wall_s", 0) for r in lin.done.values())
     metrics["wall_s"] = round(build_wall, 3)
     metrics["postings_per_s"] = round(total_postings / max(build_wall, 1e-9), 1)
-    with open(os.path.join(vdir, "meta.json")) as f:
-        metrics["compressed_bytes"] = json.load(f)["compressed_bytes"]
-    metrics["lineage"] = os.path.join(vdir, "_lineage.jsonl")
+    metrics["compressed_bytes"] = lin.done["publish"]["bytes"]
+    metrics["lineage"] = lin.path
     return metrics
 
 
@@ -1093,11 +1207,9 @@ def write_info_txt(
     as df right-aligned to width 10, a space and the term; then the
     totals. The reference appends per keys-step; here one report covers
     the whole generation."""
-    with open(os.path.join(vdir, "info.txt"), "w") as f:
-        for term, df_ in sorted(high_df, key=lambda x: x[0]):
-            f.write(f"{df_:10d} {term}\n")
-        f.write(f"UniqueWords={unique_words}\n")
-        f.write(f"WordOccurences={word_occurrences}\n")
+    lines = [f"{df_:10d} {term}\n" for term, df_ in sorted(high_df, key=lambda x: x[0])]
+    lines += [f"UniqueWords={unique_words}\n", f"WordOccurences={word_occurrences}\n"]
+    _write_replacing(os.path.join(vdir, "info.txt"), "".join(lines))
 
 
 def _with_doc_id(
@@ -1197,6 +1309,31 @@ def list_index_versions(out_dir: str) -> list[str]:
         for v in os.listdir(out_dir)
         if v.startswith("v_") and os.path.isdir(os.path.join(out_dir, v))
     )
+
+
+def write_tombstones(spark: SparkSession, vdir: str, sources, new=None) -> int:
+    """Write ``vdir``'s tombstone table: the distinct union of ``new`` (a
+    doc_id frame) and the tombstones of each (version dir, doc-id offset)
+    in ``sources``, shifted by the offset (a deletion passes its base at
+    0, a merge every shard at its offset). Returns the row count; writes
+    nothing and returns 0 when there is nothing to union."""
+    parts = [] if new is None else [new]
+    for src, off in sources:
+        tdir = os.path.join(src, "tombstones")
+        if os.path.isdir(tdir):
+            parts.append(
+                spark.read.parquet(tdir).select(
+                    (F.col("doc_id") + F.lit(off)).cast("long").alias("doc_id")
+                )
+            )
+    if not parts:
+        return 0
+    union = parts[0]
+    for p in parts[1:]:
+        union = union.unionByName(p)
+    dest = os.path.join(vdir, "tombstones")
+    union.distinct().write.mode("overwrite").parquet(dest)
+    return int(spark.read.parquet(dest).count())
 
 
 def load_tombstones(vdir: str):

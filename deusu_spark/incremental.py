@@ -11,7 +11,10 @@ Design:
   - delta posting segments are self-contained and doc-range-disjoint from
     old ones (delta doc_ids > all old doc_ids), so old segment files are
     reused verbatim (hard links) and only delta files are written
-  - lexicon is recomputed from segment METADATA (rows ∝ segments) — cheap
+  - lexicon is recomputed from segment METADATA (rows ∝ segments) — cheap;
+    its statistics and info.txt are derived from it, while bytes,
+    segments and postings are base + delta (exact: the version's postings
+    are exactly the base's files plus the delta's)
   - meta.max_backlinks = max(old, delta): the backlink value curve is
     computed query-side from meta, so a growing max applies to all docs,
     exactly like a full rebuild; stored block-max bounds stay valid upper
@@ -32,20 +35,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import build as buildmod
-from .build import Lineage, _pending_version, current_index_dir
-
-
-def _link_tree(src: str, dst: str) -> None:
-    """Hard-link every file of src into dst (same directory layout) —
-    zero-copy reuse of immutable parquet files across index versions."""
-    for root, _dirs, files in os.walk(src):
-        rel = os.path.relpath(root, src)
-        troot = os.path.join(dst, rel) if rel != "." else dst
-        os.makedirs(troot, exist_ok=True)
-        for f in files:
-            s, t = os.path.join(root, f), os.path.join(troot, f)
-            if not os.path.exists(t):
-                os.link(s, t)
+from .build import IndexVersion
+from .tableio import TableIO
 
 
 def incremental_update(
@@ -60,103 +51,57 @@ def incremental_update(
     delta build AND the positions sidecar append, so an Iceberg-backed
     index keeps its maintained sidecar inside the catalog seam."""
     io = build_kwargs.get("io")
-    old_vdir = current_index_dir(out_dir)
-    with open(os.path.join(old_vdir, "meta.json")) as f:
-        old_meta = json.load(f)
-
-    # build the delta into a scratch index with doc_ids offset by old n_docs
-    version = _pending_version(out_dir)
-    vdir = os.path.join(out_dir, version)
-    delta_dir = os.path.join(vdir, "_delta")
-    os.makedirs(delta_dir, exist_ok=True)
+    pv = IndexVersion(out_dir, base=True)
+    base = pv.base_meta
     t_start = time.time()
+    # build the delta into a scratch index with doc_ids offset by base n_docs
+    for key in ("fancy_threshold", "seg_size", "info_df_threshold"):
+        if key in base:
+            build_kwargs.setdefault(key, base[key])
     metrics = buildmod.build_index(
         spark,
         new_transcripts,
-        delta_dir,
-        doc_id_offset=old_meta["n_docs"],
-        fancy_threshold=build_kwargs.pop(
-            "fancy_threshold", old_meta["fancy_threshold"]
-        ),
-        seg_size=build_kwargs.pop("seg_size", old_meta["seg_size"]),
+        pv.path("_delta"),
+        doc_id_offset=base["n_docs"],
         **build_kwargs,
     )
-    delta_vdir = current_index_dir(delta_dir)
-
-    # merge: link old + delta files side by side
-    for sub in ("postings", "docmeta"):
-        _link_tree(os.path.join(old_vdir, sub), os.path.join(vdir, sub))
-        _link_tree(os.path.join(delta_vdir, sub), os.path.join(vdir, sub))
-    # logical deletions survive appends: carry the tombstone set forward
-    # (a full rebuild from a corpus without the deleted conversations is
-    # what finally clears them, like the reference's periodic GenDb run)
-    if os.path.isdir(os.path.join(old_vdir, "tombstones")):
-        _link_tree(
-            os.path.join(old_vdir, "tombstones"),
-            os.path.join(vdir, "tombstones"),
-        )
-
-    # recompute lexicon from merged segment metadata (no posting decode)
-    buildmod.lexicon_from_segments(
-        spark, os.path.join(vdir, "postings"), os.path.join(vdir, "lexicon")
-    )
-
+    delta_vdir = buildmod.current_index_dir(pv.path("_delta"))
     with open(os.path.join(delta_vdir, "meta.json")) as f:
-        delta_meta = json.load(f)
-    meta = dict(old_meta)
-    meta["n_docs"] = old_meta["n_docs"] + delta_meta["n_docs"]
-    meta["max_backlinks"] = max(
-        old_meta["max_backlinks"], delta_meta["max_backlinks"]
-    )
-    meta["n_postings"] = old_meta["n_postings"] + delta_meta["n_postings"]
-    meta["compressed_bytes"] = (
-        old_meta["compressed_bytes"] + delta_meta["compressed_bytes"]
-    )
-    with open(os.path.join(vdir, "meta.json"), "w") as f:
-        json.dump(meta, f, indent=1)
+        delta = json.load(f)
 
-    # positions sidecar: EXTEND it with the delta batch's segments (delta
-    # doc ids sort after all old ids, so per-term segment doc-range
-    # disjointness holds). Without this step the linked sidecar would be
-    # stale for the appended docs — has_positions' n_docs stamp would then
-    # read it as absent, so phrase/NEAR can never silently miss new docs.
-    from . import positions as posmod
+    # base + delta files side by side; logical deletions survive appends (a
+    # full rebuild from a corpus without the deleted conversations is what
+    # finally clears them, like the reference's periodic GenDb run)
+    pv.carry("postings", "docmeta", "tombstones")
+    pv.carry("postings", "docmeta", src=delta_vdir)
+    # the lexicon from merged segment metadata (no posting decode)
+    buildmod.lexicon_from_segments(spark, pv.path("postings"), pv.path("lexicon"))
 
-    if posmod.has_positions(old_vdir):
-        _link_tree(
-            os.path.join(old_vdir, "positions"),
-            os.path.join(vdir, "positions"),
-        )
-        with open(
-            os.path.join(old_vdir, "positions", "_POSMETA.json")
-        ) as f:
-            old_pm = json.load(f)
-        posmod.build_positions(
-            spark,
-            new_transcripts,
-            out_dir,
-            version=version,
-            seg_size=int(old_pm.get("seg_size", old_meta["seg_size"])),
-            n_salts=int(old_pm.get("n_salts", 8)),
-            io=io,
-            append=True,
-        )
-
-    lin = Lineage(os.path.join(vdir, "_lineage.jsonl"))
-    lin.record(
-        "publish",
-        delta_docs=delta_meta["n_docs"],
-        delta_postings=delta_meta["n_postings"],
+    meta = dict(base)
+    for key in ("n_docs", "n_postings", "compressed_bytes", "n_segments"):
+        meta[key] = base[key] + delta[key]
+    meta["max_backlinks"] = max(base["max_backlinks"], delta["max_backlinks"])
+    meta["info_df_threshold"] = delta["info_df_threshold"]
+    parquet_io = TableIO(spark)
+    pv.seal(meta, parquet_io)
+    # positions sidecar: EXTEND it with the delta batch's segments. Without
+    # this step the linked sidecar would be stale for the appended docs —
+    # has_positions' n_docs stamp would then read it as absent, so
+    # phrase/NEAR can never silently miss new docs.
+    pv.carry_positions(spark, io, delta=new_transcripts)
+    # atomic generation publish (the hard-link merge above is
+    # filesystem-specific by design; on an Iceberg deployment the delta
+    # would instead append via overwritePartitions)
+    pv.publish(
+        parquet_io,
+        scratch=("_delta",),
+        delta_docs=delta["n_docs"],
+        delta_postings=delta["n_postings"],
         wall_s=round(time.time() - t_start, 3),
-        base_version=os.path.basename(old_vdir),
+        base_version=os.path.basename(pv.base_vdir),
     )
-    # atomic generation publish through the storage seam (the hard-link
-    # merge above is filesystem-specific by design; on an Iceberg deployment
-    # the delta would instead append via overwritePartitions)
-    from .tableio import TableIO
-
-    TableIO(spark).publish(out_dir, version)
-    metrics["version"] = version
+    # the delta's own journal went with the scratch
+    metrics.update(version=pv.name, lineage=pv.lin.path)
     return metrics
 
 
@@ -170,77 +115,36 @@ def delete_conversations(
 
     Both query engines mask tombstoned docs at postings-decode time, so
     deleted docs can never appear in any result, count, or pruning decision.
-    Corpus statistics (df/idf, fancy lists, n_docs) intentionally stay as
-    built: surviving docs keep their exact pre-deletion scores, and the
-    stats refresh at the next full rebuild — the reference's model, where
-    deletions only ever take effect via the periodic GenDb rebuild + swap
-    (deusu.sh:3-9). Tombstone cardinality is takedown volume, orders below
-    n_docs, so the per-searcher sorted array / Spark broadcast is cheap.
+    Corpus statistics (df/idf, fancy lists, n_docs, info.txt) intentionally
+    stay as built: surviving docs keep their exact pre-deletion scores, and
+    the stats refresh at the next full rebuild — the reference's model,
+    where deletions only ever take effect via the periodic GenDb rebuild +
+    swap (deusu.sh:3-9). Tombstone cardinality is takedown volume, orders
+    below n_docs, so the per-searcher sorted array / Spark broadcast is
+    cheap. The positions sidecar stays valid (doc ids and n_docs unchanged;
+    candidates are tombstone-masked before any verify) and is linked too.
     """
-    old_vdir = current_index_dir(out_dir)
-    with open(os.path.join(old_vdir, "meta.json")) as f:
-        meta = json.load(f)
-    version = _pending_version(out_dir)
-    vdir = os.path.join(out_dir, version)
-    os.makedirs(vdir, exist_ok=True)
+    pv = IndexVersion(out_dir, base=True)
     t_start = time.time()
-    for sub in ("postings", "docmeta", "lexicon"):
-        _link_tree(os.path.join(old_vdir, sub), os.path.join(vdir, sub))
-    for f_ in ("info.txt",):
-        src = os.path.join(old_vdir, f_)
-        if os.path.exists(src):
-            os.link(src, os.path.join(vdir, f_))
-    # positions sidecar stays VALID across a takedown (doc ids and n_docs
-    # unchanged; candidates are tombstone-masked before any verify), so
-    # link it — phrase/NEAR keep working on the tombstoned version
-    from . import positions as posmod
-
-    if posmod.has_positions(old_vdir):
-        _link_tree(
-            os.path.join(old_vdir, "positions"),
-            os.path.join(vdir, "positions"),
-        )
-
+    pv.carry("postings", "docmeta", "lexicon", "positions", "info.txt")
     # resolve conversations -> doc_ids via docmeta (host == conversation)
-    new_tomb = (
-        spark.read.parquet(os.path.join(old_vdir, "docmeta"))
+    new = (
+        spark.read.parquet(os.path.join(pv.base_vdir, "docmeta"))
         .where(F.col("host").isin(list(conv_ids)))
         .select("doc_id")
     )
-    old_tomb_dir = os.path.join(old_vdir, "tombstones")
-    if os.path.isdir(old_tomb_dir):
-        new_tomb = new_tomb.unionByName(
-            spark.read.parquet(old_tomb_dir).select("doc_id")
-        )
-    new_tomb = new_tomb.distinct()
-    new_tomb.write.mode("overwrite").parquet(
-        os.path.join(vdir, "tombstones")
-    )
-    n_tomb = int(
-        spark.read.parquet(os.path.join(vdir, "tombstones")).count()
-    )
-
-    meta["n_tombstones"] = n_tomb
-    with open(os.path.join(vdir, "meta.json"), "w") as f:
-        json.dump(meta, f, indent=1)
-    lin = Lineage(os.path.join(vdir, "_lineage.jsonl"))
-    lin.record(
+    n_tomb = buildmod.write_tombstones(spark, pv.vdir, [(pv.base_vdir, 0)], new)
+    pv.lin.record(
         "tombstone",
         conv_ids=len(list(conv_ids)),
         n_tombstones=n_tomb,
         wall_s=round(time.time() - t_start, 3),
-        base_version=os.path.basename(old_vdir),
+        base_version=os.path.basename(pv.base_vdir),
     )
-    # mark the version PUBLISHED in its lineage: _pending_version treats a
-    # version without this step as a resumable unpublished leftover and
-    # would reuse (clobber) the dir on the next build/append — which
-    # silently destroyed pinned tombstone snapshots once a newer version
-    # took the CURRENT pointer
-    lin.record("publish", kind="tombstone")
-    from .tableio import TableIO
-
-    TableIO(spark).publish(out_dir, version)
-    return {"version": version, "n_tombstones": n_tomb}
+    io = TableIO(spark)
+    pv.seal({**pv.base_meta, "n_tombstones": n_tomb}, io, lexicon=False)
+    pv.publish(io, kind="tombstone")
+    return {"version": pv.name, "n_tombstones": n_tomb}
 
 
 def compact_index(spark: SparkSession, out_dir: str, io=None) -> dict:
@@ -263,9 +167,10 @@ def compact_index(spark: SparkSession, out_dir: str, io=None) -> dict:
         (``build.write_segments``) in one pass, emitting full + fancy
         segments with the hot set taken from the GLOBAL lexicon df —
         exactly what a from-scratch build would emit
-      - recompute lexicon + compressed-bytes stats; hard-link docmeta,
-        tombstones and info.txt (df is unchanged by construction); publish
-        as a new version via the atomic CURRENT swap
+      - recompute lexicon, its statistics and info.txt, and the
+        compressed-bytes stats; hard-link docmeta and tombstones;
+        re-segment the positions sidecar; publish as a new version via
+        the atomic CURRENT swap
 
     Logical content is untouched: same doc_ids, same df/idf, same integer
     scores, same tombstone masking — rank identity to the pre-compaction
@@ -277,17 +182,9 @@ def compact_index(spark: SparkSession, out_dir: str, io=None) -> dict:
     own (bucket, term-group, salt) grouping, minus tokenization (the
     dominant cost). Hot terms stay doc-range-salted across tasks like the
     build, so a 10^9-posting term never serializes through one task."""
-    from .tableio import TableIO
-
-    old_vdir = current_index_dir(out_dir)
-    with open(os.path.join(old_vdir, "meta.json")) as f:
-        meta = json.load(f)
-
-    version = _pending_version(out_dir)
-    vdir = os.path.join(out_dir, version)
-    os.makedirs(vdir, exist_ok=True)
+    pv = IndexVersion(out_dir, base=True)
+    base, old_vdir = pv.base_meta, pv.base_vdir
     t_start = time.time()
-    lin = Lineage(os.path.join(vdir, "_lineage.jsonl"))
 
     old_postings = os.path.join(old_vdir, "postings")
     old_stats = buildmod.segment_stats(spark.read.parquet(old_postings))
@@ -297,76 +194,54 @@ def compact_index(spark: SparkSession, out_dir: str, io=None) -> dict:
     hot_terms = frozenset(
         r["term"]
         for r in spark.read.parquet(os.path.join(old_vdir, "lexicon"))
-        .where(F.col("df") > int(meta["fancy_threshold"]))
+        .where(F.col("df") > int(base["fancy_threshold"]))
         .select("term")
         .collect()
     )
     rows = buildmod.decoded_postings(
         spark.read.parquet(old_postings).where(F.col("kind") == "full"),
         spark.read.parquet(os.path.join(old_vdir, "docmeta")),
-        int(meta["max_backlinks"]),
+        int(base["max_backlinks"]),
     )
     eff_salts = buildmod.write_segments(
         rows,
-        os.path.join(vdir, "postings"),
-        seg_size=int(meta["seg_size"]),
-        n_salts=int(meta.get("n_salts", 8)),
-        n_docs=int(meta["n_docs"]),
-        n_rows=int(meta["n_postings"]),
+        pv.path("postings"),
+        seg_size=int(base["seg_size"]),
+        n_salts=int(base.get("n_salts", 8)),
+        n_docs=int(base["n_docs"]),
+        n_rows=int(base["n_postings"]),
         hot_terms=hot_terms,
     )
     # lexicon: re-aggregate df from the new segment metadata (must equal
     # the old lexicon — compaction moves bytes, not postings)
-    buildmod.lexicon_from_segments(
-        spark, os.path.join(vdir, "postings"), os.path.join(vdir, "lexicon")
+    buildmod.lexicon_from_segments(spark, pv.path("postings"), pv.path("lexicon"))
+    pv.carry("docmeta", "tombstones")
+    new_stats = buildmod.segment_stats(spark.read.parquet(pv.path("postings")))
+    pv.seal(
+        {
+            **base,
+            "compressed_bytes": new_stats["bytes"],
+            "n_segments": new_stats["segments"],
+            "n_salts": int(eff_salts),
+            "compacted_from": os.path.basename(old_vdir),
+        },
+        TableIO(spark),
     )
-
-    _link_tree(os.path.join(old_vdir, "docmeta"), os.path.join(vdir, "docmeta"))
-    if os.path.isdir(os.path.join(old_vdir, "tombstones")):
-        _link_tree(
-            os.path.join(old_vdir, "tombstones"),
-            os.path.join(vdir, "tombstones"),
-        )
-    if os.path.exists(os.path.join(old_vdir, "info.txt")):
-        os.link(
-            os.path.join(old_vdir, "info.txt"), os.path.join(vdir, "info.txt")
-        )
-    new_stats = buildmod.segment_stats(
-        spark.read.parquet(os.path.join(vdir, "postings"))
-    )
-    meta = dict(meta)
-    meta["compressed_bytes"] = new_stats["bytes"]
-    meta["n_segments"] = new_stats["segments"]
-    meta["n_salts"] = int(eff_salts)
-    meta["compacted_from"] = os.path.basename(old_vdir)
-    with open(os.path.join(vdir, "meta.json"), "w") as f:
-        json.dump(meta, f, indent=1)
-
-    # positions sidecar: doc ids/n_docs are untouched by compaction (a
-    # linked-verbatim sidecar would stay valid), but appends fragment it
-    # like the postings — re-segment it through the same decode→re-encode
-    # pass (no re-tokenization; phrase/NEAR answers identical, tested)
-    from . import positions as posmod
-
-    pos_segments = None
-    if posmod.has_positions(old_vdir):
-        pos_segments = posmod.compact_positions(
-            spark, old_vdir, vdir, io=io
-        )["n_segments"]
-
+    # positions sidecar: appends fragment it like the postings —
+    # re-segment it through the same decode→re-encode pass (no
+    # re-tokenization; phrase/NEAR answers identical, tested)
     metrics = {
-        "version": version,
+        "version": pv.name,
         "segments_before": old_stats["segments"],
         "segments_after": new_stats["segments"],
         "bytes_before": old_stats["bytes"],
         "bytes_after": new_stats["bytes"],
         "n_hot_terms": len(hot_terms),
-        "positions_segments": pos_segments,
+        "positions_segments": pv.carry_positions(spark, io),
         "wall_s": round(time.time() - t_start, 3),
     }
-    lin.record("compact", **metrics)
-    lin.record("publish", kind="compact")
-    TableIO(spark).publish(out_dir, version)
+    pv.lin.record("compact", **metrics)
+    pv.publish(TableIO(spark), kind="compact")
     return metrics
 
 

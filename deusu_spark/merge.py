@@ -66,18 +66,16 @@ from pyspark.sql import functions as F
 from . import codec
 from .build import (
     SEGMENTS_SCHEMA,
+    IndexVersion,
     Lineage,
-    _pending_version,
+    _link_tree,
     current_index_dir,
     decoded_postings,
     lexicon_from_segments,
-    lexicon_stats,
     segment_stats,
-    write_info_txt,
     write_segments,
+    write_tombstones,
 )
-from .constants import INFO_DF_THRESHOLD
-from .incremental import _link_tree
 
 
 def _shift_segments_fn(offset: int):
@@ -179,17 +177,14 @@ def merge_indexes(
     max_bl = max(int(m["max_backlinks"]) for m in metas)
     n_salts = max(int(m.get("n_salts", 8)) for m in metas)
 
-    os.makedirs(out_dir, exist_ok=True)
-    version = _pending_version(out_dir)
-    vdir = os.path.join(out_dir, version)
-    os.makedirs(vdir, exist_ok=True)
-    lin = Lineage(os.path.join(vdir, "_lineage.jsonl"))
+    pv = IndexVersion(out_dir)
+    lin, vdir = pv.lin, pv.vdir
     io = TableIO(spark)
     t_start = time.time()
 
-    postings_dir = os.path.join(vdir, "postings")
-    docmeta_dir = os.path.join(vdir, "docmeta")
-    lexicon_dir = os.path.join(vdir, "lexicon")
+    postings_dir = pv.path("postings")
+    docmeta_dir = pv.path("docmeta")
+    lexicon_dir = pv.path("lexicon")
 
     # ---- shard 0: zero-copy links; shards 1..k: doc_id-shift rewrite -----
     for i, (vd, off) in enumerate(zip(vdirs, offsets)):
@@ -197,8 +192,7 @@ def merge_indexes(
         if step in lin.done:
             continue
         if off == 0:
-            for sub in ("postings", "docmeta"):
-                _link_tree(os.path.join(vd, sub), os.path.join(vdir, sub))
+            pv.carry("postings", "docmeta", src=vd)
             lin.record(step, offset=0)
             continue
         stage = os.path.join(vdir, f"_stage_shard_{i}")
@@ -230,28 +224,7 @@ def merge_indexes(
     # ---- tombstones: shard-shifted union (takedowns survive the merge) ---
     if "tombstones" not in lin.done:
         t0 = time.time()
-        tomb_parts = []
-        for vd, off in zip(vdirs, offsets):
-            tdir = os.path.join(vd, "tombstones")
-            if os.path.isdir(tdir):
-                tomb_parts.append(
-                    spark.read.parquet(tdir).select(
-                        (F.col("doc_id") + F.lit(off))
-                        .cast("long")
-                        .alias("doc_id")
-                    )
-                )
-        n_tomb = 0
-        if tomb_parts:
-            t = tomb_parts[0]
-            for p in tomb_parts[1:]:
-                t = t.unionByName(p)
-            t.distinct().write.mode("overwrite").parquet(
-                os.path.join(vdir, "tombstones")
-            )
-            n_tomb = int(
-                spark.read.parquet(os.path.join(vdir, "tombstones")).count()
-            )
+        n_tomb = write_tombstones(spark, vdir, zip(vdirs, offsets))
         lin.record("tombstones", n=n_tomb, wall_s=round(time.time() - t0, 3))
 
     # ---- lexicon: re-aggregate df from merged segment metadata -----------
@@ -355,13 +328,8 @@ def merge_indexes(
     # ---- publish ----------------------------------------------------------
     if "publish" not in lin.done:
         seg_stats = segment_stats(spark.read.parquet(postings_dir))
-        unique_words, word_occurrences, high_df = lexicon_stats(
-            lexicon_dir,
-            INFO_DF_THRESHOLD,
-            lambda: spark.read.parquet(lexicon_dir),
-        )
-        write_info_txt(vdir, unique_words, word_occurrences, high_df)
         meta = dict(metas[0])
+        meta.pop("n_tombstones", None)
         meta.update(
             {
                 "n_docs": int(n_docs),
@@ -370,9 +338,6 @@ def merge_indexes(
                 "compressed_bytes": seg_stats["bytes"],
                 "n_segments": seg_stats["segments"],
                 "n_salts": n_salts,
-                "unique_words": unique_words,
-                "word_occurrences": word_occurrences,
-                "high_df_terms": [[t, d] for t, d in high_df],
                 "merged_from": [
                     {"dir": d, "n_docs": int(m["n_docs"]), "offset": o}
                     for d, m, o in zip(index_dirs, metas, offsets)
@@ -382,16 +347,10 @@ def merge_indexes(
         n_tomb = int(lin.done["tombstones"].get("n", 0))
         if n_tomb:
             meta["n_tombstones"] = n_tomb
-        else:
-            meta.pop("n_tombstones", None)
-        with open(os.path.join(vdir, "meta.json"), "w") as f:
-            json.dump(meta, f, indent=1)
-        lin.record(
-            "publish", kind="merge", wall_s=round(time.time() - t_start, 3)
-        )
-        io.publish(out_dir, version)
+        pv.seal(meta, io)
+        pv.publish(io, kind="merge", wall_s=round(time.time() - t_start, 3))
     return {
-        "version": version,
+        "version": pv.name,
         "n_docs": int(n_docs),
         "n_postings": int(sum(int(m["n_postings"]) for m in metas)),
         "wall_s": round(time.time() - t_start, 3),

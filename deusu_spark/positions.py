@@ -186,22 +186,22 @@ def _write_posmeta(
     pos_dir: str, seg_size: int, n_salts: int, n_segs: int,
     n_docs: int, vdir: str,
 ) -> None:
-    """Write ``_POSMETA.json`` with the unlink-before-write guard.
+    """Write ``_POSMETA.json`` through a rename.
 
     The stamp lives in the version dir on the filesystem either way (like
     meta.json/_lineage.jsonl) — the catalog holds the table data. The file
-    may be a hard link shared with an older version's sidecar (_link_tree
-    in incremental_update), so unlink before writing: a truncating open()
-    would otherwise rewrite the OLD version's stamp through the shared
-    inode."""
+    may be a hard link shared with an older version's sidecar
+    (IndexVersion.carry in an append), so a truncating open() would
+    rewrite the OLD version's stamp through the shared inode."""
+    from .build import _write_replacing
+
     os.makedirs(pos_dir, exist_ok=True)
-    pm_path = os.path.join(pos_dir, "_POSMETA.json")
-    if os.path.exists(pm_path):
-        os.remove(pm_path)
-    with open(pm_path, "w") as f:
-        json.dump({"seg_size": seg_size, "n_salts": n_salts,
-                   "n_segments": n_segs, "n_docs": n_docs,
-                   "version": os.path.basename(vdir)}, f)
+    _write_replacing(
+        os.path.join(pos_dir, "_POSMETA.json"),
+        json.dumps({"seg_size": seg_size, "n_salts": n_salts,
+                    "n_segments": n_segs, "n_docs": n_docs,
+                    "version": os.path.basename(vdir)}),
+    )
 
 
 def _segment_frame(runs, seg_size: int) -> pd.DataFrame:

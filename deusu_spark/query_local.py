@@ -186,12 +186,19 @@ class _SearchViews:
     def _verified_top(self, query, terms, k, weights, kernel):
         """Top-k of ``query`` whose docs are in ``kernel``'s set: page the
         fetch ×4 until k verify or the candidate stream ends; scores are
-        the plain AND scores (the check is a filter)."""
+        the plain AND scores (the check is a filter). The check is per
+        doc, so each page checks only the candidates no earlier page
+        checked."""
         fetch = max(4 * k, 64)
+        checked: set[int] = set()
+        ok: set[int] = set()
         while True:
             rows = self.search(query, k=fetch, weights=weights)
-            cand = np.asarray(sorted(d for d, _ in rows), dtype=np.int64)
-            ok = set().union(*self._per_owner(terms, cand, kernel))
+            cand = np.asarray(
+                sorted(d for d, _ in rows if d not in checked), dtype=np.int64
+            )
+            ok.update(*self._per_owner(terms, cand, kernel))
+            checked.update(cand.tolist())
             verified = [(d, s) for d, s in rows if d in ok]
             if len(verified) >= k or len(rows) < fetch:
                 return verified[:k]
@@ -489,15 +496,8 @@ class LocalSearcher(_Coordinator, _SearchViews):
         t = fold(term.lower()) if term else term
         if not t or self.term_df(t) > 0:
             return []
-        dmap = self._suggest_map()
-        cands: set[str] = set()
-        for key in _deletions(t) | {t}:
-            cands.update(dmap.get(key, ()))
-        scored = sorted(
-            ((self._suggest_df[c], c) for c in cands if _lev_le1(t, c)),
-            key=lambda x: (-x[0], x[1]),
-        )
-        return [c for _, c in scored[:k]]
+        cands = self._suggest_candidates(t)
+        return sorted(cands, key=lambda c: (-self._suggest_df[c], c))[:k]
 
     def _suggest_candidates(self, t: str) -> set[str]:
         """ALL verified edit-distance<=1 lexicon terms for a folded term —

@@ -129,3 +129,27 @@ def test_proximity_pages_then_stops_early(spark, pager_index, monkeypatch, k):
         fetches = _spy_fetches(monkeypatch, s)
         assert s.search_proximity("alpha beta", k=k) == want, name
         assert fetches == [64, 256], (name, fetches)
+
+
+def test_refetch_checks_each_candidate_once(spark, pager_index, monkeypatch):
+    """The ×4 re-fetch returns the earlier fetch's candidates again; the
+    per-doc check must read each candidate's positions once (270 AND
+    candidates over fetches of 100 and 400, not 100 + 270)."""
+    root, eng, _doc_text = pager_index
+    for name, s in _tiers(root, eng):
+        seen: list[int] = []
+        for owner in getattr(s, "shards", [s]):
+            read = owner._candidate_positions
+
+            def counting(terms, cand, read=read):
+                seen.extend(int(d) for d in cand)
+                return read(terms, cand)
+
+            monkeypatch.setattr(owner, "_candidate_positions", counting)
+        for op in (
+            lambda: s.search_phrase("alpha beta", k=25),
+            lambda: s.search_near("alpha beta", k=25, window=4),
+        ):
+            seen.clear()
+            op()
+            assert len(seen) == len(set(seen)) == N_NOISE + N_PHRASE + N_NEAR, name

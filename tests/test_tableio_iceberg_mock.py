@@ -22,6 +22,7 @@ from deusu_spark import synth
 from deusu_spark.build import build_index, current_index_dir
 from deusu_spark.tableio import TableIO
 from tests.iceberg_mock import install_mock_iceberg
+from tests.test_resume import _crash_at
 
 
 @pytest.fixture()
@@ -139,7 +140,7 @@ def test_full_build_query_on_mock_iceberg(spark, mock_io, tiny_corpus, oracle_in
         shutil.rmtree(d, ignore_errors=True)
 
 
-def test_resume_on_mock_iceberg(spark, mock_io):
+def test_resume_on_mock_iceberg(spark, mock_io, monkeypatch):
     """Crash between the lexicon and segment steps → resume redoes only
     segments + publish; the segments' overwritePartitions replaces the
     buckets the interrupted attempt already committed (no duplicate rows
@@ -153,20 +154,15 @@ def test_resume_on_mock_iceberg(spark, mock_io):
     try:
         build_index(spark, spark.createDataFrame(corpus), dp, **kw)
 
-        build_index(spark, spark.createDataFrame(corpus), di, io=io, **kw)
-        v = current_index_dir(di)
-        os.remove(os.path.join(di, "CURRENT"))
-        lineage = os.path.join(v, "_lineage.jsonl")
-        keep = [
-            line
-            for line in open(lineage)
-            if json.loads(line)["step"] not in ("segments_fused", "publish")
-        ]
-        with open(lineage, "w") as f:
-            f.writelines(keep)
-        os.remove(os.path.join(v, "meta.json"))
+        with monkeypatch.context() as mp:
+            _crash_at(mp, "segments_fused")
+            with pytest.raises(RuntimeError):
+                build_index(spark, spark.createDataFrame(corpus), di, io=io, **kw)
+        assert not os.path.exists(os.path.join(di, "CURRENT"))
         m = build_index(spark, spark.createDataFrame(corpus), di, io=io, **kw)
+        v = current_index_dir(di)
         assert m["version"] == os.path.basename(v)
+        lineage = os.path.join(v, "_lineage.jsonl")
         with open(lineage) as f:
             steps = [json.loads(line)["step"] for line in f]
         assert steps.count("lexicon") == 1  # lexicon was NOT redone
