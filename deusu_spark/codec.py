@@ -27,49 +27,11 @@ def encode(doc_ids: np.ndarray, flags: np.ndarray, prev_doc: int = 0) -> bytes:
     """Encode ascending doc_ids (int64) + flags (0..7) into a varbyte blob.
 
     Mirrors rwi.pas:76-153. ``prev_doc`` is the doc id the first gap is
-    relative to (0 for a self-contained / first segment).
+    relative to (0 for a self-contained / first segment): one segment of
+    :func:`encode_segments`, shifted so that its head gap starts there.
     """
-    n = len(doc_ids)
-    if n == 0:
-        return b""
-    doc_ids = np.asarray(doc_ids, dtype=np.int64)
-    flags = np.asarray(flags, dtype=np.int64)
-    gaps = np.diff(doc_ids, prepend=np.int64(prev_doc))
-    if n and (gaps[1:] <= 0).any():
-        raise ValueError("doc_ids must be strictly ascending")
-    if gaps[0] < 0:
-        raise ValueError("first doc_id is below prev_doc")
-
-    first = (flags & 7) | ((gaps & 15) << 3)
-    rest = gaps >> 4
-    first = np.where(rest > 0, first | 128, first)
-
-    # continuation byte count per posting
-    nbytes = np.ones(n, dtype=np.int64)
-    r = rest.copy()
-    while True:
-        m = r > 0
-        if not m.any():
-            break
-        nbytes[m] += 1
-        r >>= 7
-
-    offsets = np.zeros(n, dtype=np.int64)
-    np.cumsum(nbytes[:-1], out=offsets[1:])
-    out = np.zeros(int(nbytes.sum()), dtype=np.uint8)
-    out[offsets] = first.astype(np.uint8)
-
-    r = rest.copy()
-    k = 0
-    while True:
-        m = r > 0
-        if not m.any():
-            break
-        k += 1
-        chunk = r[m] & 127
-        more = (r[m] >> 7) > 0
-        out[offsets[m] + k] = (chunk | np.where(more, 128, 0)).astype(np.uint8)
-        r >>= 7
+    shifted = np.asarray(doc_ids, dtype=np.int64) - np.int64(prev_doc)
+    _, out = encode_segments(shifted, flags, np.zeros(1, dtype=np.int64))
     return out.tobytes()
 
 

@@ -35,15 +35,16 @@ Scale levers (all exercised even though tests run on local[32]):
 
 Every posting is scored inside the ``mapInPandas`` stages by
 ``scoring.score_term``, the same numpy kernel the serving tier
-(query_local) calls on its resident sidecars; the two-pass predicate is
-``queryplan.needs_fancy_pass``, shared with it too.
+(query_local) calls on its resident sidecars.
 
-SearchEngine and FederatedSearchEngine share one request path
-(``_Coordinator``, the twin of query_local's): the one-job term-metadata
-prefetch, the two-pass rule with its provable under-fill shortcut, and
-the search_many schedule. They differ only in how a pass runs:
-SearchEngine runs it on its own index, FederatedSearchEngine runs it on
-every part and merges.
+The request rules are the one ``query_local._Coordinator`` every
+searcher shares: compile, explain, suggest, the fancy-hole rule and the
+two-pass rule, here with its provable under-fill shortcut
+(``_fancy_bound``). ``_Distributed`` adds what only this tier does: the
+one-job term-metadata prefetch, query_info and the search_many schedule.
+SearchEngine and FederatedSearchEngine differ only in how a pass runs:
+SearchEngine runs it on its own index, FederatedSearchEngine (a
+``query_local._Federation``) runs it on every part and merges.
 
 Pagination and the phrase, NEAR/w and proximity-ranked operators are
 ``query_local._SearchViews``, the one implementation every engine tier
@@ -73,18 +74,13 @@ from .constants import DEFAULT_WEIGHTS, MAX_RESULTS, SCORE_CLAMP
 from .queryplan import (
     PlanTerm,
     coarsen_intervals,
-    compile_query,
-    explain_plan,
-    is_fancy_term,
     lexicon_key,
     merge_intervals,
-    needs_fancy_pass,
     parse_query,
 )
-from .query_local import _SearchViews
+from .query_local import _Coordinator, _Federation, _SearchViews
 from .scoring import idf_scaled, location_mask, score_term, term_plan
 from .synth import crc32
-from .textproc import fold
 
 DECODED_SCHEMA = T.StructType(
     [
@@ -108,24 +104,18 @@ SCORED_SCHEMA = T.StructType(
 DOCMETA_BROADCAST_MAX_DOCS = 8_000_000
 
 
-class _Coordinator:
-    """The distributed request path, shared by SearchEngine and
-    FederatedSearchEngine: compile after one term-metadata prefetch, the
-    reference's two-pass rule and batch search. A subclass supplies
-    ``meta``, ``term_df``, ``_map_engines(fn)`` (fn applied to every
-    SearchEngine holding index data: itself, or the federation's parts),
-    ``_fancy_bound(terms)`` and the two passes:
-    ``_pass(terms, k, w, use_fancy, prune, mode)`` → (rows by (score
-    desc, doc_id asc), count signal), and
+class _Distributed(_Coordinator):
+    """The distributed tier's request front over the shared request
+    rules, used by SearchEngine and FederatedSearchEngine: the one-job
+    term-metadata prefetch, query_info, search and the search_many
+    schedule. A subclass supplies ``_fancy_bound(terms)`` and the two
+    passes: ``_pass(terms, k, w, use_fancy, prune, mode)`` → (rows by
+    (score desc, doc_id asc), count signal), and
     ``_execute_many(batch, fetch_by_qi, w, use_fancy, mode, prune)`` →
     {qi: rows}, where a query's row count is its count signal."""
 
-    def compile(self, query: str) -> list[PlanTerm]:
-        self._prefetch([query])  # ONE job; term_df is then warm
-        return compile_query(query, self.meta["n_docs"], self.term_df)
-
     def _prefetch(self, queries: list[str]) -> None:
-        """One bucket/term-pruned metadata job per engine for every
+        """One bucket/term-pruned metadata job per index for every
         lexicon key of ``queries``: df derivation, the fancy decisions
         and both passes then read the warm term-metadata cache."""
         keys = set()
@@ -135,17 +125,7 @@ class _Coordinator:
                 if in_lexicon:
                     keys.add(key)
         keys = sorted(keys)
-        self._map_engines(lambda e: e._fetch_term_meta(keys))
-
-    def explain(self, query: str) -> dict:
-        """Query EXPLAIN: the compiled plan + physical decisions as plain
-        data (shared shape across engines — queryplan.explain_plan)."""
-        return explain_plan(
-            query,
-            self.compile(query),
-            self.meta["n_docs"],
-            self.meta["fancy_threshold"],
-        )
+        self._map(lambda e: e._fetch_term_meta(keys), self._indexes())
 
     def query_info(self, query: str) -> dict:
         """Corpus/term statistics echoed by the reference response
@@ -158,23 +138,6 @@ class _Coordinator:
                 for t in terms
             ],
         }
-
-    def suggest(self, term: str, k: int = 3) -> list[str]:
-        """Distributed did-you-mean, the twin of the serving suggest: []
-        for an empty or in-vocabulary term, else every engine's verified
-        SymSpell candidates ranked by (-df, term) on the df summed over
-        engines — a term present in only one federation part competes on
-        its federation-wide frequency (tested identical to the serving
-        engines)."""
-        t = fold(term.lower()) if term else term
-        if not t or self.term_df(t) > 0:
-            return []
-        dfs: dict[str, int] = {}
-        for rows in self._map_engines(lambda e: e._suggest_rows(t)):
-            for c, d in rows:
-                dfs[c] = dfs.get(c, 0) + d
-        scored = sorted(dfs.items(), key=lambda x: (-x[1], x[0]))
-        return [c for c, _ in scored[:k]]
 
     def search(
         self,
@@ -193,31 +156,7 @@ class _Coordinator:
         full-postings pass, float scores.
         """
         w, prune = _request(weights, prune, mode)
-        terms = self.compile(query)
-        if not terms:
-            return []
-        if self._runs_fancy(terms, mode):
-            rows, count = self._pass(terms, k, w, True, prune, mode)
-            if count >= MAX_RESULTS:
-                return _page(rows, k, mode)
-        rows, _ = self._pass(terms, k, w, False, prune, mode)
-        return _page(rows, k, mode)
-
-    def _runs_fancy(self, terms: list[PlanTerm], mode: str) -> bool:
-        """The reference's two-pass rule (searchservernew.dpr:1836-1855):
-        a deusu query with a fancy term runs the fancy pass first and
-        falls back to the full pass when it finds fewer than MAX_RESULTS
-        results. The fancy pass is skipped when that count is PROVABLY
-        below MAX_RESULTS — ``_fancy_bound`` from the warm term metadata
-        — because the fallback would then fire unconditionally. Results
-        are identical by construction; the saved pass was ~25 % of the
-        120-query batch wall on the 10M-doc index."""
-        if mode == "bm25" or not needs_fancy_pass(
-            terms, self.meta["fancy_threshold"]
-        ):
-            return False
-        bound = self._fancy_bound(terms)
-        return bound is None or bound >= MAX_RESULTS
+        return _page(self._ranked(query, k, w, mode, prune), k, mode)
 
     def search_many(
         self,
@@ -266,11 +205,12 @@ class _Coordinator:
                 batch, {qi: n for qi, _ in batch}, w, use_fancy, mode, prune
             )
 
+        # the sidecar broadcasts, once, outside the threads
+        self._map(lambda e: e._sidecars_py(), self._indexes())
         # the fancy pass and the no-fancy full pass touch DISJOINT query
         # sets — run their plans CONCURRENTLY (Spark schedules jobs from
         # separate threads side by side), then a residual full pass picks
         # up only the fancy queries the accelerator under-filled
-        self._map_engines(lambda e: e._sidecars_py())  # once, outside threads
         out_fancy: dict = {}
         out_full: dict = {}
         if fancy_batch and full_batch:
@@ -293,7 +233,7 @@ class _Coordinator:
         return [_page(out.get(qi, []), k, mode) for qi in range(len(queries))]
 
 
-class SearchEngine(_Coordinator, _SearchViews):
+class SearchEngine(_Distributed, _SearchViews):
     def __init__(
         self,
         spark: SparkSession,
@@ -388,7 +328,7 @@ class SearchEngine(_Coordinator, _SearchViews):
         return self._avgdl
 
     # -- lexicon probe ------------------------------------------------------
-    def term_df(self, term: str) -> int:
+    def _own_df(self, term: str) -> int:
         """df through the same cached term-metadata fetch compile() uses —
         one source of truth (round-2 review: the old lexicon collect was a
         second, cache-bypassing path)."""
@@ -404,8 +344,8 @@ class SearchEngine(_Coordinator, _SearchViews):
         arrays_overlap against the query's own ≤len+1 keys (JVM column
         expressions, no explode join needed at query time), and the exact
         verify is the built-in levenshtein. Un-truncated so a federation
-        coordinator can rank by GLOBAL df (query_local._suggest_candidates
-        is the serving twin)."""
+        coordinator can rank by GLOBAL df (LocalSearcher._suggest_rows is
+        the serving twin)."""
         qkeys = sorted({t[:i] + t[i + 1:] for i in range(len(t))} | {t})
         lex = (
             self.lexicon.where(
@@ -490,20 +430,18 @@ class SearchEngine(_Coordinator, _SearchViews):
                 out[t] = sub
         return out
 
-    def _map_engines(self, fn) -> list:
-        return [fn(self)]
-
     # the shared batch driver, also bound in this class's own namespace:
     # perfbench/trace.py wraps SearchEngine.search_many from the class
     # dict, which then times this engine's batches only
-    search_many = _Coordinator.search_many
+    search_many = _Distributed.search_many
 
     def _fancy_bound(self, terms: list[PlanTerm]) -> int | None:
         """Upper bound on the fancy pass's result count: the AND result
         set is no larger than any positive term's posting count in the
         kind that pass reads (fancy for hot terms, full for cold terms and
-        fancy holes). Host terms' doc counts are not in the term metadata
-        → None (keep the two-pass protocol)."""
+        fancy holes, which only over-estimates). Host terms' doc counts
+        are not in the term metadata → None (keep the two-pass
+        protocol)."""
         frames = self._fetch_term_meta(
             sorted({t.key for t in terms if t.host is None})
         )
@@ -514,10 +452,9 @@ class SearchEngine(_Coordinator, _SearchViews):
             if t.host is not None:
                 return None
             sub = frames.get(t.key)
+            kind = self._postings_kind(t.key, t.df, True)[0]
             n = (
-                int(sub[sub["kind"] == self._kind(t, True)]["n"].sum())
-                if sub is not None
-                else 0
+                int(sub[sub["kind"] == kind]["n"].sum()) if sub is not None else 0
             )
             bound = n if bound is None else min(bound, n)
         return bound
@@ -571,10 +508,11 @@ class SearchEngine(_Coordinator, _SearchViews):
         # dedupe decode + sidecar join + scoring by SCORING SIGNATURE: a
         # term shared by many queries (hot terms dominate real batches) is
         # decoded, docmeta-joined and scored ONCE per distinct
-        # (key, host, url/title filter, backlink-asymmetry, SET, hole)
-        # group; the per-query fan-out happens AFTER scoring as a
-        # broadcast join on the (group → query-term) map, so the Arrow
-        # transfer and the score stage carry each posting once
+        # (key, host, url/title filter, backlink-asymmetry, SET) group
+        # (a pass's postings kind follows from the key); the per-query
+        # fan-out happens AFTER scoring as a broadcast join on the
+        # (group → query-term) map, so the Arrow transfer and the score
+        # stage carry each posting once
         import copy as _copy
 
         sig_to_gi: dict[tuple, int] = {}
@@ -590,7 +528,6 @@ class SearchEngine(_Coordinator, _SearchViews):
                     t.title_only,
                     t.include_backlink,
                     t.action == "SET",
-                    bool(t.fancy_hole),
                 )
                 gi = sig_to_gi.get(sig)
                 if gi is None:
@@ -999,19 +936,6 @@ class SearchEngine(_Coordinator, _SearchViews):
         )
         return rows, len(rows)
 
-    def _kind(self, t: PlanTerm, use_fancy: bool) -> str:
-        """Which postings kind a term reads on this index. ``fancy_hole``
-        (set per-part by FederatedSearchEngine) forces the full postings —
-        the rank-window mask in _score_rows then reconstructs the missing
-        fancy list exactly."""
-        if t.fancy_hole:
-            return "full"
-        return (
-            "fancy"
-            if use_fancy and is_fancy_term(t, self.meta["fancy_threshold"])
-            else "full"
-        )
-
     # -- segment metadata (no blobs, bounded driver copy) -----------------------
     def _segment_meta(self, terms: list[PlanTerm], use_fancy: bool) -> pd.DataFrame:
         """Per-query-term segment metadata for pruning decisions — assembled
@@ -1025,7 +949,7 @@ class SearchEngine(_Coordinator, _SearchViews):
         for t in terms:
             if t.host is not None:
                 continue
-            kind = self._kind(t, use_fancy)
+            kind = self._postings_kind(t.key, t.df, use_fancy)[0]
             sub = frames.get(t.key)
             if sub is None:
                 continue
@@ -1092,7 +1016,7 @@ class SearchEngine(_Coordinator, _SearchViews):
         for t in terms:
             if t.host is not None:
                 continue
-            kind = self._kind(t, use_fancy)
+            kind = self._postings_kind(t.key, t.df, use_fancy)[0]
             k2 = (t.key, kind)
             k4 = (t.key, kind, t.url_only, t.title_only)
             if k4 not in gkey:
@@ -1238,7 +1162,14 @@ class SearchEngine(_Coordinator, _SearchViews):
         segs, specs, groups = self._plain_scan(
             terms, use_fancy, intervals, per_term_intervals
         )
-        plan = {t.ti: term_plan(t) for t in terms}
+        # a fancy hole keeps only its fancy-window docs at score time
+        plan = {
+            t.ti: term_plan(
+                t,
+                t.host is None and self._postings_kind(t.key, t.df, use_fancy)[1],
+            )
+            for t in terms
+        }
         ctx = self._score_ctx(w, mode)
         parts: list[DataFrame] = []
         if segs is not None:
@@ -1368,37 +1299,23 @@ class SearchEngine(_Coordinator, _SearchViews):
             self.last_stats["segments_selected"] = len(batch) + len(rest)
         return heap[:fetch]
 
-class FederatedSearchEngine(_Coordinator):
-    """Distributed query-time federation over k INDEPENDENTLY BUILT indexes
-    — rank-identical to ``SearchEngine`` over ``merge.merge_indexes()`` of
-    the same indexes, without running the merge. The distributed twin of
-    query_local.FederatedSearcher, with the same three globalizations:
-
-    - global corpus stats: the query compiles ONCE against summed df and
-      n_docs (merged idf), and each part's max-backlink / n_docs / avgdl
-      normalizers are overridden with the values the merged meta.json
-      would carry;
-    - global doc ids: part i's local ids shift by Σ n_docs_<i — the exact
-      offset rule merge.py applies when it rebases segments;
-    - fancy holes: a term hot globally but cold in one part has no fancy
-      segments there; PlanTerm.fancy_hole makes that part execute full
-      postings masked by the domain-rank window at score time
-      (scoring.score_term), the per-doc predicate merge.py materializes
-      offline.
+class FederatedSearchEngine(_Federation, _Distributed):
+    """The distributed federation (``query_local._Federation``): every
+    part is a SearchEngine, rank-identical to ``SearchEngine`` over
+    ``merge.merge_indexes()`` of the same indexes. The global n_docs and
+    max-backlink normalizers go into each part's meta, the global avgdl
+    into each part once bm25 needs it.
 
     Execution stays fully distributed: each part runs its own pruned
     passes (two-level metadata, interval intersection, block-max WAND —
     unchanged and still exact per part, so merged per-part top-k is the
     exact global top-k), submitted concurrently from a thread pool — on a
     cluster the per-part jobs share executors, so federating costs no
-    repartition or rewrite of index files. The shared ``_Coordinator``
-    applies the reference's two-pass rule on the SUMMED candidate counts
-    (searchservernew.dpr:1848-1855): per-part counts clamp at
-    max(k, 1001) ≥ MAX_RESULTS, so the summed signal crosses the
-    1000-results threshold exactly when the merged index's would.
-
-    Use case: querying index versions published per-tenant / per-time-
-    window (incremental.py deltas) before — or instead of — compaction."""
+    repartition or rewrite of index files. The shared two-pass rule runs
+    on the SUMMED candidate counts (searchservernew.dpr:1848-1855):
+    per-part counts clamp at max(k, 1001) ≥ MAX_RESULTS, so the summed
+    signal crosses the 1000-results threshold exactly when the merged
+    index's would."""
 
     def __init__(
         self,
@@ -1408,39 +1325,17 @@ class FederatedSearchEngine(_Coordinator):
         parallel: bool = True,
     ):
         self.spark = spark
-        self.parts = [SearchEngine(spark, r, io=io) for r in index_roots]
-        thrs = {int(p.meta["fancy_threshold"]) for p in self.parts}
-        if len(thrs) != 1:
-            raise ValueError(
-                f"federation needs one fancy policy, got thresholds {thrs}"
-            )
-        self.offsets: list[int] = []
-        off = 0
-        for p in self.parts:
-            self.offsets.append(off)
-            off += int(p.meta["n_docs"])
-        self.n_docs = off
-        gmax_bl = max(int(p.meta["max_backlinks"]) for p in self.parts)
-        self.meta = dict(self.parts[0].meta)
-        self.meta["n_docs"] = self.n_docs
-        self.meta["max_backlinks"] = gmax_bl
+        self._federate([SearchEngine(spark, r, io=io) for r in index_roots])
         for p in self.parts:
             # scoring normalizers the merged index would carry (parts are
             # owned by the federation; sharing one engine is not supported)
-            p.meta = dict(p.meta)
-            p.meta["n_docs"] = self.n_docs
-            p.meta["max_backlinks"] = gmax_bl
+            p.meta = dict(
+                p.meta,
+                n_docs=self.n_docs,
+                max_backlinks=self.meta["max_backlinks"],
+            )
         self._avgdl: float | None = None
-        self._pool = (
-            ThreadPoolExecutor(max_workers=len(self.parts))
-            if parallel and len(self.parts) > 1
-            else None
-        )
-
-    def _map_engines(self, fn) -> list:
-        if self._pool is not None:
-            return list(self._pool.map(fn, self.parts))
-        return [fn(p) for p in self.parts]
+        self._init_pool(len(self.parts), parallel)
 
     @property
     def avgdl(self) -> float:
@@ -1448,92 +1343,37 @@ class FederatedSearchEngine(_Coordinator):
         merged docmeta would average. Pushed into each part so bm25's
         length normalization uses the federation-wide value."""
         if self._avgdl is None:
-            totals = self._map_engines(
+            totals = self._map(
                 lambda p: float(
                     p.docmeta.agg(F.sum("dl")).collect()[0][0] or 0.0
-                )
+                ),
+                self.parts,
             )
             self._avgdl = sum(totals) / max(self.n_docs, 1)
             for p in self.parts:
                 p._avgdl = self._avgdl
         return self._avgdl
 
-    def term_df(self, term: str) -> int:
-        return sum(p.term_df(term) for p in self.parts)
-
-    def explain(self, query: str) -> dict:
-        """Federated EXPLAIN: the GLOBAL plan plus per-part fancy holes
-        (same shape as the serving FederatedSearcher.explain; the hole
-        rule is _part_terms')."""
-        out = super().explain(query)
-        terms = self.compile(query)  # warm: no jobs
-        thr = self.meta["fancy_threshold"]
-        bounds = self.offsets + [self.n_docs]
-        out["parts"] = [
-            {
-                "part": i,
-                "n_docs": bounds[i + 1] - bounds[i],
-                "doc_offset": self.offsets[i],
-                "fancy_holes": [
-                    t.key
-                    for t in terms
-                    if is_fancy_term(t, thr) and p.term_df(t.key) <= thr
-                ],
-            }
-            for i, p in enumerate(self.parts)
-        ]
-        return out
-
-    def _part_terms(
-        self, p: SearchEngine, terms: list[PlanTerm], use_fancy: bool
-    ) -> list[PlanTerm]:
-        """Per-part plan: flag fancy holes (global df above the threshold,
-        this part built below it). term_df is warm after compile() for
-        plain terms — no extra jobs."""
-        if not use_fancy:
-            return terms
-        import dataclasses
-
-        thr = self.meta["fancy_threshold"]
-        return [
-            dataclasses.replace(t, fancy_hole=True)
-            if is_fancy_term(t, thr) and p.term_df(t.key) <= thr
-            else t
-            for t in terms
-        ]
-
     def _fancy_bound(self, terms: list[PlanTerm]) -> int | None:
-        """Σ of the parts' fancy-count bounds on their per-part plans. A
-        hole term reads its part's full postings, which can only
-        over-estimate that part's fancy count."""
-        bounds = [
-            p._fancy_bound(self._part_terms(p, terms, True))
-            for p in self.parts
-        ]
+        """Σ of the parts' fancy-count bounds (a part reads a fancy hole's
+        full postings, which can only over-estimate its fancy count)."""
+        bounds = [p._fancy_bound(terms) for p in self.parts]
         return None if None in bounds else sum(bounds)
 
     def _pass(self, terms, k, w, use_fancy, prune, mode):
-        """One federated pass: every part executes its own pruned pass on
-        its per-part plan, concurrently."""
-
-        def one(p):
-            pt = self._part_terms(p, terms, use_fancy)
-            rows, _ = p._pass(pt, k, w, use_fancy, prune, mode)
-            return {0: rows}
-
-        rows = self._merge_parts(one, mode).get(0, [])
+        """One federated pass: every part executes its own pruned pass,
+        concurrently."""
+        rows = self._merge_parts(
+            lambda p: {0: p._pass(terms, k, w, use_fancy, prune, mode)[0]}, mode
+        ).get(0, [])
         return rows, len(rows)
 
     def _execute_many(self, batch, fetch_by_qi, w, use_fancy, mode, prune):
         """One federated batch pass: every part runs ONE union plan for the
-        whole batch (SearchEngine._execute_many on its hole-flagged
-        terms), parts concurrent — N queries over P parts cost ~P plans
-        per pass, not N·P."""
+        whole batch (SearchEngine._execute_many), parts concurrent — N
+        queries over P parts cost ~P plans per pass, not N·P."""
         return self._merge_parts(
-            lambda p: p._execute_many(
-                [(qi, self._part_terms(p, terms, use_fancy)) for qi, terms in batch],
-                fetch_by_qi, w, use_fancy, mode, prune,
-            ),
+            lambda p: p._execute_many(batch, fetch_by_qi, w, use_fancy, mode, prune),
             mode,
         )
 
@@ -1546,20 +1386,12 @@ class FederatedSearchEngine(_Coordinator):
         if mode == "bm25":
             _ = self.avgdl  # push the global normalizer into every part
         merged: dict[int, list] = {}
-        for off, out in zip(self.offsets, self._map_engines(run)):
+        for off, out in zip(self.offsets, self._map(run, self.parts)):
             for qi, rows in out.items():
                 merged.setdefault(qi, []).extend((d + off, s) for d, s in rows)
         for rows in merged.values():
             rows.sort(key=lambda r: (-r[1], r[0]))
         return merged
-
-    def fetch_results(self, rows: list[tuple[int, int]]):
-        """Q15 display fetch: resolve each global doc id to its owning
-        part's docmeta (bisect on the offset table, one fetch per part),
-        preserving order."""
-        from .rerank import fetch_partitioned
-
-        return fetch_partitioned(self.parts, self.offsets, rows, rebase=True)
 
 
 def _sidecar_cols(pdf: pd.DataFrame) -> dict[str, np.ndarray]:

@@ -20,12 +20,18 @@ On the synthetic transcript corpus the display strings cost about
 FederatedSearcher route each fetched id to the shard or part that owns
 it, one fetch per owner.
 
-All three searchers share one request path (``_Coordinator``): the Q14
-result cache, the reference's two-pass rule and batch search. They differ
-only in how a pass runs: LocalSearcher runs it on its own docs, while
-ShardedSearcher and FederatedSearcher (``_FanOut``) run it on every member
-searcher and merge. Each posting is scored by ``scoring.term_scores``, the
-kernel the distributed engine's Spark stages call too.
+The reference has one query server, so its request rules exist once:
+``_Coordinator`` holds them for all five searchers, these three and the
+distributed query.SearchEngine and query.FederatedSearchEngine — compile,
+the statistics summed over independently built indexes, explain, the
+did-you-mean ranking, the fancy-hole rule and the two-pass rule. The
+serving tier adds the Q14 result cache (``_Serving``), and both
+federations share their offset table and global statistics
+(``_Federation``). The searchers differ only in how a pass runs:
+LocalSearcher runs it on its own docs, while ShardedSearcher and
+FederatedSearcher (``_FanOut``) run it on every member searcher and
+merge. Each posting is scored by ``scoring.term_scores``, the kernel the
+distributed engine's Spark stages call too.
 
 Pagination and phrase, NEAR/w and proximity-ranked retrieval are
 ``_SearchViews``, which LocalSearcher, ShardedSearcher and the distributed
@@ -43,7 +49,7 @@ import pyarrow.dataset as pads
 
 from .build import current_index_dir, load_tombstones
 from .constants import DEFAULT_WEIGHTS, MAX_RESULTS, SCORE_CLAMP
-from .queryplan import PlanTerm, compile_query, is_fancy_term, needs_fancy_pass
+from .queryplan import PlanTerm, compile_query, explain_plan, needs_fancy_pass
 from .scoring import in_fancy_window, location_mask, term_plan, term_scores
 from .textproc import fold
 from . import codec
@@ -51,13 +57,157 @@ from .synth import crc32
 
 
 class _Coordinator:
-    """The serving query server's request path, shared by every serving
-    searcher: the Q14 result cache in front of everything, the
-    reference's two-pass rule, and batch search. A subclass supplies
-    ``meta``, ``compile(query)`` and ``_pass(terms, w, use_fancy, mode,
-    fetch, min_count)``, which returns one pass's top ``fetch`` rows by
-    (score desc, doc_id asc), or None when the pass found fewer than
-    ``min_count`` candidates (so a discarded pass builds no top-k)."""
+    """The request rules of the reference's one query server, shared by
+    every searcher: compile (after the ``_prefetch`` hook), ``term_df``
+    summed over the searcher's independently built indexes, explain, the
+    did-you-mean ranking, the fancy-hole rule and the two-pass rule.
+
+    A searcher supplies ``meta`` (``n_docs``, ``fancy_threshold``) and
+    ``_pass(terms, k, w, use_fancy, prune, mode)`` → (rows by (score
+    desc, doc_id asc), candidate count); a fancy pass that finds fewer
+    than MAX_RESULTS candidates may return None rows, because the full
+    pass replaces them. An index (LocalSearcher, query.SearchEngine)
+    supplies ``_own_df(term)`` and ``_suggest_rows(t)``; a searcher over
+    several indexes overrides ``_indexes()``, and a federation sets
+    ``offsets``."""
+
+    offsets: list[int] | None = None  # a federation's doc-id offset table
+    _pool: ThreadPoolExecutor | None = None
+
+    def _indexes(self) -> list:
+        """The independently built indexes this searcher answers from,
+        each with its own lexicon: itself, or a federation's parts (the
+        shards of ShardedSearcher share one lexicon, so it counts one)."""
+        return [self]
+
+    def _init_pool(self, n: int, parallel: bool) -> None:
+        self._pool = (
+            ThreadPoolExecutor(max_workers=n) if parallel and n > 1 else None
+        )
+
+    def _map(self, fn, items: list) -> list:
+        """``fn`` over ``items``, on the pool when there is one: member
+        work is numpy, pyarrow or Spark job waits, which release the GIL,
+        and results keep the order of ``items``."""
+        if self._pool is not None and len(items) > 1:
+            return list(self._pool.map(fn, items))
+        return [fn(x) for x in items]
+
+    def _prefetch(self, queries: list[str]) -> None:
+        """Run before compile: the distributed tier fetches the term
+        metadata of ``queries`` in one job; the serving tier reads its
+        lexicon directly."""
+
+    def term_df(self, term: str) -> int:
+        return sum(ix._own_df(term) for ix in self._indexes())
+
+    def compile(self, query: str) -> list[PlanTerm]:
+        self._prefetch([query])
+        return compile_query(query, int(self.meta["n_docs"]), self.term_df)
+
+    def explain(self, query: str) -> dict:
+        """Query EXPLAIN: the compiled plan and its physical decisions as
+        plain data, one shape on every searcher (queryplan.explain_plan).
+        A federation adds one entry per part, listing the terms that part
+        runs as fancy holes (``_postings_kind``)."""
+        terms = self.compile(query)
+        n_docs = int(self.meta["n_docs"])
+        out = explain_plan(query, terms, n_docs, self.meta["fancy_threshold"])
+        if self.offsets is not None:
+            bounds = self.offsets + [n_docs]
+            out["parts"] = [
+                {
+                    "part": i,
+                    "n_docs": bounds[i + 1] - bounds[i],
+                    "doc_offset": self.offsets[i],
+                    "fancy_holes": [
+                        t.key
+                        for t in terms
+                        if t.host is None
+                        and p._postings_kind(t.key, t.df, True)[1]
+                    ],
+                }
+                for i, p in enumerate(self._indexes())
+            ]
+        return out
+
+    def suggest(self, term: str, k: int = 3) -> list[str]:
+        """Did-you-mean for a zero-hit query term: [] for an empty or
+        in-vocabulary term, else every index's verified edit-distance<=1
+        lexicon terms (``_suggest_rows``, SymSpell deletion neighborhoods)
+        ranked by (-df, term) on the df summed over the indexes, so a term
+        present in only one federation part competes on its
+        federation-wide frequency. The reference's query box
+        (cgi/suchmaschine.dpr) has no suggester; this is the feature users
+        ask for first."""
+        t = fold(term.lower()) if term else term
+        if not t or self.term_df(t) > 0:
+            return []
+        dfs: dict[str, int] = {}
+        for rows in self._map(lambda ix: ix._suggest_rows(t), self._indexes()):
+            for c, d in rows:
+                dfs[c] = dfs.get(c, 0) + d
+        ranked = sorted(dfs.items(), key=lambda x: (-x[1], x[0]))
+        return [c for c, _ in ranked[:k]]
+
+    def _postings_kind(self, key: str, df: int, use_fancy: bool) -> tuple[str, bool]:
+        """(kind, hole): the postings this index reads for a plain term of
+        compiled df ``df``. A fancy pass reads a hot term's fancy
+        accelerator list (GenDb.dpr:975-1109), everything else the full
+        list. The fancy-hole rule: an index whose own lexicon df for the
+        term is at or below the threshold (a federation part where a
+        globally hot term is cold) has no fancy segments for it, so it
+        reads the full postings and keeps only the docs whose domain rank
+        is inside the fancy window (``scoring.in_fancy_window``). The
+        fancy list is that pure per-doc predicate (GenDb.dpr:1053-1071),
+        which merge.py materializes offline when it rebuilds holes."""
+        thr = self.meta["fancy_threshold"]
+        if not use_fancy or df <= thr:
+            return "full", False
+        hole = self._own_df(key) <= thr
+        return ("full" if hole else "fancy"), hole
+
+    def _fancy_bound(self, terms: list[PlanTerm]) -> int | None:
+        """An upper bound on the fancy pass's candidate count, or None
+        when there is none (the serving tier just runs the pass)."""
+        return None
+
+    def _runs_fancy(self, terms: list[PlanTerm], mode: str) -> bool:
+        """The reference's two-pass rule (searchservernew.dpr:1836-1855):
+        a deusu query with a fancy term runs the fancy pass first and
+        falls back to the full pass when it finds fewer than MAX_RESULTS
+        results. The fancy pass is skipped when ``_fancy_bound`` proves
+        that count below MAX_RESULTS, because the fallback would then
+        fire unconditionally; results are identical by construction."""
+        if mode == "bm25" or not needs_fancy_pass(
+            terms, self.meta["fancy_threshold"]
+        ):
+            return False
+        bound = self._fancy_bound(terms)
+        return bound is None or bound >= MAX_RESULTS
+
+    def _ranked(
+        self, query: str, k: int, w: dict[str, int], mode: str, prune: bool = False
+    ) -> list:
+        """The pass rows that answer ``query``: the fancy pass stands only
+        if it finds at least MAX_RESULTS candidates, else the full pass
+        runs."""
+        terms = self.compile(query)
+        if not terms:
+            return []
+        if self._runs_fancy(terms, mode):
+            rows, count = self._pass(terms, k, w, True, prune, mode)
+            if count >= MAX_RESULTS:
+                return rows
+        return self._pass(terms, k, w, False, prune, mode)[0]
+
+
+class _Serving(_Coordinator):
+    """The serving tier's request front, shared by LocalSearcher and the
+    fan-out searchers: the Q14 result cache in front of everything, batch
+    search, and a pass's top-k. A subclass supplies
+    ``_candidates(terms, w, use_fancy, mode, fetch)`` → (candidate count,
+    docs, unrounded scores) holding at least the pass's top ``fetch``."""
 
     def _init_result_cache(self) -> None:
         # Q14 result cache — searchservernew.dpr:1077-1101: 2048 slots keyed
@@ -86,7 +236,7 @@ class _Coordinator:
         # list. Larger k (an API extension beyond the reference's top-1000
         # contract) bypasses the cache so results never depend on call order.
         if k > MAX_RESULTS:
-            return self._search_uncached(query, k, w, mode)[:k]
+            return self._ranked(query, k, w, mode)[:k]
         cache_key = f"{query}\x00{mode}\x00{sorted(w.items())}"
         slot = crc32(cache_key) % self.cache_slots
         hit = self._result_cache.get(slot)
@@ -94,7 +244,7 @@ class _Coordinator:
             self.cache_hits += 1
             return hit[1][:k]
         self.cache_misses += 1
-        rows = self._search_uncached(query, k, w, mode)
+        rows = self._ranked(query, k, w, mode)
         self._result_cache[slot] = (cache_key, rows)
         return rows[:k]
 
@@ -114,22 +264,12 @@ class _Coordinator:
             self.search(q, k=k, weights=weights, mode=mode) for q in queries
         ]
 
-    def _search_uncached(
-        self, query: str, k: int, w: dict[str, int], mode: str
-    ) -> list[tuple[int, int]]:
-        terms = self.compile(query)
-        if not terms:
-            return []
+    def _pass(self, terms, k, w, use_fancy, prune, mode):
         fetch = max(k, MAX_RESULTS)  # cache the full top-1000
-        # two-pass rule (searchservernew.dpr:1836-1855): the fancy pass
-        # stands only if it finds at least MAX_RESULTS candidates
-        if mode != "bm25" and needs_fancy_pass(
-            terms, self.meta["fancy_threshold"]
-        ):
-            rows = self._pass(terms, w, True, mode, fetch, MAX_RESULTS)
-            if rows is not None:
-                return rows
-        return self._pass(terms, w, False, mode, fetch, 0)
+        n, docs, vals = self._candidates(terms, w, use_fancy, mode, fetch)
+        if use_fancy and n < MAX_RESULTS:
+            return None, n  # the full pass replaces it: build no top-k
+        return _topk(docs, vals, fetch, is_float=mode == "bm25"), n
 
 
 class _SearchViews:
@@ -292,7 +432,7 @@ class _SearchViews:
         )
 
 
-class LocalSearcher(_Coordinator, _SearchViews):
+class LocalSearcher(_Serving, _SearchViews):
     def __init__(
         self,
         index_root: str,
@@ -389,7 +529,7 @@ class LocalSearcher(_Coordinator, _SearchViews):
         self.avgdl = float(self.dl.mean()) if len(self.dl) else 1.0
 
     # ------------------------------------------------------------------
-    def term_df(self, term: str) -> int:
+    def _own_df(self, term: str) -> int:
         if term in self._df_cache:
             return self._df_cache[term]
         b = crc32(term) % 64
@@ -404,16 +544,8 @@ class LocalSearcher(_Coordinator, _SearchViews):
     def _term_postings(
         self, term: str, use_fancy: bool, df: int
     ) -> tuple[np.ndarray, np.ndarray]:
-        kind = "fancy" if use_fancy and df > self.meta["fancy_threshold"] else "full"
-        if kind == "fancy" and self.term_df(term) <= self.meta["fancy_threshold"]:
-            # fancy-hole fallback (federation: the GLOBAL df crossed the
-            # threshold but THIS index was built with local df below it, so
-            # no fancy segments exist here). The fancy list is a pure
-            # per-doc predicate — term present AND domain rank inside the
-            # window (build.py fancy emit; GenDb.dpr:1053-1071) — so it is
-            # reconstructed exactly from the full postings + the rank
-            # sidecar, which is precisely what merge.py's fancy-hole
-            # rebuild materializes offline.
+        kind, hole = self._postings_kind(term, df, use_fancy)
+        if hole:  # the fancy list, rebuilt from the full postings
             docs, flags = self._term_postings(term, False, df)
             m = in_fancy_window(self.rank[docs - self.doc_lo])
             return docs[m], flags[m]
@@ -483,32 +615,20 @@ class LocalSearcher(_Coordinator, _SearchViews):
         return docs, flags
 
     # ------------------------------------------------------------------
-    def suggest(self, term: str, k: int = 3) -> list[str]:
-        """Did-you-mean for a zero-hit query term: SymSpell deletion-
-        neighborhood lookup against the index lexicon (the serving twin
-        of pipelines.q_spell_correct), candidates verified with an exact
-        edit-distance<=1 check and ranked by df (the reference's query
-        box — cgi/suchmaschine.dpr — has no suggester; this is the
-        feature users ask for first). The deletion map is built lazily on
-        first use and sized by the lexicon (vocab x avg-len entries) —
-        the classic suggester-service memory trade; shard it with the
-        serving tier when the lexicon outgrows one box."""
-        t = fold(term.lower()) if term else term
-        if not t or self.term_df(t) > 0:
-            return []
-        cands = self._suggest_candidates(t)
-        return sorted(cands, key=lambda c: (-self._suggest_df[c], c))[:k]
-
-    def _suggest_candidates(self, t: str) -> set[str]:
-        """ALL verified edit-distance<=1 lexicon terms for a folded term —
-        the un-truncated set a federation coordinator needs to rank by
-        GLOBAL df (truncating per part first could drop the global
-        winner)."""
+    def _suggest_rows(self, t: str) -> list[tuple[str, int]]:
+        """ALL verified edit-distance<=1 lexicon terms for a folded term,
+        with their df: SymSpell deletion-neighborhood lookup against the
+        lexicon (the serving twin of pipelines.q_spell_correct), each
+        candidate checked by an exact edit-distance<=1 test. Un-truncated,
+        so a federation ranks on global df. The deletion map is built
+        lazily on first use and sized by the lexicon (vocab x avg-len
+        entries) — the classic suggester-service memory trade; shard it
+        with the serving tier when the lexicon outgrows one box."""
         dmap = self._suggest_map()
         cands: set[str] = set()
         for key in _deletions(t) | {t}:
             cands.update(dmap.get(key, ()))
-        return {c for c in cands if _lev_le1(t, c)}
+        return [(c, self._suggest_df[c]) for c in cands if _lev_le1(t, c)]
 
     def _suggest_map(self) -> dict[str, list[str]]:
         if getattr(self, "_sugg", None) is None:
@@ -526,23 +646,10 @@ class LocalSearcher(_Coordinator, _SearchViews):
             self._suggest_df = dfs
         return self._sugg
 
-    # ------------------------------------------------------------------
-    def compile(self, query: str) -> list[PlanTerm]:
-        return compile_query(query, self.n_docs, self.term_df)
-
-    def explain(self, query: str) -> dict:
-        """Query EXPLAIN — identical shape (and content, same index) to
-        SearchEngine.explain: compile() is shared machinery."""
-        from .queryplan import explain_plan
-
-        return explain_plan(
-            query, self.compile(query), self.n_docs, self.meta["fancy_threshold"]
-        )
-
     # the shared request path, also bound in this class's own namespace:
     # perfbench/trace.py wraps LocalSearcher.search from the class dict,
     # which then times single-server calls only
-    search = _Coordinator.search
+    search = _Serving.search
 
     def _candidate_positions(
         self, terms, cand: np.ndarray
@@ -570,11 +677,9 @@ class LocalSearcher(_Coordinator, _SearchViews):
                 term_pos[t].update(doc_positions(blob, cand))
         return term_pos
 
-    def _pass(self, terms, w, use_fancy, mode, fetch, min_count):
+    def _candidates(self, terms, w, use_fancy, mode, fetch):
         docs, vals = self._run_pass(terms, w, use_fancy, mode)
-        if len(docs) < min_count:
-            return None
-        return self._topk(docs, vals, fetch, is_float=mode == "bm25")
+        return len(docs), docs, vals
 
     def fetch_results(self, rows: list[tuple[int, int]]):
         """Q15 (ShowLink, searchservernew.dpr:1166-1204): join the engine's
@@ -602,15 +707,6 @@ class LocalSearcher(_Coordinator, _SearchViews):
             memo=self._features,
             slot=loc,
         )
-
-    @staticmethod
-    def _topk(docs, vals, k, is_float=False):
-        if len(docs) == 0:
-            return []
-        order = np.lexsort((docs, -vals))[:k]
-        if is_float:
-            return [(int(docs[i]), round(float(vals[i]), 6)) for i in order]
-        return [(int(docs[i]), int(vals[i])) for i in order]
 
     def _run_pass(self, terms, w, use_fancy, mode="deusu"):
         """Sequential acSet/acAnd/acNot over sorted doc arrays (the bitfield
@@ -659,32 +755,21 @@ class LocalSearcher(_Coordinator, _SearchViews):
         return cand_docs, cand_vals
 
 
-class _FanOut(_Coordinator):
+class _FanOut(_Serving):
     """Coordinator over member LocalSearchers (doc-range shards or
     independently built parts). A pass runs on every member, its local ids
     shift by the member's doc-id offset, the members' top-``fetch`` arrays
     merge in one lexsort by (score desc, doc_id asc) and their candidate
     counts sum for the two-pass rule — so both decisions equal the single
-    server's. With
-    ``parallel`` the members run on a thread pool: their work is
-    numpy/pyarrow, which releases the GIL, and the merge is independent
-    of completion order."""
+    server's. With ``parallel`` the members run on a thread pool; the
+    merge is independent of completion order."""
 
     def _init_fan_out(self, members, offsets, parallel: bool) -> None:
         self._members = list(zip(members, offsets))
-        self._pool = (
-            ThreadPoolExecutor(max_workers=len(members))
-            if parallel and len(members) > 1
-            else None
-        )
+        self._init_pool(len(members), parallel)
         self._init_result_cache()
 
-    def _map(self, fn, items: list) -> list:
-        if self._pool is not None and len(items) > 1:
-            return list(self._pool.map(fn, items))
-        return [fn(x) for x in items]
-
-    def _pass(self, terms, w, use_fancy, mode, fetch, min_count):
+    def _candidates(self, terms, w, use_fancy, mode, fetch):
         def one(member):
             s, off = member
             docs, vals = s._run_pass(terms, w, use_fancy, mode)
@@ -694,16 +779,13 @@ class _FanOut(_Coordinator):
                 docs, vals = docs[keep], vals[keep]
             return n, docs + off if off else docs, vals
 
+        # unrounded scores: _pass merges them in one top-k, exactly the
+        # single server's (bm25 rounds after the merge, as it does there)
         outs = self._map(one, self._members)
-        if sum(n for n, _, _ in outs) < min_count:
-            return None
-        # one merge over the members' unrounded scores, exactly the single
-        # server's top-k (bm25 rounds after the merge, as it does there)
-        return LocalSearcher._topk(
+        return (
+            sum(n for n, _, _ in outs),
             np.concatenate([d for _, d, _ in outs]),
             np.concatenate([v for _, _, v in outs]),
-            fetch,
-            is_float=mode == "bm25",
         )
 
 
@@ -722,7 +804,9 @@ class ShardedSearcher(_FanOut, _SearchViews):
     (score desc, doc_id asc) and sums the shards' candidate counts for the
     reference's two-pass '<1000 results → full pass' decision — both
     decisions then equal the single-server ones exactly (pinned by
-    test_serving_shards rank-identity against LocalSearcher/oracle).
+    test_serving_shards rank-identity against LocalSearcher/oracle). The
+    shards share the index's one lexicon, so statistics, explain and
+    suggest read it once.
 
     In production each shard is a separate server process behind a thin
     fan-out (this class in-process is the same code path); the Q14 result
@@ -753,8 +837,8 @@ class ShardedSearcher(_FanOut, _SearchViews):
         # shards already answer in global doc ids: offset 0
         self._init_fan_out(self.shards, [0] * len(self.shards), parallel)
 
-    def compile(self, query: str) -> list[PlanTerm]:
-        return self.shards[0].compile(query)
+    def _indexes(self) -> list:
+        return self.shards[:1]
 
     def _on_owners(self, cand: np.ndarray, fn) -> list:
         """``fn(shard, ids)`` for each shard owning some of the sorted
@@ -778,113 +862,86 @@ class ShardedSearcher(_FanOut, _SearchViews):
         )
 
 
-class FederatedSearcher(_FanOut):
-    """Query-time federation over k INDEPENDENTLY BUILT indexes —
-    rank-identical to querying merge.merge_indexes() of the same indexes,
-    without running the merge. Three things make per-part execution exact
-    under global semantics:
+class _Federation:
+    """Query-time federation over k INDEPENDENTLY BUILT indexes
+    (``parts``), shared by FederatedSearcher and the distributed
+    query.FederatedSearchEngine: rank-identical to querying
+    merge.merge_indexes() of the same indexes, without running the merge.
+    Three things make per-part execution exact under global semantics:
 
-    - global corpus stats: the query compiles ONCE against summed df and
-      n_docs (so every part scores with the merged idf), and each part's
-      avgdl / max-backlink normalizers are overridden with the global
-      values the merged index would carry;
-    - global doc ids: part i's local ids shift by Σ n_docs_<i — the exact
-      offset rule merge.py applies when it rebases segments;
+    - global corpus stats: the query compiles ONCE against summed df
+      (``_Coordinator.term_df`` over the parts) and the global n_docs, so
+      every part scores with the merged idf, and each tier pushes the
+      n_docs, max-backlink and avgdl normalizers the merged index would
+      carry into its parts;
+    - global doc ids: part i's local ids shift by Σ n_docs_<i
+      (``offsets``) — the exact offset rule merge.py applies when it
+      rebases segments;
     - fancy holes: a term hot globally but cold in one part has no fancy
-      segments there; _term_postings reconstructs that part's fancy list
-      exactly from full postings + the domain-rank window (the list is a
-      pure per-doc predicate), which is what merge.py materializes
-      offline.
+      segments there; that part decides so itself
+      (``_Coordinator._postings_kind``) and rebuilds the fancy list
+      exactly from its full postings.
 
     The coordinator then merges per-part top-k by (score desc, doc asc)
-    and sums candidate counts for the reference's two-pass rule — the
-    same coordinator contract as ShardedSearcher, so results match the
-    merged index's single server bit-for-bit (tests/test_merge.py pins
-    it). Use case: querying index versions that are published per-tenant
-    / per-time-window and not yet (or never) compacted into one."""
+    and sums candidate counts for the reference's two-pass rule, so
+    results match the merged index bit-for-bit (tests/test_merge.py pins
+    it). Use case: querying index versions published per-tenant /
+    per-time-window (incremental.py deltas) before — or instead of —
+    compaction."""
 
-    def __init__(self, index_roots: list[str], parallel: bool = True):
-        self.parts = [LocalSearcher(r) for r in index_roots]
-        thrs = {int(p.meta["fancy_threshold"]) for p in self.parts}
+    def _federate(self, parts: list) -> None:
+        thrs = {int(p.meta["fancy_threshold"]) for p in parts}
         if len(thrs) != 1:
             raise ValueError(
                 f"federation needs one fancy policy, got thresholds {thrs}"
             )
-        self.meta = self.parts[0].meta
-        self.offsets = []
-        off = 0
-        for p in self.parts:
-            self.offsets.append(off)
-            off += int(p.meta["n_docs"])
-        self.n_docs = off
-        total_dl = sum(float(p.dl.sum()) for p in self.parts)
-        avgdl = total_dl / max(self.n_docs, 1)
-        gmax_bl = max(p.max_bl for p in self.parts)
-        for p in self.parts:
-            p.avgdl = avgdl
-            p.max_bl = gmax_bl
-            p.n_docs = self.n_docs  # bm25 idf must use the global corpus
-        self._init_fan_out(self.parts, self.offsets, parallel)
-
-    def term_df(self, term: str) -> int:
-        return sum(p.term_df(term) for p in self.parts)
-
-    def compile(self, query: str) -> list[PlanTerm]:
-        return compile_query(query, self.n_docs, self.term_df)
-
-    def explain(self, query: str) -> dict:
-        """Federated EXPLAIN: the GLOBAL plan (summed-df compile), plus a
-        per-part list of fancy HOLES — terms whose global df crosses the
-        accelerator threshold while that part was built with a local df
-        below it, so the part reconstructs the fancy list from full
-        postings + its rank sidecar at query time."""
-        from .queryplan import explain_plan
-
-        terms = self.compile(query)
-        out = explain_plan(
-            query, terms, self.n_docs, self.meta["fancy_threshold"]
+        self.parts = parts
+        sizes = [int(p.meta["n_docs"]) for p in parts]
+        self.offsets = [sum(sizes[:i]) for i in range(len(parts))]
+        self.n_docs = sum(sizes)
+        self.meta = dict(
+            parts[0].meta,
+            n_docs=self.n_docs,
+            max_backlinks=max(int(p.meta["max_backlinks"]) for p in parts),
         )
-        thr = self.meta["fancy_threshold"]
-        out["parts"] = [
-            {
-                "part": i,
-                "n_docs": int(p.meta["n_docs"]),
-                "doc_offset": self.offsets[i],
-                "fancy_holes": [
-                    t.key
-                    for t in terms
-                    if is_fancy_term(t, thr) and p.term_df(t.key) <= thr
-                ],
-            }
-            for i, p in enumerate(self.parts)
-        ]
-        return out
 
-    def suggest(self, term: str, k: int = 3) -> list[str]:
-        """Federated did-you-mean, identical to the merged index's
-        suggester: every part contributes its FULL verified candidate set
-        (no per-part truncation) and ranking uses the summed (global) df —
-        a term present in only one part still competes on its true
-        federation-wide frequency."""
-        t = fold(term.lower()) if term else term
-        if not t or self.term_df(t) > 0:
-            return []
-        cands: set[str] = set()
-        for p in self.parts:
-            cands.update(p._suggest_candidates(t))
-        scored = sorted(
-            ((self.term_df(c), c) for c in cands), key=lambda x: (-x[0], x[1])
-        )
-        return [c for _, c in scored[:k]]
+    def _indexes(self) -> list:
+        return self.parts
 
     def fetch_results(self, rows: list[tuple[int, int]]):
-        """Resolve global doc ids back to their owning part's docmeta
-        (bisect on the offset table, one fetch per part), preserving the
-        input order — the Q15 display-fetch contract of the other
-        searchers."""
+        """Q15 display fetch: resolve each global doc id to its owning
+        part (bisect on the offset table, one fetch per part), preserving
+        the input order."""
         from .rerank import fetch_partitioned
 
         return fetch_partitioned(self.parts, self.offsets, rows, rebase=True)
+
+
+class FederatedSearcher(_Federation, _FanOut):
+    """The serving federation (``_Federation``): every part is a
+    LocalSearcher, and a pass fans out to the parts like
+    ShardedSearcher's shards, with each part's ids shifted by its
+    offset."""
+
+    def __init__(self, index_roots: list[str], parallel: bool = True):
+        self._federate([LocalSearcher(r) for r in index_roots])
+        avgdl = sum(float(p.dl.sum()) for p in self.parts) / max(self.n_docs, 1)
+        for p in self.parts:
+            p.avgdl = avgdl
+            p.max_bl = self.meta["max_backlinks"]
+            p.n_docs = self.n_docs  # bm25 idf must use the global corpus
+        self._init_fan_out(self.parts, self.offsets, parallel)
+
+
+def _topk(docs, vals, k, is_float=False):
+    """The top ``k`` (doc, score) rows by (score desc, doc asc): integer
+    deusu scores, bm25 scores rounded to 6 places."""
+    if len(docs) == 0:
+        return []
+    order = np.lexsort((docs, -vals))[:k]
+    if is_float:
+        return [(int(docs[i]), round(float(vals[i]), 6)) for i in order]
+    return [(int(docs[i]), int(vals[i])) for i in order]
 
 
 def _deletions(t: str) -> set[str]:

@@ -60,13 +60,6 @@ class PlanTerm:
     idf: float = 0.0
     include_backlink: bool = False
     ti: int = -1
-    # federation: GLOBAL df crossed the fancy threshold but the index part
-    # executing this term was built with local df below it, so no fancy
-    # segments exist there — execute against full postings masked by the
-    # domain-rank window at score time (the fancy list is a pure per-doc
-    # predicate, GenDb.dpr:1053-1071; merge.py materializes the same
-    # fallback offline when it rebuilds fancy holes)
-    fancy_hole: bool = False
 
 
 def is_fancy_term(t: PlanTerm, fancy_threshold: int) -> bool:
@@ -188,9 +181,11 @@ def explain_plan(
     optimizer's output), plus the physical decisions a pass will take:
     whether the fancy accelerator pass runs first (any non-host term over
     the df threshold, searchservernew.dpr:1848-1855) and each term's
-    postings kind. Both engines expose this through .explain(); the dict
-    is identical across them because compile() is shared — tested in
-    test_serving_compose."""
+    postings kind. Every searcher exposes this through .explain(); the
+    dict is identical across them because compile() is shared — tested
+    in test_serving_compose. A plan term is never a fancy hole: holes
+    belong to the index that runs the term, and a federation lists them
+    per part."""
     from .synth import crc32
 
     return {
@@ -211,11 +206,9 @@ def explain_plan(
                 "url_only": t.url_only,
                 "include_backlink": t.include_backlink,
                 "fancy_eligible": is_fancy_term(t, fancy_threshold),
-                "fancy_hole": t.fancy_hole,
+                "fancy_hole": False,
                 "postings_kind": (
-                    "fancy"
-                    if is_fancy_term(t, fancy_threshold) and not t.fancy_hole
-                    else "full"
+                    "fancy" if is_fancy_term(t, fancy_threshold) else "full"
                 ),
             }
             for t in terms

@@ -22,8 +22,8 @@ terms row by row, in its order, so every float64 sum and its
 mask (``np.rint`` rounds half to even, like Python ``round``), R3 is a
 stable argsort, and R4 walks the sorted order only until the 10-row page
 holding the caller's last row is complete, building ResultRow objects for
-the rows it keeps. Plain ResultRow lists run through the same kernel and
-are updated in place. ``deusu_spark/oracle/rerank.py`` keeps the
+the rows it keeps. Hand-built ResultRow lists enter through
+``Candidates.from_rows``. ``deusu_spark/oracle/rerank.py`` keeps the
 row-at-a-time port as the reference check.
 
 Weights come from ranking/ranking.ini ([RankingFactors] key=value) —
@@ -217,18 +217,16 @@ class Candidates:
     ``memo``/``slot`` say where each row's DocFeatures are memoized: a
     searcher passes its per-doc list and the rows' positions in it, and a
     row with slot -1 (an R2 ``add`` row, or one whose URL R2 deleted)
-    computes its features from its own fields. ``objs`` holds the source
-    objects of a candidate set made from a ResultRow list; materializing
-    such a row writes the columns back into its object."""
+    computes its features from its own fields."""
 
     __slots__ = (
         "doc_id", "value", "backlinks", "domain_rank", "url", "title",
-        "snippet", "host", "indent", "show_more", "memo", "slot", "objs",
+        "snippet", "host", "indent", "show_more", "memo", "slot",
     )
 
     def __init__(self, doc_id, value, backlinks, domain_rank, url, title,
                  snippet, host, memo=None, slot=None, indent=None,
-                 show_more=None, objs=None):
+                 show_more=None):
         n = len(doc_id)
         self.doc_id = np.asarray(doc_id, dtype=np.int64)
         self.value = np.asarray(value, dtype=np.int64)
@@ -249,12 +247,9 @@ class Candidates:
         self.show_more = (
             np.zeros(n, bool) if show_more is None else np.asarray(show_more, bool)
         )
-        self.objs = objs
 
     @classmethod
     def from_rows(cls, rows: list[ResultRow]) -> "Candidates":
-        objs = np.empty(len(rows), dtype=object)
-        objs[:] = rows
         return cls(
             doc_id=[r.doc_id for r in rows],
             value=[r.value for r in rows],
@@ -266,7 +261,6 @@ class Candidates:
             host=[r.host for r in rows],
             indent=[r.indent for r in rows],
             show_more=[r.show_more for r in rows],
-            objs=objs,
         )
 
     @classmethod
@@ -303,7 +297,6 @@ class Candidates:
             cat("url"), cat("title"), cat("snippet"), cat("host"),
             memo=memo, slot=np.arange(len(memo)),
             indent=cat("indent"), show_more=cat("show_more"),
-            objs=None if any(p.objs is None for p in parts) else cat("objs"),
         )
 
     def take(self, idx) -> "Candidates":
@@ -313,7 +306,6 @@ class Candidates:
             self.snippet[idx], self.host[idx], memo=self.memo,
             slot=self.slot[idx], indent=self.indent[idx],
             show_more=self.show_more[idx],
-            objs=None if self.objs is None else self.objs[idx],
         )
 
     def append(self, url: str, title: str, snippet: str, value: int,
@@ -330,8 +322,6 @@ class Candidates:
             tail = np.empty(1, dtype=col.dtype)
             tail[0] = x
             setattr(self, name, np.concatenate([col, tail]))
-        if self.objs is not None:
-            self.objs = np.concatenate([self.objs, np.empty(1, dtype=object)])
 
     def features(self) -> list[DocFeatures]:
         """Every row's DocFeatures, filling the memo where it is empty."""
@@ -347,7 +337,7 @@ class Candidates:
         return out
 
     def row(self, i: int) -> ResultRow:
-        fields = dict(
+        return ResultRow(
             url=self.url[i],
             title=self.title[i],
             snippet=self.snippet[i],
@@ -359,12 +349,6 @@ class Candidates:
             indent=bool(self.indent[i]),
             show_more=bool(self.show_more[i]),
         )
-        obj = None if self.objs is None else self.objs[i]
-        if obj is None:
-            return ResultRow(**fields)
-        for k, v in fields.items():
-            setattr(obj, k, v)
-        return obj
 
     def rows(self) -> list[ResultRow]:
         return [self.row(i) for i in range(len(self))]
@@ -410,12 +394,6 @@ def fetch_partitioned(parts, starts, rows: list[tuple[int, int]],
     out = Candidates.concat(pieces)
     pos = {d: i for i, d in enumerate(docs.tolist())}
     return out.take(np.argsort([pos[d] for d in out.doc_id.tolist()], kind="stable"))
-
-
-def _as_candidates(results) -> tuple[Candidates, bool]:
-    if isinstance(results, Candidates):
-        return results, False
-    return Candidates.from_rows(results), True
 
 
 # (DocFeatures field, in-field weight, hidden weight, position weight,
@@ -491,15 +469,10 @@ def _r1_values(feats: list[DocFeatures], backlinks, domain_rank, query: str,
 
 
 def rerank(
-    results: Candidates | list[ResultRow],
-    query: str,
-    weights: dict[str, float] | None = None,
+    c: Candidates, query: str, weights: dict[str, float] | None = None
 ) -> None:
     """R1 — PostProcess.pas:525-714 (ReRank). Sets RankingValueInt."""
-    c, is_list = _as_candidates(results)
     c.value = _r1_values(c.features(), c.backlinks, c.domain_rank, query, weights)
-    if is_list:
-        c.rows()  # writes the values back into the row objects
 
 
 def _scale(c: Candidates, m, f: float) -> None:
@@ -559,18 +532,12 @@ def _apply_rules(c: Candidates, rules: list[str]) -> None:
                 url_key = host_tld = None
 
 
-def apply_adjustments(
-    results: Candidates | list[ResultRow], rules: list[str]
-) -> Candidates | list[ResultRow]:
+def apply_adjustments(c: Candidates, rules: list[str]) -> Candidates:
     """R2 — PostProcess.pas:327-468 (ProcessRankingAdjustment). Rule lines:
     'all f' / 'host h f' / 'tld t f' / 'url u f' / 'deleteurl u' /
     'add f url title^snippet'. Each rule is one mask over the rows."""
-    c, is_list = _as_candidates(results)
     _apply_rules(c, rules)
-    if not is_list:
-        return c
-    results[:] = c.rows()
-    return results
+    return c
 
 
 def _tofloat(s: str) -> float | None:
@@ -596,17 +563,16 @@ def auto_host_boosts(query_norm: str) -> list[str]:
 
 
 def adjust_ranking(
-    results: Candidates | list[ResultRow],
+    c: Candidates,
     query: str,
     weights: dict[str, float] | None = None,
     ranking_dir: str | None = None,
     language: str = "en",
-) -> Candidates | list[ResultRow]:
+) -> Candidates:
     """R1+R2+R3 — PostProcess.pas:723-826 (AdjustRanking): re-rank, apply
     general.txt → keyword files + auto boosts → query file → language file,
     then stable sort descending (bubble sort is stable). Returns a
-    Candidates in the new order; a ResultRow list is sorted in place."""
-    c, is_list = _as_candidates(results)
+    Candidates in the new order."""
     qn = normalize_string(query)
     rerank(c, query, weights)
 
@@ -628,11 +594,7 @@ def adjust_ranking(
     _apply_rules(c, kw_rules)
     _apply_rules(c, load(os.path.join("queries", _fname(qn) + ".txt")))
     _apply_rules(c, load("english.txt" if language == "en" else "german.txt"))
-    c = c.take(np.argsort(-c.value, kind="stable"))
-    if not is_list:
-        return c
-    results[:] = c.rows()
-    return results
+    return c.take(np.argsort(-c.value, kind="stable"))
 
 
 def _fname(keyword: str) -> str:
@@ -645,7 +607,7 @@ def _fname(keyword: str) -> str:
 
 
 def post_process(
-    results: Candidates | list[ResultRow], query: str, upto: int | None = None
+    c: Candidates, query: str, upto: int | None = None
 ) -> list[ResultRow]:
     """R4 — PostProcess.pas:828-877 (DoPostProcess): drop '\\' urls and exact
     duplicate snippets, cap 3 results/host (unless a host:/site: query), set
@@ -653,7 +615,6 @@ def post_process(
 
     With ``upto`` the walk stops once the 10-row page holding output row
     ``upto`` is complete: rows past it cannot change an earlier page."""
-    c, _ = _as_candidates(results)
     combine = "host:" not in query.lower() and "site:" not in query.lower()
     need = len(c) if upto is None else -(-upto // 10) * 10
     shown: dict[str, int] = {}

@@ -154,16 +154,18 @@ def location_mask(flags: np.ndarray, url_only: bool, title_only: bool):
     return slice(None)
 
 
-def term_plan(t) -> dict:
+def term_plan(t, hole: bool = False) -> dict:
     """The per-term constants the kernels read, as a plain dict that ships
-    cheaply into Spark tasks."""
+    cheaply into Spark tasks. ``hole`` is the engine's decision that its
+    index runs this term as a fancy hole (query_local
+    ``_Coordinator._postings_kind``)."""
     return {
         "idf": t.idf,
         "df": t.df,
         "include_bl": t.include_backlink,
         "is_host": t.host is not None,
         "is_set": t.action == "SET",
-        "hole": bool(t.fancy_hole),
+        "hole": hole,
     }
 
 

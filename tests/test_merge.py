@@ -329,11 +329,7 @@ def test_federated_engine_fancy_hole_pass(spark, merge_env):
     )[0]
     w = dict(DEFAULT_WEIGHTS)
     ft = fed.compile(hole_term)
-    assert any(
-        pt.fancy_hole
-        for p in fed.parts
-        for pt in fed._part_terms(p, ft, use_fancy=True)
-    )
+    assert any(hole_term in p["fancy_holes"] for p in fed.explain(hole_term)["parts"])
     rows_f, cnt_f = fed._pass(ft, 1000, w, True, True, "deusu")
     mt = merged.compile(hole_term)
     rows_m, cnt_m = merged._run_pass(
@@ -379,10 +375,11 @@ def test_fancy_pass_stands_distributed(spark, merge_env, monkeypatch):
     batch (run beside the full batch, plus a residual full pass for the
     under-filled NOT query), search_many equals per-query search, and the
     federation over the two shards equals the engine over their merge."""
-    from deusu_spark import query
+    from deusu_spark import query, query_local
     from deusu_spark.query import FederatedSearchEngine, SearchEngine
 
-    monkeypatch.setattr(query, "MAX_RESULTS", 30)
+    for mod in (query, query_local):
+        monkeypatch.setattr(mod, "MAX_RESULTS", 30)
     _root, dirs, out, _m = merge_env
     merged = SearchEngine(spark, out)
     fed = FederatedSearchEngine(spark, dirs)
@@ -423,6 +420,53 @@ def test_fancy_pass_stands_distributed(spark, merge_env, monkeypatch):
     for q in qs:
         assert fed.search(q, k=20) == single[q], q
     assert fed.search_many(qs, k=20) == [single[q] for q in qs]
+
+
+def test_fancy_pass_stands_serving(spark, merge_env, monkeypatch):
+    """The serving tiers' fancy pass when it stands: with MAX_RESULTS
+    lowered to 30 in the module holding the shared two-pass rule (and in
+    query, which sizes the distributed passes), LocalSearcher,
+    ShardedSearcher and FederatedSearcher keep the fancy pass for w0000
+    and w0002 (55 and 50 fancy postings), fall back to the full pass for
+    w0042 and "w0000 -w0002", and return SearchEngine's rows over the
+    merged index."""
+    from deusu_spark import query, query_local
+    from deusu_spark.query import SearchEngine
+    from deusu_spark.query_local import (
+        FederatedSearcher,
+        LocalSearcher,
+        ShardedSearcher,
+    )
+
+    for mod in (query, query_local):
+        monkeypatch.setattr(mod, "MAX_RESULTS", 30)
+    _root, dirs, out, _m = merge_env
+    merged = SearchEngine(spark, out)
+    qs = ["w0000", "w0002", "w0042", "w0000 -w0002"]
+    want = {q: merged.search(q, k=20) for q in qs}
+    for searcher in (
+        LocalSearcher(out),
+        ShardedSearcher(out, n_shards=3),
+        FederatedSearcher(dirs),
+    ):
+        passes = []
+
+        def spy(terms, k, w, use_fancy, prune, mode, real=searcher._pass):
+            rows, count = real(terms, k, w, use_fancy, prune, mode)
+            passes.append((use_fancy, count))
+            return rows, count
+
+        monkeypatch.setattr(searcher, "_pass", spy)
+        for q in qs:
+            passes.clear()
+            assert searcher.search(q, k=20) == want[q], (searcher, q)
+            kinds = [use_fancy for use_fancy, _ in passes]
+            if q in ("w0000", "w0002"):
+                assert kinds == [True] and passes[0][1] >= 30, (searcher, q)
+            elif q == "w0042":
+                assert kinds == [False], (searcher, q)
+            else:
+                assert kinds == [True, False], (searcher, q)
 
 
 def test_federated_explain_exposes_holes(spark, merge_env):

@@ -2,6 +2,7 @@
 
 from deusu_spark.rerank import (
     DEFAULT_RANKING_INI,
+    Candidates,
     ResultRow,
     adjust_ranking,
     apply_adjustments,
@@ -13,7 +14,7 @@ from deusu_spark.rerank import (
 
 
 def rows():
-    return [
+    return Candidates.from_rows([
         ResultRow("http://linux.org/", "Linux Home", "the linux kernel site", backlinks=500),
         ResultRow("http://www.linux.org/download", "Download Linux", "get linux here", backlinks=100),
         ResultRow("http://linux.org/news", "Linux News", "daily linux news", backlinks=50),
@@ -22,7 +23,7 @@ def rows():
         ResultRow("http://dup.com/x", "Dup A", "identical snippet", backlinks=5),
         ResultRow("http://dup2.com/y", "Dup B", "identical snippet", backlinks=5),
         ResultRow("http://bad.com/a\\b", "Bad", "backslash url", backlinks=5),
-    ]
+    ])
 
 
 def test_normalize_string():
@@ -40,30 +41,32 @@ def test_host_from_url():
 def test_rerank_orders_relevant_first():
     rs = rows()
     rerank(rs, "linux")
+    out = rs.rows()
     # phrase-in-domain + domain-root should dominate
-    assert rs[0].value > rs[4].value
-    assert all(isinstance(r.value, int) for r in rs)
+    assert out[0].value > out[4].value
+    assert all(isinstance(r.value, int) for r in out)
 
 
 def test_adjustment_dsl():
     rs = rows()
     rerank(rs, "linux")
-    v0 = rs[0].value
+    v0 = rs.rows()[0].value
     apply_adjustments(rs, ["host linux.org 2.0"])
-    assert rs[0].value == round(2.0 * v0)
+    assert rs.rows()[0].value == round(2.0 * v0)
     apply_adjustments(rs, ["deleteurl other.com/"])
-    assert rs[4].url == ""
+    assert rs.rows()[4].url == ""
     before = len(rs)
     apply_adjustments(rs, ["add 0.5 http://new.com/ New Site^a new snippet"])
-    assert len(rs) == before + 1
-    assert rs[-1].title == "New Site" and rs[-1].snippet == "a new snippet"
+    out = rs.rows()
+    assert len(out) == before + 1
+    assert out[-1].title == "New Site" and out[-1].snippet == "a new snippet"
 
 
 def test_auto_host_boost_applies():
     rs = rows()
     ordered = adjust_ranking(rs, "linux", weights=DEFAULT_RANKING_INI)
     # linux.org is not a boost TLD; ordering still deterministic & descending
-    vals = [r.value for r in ordered]
+    vals = [r.value for r in ordered.rows()]
     assert vals == sorted(vals, reverse=True)
 
 

@@ -157,7 +157,7 @@ def test_highlighted_page_matches_oracle(tiny_index_dir, display):
 
 
 # ---------------------------------------------------------------------------
-# Hand-built rows through the list path and the Candidates path
+# Hand-built rows through Candidates.from_rows and the docmeta path
 # ---------------------------------------------------------------------------
 
 
@@ -198,24 +198,26 @@ HAND_QUERIES = ["linux", "linux news", "Müller straße", "linux -kernel",
 
 @pytest.mark.parametrize("q", HAND_QUERIES)
 def test_list_path_matches_oracle(q):
+    """Hand-built ResultRow lists, wrapped in Candidates.from_rows, match
+    the oracle's row-at-a-time list path after every step."""
     for weights in (None, ODD_WEIGHTS):
-        a, b = hand_rows(), hand_rows()
+        a, b = Candidates.from_rows(hand_rows()), hand_rows()
         rerank.rerank(a, q, weights)
         oracle.rerank(b, q, weights)
-        assert _fields(a) == _fields(b), q
-        assert rerank.apply_adjustments(a, HAND_RULES) is a
+        assert _fields(a.rows()) == _fields(b), q
+        a = rerank.apply_adjustments(a, HAND_RULES)
         oracle.apply_adjustments(b, HAND_RULES)
-        assert _fields(a) == _fields(b), q
-        a2, b2 = copy.deepcopy(a), copy.deepcopy(b)
+        assert _fields(a.rows()) == _fields(b), q
+        a2, b2 = a.take(slice(None)), copy.deepcopy(b)
         assert _fields(rerank.post_process(a2, q)) == _fields(
             oracle.post_process(b2, q)
         ), q
-        assert _fields(a2) == _fields(b2), q  # in-place flags agree too
+        assert _fields(a2.rows()) == _fields(b2), q  # in-place flags agree too
 
-        a, b = hand_rows(), hand_rows()
+        a, b = Candidates.from_rows(hand_rows()), hand_rows()
         got = rerank.adjust_ranking(a, q, weights, ranking_dir=RANKING_DIR)
         want = oracle.adjust_ranking(b, q, weights, ranking_dir=RANKING_DIR)
-        assert got is a and _fields(a) == _fields(want), q
+        assert _fields(got.rows()) == _fields(want), q
         assert _fields(rerank.post_process(got, q)) == _fields(
             oracle.post_process(want, q)
         ), q

@@ -118,7 +118,7 @@ def test_cache_consistent_with_uncached(local_searcher):
     from deusu_spark.constants import DEFAULT_WEIGHTS
 
     q = "linux -google"
-    fresh = local_searcher._search_uncached(q, MAX_RESULTS, dict(DEFAULT_WEIGHTS), "deusu")
+    fresh = local_searcher._ranked(q, MAX_RESULTS, dict(DEFAULT_WEIGHTS), "deusu")
     cached = local_searcher.search(q, k=MAX_RESULTS)
     assert cached == fresh[:MAX_RESULTS]
 
@@ -141,16 +141,20 @@ def test_suggest_did_you_mean(local_searcher):
     assert s.suggest("") == []
 
 
-def test_suggest_distributed_equals_serving(engine, local_searcher):
+def test_suggest_distributed_equals_serving(engine, local_searcher, tiny_index_dir):
     """SearchEngine.suggest (one bounded lexicon job: length-banded scan,
     arrays_overlap deletion-neighborhood test, JVM levenshtein verify) is
-    output-identical to LocalSearcher.suggest on the same index."""
+    output-identical to LocalSearcher.suggest on the same index, and so is
+    ShardedSearcher's: its shards share one lexicon, counted once."""
+    from deusu_spark.query_local import ShardedSearcher
+
+    sharded = ShardedSearcher(tiny_index_dir, n_shards=3)
     checked = 0
     for typo in ["linx", "linuxx", "goggle", "w004", "zzqqzz", "linux", ""]:
-        assert engine.suggest(typo, k=5) == local_searcher.suggest(
-            typo, k=5
-        ), typo
-        checked += bool(local_searcher.suggest(typo, k=5))
+        want = local_searcher.suggest(typo, k=5)
+        assert engine.suggest(typo, k=5) == want, typo
+        assert sharded.suggest(typo, k=5) == want, typo
+        checked += bool(want)
     assert checked >= 2  # the set must exercise real suggestions
 
 
@@ -179,16 +183,21 @@ def test_lev_le1_exact():
             assert _lev_le1(a, b) == (lev(a, b) <= 1), (a, b)
 
 
-def test_explain_plan_both_engines(engine, local_searcher):
+def test_explain_plan_both_engines(engine, local_searcher, tiny_index_dir):
     """explain() exposes the compiled plan as data: identical across the
-    distributed and serving engines (shared compile), df values from the
-    lexicon, NOT terms flagged, hot terms fancy-eligible + two-pass, and
-    the evaluation order is the df-bubbled optimizer order."""
+    distributed and serving engines (shared compile) and the sharded tier
+    (one shared lexicon: sharding does not multiply df), df values from
+    the lexicon, NOT terms flagged, hot terms fancy-eligible + two-pass,
+    and the evaluation order is the df-bubbled optimizer order."""
+    from deusu_spark.query_local import ShardedSearcher
+
+    sharded = ShardedSearcher(tiny_index_dir, n_shards=3)
     for q in ("linux", "linux -google", "intitle:assistant linux",
               "host:conv00000017", "w0042 linux"):
         a = engine.explain(q)
         b = local_searcher.explain(q)
         assert a == b, q
+        assert sharded.explain(q) == b, q
     ex = local_searcher.explain("linux -google")
     assert ex["n_terms"] == 2 and ex["two_pass"] in (True, False)
     by_key = {t["key"]: t for t in ex["terms"]}
